@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   *  - sums of doubles go through an exact DECIMAL(25,6) accumulator, then
   *    cast back to double (addition order no longer matters);
   *  - averages are decimal-sum / count (double division, IEEE-identical);
-  *  - every query ends in a total ORDER BY (no ties);
+  *  - the oracle SQL keeps a total ORDER BY (no ties); the Spark side
+  *    carries no trailing sort, because both checkers compare rows sorted
+  *    on their raw values, so output order is not part of the contract;
   *  - NULL ordering is written explicitly (Spark asc = NULLS FIRST,
   *    DuckDB default = NULLS LAST);
   *  - cumulative scans ride [[graft.operators.PrefixSum.withRunningSums]]
@@ -41,15 +43,13 @@ object SparkEntry {
     * constant: the guard only fires when the file is too small for the
     * scan planner to have split it (bytes < parallelism x 8 MiB); at
     * production scale files split into >= parallelism tasks on their own
-    * and this is a no-op. SPARK_GRAFT_SCAN_FANOUT=0 disables (A/B knob).
+    * and this is a no-op.
     */
-  private def fanoutWidth(spark: SparkSession, path: String): Int =
-    if (sys.env.get("SPARK_GRAFT_SCAN_FANOUT").contains("0")) 0
-    else {
-      val bytes = new java.io.File(path).length
-      val par = spark.sparkContext.defaultParallelism
-      if (bytes < par.toLong * 8L * 1024 * 1024) par else 0
-    }
+  private def fanoutWidth(spark: SparkSession, path: String): Int = {
+    val bytes = new java.io.File(path).length
+    val par = spark.sparkContext.defaultParallelism
+    if (bytes < par.toLong * 8L * 1024 * 1024) par else 0
+  }
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -105,13 +105,9 @@ object SparkEntry {
     // session in the same JVM builds its own instead of receiving a
     // foreign Dataset
     pairsCache.computeIfAbsent(s"${System.identityHashCode(s)}:$dir", { _ =>
-      val pairs = graft.operators.Dedup.nearDupPairsMinhash(
+      viaTempParquet(s, "graft_pairs_cache", graft.operators.Dedup.nearDupPairsMinhash(
         t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8)
-      val out = java.nio.file.Files.createTempDirectory("graft_pairs_cache")
-      out.toFile.deleteOnExit()
-      pairs.write.mode("overwrite").parquet(out.toString)
-      s.read.parquet(out.toString)
+        shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8))
     })
 
   private val setsCache =
@@ -124,28 +120,24 @@ object SparkEntry {
     * parquet pattern as [[minhashPairs]]. */
   private def docShingleSets(s: SparkSession, dir: String): DataFrame =
     setsCache.computeIfAbsent(s"${System.identityHashCode(s)}:$dir", { _ =>
-      val sets = graft.operators.Dedup.prefixShingleSets(
-        t(s, dir, "documents"), "doc_id", "text", shingleN = 3)
-      val out = java.nio.file.Files.createTempDirectory("graft_sets_cache")
-      out.toFile.deleteOnExit()
-      sets.write.mode("overwrite").parquet(out.toString)
-      s.read.parquet(out.toString)
+      viaTempParquet(s, "graft_sets_cache", graft.operators.Dedup.prefixShingleSets(
+        t(s, dir, "documents"), "doc_id", "text", shingleN = 3))
     })
+
+  /** Write `df` to a fresh temp parquet directory and read it back. The
+    * directory is removed recursively at JVM exit: `File.deleteOnExit`
+    * cannot delete a non-empty directory, so it would leak every time. */
+  private def viaTempParquet(s: SparkSession, prefix: String, df: DataFrame): DataFrame = {
+    val out = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(out.toFile))
+    df.write.mode("overwrite").parquet(out.toString)
+    s.read.parquet(out.toString)
+  }
 
   private def register(name: String, oracle: String)(q: Q): Unit =
     registry.put(name, (q, Some(oracle)))
 
-  /** Trailing-global-Sort removal (guide §2.4; see PlanSurgery scaladoc
-    * for the safety argument — the driver hash row-sorts, so the trailing
-    * orderBy buys determinism nobody consumes and costs a full extra
-    * compute of the child via RangePartitioning's bounds sampling).
-    * SPARK_GRAFT_KEEP_SORT=1 restores the sorted output (A/B knob). */
-  private val keepTrailingSort = sys.env.get("SPARK_GRAFT_KEEP_SORT").contains("1")
-  private def tuned(q: Q): Q =
-    if (keepTrailingSort) q
-    else (s, d) => org.apache.spark.sql.graft.PlanSurgery.dropTrailingSort(q(s, d))
-
-  def queries: Map[String, Q] = { init(); registry.view.mapValues(v => tuned(v._1)).toMap }
+  def queries: Map[String, Q] = { init(); registry.view.mapValues(_._1).toMap }
   def oracleSql: Map[String, String] =
     { init(); registry.toSeq.flatMap { case (k, (_, o)) => o.map(k -> _) }.toMap }
 
@@ -185,7 +177,6 @@ object SparkEntry {
           dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
           davg(col("l_quantity")).as("avg_qty"),
           count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
     }
 
     // --- filter + projection (pushdown check: both reach the parquet scan)
@@ -197,7 +188,6 @@ object SparkEntry {
       t(s, dir, "lineitem")
         .filter(col("l_quantity") > 45 && col("l_returnflag") === "R")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
     }
 
     // --- broadcast equi-join + agg (small dim broadcast, no big-side shuffle)
@@ -212,7 +202,6 @@ object SparkEntry {
       o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("c_mktsegment"))
     }
 
     // --- left outer join with null side
@@ -228,7 +217,6 @@ object SparkEntry {
         .groupBy(col("c_custkey"))
         .agg(count(col("o_orderkey")).as("n_orders"),
           coalesce(dsum(col("o_totalprice")), lit(0.0)).as("total_spent"))
-        .orderBy(col("c_custkey"))
     }
 
     // --- left semi join (EXISTS)
@@ -241,7 +229,6 @@ object SparkEntry {
       val o = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
       c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
         .select("c_custkey", "c_name")
-        .orderBy(col("c_custkey"))
     }
 
     // --- left anti join (NOT EXISTS)
@@ -253,7 +240,6 @@ object SparkEntry {
       val o = t(s, dir, "orders")
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .select("c_custkey", "c_mktsegment")
-        .orderBy(col("c_custkey"))
     }
 
     // --- window: ranking within partition (top-3 orders per customer)
@@ -271,7 +257,6 @@ object SparkEntry {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy(col("o_custkey"), col("rn"))
     }
 
     // --- window: running aggregate with an explicit frame
@@ -289,7 +274,6 @@ object SparkEntry {
         .withColumn("running_total",
           sum(col("o_totalprice").cast(DecimalType(25, 6))).over(w).cast("double"))
         .select("o_custkey", "o_orderkey", "running_total")
-        .orderBy(col("o_custkey"), col("o_orderkey"))
     }
 
     // --- window: lag/lead analytics
@@ -304,7 +288,6 @@ object SparkEntry {
         .withColumn("prev_price", lag(col("o_totalprice"), 1).over(w))
         .withColumn("next_price", lead(col("o_totalprice"), 1).over(w))
         .select("o_custkey", "o_orderkey", "prev_price", "next_price")
-        .orderBy(col("o_custkey"), col("o_orderkey"))
     }
 
     // --- top-k: orderBy + limit plans as TakeOrderedAndProject (no full sort)
@@ -333,7 +316,6 @@ object SparkEntry {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select("o_custkey", "o_orderkey", "o_totalprice")
-        .orderBy(col("o_custkey"))
     }
 
     // --- set ops: union / intersect / except
@@ -345,7 +327,6 @@ object SparkEntry {
       t(s, dir, "customer").select(col("c_nationkey").as("nk"))
         .union(t(s, dir, "supplier").select(col("s_nationkey").as("nk")))
         .distinct()
-        .orderBy(col("nk"))
     }
 
     register("q13_intersect",
@@ -354,7 +335,6 @@ object SparkEntry {
         |ORDER BY nk""".stripMargin) { (s, dir) =>
       t(s, dir, "customer").select(col("c_nationkey").as("nk"))
         .intersect(t(s, dir, "supplier").select(col("s_nationkey").as("nk")))
-        .orderBy(col("nk"))
     }
 
     register("q14_except",
@@ -363,7 +343,6 @@ object SparkEntry {
         |ORDER BY nk""".stripMargin) { (s, dir) =>
       t(s, dir, "customer").select(col("c_nationkey").as("nk"))
         .except(t(s, dir, "supplier").select(col("s_nationkey").as("nk")))
-        .orderBy(col("nk"))
     }
 
     // --- cube / rollup (multi-dimensional aggregates)
@@ -375,7 +354,6 @@ object SparkEntry {
       t(s, dir, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }
 
     register("q16_cube",
@@ -386,7 +364,6 @@ object SparkEntry {
       t(s, dir, "lineitem")
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
     }
 
     // --- string functions
@@ -410,7 +387,6 @@ object SparkEntry {
         concat_ws("-", col("p_brand"), col("p_size").cast("string")).as("brand_size"),
         regexp_replace(col("p_type"), " ", "_").as("type_snake"),
         regexp_extract(col("p_type"), "^([A-Za-z]+)", 1).as("first_word"))
-        .orderBy(col("p_partkey"))
     }
 
     // --- date/time functions
@@ -430,7 +406,6 @@ object SparkEntry {
         dayofmonth(col("o_orderdate")).as("order_day"),
         date_add(col("o_orderdate").cast("date"), 30).cast("timestamp").as("due_ts"),
         datediff(lit("1998-01-01").cast("date"), col("o_orderdate").cast("date")).cast("long").as("days_to_98"))
-        .orderBy(col("o_orderkey"))
     }
 
     // --- math functions (IEEE-deterministic subset: see file Scaladoc)
@@ -452,7 +427,6 @@ object SparkEntry {
         sqrt(col("l_quantity")).as("sqrt_q"),
         (col("l_extendedprice") * col("l_extendedprice")).as("sq_p"),
         round(col("l_extendedprice").cast(DecimalType(25, 6)), 2).cast("double").as("round_p"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
     }
 
     // --- conditional: CASE WHEN / COALESCE
@@ -470,7 +444,6 @@ object SparkEntry {
           .when(col("o_totalprice") > 150000, "mid")
           .otherwise("small").as("bucket"),
         coalesce(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("status_label"))
-        .orderBy(col("o_orderkey"))
     }
 
     // --- HAVING (post-aggregation filter)
@@ -481,7 +454,6 @@ object SparkEntry {
       t(s, dir, "orders")
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
         .filter(col("n") >= 12)
-        .orderBy(col("o_custkey"))
     }
 
     // --- multi-way join (TPC-H Q5 shape): region -> nation -> customer -> orders -> lineitem
@@ -510,7 +482,6 @@ object SparkEntry {
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .groupBy(col("r_name"))
         .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .orderBy(col("r_name"))
     }
 
     // --- grouped distinct counts
@@ -524,7 +495,6 @@ object SparkEntry {
         .groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("distinct_parts"),
           countDistinct(col("l_suppkey")).as("distinct_supps"))
-        .orderBy(col("l_returnflag"))
     }
 
     // --- scalar subquery shape: filter against a global aggregate
@@ -538,7 +508,6 @@ object SparkEntry {
       o.join(broadcast(avgDf))           // 1-row cross join, broadcast: no shuffle
         .filter(col("o_totalprice") > lit(2) * col("__avg"))
         .select("o_orderkey", "o_totalprice")
-        .orderBy(col("o_orderkey"))
     }
 
     // --- pivot as conditional aggregation
@@ -553,7 +522,6 @@ object SparkEntry {
         count(when(col("o_orderstatus") === "O", 1)).as("n_open"),
         count(when(col("o_orderstatus") === "F", 1)).as("n_filled"),
         count(when(col("o_orderstatus") === "P", 1)).as("n_partial"))
-        .orderBy(col("o_custkey"))
     }
 
     // --- non-equi (theta) join: parts priced within a band of their size class
@@ -572,7 +540,6 @@ object SparkEntry {
           && col("p_partkey") < col("other_key")
           && abs(col("p_retailprice") - col("b_price")) < 10)
         .select(col("p_partkey"), col("other_key"))
-        .orderBy(col("p_partkey"), col("other_key"))
     }
 
     // --- events: JSON extraction + time bucketing (tumbling window as batch)
@@ -587,7 +554,6 @@ object SparkEntry {
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("k")).as("sum_k"))
-        .orderBy(col("event_type"))
     }
 
     // --- as-of join: each event picks up the user's most recent purchase
@@ -610,7 +576,6 @@ object SparkEntry {
           keyCols = Seq("user_id"), leftTsCol = "ts", rightTsCol = "mts",
           valueCols = Seq("marker_value"))
         .select("event_id", "user_id", "asof_marker_value")
-        .orderBy(col("event_id"))
     }
 
     // --- as-of FORWARD strategy (Polars join_asof strategy="forward"):
@@ -634,7 +599,6 @@ object SparkEntry {
           keyCols = Seq("user_id"), leftTsCol = "ts", rightTsCol = "mts",
           valueCols = Seq("marker_value"), strategy = "forward")
         .select("event_id", "user_id", "asof_marker_value")
-        .orderBy(col("event_id"))
     }
 
     // --- as-of NEAREST strategy: closer of backward/forward, tie ->
@@ -671,7 +635,6 @@ object SparkEntry {
           keyCols = Seq("user_id"), leftTsCol = "ts", rightTsCol = "mts",
           valueCols = Seq("marker_value"), strategy = "nearest")
         .select("event_id", "user_id", "asof_marker_value")
-        .orderBy(col("event_id"))
     }
 
     // --- grouping sets (beyond rollup/cube: explicit set list)
@@ -686,8 +649,6 @@ object SparkEntry {
           Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty),
           col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first, col("cnt"))
     }
 
     // --- array functions over real array data (no arithmetic: float
@@ -708,7 +669,6 @@ object SparkEntry {
         array_min(slice(col("embedding"), 1, 8)).as("min_head"),
         array_contains(slice(col("embedding"), 1, 8),
           array_max(slice(col("embedding"), 1, 8))).as("has_max"))
-        .orderBy(col("vec_id"))
     }
 
     // --- map + JSON functions: parse props to a map, inspect keys/values
@@ -734,7 +694,6 @@ object SparkEntry {
           size(map_keys(col("__m"))).as("n_keys"),
           element_at(col("__m"), "k").as("k_val"),
           element_at(col("__m"), "missing").as("missing_val"))
-        .orderBy(col("event_id"))
     }
 
     register("q28_events_window",
@@ -748,7 +707,6 @@ object SparkEntry {
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
         .select(col("w.start").as("hour_start"), col("event_type"), col("n"), col("sum_value"))
-        .orderBy(col("hour_start"), col("event_type"))
     }
   }
 
@@ -784,14 +742,11 @@ object SparkEntry {
       val compiled = NlCompiler.compile(
         "top 20 where o_totalprice > 400000 by o_totalprice desc showing o_orderkey and o_totalprice",
         t(s, dir, "orders").columns.toSeq)
-      // the compiled sort tie-breaks on EVERY remaining column; re-order
-      // to the oracle's simpler (primary, key) collation for the compare
       compiled.apply(t(s, dir, "orders"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     }
 
-    // --- C3: NL aggregation — "count per <group>" with a pre-agg filter
-    //     and post-agg sort, compiled to groupBy().agg() (COUNT is used
+    // --- C3: NL aggregation — "count per <group>" with a pre-agg filter,
+    //     compiled to groupBy().agg() (COUNT is used
     //     because it is order-independent; double-sum determinism rules
     //     live in the oracle notes)
     register("c3_transform_agg",
@@ -800,7 +755,7 @@ object SparkEntry {
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       val compiled = NlCompiler.compile(
-        "count per o_orderstatus where o_orderpriority = 1-URGENT by o_orderstatus asc",
+        "count per o_orderstatus where o_orderpriority = 1-URGENT",
         t(s, dir, "orders").columns.toSeq)
       compiled.apply(t(s, dir, "orders"))
     }
@@ -808,8 +763,7 @@ object SparkEntry {
     // --- C3: NL window class, grouped top-k — "top 2 per <group> by
     //     <col>" compiles to row_number() over (partition, total order)
     //     kept as `rank`; the oracle pins the SAME window order (primary
-    //     desc + every remaining column asc, the compiled tie-break) and
-    //     the SAME final collation.
+    //     desc + every remaining column asc, the compiled tie-break).
     register("c3_transform_window",
       """SELECT o_orderkey, o_orderstatus, o_totalprice, rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderstatus
@@ -821,10 +775,7 @@ object SparkEntry {
       val compiled = NlCompiler.compile(
         "top 2 per o_orderstatus by o_totalprice desc showing o_orderkey, o_orderstatus, o_totalprice and rank",
         t(s, dir, "orders").columns.toSeq)
-      // the compiled sort tie-breaks on EVERY remaining column; re-order
-      // to the oracle's simpler (primary, key) collation for the compare
       compiled.apply(t(s, dir, "orders"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     }
 
     // --- C3: NL window class, running total — "running total of <col>
@@ -842,7 +793,7 @@ object SparkEntry {
       val compiled = NlCompiler.compile(
         "running total of n_chars per lang by doc_id asc showing doc_id, lang, n_chars and running_n_chars",
         t(s, dir, "documents").columns.toSeq)
-      compiled.apply(t(s, dir, "documents")).orderBy(col("doc_id"))
+      compiled.apply(t(s, dir, "documents"))
     }
 
     // --- C3: NL share-of-total class (r16 verdict #8) — "share of
@@ -862,7 +813,7 @@ object SparkEntry {
         |FROM g CROSS JOIN t
         |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       val compiled = NlCompiler.compile(
-        "share of o_totalprice per o_orderpriority by o_orderpriority asc",
+        "share of o_totalprice per o_orderpriority",
         t(s, dir, "orders").columns.toSeq)
       compiled.apply(t(s, dir, "orders"))
     }
@@ -903,9 +854,7 @@ object SparkEntry {
         "top 25 join with customer on o_custkey = c_custkey where c_mktsegment = BUILDING " +
           "by o_totalprice desc showing o_orderkey, o_totalprice and c_name",
         o.columns.toSeq, c.columns.toSeq)
-      // the compiled sort tie-breaks on EVERY remaining column; re-order
-      // to the oracle's simpler (primary, key) collation for the compare
-      compiled.apply(o, c).orderBy(col("o_totalprice").desc, col("o_orderkey"))
+      compiled.apply(o, c)
     }
 
     // --- C2: distributed flatten of a nested struct/array column built from
@@ -919,7 +868,6 @@ object SparkEntry {
           from_json(col("props"), StructType(Seq(StructField("k", LongType)))).as("props"))
       JsonFlatten.flattenAll(ev)
         .withColumnRenamed("props.k", "k")
-        .orderBy(col("event_id"))
     }
 
     // --- C1: the signature operator, oracle-gated end-to-end. A fixture
@@ -950,7 +898,6 @@ object SparkEntry {
         maxSleepMs = 0) // missing-fixture retries must not sleep in a gate
       out.select(col("n_nationkey"), col("n_name"),
           col("api_idx"), col("api_score"), col("api_tag"))
-        .orderBy(col("n_nationkey"), col("api_idx").asc_nulls_first)
     }
   }
 
@@ -1018,7 +965,6 @@ object SparkEntry {
         alphaChars(col("text")).as("alpha_chars"),
         punctChars(col("text")).as("punct_chars"),
         meanTokenLen(col("text")).as("mean_tok_len"))
-        .orderBy(col("doc_id"))
     }
 
     // --- the registered SQL function surface, driven end-to-end through
@@ -1035,7 +981,7 @@ object SparkEntry {
         """SELECT doc_id,
           |  graft_token_count(text) AS n_tok,
           |  graft_fingerprint(text) AS fp
-          |FROM p14_docs ORDER BY doc_id""".stripMargin)
+          |FROM p14_docs""".stripMargin)
     }
 
     // --- language ID (stopword-vote heuristic) + quality score
@@ -1090,7 +1036,6 @@ object SparkEntry {
           lenScore * lit(0.4) + alphaRatio * lit(0.3) + stopRatio * lit(0.2) +
             (lit(1.0) - least(punctRatio * lit(5.0), lit(1.0))) * lit(0.1))
         .select("doc_id", "lang", "lang_pred", "quality")
-        .orderBy(col("doc_id"))
     }
 
     // --- document fingerprinting: exact + winnowing-style robust
@@ -1105,7 +1050,6 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       d.select(col("doc_id"), fingerprint(col("text")).as("fingerprint"))
         .join(Dedup.winnowFingerprints(d, "doc_id", "text", 3, 4), Seq("doc_id"))
-        .orderBy(col("doc_id"))
     }
 
     // --- exact dedup: hash-groupBy on the normalized fingerprint
@@ -1114,7 +1058,6 @@ object SparkEntry {
          |  min(doc_id) AS canonical_id, count(*) AS n_docs
          |FROM documents GROUP BY 1 ORDER BY fingerprint""".stripMargin) { (s, dir) =>
       Dedup.exactGroups(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("fingerprint"))
     }
 
     // --- MinHash + LSH near-dup pairs, Jaccard-verified (8 hashes, 1-row
@@ -1158,7 +1101,6 @@ object SparkEntry {
          |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       Dedup.nearDupPairsMinhash(t(s, dir, "documents"), "doc_id", "text",
           shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8)
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- MinHash signature-ESTIMATED near-dup pairs: the single-scan
@@ -1175,7 +1117,6 @@ object SparkEntry {
          |WHERE est_jaccard >= 0.75 ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       Dedup.nearDupPairsMinhashEst(t(s, dir, "documents"), "doc_id", "text",
           shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.75)
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- duplicate-cluster resolution: connected components over the p05
@@ -1196,7 +1137,6 @@ object SparkEntry {
       s"""WITH RECURSIVE $componentCtes
          |SELECT id, cluster_id FROM assign ORDER BY id""".stripMargin) { (s, dir) =>
       DupClusters.connectedComponents(minhashPairs(s, dir), "id_a", "id_b")
-        .orderBy(col("id"))
     }
 
     // --- canonical near-dedup of the corpus: drop every doc that shares a
@@ -1209,7 +1149,6 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       DupClusters.dedupByPairs(docs, "doc_id", minhashPairs(s, dir))
         .select(col("doc_id"), col("lang"), length(col("text")).cast("long").as("n_chars"))
-        .orderBy(col("doc_id"))
     }
 
     // --- Gopher-style repetition quality signals: duplicate-line
@@ -1254,7 +1193,6 @@ object SparkEntry {
          |LEFT JOIN top t ON t.doc_id = d.doc_id
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       graft.operators.Repetition.signals(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
     }
 
     // --- PII scrubbing: the corpus text is augmented with synthetic
@@ -1277,7 +1215,6 @@ object SparkEntry {
           lit(" ref 9"), col("doc_id"), lit("12345678")).as("text"))
       graft.operators.Scrub.redactColumn(withPii, "text")
         .select(col("doc_id"), col("text").as("red_text"))
-        .orderBy(col("doc_id"))
     }
 
     // --- benchmark decontamination: 5-gram overlap of "training" docs
@@ -1301,7 +1238,6 @@ object SparkEntry {
       graft.operators.Decontaminate.overlapReport(
           docs0.filter(col("doc_id") % 20 =!= 0), "doc_id", "text",
           docs0.filter(col("doc_id") % 20 === 0), "text", shingleN = 5)
-        .orderBy(col("doc_id"))
     }
 
     // --- deterministic sequence packing: contiguous token-budget bins per
@@ -1325,7 +1261,6 @@ object SparkEntry {
           TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
       graft.operators.Packing
         .assignBins(docs, "doc_id", "n_tokens", 512L, groupCol = Some("lang"))
-        .orderBy(col("doc_id"))
     }
 
     // --- exact n-gram Jaccard pairs (the documented small-block/oracle
@@ -1350,7 +1285,6 @@ object SparkEntry {
       graft.operators.Dedup.jaccardPairsExact(
           t(s, dir, "documents").filter(col("doc_id") < 300), "doc_id", "text", 3, 0.8)
         .withColumn("jaccard_sim", round(col("jaccard_sim"), 9))
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- embedding-cosine near-dup via SRP-LSH (scale path), oracle
@@ -1398,7 +1332,6 @@ object SparkEntry {
       graft.operators.Dedup.nearDupPairsEmbeddingLsh(
           t(s, dir, "embeddings"), "vec_id", "embedding", threshold = 0.35, nBits = 8)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- exact percentiles (Spark `percentile` and DuckDB quantile_cont
@@ -1414,7 +1347,6 @@ object SparkEntry {
         .agg(
           round(expr("percentile(l_quantity, 0.5)"), 9).as("p50"),
           round(expr("percentile(l_quantity, 0.95)"), 9).as("p95"))
-        .orderBy(col("l_returnflag"))
     }
 
     // --- IVF ANN, oracle reproducing the whole pipeline: deterministic
@@ -1462,7 +1394,6 @@ object SparkEntry {
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 25), "vec_id", "embedding",
           k = 5, nCells = 16, nProbe = 4)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- SimHash 64-bit signatures (bit voting over token md5 nibbles)
@@ -1478,7 +1409,6 @@ object SparkEntry {
          |${(0 until 64).map(j => s"  CASE WHEN v$j > 0 THEN '1' ELSE '0' END").mkString(",\n")}
          |) AS simhash FROM v ORDER BY doc_id""".stripMargin) { (s, dir) =>
       Dedup.simhash64(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
     }
 
     // --- similarity search: exact brute-force cosine top-5 (decimal-exact
@@ -1506,7 +1436,6 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 25), "vec_id", "embedding", 5)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- similarity search, scale path: sign-random-projection LSH with
@@ -1560,7 +1489,6 @@ object SparkEntry {
       Similarity.lshTopK(e, e.filter(col("vec_id") < 25), "vec_id", "embedding",
           k = 5, nBits = 8)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- feature-hash embedding (C20 Embedder offline default): per-doc
@@ -1578,7 +1506,6 @@ object SparkEntry {
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       graft.functions.FeatureHashEmbedder
         .hashCountColumns(t(s, dir, "documents"), "doc_id", "text", embDim)
-        .orderBy(col("doc_id"))
     }
 
     // --- the full curation funnel in one query: quality filter -> exact
@@ -1633,7 +1560,7 @@ object SparkEntry {
       // gate's default knobs — quality >= 0.45, 3-shingles, 8 hashes,
       // Jaccard >= 0.8, LocalCheckpoint staging
       graft.operators.Curation.curate(t(s, dir, "documents"), "doc_id", "text")
-        .select("doc_id").orderBy(col("doc_id"))
+        .select("doc_id")
     }
 
     // --- multimodal: binary payload + typed metadata + frame sampling
@@ -1657,7 +1584,6 @@ object SparkEntry {
           min(col("media_meta.checksum")).as("checksum"),
           count(lit(1)).as("n_frames"),
           sum(col("frame_bytes")).as("total_frame_bytes"))
-        .orderBy(col("doc_id"))
     }
 
     // --- deterministic train/val/test split (operators/Splits.scala):
@@ -1679,7 +1605,6 @@ object SparkEntry {
           t(s, dir, "documents").select("doc_id"), "doc_id",
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "fold1")
         .select(col("doc_id"), col("split"))
-        .orderBy(col("doc_id"))
     }
 
     // --- per-stratum hash sampling ("keep all rare languages, 5% of en,
@@ -1699,7 +1624,6 @@ object SparkEntry {
       graft.operators.Splits.stratifiedSampleByHash(
           t(s, dir, "documents").select("doc_id", "lang"), "doc_id", "lang",
           Map("en" -> 0.05, "zh" -> 0.5), defaultFraction = 1.0, salt = "mix1")
-        .orderBy(col("doc_id"))
     }
 
     // --- binned range join (operators/RangeJoin.scala): price bands from
@@ -1722,7 +1646,6 @@ object SparkEntry {
           t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
           "o_totalprice", bands, "lo", "hi", binWidth = 20000.0)
         .select(col("o_orderkey"), col("band_id"))
-        .orderBy(col("o_orderkey"), col("band_id"))
     }
 
     // --- per-group embedding centroids (operators/Centroids.scala): the
@@ -1757,7 +1680,6 @@ object SparkEntry {
           posexplode(col("centroid_sum")).as(Seq("pos", "csum")))
         .withColumn("pos", col("pos").cast("long"))
         .withColumn("csum", col("csum").cast("string"))
-        .orderBy(col("label"), col("pos"))
     }
 
     // --- BM25 keyword search (operators/Search.scala): three fixed query
@@ -1806,7 +1728,6 @@ object SparkEntry {
           t(s, dir, "documents"), "doc_id", "text",
           queries, "query_id", "qtext", k = 10, idfRoundDp = Some(9))
         .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- cross-doc duplicate 5-gram coverage (Dedup.dupNgramCoverage):
@@ -1832,7 +1753,6 @@ object SparkEntry {
          |ORDER BY dg.doc_id""".stripMargin) { (s, dir) =>
       graft.operators.Dedup.dupNgramCoverage(
           t(s, dir, "documents"), "doc_id", "text", shingleN = 5)
-        .orderBy(col("doc_id"))
     }
 
     // --- product-quantization ANN, oracle reproducing the WHOLE pipeline
@@ -1915,7 +1835,6 @@ object SparkEntry {
       graft.operators.Similarity.pqTopK(e, e.filter(col("vec_id") < 25),
           "vec_id", "embedding", k = 5, m = pqM, nCodes = pqCodes, refineFactor = 4)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- IVF-PQ composed index (the 100 TB configuration: coarse cells
@@ -2011,7 +1930,6 @@ object SparkEntry {
           "vec_id", "embedding", k = 5, m = pqM, nCodes = pqCodes, refineFactor = 4,
           coarseCells = 4, nProbe = 2)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- Lloyd-TRAINED PQ (trainIters = 1), oracle unrolling the one
@@ -2122,7 +2040,6 @@ object SparkEntry {
           "vec_id", "embedding", k = 5, m = pqM, nCodes = pqCodes, refineFactor = 4,
           trainIters = 1)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- vocabulary build + token-id encoding: top-50 tokens by
@@ -2154,7 +2071,6 @@ object SparkEntry {
       Vocab.encodeIds(docs, "doc_id", "text", vocab)
         .withColumn("token_ids",
           concat(lit("["), concat_ws(",", col("token_ids").cast("array<string>")), lit("]")))
-        .orderBy(col("doc_id"))
     }
 
     // --- sliding-window chunking: 64-token windows, stride 48 (case
@@ -2175,7 +2091,6 @@ object SparkEntry {
       graft.operators.Packing.slidingWindows(
           t(s, dir, "documents"), "doc_id", "text", windowTokens = 64, strideTokens = 48)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"), col("n_chunk_tokens"))
-        .orderBy(col("doc_id"), col("chunk_id"))
     }
 
     // --- per-group quota: keep the 50 lowest-hashing docs per language
@@ -2196,7 +2111,6 @@ object SparkEntry {
       graft.operators.Splits.capPerGroup(
           t(s, dir, "documents"), "lang", "doc_id", maxPerGroup = 50, salt = "cap")
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
     }
 
     // --- KMV bottom-k distinct sketch: per-language distinct-token
@@ -2229,7 +2143,6 @@ object SparkEntry {
           concat(lit("["), concat_ws(",", col("minima").cast("array<string>")),
             lit("]")).as("minima"),
           col("n_minima"), col("est_distinct"))
-        .orderBy(col("lang"))
     }
 
     // --- per-row weighted hash sampling: keep probability = a length-
@@ -2251,7 +2164,6 @@ object SparkEntry {
             .withColumn("w", least(length(col("text")).cast("double") / 1000.0, lit(1.0))),
           "doc_id", "w", salt = "wsalt")
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
     }
 
     // --- corpus mixture sampling: the training-data recipe step —
@@ -2275,7 +2187,6 @@ object SparkEntry {
           t(s, dir, "documents"), "lang", "doc_id",
           Map("en" -> 0.35, "fr" -> 1.7), salt = "mix", defaultWeight = 0.6)
         .select(col("doc_id"), col("lang"), col("mix_rep"))
-        .orderBy(col("doc_id"), col("mix_rep"))
     }
 
     // --- gap-based sessionization + per-session stats over the event
@@ -2311,7 +2222,6 @@ object SparkEntry {
           "user_id", "ts")
         .select(col("user_id"), col("session_seq"), col("session_start"),
           col("session_end"), col("n_events"), col("duration_s"))
-        .orderBy(col("user_id"), col("session_seq"))
     }
 
     // --- corpus-level duplicate-line removal (CCNet/RefinedWeb
@@ -2345,7 +2255,6 @@ object SparkEntry {
       graft.operators.LineDedup.removeDuplicateLines(docs, "doc_id", "text", minDocs = 2)
         .select(col("doc_id"), col("lang"), col("text"),
           col("n_lines_kept"), col("n_lines_removed"))
-        .orderBy(col("doc_id"))
     }
 
     // --- semantic decontamination: "training" vectors (vec_id >= 25)
@@ -2371,7 +2280,6 @@ object SparkEntry {
       graft.operators.Decontaminate.semanticOverlapReport(
           e.filter(col("vec_id") >= 25), "vec_id", "embedding",
           e.filter(col("vec_id") < 25), "embedding", threshold = 0.35)
-        .orderBy(col("vec_id"))
     }
 
     // --- "more like this": TF-IDF cosine doc->doc similarity for five
@@ -2407,7 +2315,6 @@ object SparkEntry {
       graft.operators.Search.moreLikeThis(docs, "doc_id", "text",
           docs.filter(col("doc_id") < 5).select(col("doc_id")), k = 10,
           idfRoundDp = Some(9))
-        .orderBy(col("doc_id"), col("rank"))
     }
 
     // --- bigram-LM fluency scoring (CCNet/KenLM-style perplexity proxy):
@@ -2446,7 +2353,6 @@ object SparkEntry {
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.operators.LmScore.scoreBigramSelf(
           t(s, dir, "documents"), "doc_id", "text", vocabSize = 200, logRoundDp = 9)
-        .orderBy(col("doc_id"))
     }
 
     // --- min-k% prob membership audit (Shi 2023) over the p41 self-
@@ -2489,7 +2395,6 @@ object SparkEntry {
       graft.operators.LmScore.minKProbAuditSelf(
           t(s, dir, "documents"), "doc_id", "text",
           kPercent = 20.0, vocabSize = 200, logRoundDp = 9)
-        .orderBy(col("doc_id"))
     }
 
     // --- per-source corpus profile (the curation "report card"): doc and
@@ -2524,7 +2429,6 @@ object SparkEntry {
          |FROM q GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.corpusProfile(
           t(s, dir, "documents"), "source", "doc_id", "text")
-        .orderBy(col("source"))
     }
 
     // --- unpivot/melt (Polars `unpivot` via the blanket wrapper): wide →
@@ -2545,7 +2449,6 @@ object SparkEntry {
           col("l_discount").as("disc"))
         .unpivot(Array(col("l_orderkey"), col("l_linenumber")),
           Array(col("qty"), col("price"), col("disc")), "metric", "val")
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"))
     }
 
     // --- cross-source content-overlap matrix: distinct shared 5-gram
@@ -2566,7 +2469,6 @@ object SparkEntry {
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       graft.operators.Profile.sourceOverlap(
           t(s, dir, "documents"), "source", "doc_id", "text", shingleN = 5)
-        .orderBy(col("src_a"), col("src_b"))
     }
 
     // --- exact-substring span removal (Lee et al. segment dedup): any
@@ -2600,7 +2502,6 @@ object SparkEntry {
       graft.operators.Dedup.removeDuplicateSpans(
           t(s, dir, "documents"), "doc_id", "text", spanN = 5, minDocs = 2)
         .select(col("doc_id"), col("text"), col("n_tokens_kept"), col("n_tokens_removed"))
-        .orderBy(col("doc_id"))
     }
 
     // --- character-entropy quality signal (gibberish / encoded-blob
@@ -2622,7 +2523,6 @@ object SparkEntry {
         |FROM agg ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.functions.TextFunctions.charEntropy(
           t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
     }
 
     // --- corpus-level boilerplate top-k (Dedup.boilerplateNgrams): the k
@@ -2649,7 +2549,6 @@ object SparkEntry {
          |ORDER BY rank""".stripMargin) { (s, dir) =>
       Dedup.boilerplateNgrams(
           t(s, dir, "documents"), "doc_id", "text", shingleN = 5, k = 20)
-        .orderBy(col("rank"))
     }
 
     // --- count-min frequency sketch (Sketch.cmsSketch/cmsEstimate):
@@ -2686,7 +2585,6 @@ object SparkEntry {
       graft.operators.Sketch.cmsEstimate(
           probes, sketch, "user_id", "event_type", depth = 3, width = 64)
         .select(col("event_type"), col("user_id"), col("est_count"))
-        .orderBy(col("event_type"), col("user_id"))
     }
 
     // --- markup stripping: documents wrapped in deterministic HTML (tags,
@@ -2720,7 +2618,6 @@ object SparkEntry {
           graft.operators.Clean.stripMarkup(col("rawt")).as("clean_text"),
           length(col("rawt")).as("raw_len"))
         .withColumn("clean_len", length(col("clean_text")))
-        .orderBy(col("doc_id"))
     }
 
     // --- corpus snapshot diff: v2 = v1 minus every 7th doc, every 5th
@@ -2753,7 +2650,6 @@ object SparkEntry {
         .unionAll(docs.filter(col("doc_id") % 11 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       graft.operators.Diff.corpusDiff(oldV, newV, "doc_id", Seq("text"))
-        .orderBy(col("doc_id"))
     }
 
     // --- correlated EXISTS / NOT EXISTS subqueries, exercised through the
@@ -2774,8 +2670,7 @@ object SparkEntry {
           |WHERE EXISTS (SELECT 1 FROM q37_orders o
           |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000)
           |  AND NOT EXISTS (SELECT 1 FROM q37_orders o
-          |                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-          |ORDER BY c_custkey""".stripMargin)
+          |                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')""".stripMargin)
     }
 
     // --- PMI term co-occurrence over a top-150-df vocabulary: counts are
@@ -2806,7 +2701,6 @@ object SparkEntry {
       graft.operators.Profile.pmiPairs(
           t(s, dir, "documents"), "doc_id", "text",
           vocabSize = 150, minPairCount = 5, topK = 100, pmiRoundDp = 9)
-        .orderBy(col("term_a"), col("term_b"))
     }
 
     // --- per-source log2 length histogram: bucket = length(bin(n_chars)),
@@ -2818,7 +2712,6 @@ object SparkEntry {
         |ORDER BY source, bucket""".stripMargin) { (s, dir) =>
       graft.operators.Profile.lengthHistogram(
           t(s, dir, "documents"), "source", "n_chars")
-        .orderBy(col("source"), col("bucket"))
     }
 
     // --- Gopher quality rules: every threshold evaluated in INTEGER
@@ -2870,7 +2763,6 @@ object SparkEntry {
           col("ok_mean_word_len"), col("ok_symbol_ratio"),
           col("ok_bullet_lines"), col("ok_ellipsis_lines"),
           col("ok_alpha_words"), col("ok_stopwords"), col("keep"))
-        .orderBy(col("doc_id"))
     }
 
     // --- hard-negative mining: p07's exact-cosine contract plus the
@@ -2898,7 +2790,6 @@ object SparkEntry {
       Similarity.hardNegatives(e, e.filter(col("vec_id") < 25),
           "vec_id", "embedding", "label", 5)
         .withColumn("cosine", round(col("cosine"), 9))
-        .orderBy(col("query_id"), col("rank"))
     }
 
     // --- RANGE window frame over event-time: 30-day trailing spend per
@@ -2920,7 +2811,6 @@ object SparkEntry {
       t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
           sum(col("o_totalprice").cast(DecimalType(25, 6))).over(w)
             .cast("double").as("sum_30d"))
-        .orderBy(col("o_orderkey"))
     }
 
     // --- intra-document consecutive-duplicate-line collapse (crawler echo
@@ -2947,7 +2837,6 @@ object SparkEntry {
       raw.select(col("doc_id"),
           graft.operators.Clean.collapseRepeatedLines(col("tx")).as("collapsed"))
         .withColumn("n_chars", length(col("collapsed")))
-        .orderBy(col("doc_id"))
     }
 
     // --- URL host extraction + per-domain rollup: scheme/userinfo/port/
@@ -2970,7 +2859,6 @@ object SparkEntry {
           lit(".Example.com:8443/path/"), col("doc_id"), lit("?q=1#frag"))
           .as("url"))
       graft.operators.Urls.domainCounts(u, "url")
-        .orderBy(col("domain"))
     }
 
     // DuckDB replica of Clean.stripMarkup for expression `e` (the p49
@@ -3007,7 +2895,6 @@ object SparkEntry {
       raw.select(col("doc_id"),
           length(graft.operators.Clean.anchorText(col("rawt"))).as("anchor_len"),
           length(graft.operators.Clean.stripMarkup(col("rawt"))).as("clean_len"))
-        .orderBy(col("doc_id"))
     }
 
     // --- quality-ranked per-group cap: top 10 docs per source by n_chars,
@@ -3024,7 +2911,6 @@ object SparkEntry {
       graft.operators.Splits.keepBestPerGroup(
           t(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars")),
           "source", "n_chars", "doc_id", 10)
-        .orderBy(col("doc_id"))
     }
 
     // --- distribution window functions: ntile/percent_rank/cume_dist in
@@ -3045,7 +2931,6 @@ object SparkEntry {
           ntile(4).over(w).as("quartile"),
           percent_rank().over(w).as("pr"),
           cume_dist().over(w).as("cd"))
-        .orderBy(col("o_orderkey"))
     }
 
     // --- per-doc tf-idf keywords: tf/df/N exact int64, smoothed idf
@@ -3070,7 +2955,6 @@ object SparkEntry {
          |ORDER BY doc_id, rank""".stripMargin) { (s, dir) =>
       graft.operators.Search.topTermsPerDoc(
           t(s, dir, "documents"), "doc_id", "text", k = 5, minDf = 2)
-        .orderBy(col("doc_id"), col("rank"))
     }
 
     // --- diagonal concat (Polars concat(how="diagonal") / UNION BY NAME):
@@ -3087,7 +2971,6 @@ object SparkEntry {
       val b = o.filter(col("o_orderkey") % 3 === 1)
         .select(col("o_orderkey"), col("o_orderstatus"))
       a.unionByName(b, allowMissingColumns = true)
-        .orderBy(col("o_orderkey"))
     }
 
     // --- deterministic training shards: bucket + within-shard position
@@ -3108,7 +2991,6 @@ object SparkEntry {
           t(s, dir, "documents").select(col("doc_id")), "doc_id",
           nShards = 8, salt = "ep0")
         .select(col("doc_id"), col("shard"), col("shard_pos"))
-        .orderBy(col("doc_id"))
     }
 
     // --- PageRank (2 unrolled iterations) over the symmetrized p05
@@ -3150,7 +3032,6 @@ object SparkEntry {
       graft.operators.Graphs.pagerank(sym, "u", "v", iters = 2)
         .select(col("id").as("doc_id"),
           round(col("pr").cast(DecimalType(25, 12)), 9).cast("double").as("pr"))
-        .orderBy(col("doc_id"))
     }
 
     // --- exact triangle count over the p05 near-dup pair graph (dup-
@@ -3220,7 +3101,6 @@ object SparkEntry {
          |       CAST(cnt AS BIGINT) AS pair_count
          |FROM ($bpeMergeRows) ORDER BY rank""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.bpeMerges(t(s, dir, "documents"), "text", numMerges = 16)
-        .orderBy(col("rank"))
     }
 
     // --- BYTE-level BPE (GPT-2 family, r16 verdict #3): the SAME 16
@@ -3244,7 +3124,6 @@ object SparkEntry {
          |FROM ($bpeMergeRows) ORDER BY rank""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.bpeMergesBytes(t(s, dir, "documents"), "text",
           numMerges = 16)
-        .orderBy(col("rank"))
     }
 
     // --- SemDeDup (Abbas et al. 2023): semantic dedup over the embedding
@@ -3294,7 +3173,6 @@ object SparkEntry {
       graft.operators.Dedup.semDedup(t(s, dir, "embeddings"), "vec_id", "embedding",
           eps = 0.35, nClusters = 8)
         .withColumn("centroid_sim", round(col("centroid_sim"), 9))
-        .orderBy(col("vec_id"))
     }
 
     // --- cluster-balanced diversity subsampling (the D4 recipe, Tirumala
@@ -3338,7 +3216,6 @@ object SparkEntry {
       graft.operators.Splits.capPerGroup(assigned, "cluster", "vec_id",
           maxPerGroup = 40, salt = "div")
         .select(col("vec_id"), col("cluster"))
-        .orderBy(col("vec_id"))
     }
 
     // --- DSIR importance resampling (Xie et al. 2023): select raw docs
@@ -3388,7 +3265,6 @@ object SparkEntry {
       graft.operators.Dsir.resampleTopK(docs, "doc_id", "text",
           docs.filter(col("lang") === "en"), "doc_id", "text",
           k = 50, nBuckets = 1024)
-        .orderBy(col("rank"))
     }
 
     // --- MMR diversified top-k (Carbonell & Goldstein 1998): redundancy-
@@ -3451,7 +3327,6 @@ object SparkEntry {
       graft.operators.Similarity.mmrTopK(e, e.filter(col("vec_id") < 25),
           "vec_id", "embedding", k = 5, lambda = 0.6, poolSize = 20)
         .withColumn("mmr_score", round(col("mmr_score"), 9))
-        .orderBy(col("query_id"), col("mmr_rank"))
     }
 
     // --- MMR over an INJECTED LSH shortlist (the production retrieval
@@ -3524,7 +3399,6 @@ object SparkEntry {
       graft.operators.Similarity.mmrRerank(shortlist, e, "vec_id", "embedding",
           k = 5, lambda = 0.6)
         .withColumn("mmr_score", round(col("mmr_score"), 9))
-        .orderBy(col("query_id"), col("mmr_rank"))
     }
 
     // --- reciprocal-rank fusion (Cormack et al. 2009): hybrid retrieval
@@ -3591,7 +3465,6 @@ object SparkEntry {
         .select(col("query_id"), col("neighbor_id").as("item_id"), col("rank"))
       graft.operators.Search.rrfFuse(Seq(lex, vec), k = 10)
         .withColumn("rrf_score", round(col("rrf_score"), 9))
-        .orderBy(col("query_id"), col("fused_rank"))
     }
 
     // --- EXACT n-gram Jaccard similarity join via prefix filtering
@@ -3633,7 +3506,6 @@ object SparkEntry {
           t(s, dir, "documents"), "doc_id", "text", shingleN = 3, threshold = 0.8,
           preSets = Some(docShingleSets(s, dir)))
         .withColumn("jaccard_sim", round(col("jaccard_sim"), 9))
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- auditable per-group quantile profile: a deterministic uniform
@@ -3664,7 +3536,6 @@ object SparkEntry {
           quantiles = Seq("len_p25" -> 0.25, "len_p50" -> 0.5, "len_p75" -> 0.75,
             "len_p90" -> 0.9, "len_p99" -> 0.99),
           salt = "qp")
-        .orderBy(col("lang"))
     }
 
     // --- EXACT containment join (directed near-subset detection): the
@@ -3702,7 +3573,6 @@ object SparkEntry {
           t(s, dir, "documents"), "doc_id", "text", shingleN = 3, threshold = 0.8,
           preSets = Some(docShingleSets(s, dir)))
         .withColumn("containment", round(col("containment"), 9))
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- the containment maxDf-CUT contract (the path a 100 TB run
@@ -3748,7 +3618,6 @@ object SparkEntry {
           threshold = 0.8, maxDf = Some(2L),
           preSets = Some(docShingleSets(s, dir)))
         .withColumn("containment", round(col("containment"), 9))
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- EXACT edit-distance similarity join (PassJoin, Li 2011): all
@@ -3772,7 +3641,6 @@ object SparkEntry {
           t(s, dir, "documents").filter(col("text").isNotNull)
             .select(col("doc_id"), substring(col("text"), 1, 16).as("key16")),
           "doc_id", "key16", maxDist = 2)
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- EXACT heavy hitters without shuffling the long tail (Misra–Gries
@@ -3797,7 +3665,6 @@ object SparkEntry {
           graft.operators.Dedup.shingleRows(t(s, dir, "documents"), "doc_id", "text", 3),
           "shingle", minFraction = 0.00005)
         .select(col("shingle"), col("count").as("n_occ"), col("n_total"))
-        .orderBy(col("shingle"))
     }
 
     // --- perplexity-band pruning (Marion 2023: keep the MIDDLE of each
@@ -3855,7 +3722,6 @@ object SparkEntry {
           t(s, dir, "documents"), "doc_id", "text", "source",
           loQ = 0.25, hiQ = 0.75, vocabSize = 200, k = 256)
         .select(col("doc_id"), col("source"), col("n_bigrams"), col("avg_logp"))
-        .orderBy(col("doc_id"))
     }
 
     // --- per-group score calibration (cross-source comparability): doc
@@ -3885,7 +3751,6 @@ object SparkEntry {
             .select(col("doc_id"), col("source"),
               length(col("text")).cast("long").as("len")),
           "source", "len", "doc_id")
-        .orderBy(col("doc_id"))
     }
 
     // --- incremental near-dup against a standing index (nightly-batch
@@ -3915,7 +3780,6 @@ object SparkEntry {
           docs.filter(col("doc_id") % 5 =!= 0),
           "doc_id", "text", shingleN = 3, numHashes = 8, rowsPerBand = 1,
           threshold = 0.8)
-        .orderBy(col("new_id"), col("index_id"))
     }
 
     // --- Zipf-law fit per source (corpus-health audit: natural text
@@ -3951,7 +3815,6 @@ object SparkEntry {
           topN = 100)
         .withColumn("zipf_slope", round(col("zipf_slope"), 9))
         .withColumn("zipf_intercept", round(col("zipf_intercept"), 9))
-        .orderBy(col("source"))
     }
 
     // --- unigram-tokenizer piece vocabulary (SentencePiece seed stage):
@@ -3978,7 +3841,6 @@ object SparkEntry {
          |FROM kept, tot ORDER BY piece""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.unigramPieces(t(s, dir, "documents"), "text",
           maxPieceLen = 4, topV = 200)
-        .orderBy(col("piece"))
     }
 
     // --- canonical dedup over EDIT-DISTANCE pairs (typo-level duplicate
@@ -4011,7 +3873,6 @@ object SparkEntry {
         "doc_id", "key16", maxDist = 2)
       DupClusters.dedupByPairs(docs, "doc_id", pairs)
         .select(col("doc_id"), col("source"), length(col("text")).cast("long").as("n_chars"))
-        .orderBy(col("doc_id"))
     }
 
     // --- ANN recall audit: per-query recall@5 of the SRP-LSH index (p08
@@ -4081,7 +3942,6 @@ object SparkEntry {
       Similarity.recallAtK(
           Similarity.lshTopK(e, qs, "vec_id", "embedding", k = 5, nBits = 8),
           Similarity.bruteForceTopK(e, qs, "vec_id", "embedding", 5))
-        .orderBy(col("query_id"))
     }
 
     // --- contamination-safe split: hash-assign train/val/test, then drop
@@ -4116,7 +3976,6 @@ object SparkEntry {
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
           salt = "fold1", holdout = "test", shingleN = 5)
         .select(col("doc_id"), col("split"))
-        .orderBy(col("doc_id"))
     }
 
     // --- per-GROUP heavy hitters (per-source template detection — a
@@ -4139,7 +3998,6 @@ object SparkEntry {
             .select(col("source"), col("shingle").as("token")),
           "source", "token", minFraction = 0.01)
         .select(col("source"), col("token"), col("count").as("n_occ"), col("n_total"))
-        .orderBy(col("source"), col("token"))
     }
 
     // --- HyperLogLog distinct-token estimate per language (Flajolet et
@@ -4182,7 +4040,6 @@ object SparkEntry {
           graft.operators.Sketch.hllSketch(toks, "__term", "lang", p = 12),
           "lang", p = 12)
         .withColumn("est_distinct", round(col("est_distinct"), 6))
-        .orderBy(col("lang"))
     }
 
     // --- hash-feature linear classifier scoring (fastText architecture,
@@ -4224,7 +4081,6 @@ object SparkEntry {
          |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       graft.operators.Classifier.hashClassifierScore(
           t(s, dir, "documents"), "doc_id", "text", nBuckets = 4096, seed = "clf")
-        .orderBy(col("doc_id"))
     }
 
     // --- exact Mann-Whitney AUC with midrank tie correction, per group:
@@ -4256,7 +4112,6 @@ object SparkEntry {
       graft.operators.Eval.aucByGroup(
           t(s, dir, "documents").withColumn("__lbl", col("lang") === "en"),
           "source", "n_chars", "__lbl")
-        .orderBy(col("source"))
     }
 
     // --- token-distribution divergence (KL both ways + Jensen-Shannon,
@@ -4323,7 +4178,6 @@ object SparkEntry {
       graft.operators.Dedup.sortedNeighborhoodPairs(
           t(s, dir, "documents"), "doc_id", "text",
           windowSize = 4, shingleN = 3, threshold = 0.5, keyLen = 12)
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- per-doc n-gram novelty vs the corpus head (doc_id < 100 as the
@@ -4357,7 +4211,6 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       graft.operators.Curation.ngramNovelty(
           docs, docs.filter(col("doc_id") < 100), "doc_id", "text", ngramN = 3)
-        .orderBy(col("doc_id"))
     }
 
     // --- temperature-mixed sampling with DERIVED weights (the
@@ -4399,7 +4252,6 @@ object SparkEntry {
       graft.operators.Mixture.sampleMixture(docs, "lang", "doc_id", w,
           salt = "temp", defaultWeight = 0.0)
         .select(col("doc_id"), col("lang"), col("mix_rep"))
-        .orderBy(col("doc_id"), col("mix_rep"))
     }
 
     // --- ordered-funnel analysis over the event stream (view -> click ->
@@ -4432,7 +4284,6 @@ object SparkEntry {
       graft.operators.Sessionize.funnelStages(events(s, dir),
           "user_id", "ts", "event_id", "event_type",
           Seq("view", "click", "purchase"))
-        .orderBy(col("user_id"))
     }
 
     // --- weekly retention cohorts (first-activity ISO week x week
@@ -4455,7 +4306,6 @@ object SparkEntry {
       // with a spurious midnight against Spark's date objects
       graft.operators.Sessionize.retentionCohorts(events(s, dir), "user_id", "ts")
         .withColumn("cohort_week", col("cohort_week").cast("string"))
-        .orderBy(col("cohort_week"), col("week_offset"))
     }
 
     // --- synchronous label propagation (Raghavan 2007) over the p05
@@ -4485,7 +4335,6 @@ object SparkEntry {
       graft.operators.Graphs.labelPropagation(
           minhashPairs(s, dir), "id_a", "id_b", iters = 2)
         .select(col("id").as("doc_id"), col("label").as("community"))
-        .orderBy(col("doc_id"))
     }
 
     // --- robust per-group location stats over lineitem prices: exact
@@ -4527,7 +4376,6 @@ object SparkEntry {
           t(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
           loPct = 0.05, hiPct = 0.95)
         .withColumnRenamed("l_returnflag", "l_returnflag")
-        .orderBy(col("l_returnflag"))
     }
 
     // --- tokenizer fertility & word-OOV audit per language: subword-
@@ -4557,7 +4405,6 @@ object SparkEntry {
          |ORDER BY sg.lang""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.fertilityAudit(
           t(s, dir, "documents"), "lang", "text", vocabSize = 200)
-        .orderBy(col("lang"))
     }
 
     // --- keep-BEST canonical dedup: connected components over the p05
@@ -4588,7 +4435,6 @@ object SparkEntry {
       graft.operators.DupClusters.dedupByPairsKeepBest(
           t(s, dir, "documents"), "doc_id", "n_chars", minhashPairs(s, dir))
         .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy(col("doc_id"))
     }
 
     // --- LSH blocking-quality audit: recall/precision of the p05
@@ -4659,7 +4505,6 @@ object SparkEntry {
         .withColumn("is_anomaly", abs(col("z_robust")) > 3.0)
         .select(col("event_type"), col("hour"), col("n"),
           col("z_robust"), col("is_anomaly"))
-        .orderBy(col("event_type"), col("hour"))
     }
 
     // --- priority sampling (Duffield-Lund-Thorup 2007): per-lang
@@ -4691,7 +4536,6 @@ object SparkEntry {
           "lang", "doc_id", "n_chars", k = 50)
         .withColumn("priority", round(col("priority"), 6))
         .withColumn("weight_est", round(col("weight_est"), 6))
-        .orderBy(col("lang"), col("doc_id"))
     }
 
     // --- sentence segmentation: terminator-run split in the Java∩RE2
@@ -4725,7 +4569,6 @@ object SparkEntry {
               lit(" table"), lit(" table.")),
               lit(" query"), lit(" query!")).as("text")),
           "doc_id", "text")
-        .orderBy(col("doc_id"), col("sent_idx"))
     }
 
     // --- Flesch reading ease + Flesch-Kincaid grade (Flesch 1948,
@@ -4753,7 +4596,6 @@ object SparkEntry {
         |FROM c ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.operators.TextAudit.readability(
           t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
     }
 
     // --- encoding-hygiene audit: U+FFFD replacement chars (counted by
@@ -4780,7 +4622,6 @@ object SparkEntry {
         |FROM c ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.operators.TextAudit.encodingAudit(
           t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"))
     }
 
     // --- partition-key skew report: the pre-shuffle diagnostic (count
@@ -4830,7 +4671,6 @@ object SparkEntry {
          |  vocab_size::DOUBLE / n_tokens::DOUBLE AS ttr
          |FROM g ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.tokenEntropy(t(s, dir, "documents"), "source", "text")
-        .orderBy(col("source"))
     }
 
     // --- per-group OLS trend (slope of value against epoch-hour, the
@@ -4868,7 +4708,6 @@ object SparkEntry {
             .withColumn("hour_x",
               expr("(unix_micros(cast(ts as timestamp)) - pmod(unix_micros(cast(ts as timestamp)), 3600000000)) div 3600000000")),
           "event_type", "hour_x", "value")
-        .orderBy(col("event_type"))
     }
 
     // --- pre-join cardinality estimate from KMV sketches (Beyer et al.
@@ -4967,7 +4806,6 @@ object SparkEntry {
           lit("?a=1&b=2")))
       graft.operators.Urls.canonicalCounts(
           t(s, dir, "documents").select(url.as("url")), "url")
-        .orderBy(col("canonical_url"))
     }
 
     // --- reliability-diagram calibration bins (Niculescu-Mizil &
@@ -4995,7 +4833,6 @@ object SparkEntry {
             .select(least(col("n_chars").cast("double") / lit(1000.0), lit(1.0)).as("score"),
               (col("lang") === "en").as("label")),
           "score", "label", nBins = 10)
-        .orderBy(col("bin"))
     }
 
     // --- rolling exact distinct actors per day (DAU/WAU/stickiness):
@@ -5018,7 +4855,6 @@ object SparkEntry {
         |ORDER BY day""".stripMargin) { (s, dir) =>
       graft.operators.Sessionize.rollingDistinct(
           events(s, dir), "ts", "user_id", windowDays = 7)
-        .orderBy(col("day"))
     }
 
     // --- greedy k-center coreset selection (Gonzalez 1985; Sener &
@@ -5060,7 +4896,6 @@ object SparkEntry {
       graft.operators.Similarity.kCenterSelect(
           t(s, dir, "embeddings"), "vec_id", "embedding", k = 5)
         .withColumn("dist_sq", round(col("dist_sq"), 9))
-        .orderBy(col("step"))
     }
 
     // --- embedding-column health report per label: NULL/NaN vectors,
@@ -5094,7 +4929,6 @@ object SparkEntry {
         .withColumn("min_norm", round(col("min_norm"), 9))
         .withColumn("max_norm", round(col("max_norm"), 9))
         .withColumn("mean_norm", round(col("mean_norm"), 9))
-        .orderBy(col("label"))
     }
 
     // --- split-document stitch candidates: A's last 40 chars == B's
@@ -5124,7 +4958,6 @@ object SparkEntry {
         .unionAll(src.select((col("doc_id") * 2 + 1).as("id"),
           expr("substring(text, L div 2 - 19)").as("t")))
       graft.operators.Dedup.boundaryStitchPairs(parts, "id", "t", boundaryLen = 40)
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- Unicode NFC normalization audit via the native codegen'd
@@ -5145,7 +4978,6 @@ object SparkEntry {
           t(s, dir, "documents").select(col("doc_id"),
             concat(coalesce(col("text"), lit("")), lit(" e\u0301")).as("text")),
           "doc_id", "text")
-        .orderBy(col("doc_id"))
     }
 
     // --- Cohen's kappa inter-annotator agreement (Cohen 1960): rater A
@@ -5208,7 +5040,6 @@ object SparkEntry {
           trainPct = 0.8, valPct = 0.1)
         .groupBy(col("event_type"), col("split"))
         .agg(count(lit(1)).as("n_rows"))
-        .orderBy(col("event_type"), col("split"))
     }
 
     // --- content-defined chunking (Rabin-style rolling hash, LBFS):
@@ -5251,7 +5082,6 @@ object SparkEntry {
         |FROM f ORDER BY doc_id, chunk_idx""".stripMargin) { (s, dir) =>
       graft.operators.Packing.cdcChunks(
           t(s, dir, "documents"), "doc_id", "text", window = 8, divisor = 64)
-        .orderBy(col("doc_id"), col("chunk_idx"))
     }
 
     // --- partial-duplicate pairs via shared CDC chunks: the gate carves
@@ -5293,7 +5123,6 @@ object SparkEntry {
           expr("substring(text, (L*3) div 10 + 1)").as("t")))
       graft.operators.Dedup.sharedChunkPairs(parts, "id", "t",
           window = 8, divisor = 64, minShared = 1, maxDocsPerChunk = Some(64))
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- first-order event-transition matrix (Markov journey view):
@@ -5316,7 +5145,6 @@ object SparkEntry {
         |ORDER BY from_type, to_type""".stripMargin) { (s, dir) =>
       graft.operators.Sessionize.transitionMatrix(
           events(s, dir), "user_id", "ts", "event_type", "event_id")
-        .orderBy(col("from_type"), col("to_type"))
     }
 
     // --- exact two-sample Kolmogorov-Smirnov drift statistic (en vs
@@ -5374,7 +5202,6 @@ object SparkEntry {
           (length(col("__raw")) - length(col("text_stripped"))).cast("long"))
         .withColumn("changed", col("text_stripped") =!= col("__raw"))
         .select(col("doc_id"), col("text_stripped"), col("n_removed"), col("changed"))
-        .orderBy(col("doc_id"))
     }
 
     // --- Population Stability Index over the source mix (en vs non-en
@@ -5495,7 +5322,6 @@ object SparkEntry {
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.operators.Splits.kFoldAssign(
           t(s, dir, "documents").select(col("doc_id")), "doc_id", 5, "cv1")
-        .orderBy(col("doc_id"))
     }
 
     // --- Poisson-bootstrap CI for the per-source mean n_chars: weights
@@ -5535,7 +5361,6 @@ object SparkEntry {
         (s, dir) =>
           graft.operators.Splits.poissonBootstrapMean(
               t(s, dir, "documents"), "source", "n_chars", "doc_id", "boot1")
-            .orderBy(col("source"))
       }
     }
 
@@ -5645,7 +5470,6 @@ object SparkEntry {
                 lit(" table"), lit(" table.")),
                 lit(" query"), lit(" query!")).as("text")),
             "doc_id", "text")
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -5700,7 +5524,6 @@ object SparkEntry {
         |FROM sv GROUP BY l ORDER BY label""".stripMargin) { (s, dir) =>
       graft.operators.Centroids.silhouette(
           t(s, dir, "embeddings"), "vec_id", "label", "embedding")
-        .orderBy(col("label"))
     }
 
     // --- per-source trimmed + winsorized mean n_chars (10% per tail):
@@ -5732,7 +5555,6 @@ object SparkEntry {
         |FROM b GROUP BY g ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.trimmedMeanByGroup(
           t(s, dir, "documents"), "source", "n_chars", "doc_id", 100000L)
-        .orderBy(col("source"))
     }
 
     // --- Theil's uncertainty coefficient lang × source (asymmetric
@@ -5811,7 +5633,6 @@ object SparkEntry {
         graft.operators.Drift.quantileShift(
             docs.filter(col("lang") === "en"),
             docs.filter(col("lang") =!= "en"), "n_chars", qs)
-          .orderBy(col("q_micro"))
       }
     }
 
@@ -5860,7 +5681,6 @@ object SparkEntry {
           .select(col("doc_id") +:
             graft.operators.TextAudit.scriptClasses.map(c => col(s"n_${c._1}")) :+
             col("n_letters") :+ col("main_script") :+ col("main_frac"): _*)
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -5897,7 +5717,6 @@ object SparkEntry {
             .withColumn("hour_x",
               expr("(unix_micros(cast(ts as timestamp)) - pmod(unix_micros(cast(ts as timestamp)), 3600000000)) div 3600000000")),
           "event_type", "hour_x", "value")
-        .orderBy(col("event_type"))
     }
 
     // --- per-source Gini coefficient of doc lengths (corpus-inequality
@@ -5929,7 +5748,6 @@ object SparkEntry {
           t(s, dir, "documents").select(col("source"),
             col("n_chars").cast("double").as("n_chars")),
           "source", "n_chars")
-        .orderBy(col("source"))
     }
 
     // --- Spearman rank correlation value × epoch-hour per event type:
@@ -5965,7 +5783,6 @@ object SparkEntry {
             .withColumn("hour_x",
               expr("(unix_micros(cast(ts as timestamp)) - pmod(unix_micros(cast(ts as timestamp)), 3600000000)) div 3600000000")),
           "event_type", "hour_x", "value")
-        .orderBy(col("event_type"))
     }
 
     // --- lag-24h autocorrelation of the HOURLY EVENT COUNT per event
@@ -6008,7 +5825,6 @@ object SparkEntry {
         .agg(count(lit(1)).cast("double").as("y"))
       graft.operators.Profile.autocorrByGroup(
           hourly, "event_type", "hour_x", "y", 24L)
-        .orderBy(col("event_type"))
     }
 
     // --- mixture matching: keep the largest subset of three sources
@@ -6039,7 +5855,6 @@ object SparkEntry {
           "source",
           Map("src0" -> 500000L, "src1" -> 300000L, "src2" -> 200000L),
           "doc_id", "mix1")
-        .orderBy(col("doc_id"))
     }
 
     // --- Neyman-optimal labeling-budget allocation across sources
@@ -6073,7 +5888,6 @@ object SparkEntry {
         |FROM rk ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Splits.neymanAllocation(
           t(s, dir, "documents"), "source", "n_chars", 1000L)
-        .orderBy(col("source"))
     }
 
     // --- pair-overlap anatomy over consecutive-id candidate pairs:
@@ -6104,7 +5918,6 @@ object SparkEntry {
       val pairs = docs.select(col("doc_id").as("id_a"),
         (col("doc_id") + 1L).as("id_b"))
       graft.operators.Dedup.pairOverlapProfile(pairs, docs, "doc_id", "text")
-        .orderBy(col("id_a"))
     }
 
     // --- Benford leading-digit audit of lineitem prices: floored
@@ -6129,7 +5942,6 @@ object SparkEntry {
          |FROM e ORDER BY digit""".stripMargin) { (s, dir) =>
       graft.operators.Profile.benfordProfile(
           t(s, dir, "lineitem"), "l_extendedprice")
-        .orderBy(col("digit"))
     }
 
     // --- per-actor inter-event gap statistics (cadence fingerprint):
@@ -6159,7 +5971,6 @@ object SparkEntry {
           events(s, dir).filter(col("ts").isNotNull)
             .withColumn("ts_c", expr("cast(ts as timestamp)")),
           "user_id", "ts_c", "event_id")
-        .orderBy(col("user_id"))
     }
 
     // --- 1-D Wasserstein-1 (earth-mover) drift between the English and
@@ -6234,7 +6045,6 @@ object SparkEntry {
             .filter(col("source").isNotNull)
             .withColumn("__lbl", col("lang") === "en"),
           "source", "n_chars", "__lbl", "doc_id")
-        .orderBy(col("source"))
     }
 
     // --- Expected Calibration Error over the p107 probe (length prior
@@ -6348,7 +6158,6 @@ object SparkEntry {
       graft.operators.Decontaminate.contaminationSpans(
           docs0.filter(col("doc_id") % 20 =!= 0), "doc_id", "text",
           docs0.filter(col("doc_id") % 20 === 0), "text", shingleN = 5)
-        .orderBy(col("doc_id"))
     }
 
     // --- per-dimension int8 quantization audit of the embedding table:
@@ -6380,7 +6189,6 @@ object SparkEntry {
         |FROM a ORDER BY dim""".stripMargin) { (s, dir) =>
       graft.operators.Similarity.int8QuantizationError(
           t(s, dir, "embeddings"), "embedding")
-        .orderBy(col("dim"))
     }
 
     // --- split-conformal calibration over the doc-length nonconformity
@@ -6486,7 +6294,6 @@ object SparkEntry {
          |FROM a ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.diversityByGroup(
           t(s, dir, "documents"), "source", "lang")
-        .orderBy(col("source"))
     }
 
     // --- degree assortativity of the near-dup pair graph (Newman 2002):
@@ -6597,7 +6404,6 @@ object SparkEntry {
             .filter(col("source").isNotNull)
             .withColumn("__lbl", col("lang") === "en"),
           "source", "n_chars", "__lbl", "doc_id", k = 10)
-        .orderBy(col("source"))
     }
 
     // --- Brier score + log loss over the p107 probe: the two proper
@@ -6654,7 +6460,6 @@ object SparkEntry {
       graft.operators.Similarity.mutualNearestNeighbors(
           t(s, dir, "embeddings").filter(col("vec_id") < 300),
           "vec_id", "embedding")
-        .orderBy(col("id_a"))
     }
 
     // --- binary-segmentation changepoint over hourly event volumes per
@@ -6701,7 +6506,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("y"))
       graft.operators.Drift.changepointBinary(
           hourly, "event_type", "hour_x", "y")
-        .orderBy(col("event_type"))
     }
 
     // --- exact-dedup yield curve over ingest order (doc_id deciles):
@@ -6734,7 +6538,6 @@ object SparkEntry {
          |FROM c ORDER BY bin""".stripMargin) { (s, dir) =>
       graft.operators.Dedup.dedupYieldCurve(
           t(s, dir, "documents"), "doc_id", "text", nBins = 10)
-        .orderBy(col("bin"))
     }
 
     // --- quantile normalization: map every non-English length onto the
@@ -6768,7 +6571,6 @@ object SparkEntry {
           docs.filter(col("lang") === "en").select(col("n_chars")),
           docs.filter(col("lang") =!= "en").select(col("n_chars")),
           "n_chars")
-        .orderBy(col("value"))
     }
 
     // --- isotonic (PAV) calibration over the p107 probe, by the minimax
@@ -6808,7 +6610,6 @@ object SparkEntry {
                 lit(1.0)).as("score"),
               (col("lang") === "en").as("label")),
           "score", "label", nBins = 10)
-        .orderBy(col("bin"))
     }
 
     // --- k-core peel of the near-dup pair graph (k=2, 4 synchronous
@@ -6838,7 +6639,6 @@ object SparkEntry {
          |FROM e$kcoreRounds GROUP BY u ORDER BY id""".stripMargin) { (s, dir) =>
       graft.operators.Graphs.kCore(
           minhashPairs(s, dir), "id_a", "id_b", k = 2, rounds = kcoreRounds)
-        .orderBy(col("id"))
     }
 
     // --- invisible / bidi-control character audit (Trojan Source
@@ -6877,7 +6677,6 @@ object SparkEntry {
             t(s, dir, "documents").select(col("doc_id"),
               concat(coalesce(col("text"), lit("")), plantCol).as("text")),
             "doc_id", "text")
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -6912,7 +6711,6 @@ object SparkEntry {
           TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
       graft.operators.Packing.packingEfficiency(
           docs, "doc_id", "n_tokens", 512L, "lang")
-        .orderBy(col("lang"))
     }
 
     // --- funnel-transition latency (view→click→purchase): rank-chained
@@ -6958,7 +6756,6 @@ object SparkEntry {
             .withColumn("ts_c", expr("cast(ts as timestamp)")),
           "user_id", "ts_c", "event_id", "event_type",
           Seq("view", "click", "purchase"))
-        .orderBy(col("transition"))
     }
 
     // --- per-actor burstiness (Fano factor of hourly counts over active
@@ -6984,7 +6781,6 @@ object SparkEntry {
           events(s, dir).filter(col("ts").isNotNull)
             .withColumn("ts_c", expr("cast(ts as timestamp)")),
           "user_id", "ts_c", minHours = 2)
-        .orderBy(col("user_id"))
     }
 
     // --- distributed EXACT per-group quantiles (keyed-PrefixSum nearest
@@ -7013,7 +6809,6 @@ object SparkEntry {
         graft.operators.Profile.quantilesByGroup(
             t(s, dir, "documents"), "source", "n_chars",
             Seq(0.25, 0.5, 0.9, 0.99))
-          .orderBy(col("source"))
     }
 
     // --- Kaplan–Meier survival per cohort: right-censoring-correct
@@ -7071,7 +6866,6 @@ object SparkEntry {
           col("tp").isNotNull.as("converted"))
       graft.operators.Sessionize.kaplanMeier(
           subjects, "cohort", "dur_s", "converted")
-        .orderBy(col("cohort"), col("t"))
     }
 
     // --- top-k user journeys (first-4-event paths): one per-user
@@ -7097,7 +6891,6 @@ object SparkEntry {
             .withColumn("ts_c", expr("cast(ts as timestamp)")),
           "user_id", "ts_c", "event_id", "event_type",
           pathLen = 4, topK = 20)
-        .orderBy(col("n_users").desc, col("path"))
     }
 
     // --- deterministic curriculum/interleave ordering: keyed-PrefixSum
@@ -7121,7 +6914,6 @@ object SparkEntry {
         |ORDER BY position""".stripMargin) { (s, dir) =>
       graft.operators.Splits.curriculumOrder(
           t(s, dir, "documents"), "source", "doc_id", "n_chars")
-        .orderBy(col("position"))
     }
 
     // --- Benjamini–Hochberg FDR selection per group: the multiple-
@@ -7152,7 +6944,6 @@ object SparkEntry {
             when(col("source") === "src1", 0.001).otherwise(1.0)).as("p"))
       graft.operators.Eval.bhFdrSelect(docs, "source", "doc_id", "p",
           alpha = 0.1)
-        .orderBy(col("source"), col("doc_id"))
     }
 
     // --- inter-event exponential fit + exact KS per event type: the
@@ -7189,7 +6980,6 @@ object SparkEntry {
           events(s, dir).filter(col("ts").isNotNull)
             .withColumn("ts_c", expr("cast(ts as timestamp)")),
           "user_id", "ts_c", "event_id", "event_type", minGaps = 2L)
-        .orderBy(col("event_type"))
     }
 
     // --- hour-of-week seasonality grid per event type: pure epoch
@@ -7216,7 +7006,6 @@ object SparkEntry {
           events(s, dir).filter(col("ts").isNotNull)
             .withColumn("ts_c", expr("cast(ts as timestamp)")),
           "ts_c", "event_type")
-        .orderBy(col("event_type"), col("dow"), col("hour"))
     }
 
     // --- pairwise centroid cosine matrix over embedding labels: counts
@@ -7245,7 +7034,6 @@ object SparkEntry {
         |FROM pairs ORDER BY label_a, label_b""".stripMargin) { (s, dir) =>
       graft.operators.Centroids.centroidSimilarityMatrix(
           t(s, dir, "embeddings"), "label", "embedding")
-        .orderBy(col("label_a"), col("label_b"))
     }
 
     // --- precision/recall/F1 curve per source at every distinct
@@ -7284,7 +7072,6 @@ object SparkEntry {
           t(s, dir, "documents").filter(col("lang").isNotNull)
             .withColumn("l", col("lang") === "en"),
           "source", "n_chars", "l")
-        .orderBy(col("source"), col("threshold"))
     }
 
     // --- two-sample Cramér–von Mises: integrated squared CDF distance
@@ -7360,7 +7147,6 @@ object SparkEntry {
           docs.filter(col("lang") === "en").select(col("source"), col("n_chars")),
           docs.filter(col("lang") =!= "en").select(col("source"), col("n_chars")),
           "source", "n_chars")
-        .orderBy(col("source"))
     }
 
     // --- approximate-FD strength source→lang (g3: minimal deletion
@@ -7439,7 +7225,6 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.operators.Splits.deterministicShuffle(
           t(s, dir, "documents"), "doc_id", "shuf")
-        .orderBy(col("doc_id"))
     }
 
     // --- per-source Mann–Whitney U (en vs rest): the grouped location-
@@ -7487,7 +7272,6 @@ object SparkEntry {
       graft.operators.Drift.mannWhitneyByGroup(
           docs.filter(col("lang") === "en"),
           docs.filter(col("lang") =!= "en"), "source", "n_chars")
-        .orderBy(col("source"))
     }
 
     // --- per-source Wasserstein-1 (en vs rest): grouped transport cost,
@@ -7531,7 +7315,6 @@ object SparkEntry {
           docs.filter(col("lang") === "en").select(col("source"), col("n_chars")),
           docs.filter(col("lang") =!= "en").select(col("source"), col("n_chars")),
           "source", "n_chars")
-        .orderBy(col("source"))
     }
 
     // --- per-source PSI between the even/odd doc-id halves over the
@@ -7582,7 +7365,6 @@ object SparkEntry {
       graft.operators.Drift.psiByGroup(
           docs.filter(col("__half") === 0),
           docs.filter(col("__half") === 1), "source", "lang")
-        .orderBy(col("source"))
     }
 
     // --- exact join-key overlap report (orders.o_custkey vs
@@ -7650,7 +7432,6 @@ object SparkEntry {
             when(col("lang") === "en", 0.5).otherwise(0.0)).as("s"),
           (col("lang") === "en").as("l"))
       graft.operators.Eval.gainsTable(docs, "s", "l", nBuckets = 10)
-        .orderBy(col("bucket"))
     }
 
     // --- KMV-estimated pairwise overlap matrix across languages over
@@ -7694,7 +7475,6 @@ object SparkEntry {
           t(s, dir, "documents")
             .filter(col("lang").isNotNull && col("n_chars").isNotNull),
           "n_chars", "lang", k = 64)
-        .orderBy(col("g_a"), col("g_b"))
     }
 
     // --- hash-uniformity one-sample KS: the self-audit that the md5
@@ -7759,7 +7539,6 @@ object SparkEntry {
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.operators.LmScore.scoreBigramKNSelf(
           t(s, dir, "documents"), "doc_id", "text", vocabSize = 200)
-        .orderBy(col("doc_id"))
     }
 
     // --- funnel conversion within a window (1 h): the business cut
@@ -7806,7 +7585,6 @@ object SparkEntry {
             .withColumn("ts_c", expr("cast(ts as timestamp)")),
           "user_id", "ts_c", "event_id", "event_type",
           Seq("view", "click", "purchase"), windowSeconds = 3600L)
-        .orderBy(col("transition"))
     }
 
     // --- single-scan schema/data profile over string/integer columns
@@ -7836,7 +7614,6 @@ object SparkEntry {
         |ORDER BY "column"""".stripMargin) { (s, dir) =>
       graft.operators.Profile.schemaProfile(
           t(s, dir, "documents"), Seq("source", "lang", "doc_id", "n_chars"))
-        .orderBy(col("column"))
     }
 
     // --- ROC curve at every distinct threshold over the planted p176
@@ -7872,7 +7649,6 @@ object SparkEntry {
             when(col("lang") === "en", 0.5).otherwise(0.0)).as("sc"),
           (col("lang") === "en").as("l"))
       graft.operators.Eval.rocCurve(docs, "sc", "l")
-        .orderBy(col("threshold"))
     }
 
     // --- trailing 24h mean of hourly event counts per type: the rolling
@@ -7903,7 +7679,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("y"))
       graft.operators.Drift.trailingStats(
           hourly, "event_type", "hour_x", "y", window = 24L)
-        .orderBy(col("event_type"), col("hour_x"))
     }
 
     // --- per-source MRR ingredients (first-hit rank under the planted
@@ -7933,7 +7708,6 @@ object SparkEntry {
             when(col("lang") === "en", 0.5).otherwise(0.0)).as("sc"),
           (col("lang") === "en").as("l"))
       graft.operators.Eval.mrrByGroup(docs, "source", "sc", "l", "doc_id")
-        .orderBy(col("source"))
     }
 
     // --- per-source chi-squared: lang × md5-half association per
@@ -7979,7 +7753,6 @@ object SparkEntry {
               (graft.operators.Splits.hashValue60(col("doc_id"), "js") % 2)
                 .cast("string")),
           "source", "lang", "half")
-        .orderBy(col("source"))
     }
 
     // --- value-atomic equal-frequency quartile bins of n_chars per
@@ -8002,7 +7775,6 @@ object SparkEntry {
         |ORDER BY d.source, d.n_chars""".stripMargin) { (s, dir) =>
       graft.operators.Profile.quantileBinsByGroup(
           t(s, dir, "documents"), "source", "n_chars", nBins = 4)
-        .orderBy(col("source"), col("n_chars"))
     }
 
     // --- maximal cross-document duplicated token-run extents (the Lee
@@ -8036,7 +7808,6 @@ object SparkEntry {
         |ORDER BY doc_id, start_tok""".stripMargin) { (s, dir) =>
       graft.operators.Dedup.duplicatedRunExtents(
           t(s, dir, "documents"), "doc_id", "text", runN = 8)
-        .orderBy(col("doc_id"), col("start_tok"))
     }
 
     // --- weighted per-lang nearest-rank quantiles under planted
@@ -8073,7 +7844,6 @@ object SparkEntry {
             .as("w"))
       graft.operators.Profile.weightedQuantilesByGroup(
           docs, "lang", "n_chars", "w", Seq(0.5, 0.9))
-        .orderBy(col("lang"))
     }
 
     // --- weighted per-source moments + Kish effective sample size
@@ -8105,7 +7875,6 @@ object SparkEntry {
             .as("w"))
       graft.operators.Profile.weightedStatsByGroup(
           docs, "source", "n_chars", "w")
-        .orderBy(col("source"))
     }
 
     // --- per-source Jensen–Shannon divergence between snapshot halves'
@@ -8153,7 +7922,6 @@ object SparkEntry {
       graft.operators.Drift.jsDivergenceByGroup(
           docs.filter(col("__half") === 0),
           docs.filter(col("__half") === 1), "source", "lang")
-        .orderBy(col("source"))
     }
 
     // --- Wilson score interval for the per-source English rate: the
@@ -8187,7 +7955,6 @@ object SparkEntry {
             .filter(col("source").isNotNull && col("lang").isNotNull)
             .select(col("source"), (col("lang") === "en").as("l")),
           "source", "l")
-        .orderBy(col("source"))
     }
 
     // --- Murphy decomposition of the Brier score per source over a
@@ -8231,7 +7998,6 @@ object SparkEntry {
             when(col("lang") === "en", 0.3).otherwise(0.0)).as("f"),
           (col("lang") === "en").as("y"))
       graft.operators.Eval.brierDecompositionByGroup(docs, "source", "f", "y")
-        .orderBy(col("source"))
     }
 
     // --- conditional bigram entropy H(next|prev) per source (Shannon
@@ -8259,7 +8025,6 @@ object SparkEntry {
          |GROUP BY g, n ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.LmScore.conditionalEntropy(
           t(s, dir, "documents"), "doc_id", "text", "source")
-        .orderBy(col("source"))
     }
 
     // --- per-source lexical profile: tokens, types, TTR, hapax share —
@@ -8281,7 +8046,6 @@ object SparkEntry {
          |FROM c GROUP BY g ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.lexicalProfile(
           t(s, dir, "documents"), "source", "text")
-        .orderBy(col("source"))
     }
 
     // --- AUC with the DeLong CI per source over the planted
@@ -8343,7 +8107,6 @@ object SparkEntry {
             when(col("lang") === "en", 0.3).otherwise(0.0)).as("sc"),
           (col("lang") === "en").as("l"))
       graft.operators.Eval.aucCiByGroup(docs, "source", "sc", "l")
-        .orderBy(col("source"))
     }
 
     // --- Hill tail-index of doc length per language (Hill 1975): top
@@ -8370,7 +8133,6 @@ object SparkEntry {
         |FROM f JOIN tot ON f.g = tot.g ORDER BY lang""".stripMargin) { (s, dir) =>
       graft.operators.Profile.hillTailIndex(
           t(s, dir, "documents"), "lang", "n_chars", k = 5)
-        .orderBy(col("lang"))
     }
 
     // --- Welch's t + Cohen's d per source (en vs non-en doc lengths):
@@ -8420,7 +8182,6 @@ object SparkEntry {
       graft.operators.Drift.welchTByGroup(
           docs.filter(col("lang") === "en"),
           docs.filter(col("lang") =!= "en"), "source", "n_chars")
-        .orderBy(col("source"))
     }
 
     // --- k-anonymity audit over (lang, source) quasi-identifiers
@@ -8506,7 +8267,6 @@ object SparkEntry {
       graft.operators.Drift.brownForsytheByGroup(
           docs.filter(col("lang") === "en"),
           docs.filter(col("lang") =!= "en"), "source", "n_chars")
-        .orderBy(col("source"))
     }
 
     register("p205_l_diversity",
@@ -8570,7 +8330,6 @@ object SparkEntry {
           policy = "keep_one")
         .select(col("doc_id"), col("text"),
           col("n_tokens_kept"), col("n_tokens_removed"))
-        .orderBy(col("doc_id"))
     }
 
     // shared hourly grid for the trend gates (the p189 recipe: floored
@@ -8622,7 +8381,6 @@ object SparkEntry {
          |FROM vs LEFT JOIN sp USING (g) ORDER BY event_type""".stripMargin) { (s, dir) =>
       graft.operators.Drift.mannKendallByGroup(
           hourlyGrid(s, dir), "event_type", "hour_x", "y")
-        .orderBy(col("event_type"))
     }
 
     // --- Theil–Sen robust slope + intercept per event type over the
@@ -8656,7 +8414,6 @@ object SparkEntry {
          |FROM c LEFT JOIN ri USING (g) ORDER BY event_type""".stripMargin) { (s, dir) =>
       graft.operators.Drift.theilSenByGroup(
           hourlyGrid(s, dir), "event_type", "hour_x", "y")
-        .orderBy(col("event_type"))
     }
 
     // --- vocabulary-coverage estimators per language (Good 1953, Chao
@@ -8681,7 +8438,6 @@ object SparkEntry {
          |FROM agg ORDER BY lang""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.vocabCoverageByGroup(
           t(s, dir, "documents"), "lang", "text")
-        .orderBy(col("lang"))
     }
 
     // --- pairwise embedding-dimension covariance + correlation (the
@@ -8716,7 +8472,6 @@ object SparkEntry {
         |ORDER BY c.i, c.j""".stripMargin) { (s, dir) =>
       graft.operators.Similarity.embeddingCovariance(
           t(s, dir, "embeddings"), "vec_id", "embedding")
-        .orderBy(col("i"), col("j"))
     }
 
     // --- per-source classification fairness audit vs reference src0
@@ -8759,7 +8514,6 @@ object SparkEntry {
             .cast("double") / lit(1152921504606846976.0)) * 0.8 +
             when(col("lang") === "en", 0.2).otherwise(0.0) >= 0.5).as("p"))
       graft.operators.Eval.fairnessAudit(base, "source", "l", "p", "src0")
-        .orderBy(col("source"))
     }
 
     // --- unigram^(3/4) negative-sampling table (Mikolov 2013): the
@@ -8786,7 +8540,6 @@ object SparkEntry {
          |FROM cw ORDER BY term""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.negativeSamplingTable(
           t(s, dir, "documents"), "text")
-        .orderBy(col("term"))
     }
 
     // --- word2vec frequent-word subsampling (Mikolov 2013): each token
@@ -8821,7 +8574,6 @@ object SparkEntry {
           t(s, dir, "documents"), "doc_id", "text", t = 0.001)
         .select(col("doc_id"), col("text"),
           col("n_tokens_kept"), col("n_tokens_removed"))
-        .orderBy(col("doc_id"))
     }
 
     // --- Fightin' Words (Monroe et al. 2008): top-50 terms separating
@@ -8863,7 +8615,6 @@ object SparkEntry {
           docs.filter(col("lang") === "en"),
           docs.filter(col("lang") =!= "en"), "text",
           alpha0 = 10.0, k = 50)
-        .orderBy(col("rank"))
     }
 
     // --- fixed-width per-source n_chars histogram (8 equal intervals
@@ -8885,7 +8636,6 @@ object SparkEntry {
         |ORDER BY source, bin""".stripMargin) { (s, dir) =>
       graft.operators.Profile.fixedWidthHistogramByGroup(
           t(s, dir, "documents"), "source", "n_chars", nBins = 8)
-        .orderBy(col("source"), col("bin"))
     }
 
     // --- overlapping token-window chunking (the RAG index unit), 64
@@ -8914,7 +8664,6 @@ object SparkEntry {
           chunkTokens = 64, overlapTokens = 16)
         .select(col("doc_id"), col("chunk_id"), col("start_tok"),
           col("end_tok"), col("n_tokens"), col("text"))
-        .orderBy(col("doc_id"), col("chunk_id"))
     }
 
     // --- skip-gram (center, context, distance) pairs, window 2: the
@@ -8932,7 +8681,6 @@ object SparkEntry {
          |ORDER BY a.doc_id, center_ix, distance, context""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.skipGramPairs(
           t(s, dir, "documents"), "doc_id", "text", window = 2)
-        .orderBy(col("doc_id"), col("center_ix"), col("distance"), col("context"))
     }
 
     // --- fastText character-n-gram subword table (Bojanowski 2017),
@@ -8953,7 +8701,6 @@ object SparkEntry {
       graft.operators.Vocab.fastTextSubwords(
           t(s, dir, "documents"), "text", nMin = 3, nMax = 6,
           nBuckets = 1024L)
-        .orderBy(col("word"), col("subword"))
     }
 
     // --- GloVe co-occurrence matrix over the window-2 skip-gram stream:
@@ -8976,7 +8723,6 @@ object SparkEntry {
          |ORDER BY center, context""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.cooccurrenceCounts(
           t(s, dir, "documents"), "doc_id", "text", window = 2)
-        .orderBy(col("center"), col("context"))
     }
 
     // --- matryoshka truncation audit at prefix widths 2/4/8: retained
@@ -9003,7 +8749,6 @@ object SparkEntry {
         |FROM r GROUP BY dim ORDER BY dim""".stripMargin) { (s, dir) =>
       graft.operators.Similarity.matryoshkaAudit(
           t(s, dir, "embeddings"), "vec_id", "embedding", Seq(2, 4, 8))
-        .orderBy(col("dim"))
     }
 
     // --- per-source plurality language (exact mode): two aggregations
@@ -9020,7 +8765,6 @@ object SparkEntry {
         |GROUP BY t.g, t.n, t.mc ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.modeByGroup(
           t(s, dir, "documents"), "source", "lang")
-        .orderBy(col("source"))
     }
 
     // --- link prediction over the p05 near-dup pair graph (Liben-Nowell
@@ -9051,7 +8795,6 @@ object SparkEntry {
          |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       graft.operators.Graphs.linkPrediction(
           minhashPairs(s, dir), "id_a", "id_b")
-        .orderBy(col("id_a"), col("id_b"))
     }
 
     // --- Lorenz-curve deciles of n_chars per source (the curve behind
@@ -9082,7 +8825,6 @@ object SparkEntry {
         |ORDER BY source, point""".stripMargin) { (s, dir) =>
       graft.operators.Profile.lorenzCurveByGroup(
           t(s, dir, "documents"), "source", "n_chars", nPoints = 10)
-        .orderBy(col("source"), col("point"))
     }
 
     // --- multi-class report for a planted noisy language-ID classifier
@@ -9123,7 +8865,6 @@ object SparkEntry {
               .cast("double") / lit(1152921504606846976.0) < 0.7,
             col("lang")).otherwise(lit("en")).as("p"))
       graft.operators.Eval.multiclassReport(base, "l", "p")
-        .orderBy(col("class"))
     }
 
     // --- two-sided CUSUM per event type over the hourly grid (Page
@@ -9156,7 +8897,6 @@ object SparkEntry {
          |FROM m ORDER BY event_type, hour_x""".stripMargin) { (s, dir) =>
       graft.operators.Drift.cusumByGroup(
           hourlyGrid(s, dir), "event_type", "hour_x", "y", h = 10.0, k = 1.0)
-        .orderBy(col("event_type"), col("hour_x"))
     }
 
     // --- epoch replication to a target mix (en 2.5 epochs, de 0.5,
@@ -9178,7 +8918,6 @@ object SparkEntry {
             .filter(col("doc_id").isNotNull && col("lang").isNotNull),
           "lang", "doc_id",
           Map("en" -> 2.5, "de" -> 0.5, "zh" -> 1.0), salt = "epoch")
-        .orderBy(col("doc_id"), col("copy"))
     }
 
     // --- macro/micro roll-up of the p225 report: accuracy over exact
@@ -9312,7 +9051,6 @@ object SparkEntry {
       val approx = graft.operators.Similarity.lshTopK(
         e, qs, "vec_id", "embedding", k = 10, nBits = 8)
       graft.operators.Eval.rankBiasedOverlap(exact, approx, k = 10, p = 0.9)
-        .orderBy(col("query_id"))
     }
 
     // --- Simple Good–Turing adjusted counts (Good 1953, the Katz
@@ -9341,7 +9079,6 @@ object SparkEntry {
          |CROSS JOIN tot ORDER BY g.c""".stripMargin) { (s, dir) =>
       graft.operators.LmScore.goodTuringCounts(
           t(s, dir, "documents"), "text", kCutoff = 5)
-        .orderBy(col("c"))
     }
 
     // --- quadratic-weighted kappa over planted ordinal ratings (rater
@@ -9423,7 +9160,6 @@ object SparkEntry {
         |ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.iqrOutlierStatsByGroup(
           t(s, dir, "documents"), "source", "n_chars", k = 1.5)
-        .orderBy(col("source"))
     }
 
     // --- the COMPOSED end-to-end pretraining pipeline (round-14 verdict
@@ -9573,7 +9309,6 @@ object SparkEntry {
         "doc_id", "n_tokens", 512L, groupCol = Some("__grp"))
       packed.select(col("doc_id"), col("lang"), col("split"),
           col("n_tokens"), col("bin"), col("oversize"))
-        .orderBy(col("doc_id"))
     }
 
     // --- greedy longest-match-first WordPiece (the BERT production
@@ -9637,7 +9372,6 @@ object SparkEntry {
       graft.operators.Vocab.wordpieceEncode(docs, "doc_id", "text", vocab)
         .select(col("doc_id"), concat_ws(" ", col("pieces")).as("pieces_str"),
           col("n_pieces"), col("n_unk"))
-        .orderBy(col("doc_id"))
     }
 
     // --- Benford first-digit audit of n_chars per source (provenance
@@ -9669,7 +9403,6 @@ object SparkEntry {
          |FROM c ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.benfordByGroup(
           t(s, dir, "documents"), "source", "n_chars")
-        .orderBy(col("source"))
     }
 
     // --- sentence BLEU over (odd doc, preceding even doc) text pairs —
@@ -9722,7 +9455,6 @@ object SparkEntry {
           col("text").as("ref"))
         graft.operators.Eval.bleuPairs(
             cand.join(refs, Seq("doc_id")), "doc_id", "cand", "ref")
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -9798,7 +9530,6 @@ object SparkEntry {
            |FROM c ORDER BY doc_id""".stripMargin) { (s, dir) =>
         graft.operators.Scrub.blocklistHits(
             t(s, dir, "documents"), "doc_id", "text", blk)
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -9835,7 +9566,6 @@ object SparkEntry {
             "[a-f]", ""),
           lit(" pay 4111-1111-1111-1111 ok")).as("text"))
       graft.operators.Scrub.luhnCardCandidates(synth, "doc_id", "text")
-        .orderBy(col("doc_id"), col("digits"))
     }
 
     // --- chat-transcript structure (the SFT-data battery): turn parsing
@@ -9899,7 +9629,6 @@ object SparkEntry {
            |  CAST(length(content) AS INT) AS n_chars
            |FROM t ORDER BY doc_id, turn_idx""".stripMargin) { (s, dir) =>
         graft.operators.Chat.parseChatTurns(synthDf(s, dir), "doc_id", "text")
-          .orderBy(col("doc_id"), col("turn_idx"))
       }
       register("p252_chat_tokens",
         s"""WITH synth AS ($synthSql),
@@ -9923,7 +9652,6 @@ object SparkEntry {
            |      AS DOUBLE) END AS response_ratio
            |FROM g ORDER BY doc_id""".stripMargin) { (s, dir) =>
         graft.operators.Chat.chatTokenStats(synthDf(s, dir), "doc_id", "text")
-          .orderBy(col("doc_id"))
       }
       register("p253_chat_render",
         s"""WITH synth AS ($synthSql),
@@ -9934,7 +9662,6 @@ object SparkEntry {
            |  CAST(COUNT(*) AS INT) AS n_rendered_turns
            |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
         graft.operators.Chat.renderTemplate(synthDf(s, dir), "doc_id", "text")
-          .orderBy(col("doc_id"))
       }
       // --- composed SFT pipeline (the p233 inter-stage-contract pattern
       //     for the chat battery): parse → structure audit (keep
@@ -10013,7 +9740,6 @@ object SparkEntry {
             col("response_ratio"), col("n_rendered_turns"),
             length(col("rendered")).cast("int").as("n_rendered_chars"),
             col("bin"), col("oversize"))
-          .orderBy(col("doc_id"))
       }
       register("p251_chat_audit",
         s"""WITH synth AS ($synthSql),
@@ -10049,7 +9775,6 @@ object SparkEntry {
            |  AS ends_with_assistant
            |FROM g ORDER BY doc_id""".stripMargin) { (s, dir) =>
         graft.operators.Chat.chatAudit(synthDf(s, dir), "doc_id", "text")
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -10099,7 +9824,6 @@ object SparkEntry {
            |FROM b ORDER BY doc_id""".stripMargin) { (s, dir) =>
         graft.operators.Chat.preferencePairAudit(
             prefPairs(s, dir), "doc_id", "chosen", "rejected")
-          .orderBy(col("doc_id"))
       }
       register("p256_pref_bias",
         s"""WITH $prefBase,
@@ -10247,7 +9971,6 @@ object SparkEntry {
             col("len_ratio"), col("rendered_chosen"), col("rendered_rejected"),
             col("n_pairs_in"), col("n_survivors"), col("frac_chosen_longer"),
             col("mean_len_ratio"))
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -10309,7 +10032,6 @@ object SparkEntry {
             .withColumn("label", (col("doc_id") % 2).cast("double"))
           graft.operators.Classifier.trainLogistic(docs, "doc_id", "text",
               "label", nBuckets = nB, iters = 3, lr = 0.5)
-            .orderBy(col("bucket"))
       }
     }
 
@@ -10356,7 +10078,6 @@ object SparkEntry {
           col("text").as("ref"))
         graft.operators.Eval.rougeNPairs(
             cand.join(refs, Seq("doc_id")), "doc_id", "cand", "ref", maxN = 2)
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -10381,7 +10102,6 @@ object SparkEntry {
          |ORDER BY source, n""".stripMargin) { (s, dir) =>
       graft.operators.Vocab.distinctNgramsByGroup(
           t(s, dir, "documents"), "source", "doc_id", "text", maxN = 3)
-        .orderBy(col("source"), col("n"))
     }
 
     // --- Fellegi-Sunter EM record linkage over (odd doc, preceding doc)
@@ -10463,7 +10183,6 @@ object SparkEntry {
             (abs(col("ca") - col("cb")) < 100).as("a3"))
         graft.operators.Linkage.fellegiSunter(prs, Seq("a1", "a2", "a3"),
             emIters = emIters)
-          .orderBy(col("doc_id"))
       }
     }
 
@@ -10493,7 +10212,6 @@ object SparkEntry {
           t(s, dir, "documents").select("doc_id", "lang", "n_chars"),
           "lang", "n_chars", smoothing = 20.0)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("te"))
-        .orderBy(col("doc_id"))
     }
 
     // --- Burrows' Delta stylometric distance between sources over the
@@ -10532,7 +10250,6 @@ object SparkEntry {
          |GROUP BY za.g, zb.g ORDER BY g_a, g_b""".stripMargin) { (s, dir) =>
       graft.operators.Drift.burrowsDelta(
           t(s, dir, "documents"), "source", "text", topN = 30)
-        .orderBy(col("g_a"), col("g_b"))
     }
 
     // --- Kendall tau-b between two per-lang rankings of the same docs
@@ -10584,7 +10301,6 @@ object SparkEntry {
               col("doc_id"))).as("rank"))
         .filter(col("rank") <= 20)
       graft.operators.Eval.kendallTauB(ra, rb, "lang", "doc_id", "rank")
-        .orderBy(col("lang"))
     }
 
     // --- margin-based mining score (Artetxe & Schwenk) over the
@@ -10648,7 +10364,6 @@ object SparkEntry {
         s"p246_nbr_${java.util.UUID.randomUUID().toString.take(8)}")
       Similarity.marginScore(pairs, "id_a", "id_b", e, "vec_id", "embedding",
           nbrAll, nbrAll)
-        .orderBy(col("id_a"))
     }
 
     // --- ROUGE-L LCS F-measure over the p240 pairing, promoted from a
@@ -10712,7 +10427,6 @@ object SparkEntry {
         graft.operators.Eval.rougeLPairs(
             cand.join(refs, Seq("doc_id")), "doc_id", "cand", "ref",
             maxTokens = 32)
-          .orderBy(col("doc_id"))
       }
     }
   }

@@ -20,16 +20,18 @@ object Tables {
     * parquet file's schema is metadata, a pure function of the path —
     * passing it explicitly is the production norm (catalog tables carry
     * their schema); nothing about the DATA is cached and every query
-    * still computes from the parquet bytes. Keyed by path only: fixture
-    * directories are immutable test data.
+    * still computes from the parquet bytes. Keyed by (path, length,
+    * mtime), so a file rewritten in place at the same path is re-inferred
+    * instead of being read through its old schema.
     */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val f = new java.io.File(path)
+    val sch = schemaCache.computeIfAbsent((path, f.length, f.lastModified),
+      _ => spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 

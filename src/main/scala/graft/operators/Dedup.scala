@@ -416,8 +416,10 @@ object Dedup {
     val sb = candSets.select(col(idCol).as("id_b"), col("__shingles").as("__sb"))
     // spread the verify probe: the staged cands frame often holds fewer
     // partitions than cores (byte-coalesced), and the per-pair
-    // array_intersect otherwise runs single-task (see spreadStaged)
-    spreadStaged(cands).join(sa, "id_a").join(sb, "id_b")
+    // array_intersect otherwise runs single-task (see spreadStaged; eager
+    // stages only)
+    (if (stager.eager) spreadStaged(cands) else cands)
+      .join(sa, "id_a").join(sb, "id_b")
       .withColumn("jaccard_sim", jaccard(col("__sa"), col("__sb")))
       .filter(col("jaccard_sim") >= threshold)
       .select("id_a", "id_b", "jaccard_sim")
@@ -431,7 +433,9 @@ object Dedup {
     * (the finding-7 byte-vs-compute mismatch, here on the staged-read
     * path). getNumPartitions on a materialized frame is metadata — no
     * job — so the guard is free, and at scale a checkpoint already holds
-    * >= parallelism partitions and this is a no-op. */
+    * >= parallelism partitions and this is a no-op. Only for frames from
+    * an eager [[Stager]]: on a lazy (Persist) frame the partition count
+    * runs the upstream pipeline's jobs. */
   def spreadStaged(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
@@ -514,8 +518,8 @@ object Dedup {
         .groupBy(col(idCol)).agg(collect_set(col("shingle")).as(out))
         .withColumnRenamed(idCol, side)
     // spread the verify probe off the byte-coalesced staged cands frame
-    // (see spreadStaged)
-    spreadStaged(cands)
+    // (see spreadStaged; eager stages only)
+    (if (stager.eager) spreadStaged(cands) else cands)
       .join(candSets(newDf, "new_id", "__sa"), "new_id")
       .join(candSets(indexDf, "index_id", "__sb"), "index_id")
       .withColumn("jaccard_sim", jaccard(col("__sa"), col("__sb")))

@@ -42,6 +42,16 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
+  test("no gate query ends in a global sort: both checkers compare sorted rows") {
+    val sorted = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (_, fn) =>
+      fn(spark, dir).queryExecution.analyzed match {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.global
+        case _ => false
+      }
+    }.map(_._1)
+    assert(sorted.isEmpty, sorted.mkString(", "))
+  }
+
   test("q10: top-k compiles to TakeOrderedAndProject, not global sort") {
     val df = SparkEntry.queries("q10_topk")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
@@ -542,11 +552,13 @@ class PlanAuditSpec extends SparkSpecBase {
     for (q <- Seq("p53_gopher_rules", "p55_line_collapse", "p57_link_density")) {
       val df = SparkEntry.queries(q)(spark, dir)
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      // the trailing global ORDER BY (gate determinism) is the only
-      // allowed exchange; the operators themselves are narrow
+      // the scan fan-out's round-robin repartition (SparkEntry.fanoutWidth)
+      // is the only allowed exchange; the operators themselves are narrow
       val shuffles = planNodes(df.queryExecution.executedPlan)
-        .count(_.isInstanceOf[ShuffleExchangeExec])
-      assert(shuffles <= 1, s"$q: $shuffles shuffles")
+        .collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(shuffles.size <= 1, s"$q: ${shuffles.size} shuffles")
+      assert(shuffles.forall(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]), s"$q: $shuffles")
     }
   }
 

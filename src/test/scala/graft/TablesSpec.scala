@@ -62,4 +62,16 @@ class TablesSpec extends SparkSpecBase {
     assert(ev.select(unix_micros($"ts")).as[Long].collect().sorted ===
       micros.map(_._1).sorted.toArray)
   }
+
+  test("read re-infers the schema of a parquet file rewritten at the same path") {
+    val dir = tmpDir()
+    Seq((1L, "a")).toDF("id", "s")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.read(spark, dir, "t").schema.fieldNames.toSeq === Seq("id", "s"))
+    Seq((2.5, true, "b")).toDF("x", "flag", "s")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Tables.read(spark, dir, "t")
+    assert(again.schema.fieldNames.toSeq === Seq("x", "flag", "s"))
+    assert(again.as[(Double, Boolean, String)].collect().toSeq === Seq((2.5, true, "b")))
+  }
 }

@@ -3,7 +3,7 @@
 # Round 2's whole output was voided by a compile error sbt reports in 5s —
 # this script makes that impossible to repeat.
 #
-#   1. sbt test                  (compile + 96 specs)
+#   1. sbt test                  (compile + every spec)
 #   2. Verify at sf0.01          (dump every SparkEntry query + oracle_sql.json)
 #   3. tools/oracle_check.py     (local DuckDB stand-in for the driver gate)
 #
