@@ -1,14 +1,28 @@
 package graft
 
+import graft.core.Jsons
+
 object Bench {
-  /** Median as the lower-middle order statistic (odd N → true middle).
-    * Shared by Bench and StagerBench so the two report one statistic. */
-  private[graft] def median(xs: Seq[Double]): Double =
-    xs.sorted.apply((xs.size - 1) / 2)
+  /** Queries per fresh session (see the chunking comment in main). */
+  private val ChunkSize = 96
+  /** Untimed passes over each chunk before the timed reps. */
+  private val WarmPasses = 2
+  /** Stages per query kept in the artifact's top-stage list. */
+  private val TopStages = 5
+
+  /** One timed rep's floor decomposition: wall and construction seconds
+    * plus the executed cost charged to the query. The driver gap is wall
+    * minus summed stage wall: planning, job submission and AQE re-plans
+    * that run in no stage, plus construction; it goes negative when
+    * stages overlap. */
+  private final case class Layer(wall: Double, cons: Double, cost: Measure.Cost) {
+    def stageSec: Double = cost.stageMs / 1e3
+    def taskSec: Double = cost.taskMs / 1e3
+    def gapSec: Double = wall - stageSec
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // SPARK_GRAFT_BENCH_ONLY=q19_math_fns,p51_pmi_pairs — subset filter for
     // local iteration (plan-change timing without a 200-query pass); the
@@ -25,11 +39,8 @@ object Bench {
     // SparkSession+JVM-state boundary every N queries bounds that
     // accumulation so a late queue position can't masquerade as a plan
     // regression. Session init + per-chunk warm cost sits OUTSIDE the timed
-    // region. SPARK_GRAFT_BENCH_CHUNK=0 restores the single-session run.
-    val chunkSize = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNK", "96").toInt
-    val chunks: Seq[Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)]] =
-      if (chunkSize <= 0 || names.size <= chunkSize) Seq(names)
-      else names.grouped(chunkSize).toSeq
+    // region.
+    val chunks = if (names.size <= ChunkSize) Seq(names) else names.grouped(ChunkSize).toSeq
 
     def loadAvg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
@@ -75,6 +86,11 @@ object Bench {
       .withDefaultValue(Vector.empty)
     val heapSamples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    // layers(name) parallels samples: the per-rep floor decomposition
+    // (construction, executed jobs/stages/tasks, stage wall, task time)
+    // from the always-on listener
+    val layers = scala.collection.mutable.Map.empty[String, Vector[Layer]]
+      .withDefaultValue(Vector.empty)
     // first failure message per query, kept IN the JSON artifact: round 7's
     // q35 failure left no diagnostic because stderr wasn't persisted and
     // the driver stores only a 2000-char output tail
@@ -88,31 +104,11 @@ object Bench {
     val chunkRepJit = Array.fill(chunks.size, reps)(0.0)
     val chunkRepCodeCache = Array.fill(chunks.size, reps)(-1.0)
     var warmSecTotal = 0.0
-    // Warm-pass COUNT (was boolean; default now 2). One untimed pass
-    // absorbs first-use codegen + janino, but tiered JIT keeps compiling
-    // through the first TWO executions of each generated method —
-    // measured (rep_jit_sec, this round): 68 s of JIT in timed rep 1 and
-    // 37 s in rep 2 after a single warm pass, settling to 12 s by rep 3,
-    // with the full-suite reps decaying monotonically (374/359/281 s)
-    // exactly as that compilation drains. That is one-time compilation
-    // cost, which the warm pass exists to exclude (round-11 advice); a
-    // second untimed pass moves it out of the timed region. The TIMED
-    // methodology (same queries, same noop sink, same reps, same chunking)
-    // is unchanged; only untimed warm wall-clock grows, and rep_jit_sec in
-    // the artifact shows the residual per rep. 0 disables warming.
-    val warmPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "2") match {
-      case "0" => 0
-      case s => try math.max(s.toInt, 0) catch { case _: Throwable => 1 }
-    }
-    val doWarm = warmPasses > 0
 
     for ((chunk, ci) <- chunks.zipWithIndex) {
-      val spark = Sessions.local(cpus)
-      spark.sparkContext.setLogLevel("WARN")
-      // Warm the session (JVM/codegen/parquet-reader init) so cold-start
-      // cost isn't attributed to whichever query happens to run first.
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      spark.range(1000).selectExpr("sum(id % 7)").collect()
+      val spark = Measure.session()
+      val listener = Measure.listen(spark)
+      Measure.warm(spark, sfDir)
       // c20's first call registers its two dim tables into a per-JVM graph
       // warehouse; that's ingestion/setup, not the query under test — warm
       // it in EVERY session (chunking makes each chunk its own JVM state)
@@ -123,37 +119,33 @@ object Bench {
       // paths, and r8/r9 driver benches showed q32/c2 rep-1 absorbing
       // 13-17s of one-time init against 1-3s medians.
       for (w <- Seq("q32_map_json_fns", "c2_flatten_json"))
-        try SparkEntry.queries(w)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        try Measure.noop(SparkEntry.queries(w)(spark, sfDir))
         catch { case e: Throwable =>
           System.err.println(s"[bench] $w warmup: ${e.getMessage}") }
-      // noop sink: materializes EVERY output column and row. A count()
-      // would let ColumnPruning/EliminateSorts strip the very expressions
-      // under test, timing a bare parquet scan instead of the operator.
-      def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      // (wall, construction) seconds; construction is building and
+      // analysing the frame, before the sink runs it
+      def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        Measure.noop(df)
+        ((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9)
       }
-      // Throwaway warm pass (round-11 advice): the first timed pass used to
+      // Untimed warm passes (round-11 advice): the first timed pass used to
       // pay one-time JIT + codegen compilation for every operator family —
-      // a 5.2x rep-1/rep-3 skew that made spread_pct meaningless. One
-      // UNTIMED pass over THIS chunk's queries moves that out of the
-      // measured reps; wall time recorded (warm_pass_sec, summed over
-      // chunks). Disable with SPARK_GRAFT_BENCH_WARM=0.
-      for (_ <- 0 until warmPasses) {
+      // a 5.2x rep-1/rep-3 skew that made spread_pct meaningless. Tiered
+      // JIT keeps compiling through the first TWO executions of each
+      // generated method (measured, rep_jit_sec: 68 s of JIT in timed rep 1
+      // and 37 s in rep 2 after a single warm pass, settling to 12 s by
+      // rep 3), so two passes over THIS chunk's queries move that one-time
+      // cost out of the measured reps; wall time recorded (warm_pass_sec,
+      // summed over chunks), and rep_jit_sec shows the residual per rep.
+      for (_ <- 0 until WarmPasses) {
         val t0 = System.nanoTime()
-        for ((name, fn) <- chunk) {
-          val before = spark.sparkContext.getPersistentRDDs.keySet
-          try timeOnce(fn)
+        for ((name, fn) <- chunk)
+          try Measure.releasing(spark)(timeOnce(fn))
           catch { case e: Throwable => // surfaces again in the timed passes
             System.err.println(s"[bench] $name warm pass: ${e.getMessage}") }
-          finally {
-            spark.sparkContext.getPersistentRDDs
-              .filter { case (rddId, _) => !before.contains(rddId) }
-              .values.foreach(_.unpersist(blocking = false))
-          }
-        }
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         warmSecTotal += (System.nanoTime() - t0) / 1e9
@@ -164,17 +156,19 @@ object Bench {
       for (p <- 0 until reps) {
         val repLoadStart = loadAvg()
         val jit0 = jitMillis()
+        val timed = scala.collection.mutable.Map.empty[String, (Double, Double)]
         for ((name, fn) <- chunk) {
           // staged intermediates (localCheckpoint / persist) leak per
           // query — accumulation squeezes the unified memory manager until
           // later queries stall in GC (measured: pass totals
           // 192s -> 212s -> 292s before clearing was added). Release each
           // query's RDD delta right after its timing, OUTSIDE the timed
-          // region (the StagerBench pattern).
-          val before = spark.sparkContext.getPersistentRDDs.keySet
+          // region.
           val gc0 = gcMillis()
-          try {
-            samples(name) = samples(name) :+ timeOnce(fn)
+          try Measure.releasing(spark) {
+            val t = Measure.tagged(spark, name)(timeOnce(fn))
+            timed(name) = t
+            samples(name) = samples(name) :+ t._1
             gcSamples(name) = gcSamples(name) :+ (gcMillis() - gc0) / 1e3
             heapSamples(name) = heapSamples(name) :+ heapUsedMb()
           }
@@ -182,10 +176,6 @@ object Bench {
             val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(400)}"
             errors.getOrElseUpdate(name, msg)
             System.err.println(s"[bench] $name FAILED: $msg")
-          } finally {
-            spark.sparkContext.getPersistentRDDs
-              .filter { case (rddId, _) => !before.contains(rddId) }
-              .values.foreach(_.unpersist(blocking = false))
           }
         }
         // belt-and-braces between passes: anything the per-query delta missed
@@ -194,6 +184,12 @@ object Bench {
         chunkRepLoads(ci)(p) = math.max(repLoadStart, loadAvg())
         chunkRepJit(ci)(p) = (jitMillis() - jit0) / 1e3
         chunkRepCodeCache(ci)(p) = codeCacheMb()
+        // one listener drain per pass, outside every timed region
+        val costs = listener.drain(spark)
+        for ((name, (wall, cons)) <- timed) {
+          val c = costs.getOrElse(name, Measure.Cost(0, Vector.empty, 0L))
+          layers(name) = layers(name) :+ Layer(wall, cons, c)
+        }
       }
       spark.stop()
     }
@@ -205,7 +201,7 @@ object Bench {
     val failed = names.collect { case (n, _) if samples(n).size < reps => n }
     val results: Seq[(String, Double, Vector[Double])] = names.map { case (name, _) =>
       val ss = samples(name)
-      (name, if (failed.contains(name)) -1.0 else median(ss), ss)
+      (name, if (failed.contains(name)) -1.0 else Measure.median(ss), ss)
     }
     // suite totals over the clean queries only, so per-pass sums compare
     // like for like even when something failed mid-run
@@ -251,45 +247,63 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // JSON-escape the error text (same rules Verify uses for oracle SQL)
-    def jesc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val errorsJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + jesc(k) + "\":\"" + jesc(v) + "\"" }
+      .map { case (k, v) => Jsons.render(k) + ":" + Jsons.render(v) }
       .mkString("{", ",", "}")
+    // per-query layer series (one entry per clean rep, parallel to
+    // "samples") and the last rep's costliest stages: the floor
+    // decomposition, file-only because it is far past the stdout tail
+    val layerSecs: Seq[(String, Layer => Double)] = Seq(
+      "cons_s" -> (_.cons), "stage_s" -> (_.stageSec), "task_s" -> (_.taskSec),
+      "gap_s" -> (_.gapSec))
+    val layerCounts: Seq[(String, Layer => Int)] = Seq(
+      "jobs" -> (_.cost.jobs), "stages" -> (_.cost.stages.size), "tasks" -> (_.cost.tasks))
+    val layersJson = results.map { case (k, _, _) =>
+      val ls = layers(k)
+      val fields = layerSecs.map { case (f, get) => s"\"$f\":" + vec(ls.map(get)) } ++
+        layerCounts.map { case (f, get) => s"\"$f\":" + ls.map(get).mkString("[", ",", "]") }
+      val top = ls.lastOption.toSeq.flatMap(_.cost.stages.sortBy(-_.ms).take(TopStages)).map(st =>
+        s"[${st.id},${st.ms},${st.tasks},${Jsons.render(st.name)}]").mkString("[", ",", "]")
+      s"\"$k\":" + (fields :+ s"\"top_stages\":$top").mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+    // suite sums of each layer's per-query median over the clean queries:
+    // the tail-resident summary of the decomposition above
+    val clean = results.collect { case (k, v, _) if v >= 0 && layers(k).nonEmpty => layers(k) }
+    val layerSums = (layerSecs.map { case (f, get) =>
+      s"\"$f\":" + r3(clean.map(ls => Measure.median(ls.map(get))).sum)
+    } ++ layerCounts.map { case (f, get) =>
+      s"\"$f\":" + clean.map(ls => Measure.median(ls.map(get(_).toDouble)).toLong).sum
+    }).mkString("{", ",", "}")
     val spreadPct =
-      if (suiteTotals.isEmpty || median(suiteTotals) == 0.0) -1.0
-      else 100.0 * (suiteTotals.max - suiteTotals.min) / median(suiteTotals)
+      if (suiteTotals.isEmpty || Measure.median(suiteTotals) == 0.0) -1.0
+      else 100.0 * (suiteTotals.max - suiteTotals.min) / Measure.median(suiteTotals)
     // load-gated spread: reps whose bracketing load stays under
     // 2 x cores/10 (the round-12 rule) count as clean; spread over those
     // is the structural noise figure, spread_pct stays the raw one
-    val loadCap = 2.0 * (try cpus.toDouble catch { case _: Throwable => 4.0 }) / 10.0
+    val loadCap = 2.0 * (try Measure.cpus.toDouble catch { case _: Throwable => 4.0 }) / 10.0
     val cleanReps = (0 until reps).filter(p =>
       repLoads(p) >= 0.0 && repLoads(p) < loadCap)
     val cleanTotals = cleanReps.map(suiteTotals)
     val spreadClean =
-      if (cleanTotals.size < 2 || median(cleanTotals) == 0.0) -1.0
-      else 100.0 * (cleanTotals.max - cleanTotals.min) / median(cleanTotals)
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"queries":$qs,"samples":$samplesJson,"gc_sec":$gcJson,"heap_mb_end":$heapJson,"suite_totals":${vec(suiteTotals)},"spread_pct":${r3(spreadPct)},"spread_pct_clean":${r3(spreadClean)},"clean_reps":${cleanReps.size},"load_cap":${r3(loadCap)},"rep_loads":${vec(repLoads)},"rep_gc_sec":${vec(repGcSec)},"rep_jit_sec":${vec(repJitSec)},"rep_codecache_mb":${vec(repCodeCacheMb)},"top_gc":$topGc,"chunk":${if (chunkSize <= 0) names.size else chunkSize},"n_sessions":${chunks.size},"warm_pass_sec":${r3(if (doWarm) warmSecTotal else -1.0)},"load_1m_before":$loadBefore,"load_1m_after":$loadAfter,"failed":$failedJson,"errors":$errorsJson,"sf":"$sfDir"}"""
-    println(line)
+      if (cleanTotals.size < 2 || Measure.median(cleanTotals) == 0.0) -1.0
+      else 100.0 * (cleanTotals.max - cleanTotals.min) / Measure.median(cleanTotals)
+    val line = s""""metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"queries":$qs,"samples":$samplesJson,"gc_sec":$gcJson,"heap_mb_end":$heapJson,"suite_totals":${vec(suiteTotals)},"spread_pct":${r3(spreadPct)},"spread_pct_clean":${r3(spreadClean)},"clean_reps":${cleanReps.size},"load_cap":${r3(loadCap)},"rep_loads":${vec(repLoads)},"rep_gc_sec":${vec(repGcSec)},"rep_jit_sec":${vec(repJitSec)},"rep_codecache_mb":${vec(repCodeCacheMb)},"top_gc":$topGc,"chunk":$ChunkSize,"n_sessions":${chunks.size},"warm_pass_sec":${r3(warmSecTotal)},"load_1m_before":$loadBefore,"load_1m_after":$loadAfter,"failed":$failedJson,"errors":$errorsJson,"sf":"$sfDir""""
+    println("{" + line + "}")
     // belt-and-braces: the same JSON as a file, immune to any stdout
     // capture/line-length limit in whatever harness invoked us — this file
     // carries the per-query gc_sec/heap_mb_end maps the 2000-char stdout
-    // tail cannot
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_last.json"), line + "\n")
+    // tail cannot, plus the per-query layers
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_last.json"),
+      "{" + line + ",\"layers\":" + layersJson + "}\n")
     catch { case e: Throwable => System.err.println(s"[bench] bench_last.json: ${e.getMessage}") }
     // FINAL compact summary (<1500 chars), printed LAST: the driver keeps
     // only the last 2000 stdout chars and the full line above truncates
     // mid-object there ("parsed": null in 15 straight round artifacts).
     // This line carries what round-over-round comparison needs — totals,
-    // spread, failure list, the 5 slowest medians — and flags that its
+    // spread, layer sums, failure list, the 5 slowest medians — and flags that its
     // "queries" map is the top-5 cut, with bench_last.json the full detail.
     val top5 = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, v, _) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${names.size},"reps":$reps,"suite_totals":${vec(suiteTotals)},"spread_pct":${r3(spreadPct)},"spread_pct_clean":${r3(spreadClean)},"rep_gc_sec":${vec(repGcSec)},"rep_jit_sec":${vec(repJitSec)},"rep_codecache_mb":${vec(repCodeCacheMb)},"rep_loads":${vec(repLoads)},"warm_pass_sec":${r3(if (doWarm) warmSecTotal else -1.0)},"n_failed":${failed.size},"failed":$failedJson,"queries":$top5,"queries_top5_only":true,"full_detail":"bench_last.json"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${names.size},"reps":$reps,"suite_totals":${vec(suiteTotals)},"spread_pct":${r3(spreadPct)},"spread_pct_clean":${r3(spreadClean)},"rep_gc_sec":${vec(repGcSec)},"rep_jit_sec":${vec(repJitSec)},"rep_codecache_mb":${vec(repCodeCacheMb)},"rep_loads":${vec(repLoads)},"warm_pass_sec":${r3(warmSecTotal)},"layer_sums":$layerSums,"n_failed":${failed.size},"failed":$failedJson,"queries":$top5,"queries_top5_only":true,"full_detail":"bench_last.json"}""")
   }
 }

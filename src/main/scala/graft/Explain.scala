@@ -8,8 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.lift(1).map(_.split(",").toSet)
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 8x scaling probe for the exact-similarity/sketch operators: replicate
@@ -29,43 +29,8 @@ import org.apache.spark.sql.functions._
   *    divides exactly by R in integer micros — 5e-5/8 would round 6.25µ
   *    down to 6µ and admit extra rows. Expected: rows exactly Rx.
   *
-  * Usage: ScaleProbe <sfDir> [R=8]   (SPARK_GRAFT_CPUS to size local[N]) */
+  * Usage: ScaleProbe <sfDir> [R=8]   (SPARK_GRAFT_CPUS to size local[N], default 4) */
 object ScaleProbe {
-
-  /** Session handle for [[time]]'s per-leg cleanup (set once in main). */
-  private var session: org.apache.spark.sql.SparkSession = _
-
-  /** Time one leg, then RELEASE the staged state it created: every leg
-    * localCheckpoints intermediates (minhash sets, SNM ranks, containment
-    * postings), and without an unpersist the checkpoints ACCUMULATE across
-    * legs — by the containment legs the executor heap is mostly dead stage
-    * blocks and the measurement reads GC, not the operator (measured: the
-    * maxDf leg swung 11 s ↔ 216 s at 8x run-to-run before this). Cleanup is
-    * the Bench per-query DELTA pattern — only RDDs persisted DURING this
-    * leg are released, never pre-existing state: a blanket unpersist kills
-    * the incremental-dedup leg's standing index, whose localCheckpoint
-    * lineage is truncated and cannot recompute
-    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Cleanup runs OUTSIDE the timed
-    * region. */
-  private def time[T](f: => T): (T, Double) = {
-    val before: Set[Int] =
-      if (session == null) Set.empty
-      else session.sparkContext.getPersistentRDDs.keySet.toSet
-    val t0 = System.nanoTime()
-    val r = f
-    val dt = (System.nanoTime() - t0) / 1e9
-    if (session != null) {
-      // BLOCKING: an async unpersist leaves the previous leg's dead blocks
-      // on the heap while the next leg is being timed (measured: the leg
-      // after the 95 s uncut-containment 8x read 77 s for work that takes
-      // ~7 s in isolation — the timer was mostly watching old-gen GC)
-      session.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-        .values.foreach(_.unpersist(blocking = true))
-      System.gc() // off the clock: start the next leg on a settled heap
-    }
-    (r, dt)
-  }
 
   private def saltChar(i: Int): String = ('a' + i).toChar.toString
 
@@ -80,9 +45,43 @@ object ScaleProbe {
     require(80 % r == 0,
       s"replicas must divide 80 (exact integer-micro heavy-hitter cut: " +
         s"80µ/R), got $r — use 2, 4, 5, 8, 10, 16 or 20")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    session = spark
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
+
+    /** Time one run, then RELEASE the staged state it created: every leg
+      * localCheckpoints intermediates (minhash sets, SNM ranks, containment
+      * postings), and without an unpersist the checkpoints ACCUMULATE across
+      * legs — by the containment legs the executor heap is mostly dead stage
+      * blocks and the measurement reads GC, not the operator (measured: the
+      * maxDf leg swung 11 s ↔ 216 s at 8x run-to-run before this). Only RDDs
+      * persisted DURING this run are released: the incremental-dedup leg's
+      * standing index is a localCheckpoint that cannot recompute
+      * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). BLOCKING: an async unpersist
+      * leaves the previous leg's dead blocks on the heap while the next leg
+      * is being timed (measured: the leg after the 95 s uncut-containment 8x
+      * read 77 s for work that takes ~7 s in isolation). */
+    def time[T](f: => T): (T, Double) = {
+      val out = Measure.releasing(spark, blocking = true) {
+        val t0 = System.nanoTime()
+        val v = f
+        (v, (System.nanoTime() - t0) / 1e9)
+      }
+      System.gc() // off the clock: start the next leg on a settled heap
+      out
+    }
+
+    /** One scaling leg: an untimed 1x run (codegen and stager warm-up),
+      * then 1x and Rx timed; prints both counts with the time and count
+      * ratios and returns the 1x seconds. */
+    def leg(name: String, unit: String, warm: Boolean = true, note: String = "")(
+        run: Int => Long): Double = {
+      if (warm) time(run(1))
+      val (n1, t1) = time(run(1))
+      val (nR, tR) = time(run(r))
+      println(f"$name 1x: $t1%.1fs $n1 $unit | ${r}x: $tR%.1fs $nR $unit" +
+        f" (ratio ${tR / t1}%.2fx time, ${nR.toDouble / n1}%.2fx $unit$note)")
+      t1
+    }
+
     val docs = Tables.read(spark, sfDir, "documents")
       .select(col("doc_id"), col("text")).filter(col("text").isNotNull)
 
@@ -110,17 +109,9 @@ object ScaleProbe {
         graft.operators.Dedup.shingleRows(hhFrame(reps), "doc_id", "text", 3),
         "shingle", minFraction = frac).count()
 
-    time(editRun(1)) // codegen + stager warm-up, discarded (cleanup after)
-    val (e1, te1) = time(editRun(1))
-    val (eR, teR) = time(editRun(r))
-    println(f"edit_join 1x: $te1%.1fs $e1 pairs | ${r}x: $teR%.1fs $eR pairs" +
-      f" (ratio ${teR / te1}%.2fx time, ${eR.toDouble / e1}%.2fx rows)")
+    leg("edit_join", "pairs")(editRun)
 
-    time(hhRun(1, 0.00008))
-    val (h1, th1) = time(hhRun(1, 0.00008))
-    val (hR, thR) = time(hhRun(r, 0.00008 / r))
-    println(f"heavy_hitters 1x: $th1%.1fs $h1 rows | ${r}x: $thR%.1fs $hR rows" +
-      f" (ratio ${thR / th1}%.2fx time, ${hR.toDouble / h1}%.2fx rows)")
+    leg("heavy_hitters", "rows")(n => hhRun(n, 0.00008 / n))
 
     // ---- containment join: the heavy-hitters frame's per-replica token
     // prefixes make the 3-shingle universes orthogonal, so posting lists
@@ -131,11 +122,7 @@ object ScaleProbe {
     def cntRun(reps: Int): Long =
       graft.operators.Dedup.containmentPairsPrefix(
         hhFrame(reps), "doc_id", "text", shingleN = 3, threshold = 0.8).count()
-    time(cntRun(1))
-    val (c1, tc1) = time(cntRun(1))
-    val (cR, tcR) = time(cntRun(r))
-    println(f"containment 1x: $tc1%.1fs $c1 pairs | ${r}x: $tcR%.1fs $cR pairs" +
-      f" (ratio ${tcR / tc1}%.2fx time, ${cR.toDouble / c1}%.2fx rows)")
+    leg("containment", "pairs")(cntRun)
 
     // ---- containment WITH the maxDf cut (round-11 advice: the knob
     // landed but the probe only measured the uncut path, which reads
@@ -150,12 +137,7 @@ object ScaleProbe {
       graft.operators.Dedup.containmentPairsPrefix(
         hhFrame(reps), "doc_id", "text", shingleN = 3, threshold = 0.8,
         maxDf = Some(dfCut)).count()
-    time(cntCutRun(1))
-    val (cc1, tcc1) = time(cntCutRun(1))
-    val (ccR, tccR) = time(cntCutRun(r))
-    println(f"containment_maxdf(df<=$dfCut) 1x: $tcc1%.1fs $cc1 pairs |" +
-      f" ${r}x: $tccR%.1fs $ccR pairs" +
-      f" (ratio ${tccR / tcc1}%.2fx time, ${ccR.toDouble / cc1}%.2fx rows)")
+    leg(s"containment_maxdf(df<=$dfCut)", "pairs")(cntCutRun)
 
     // ---- sorted-neighborhood pairs: the token-prefix salt puts every
     // replica's blocking keys in a CONTIGUOUS sort range (keys start
@@ -167,11 +149,7 @@ object ScaleProbe {
       graft.operators.Dedup.sortedNeighborhoodPairs(
         hhFrame(reps), "doc_id", "text",
         windowSize = 4, shingleN = 3, threshold = 0.5, keyLen = 12).count()
-    time(snmRun(1))
-    val (s1, ts1) = time(snmRun(1))
-    val (sR, tsR) = time(snmRun(r))
-    println(f"sorted_neighborhood 1x: $ts1%.1fs $s1 pairs | ${r}x: $tsR%.1fs $sR pairs" +
-      f" (ratio ${tsR / ts1}%.2fx time, ${sR.toDouble / s1}%.2fx rows)")
+    leg("sorted_neighborhood", "pairs")(snmRun)
 
     // ---- edit dedup (PassJoin o connected components o min-id keep):
     // the edit-join frame's disjoint alphabet blocks keep every edit
@@ -185,11 +163,7 @@ object ScaleProbe {
         "doc_id", "k", maxDist = 2)
       graft.operators.DupClusters.dedupByPairs(f, "doc_id", pairs).count()
     }
-    time(edRun(1))
-    val (d1, td1) = time(edRun(1))
-    val (dR, tdR) = time(edRun(r))
-    println(f"edit_dedup 1x: $td1%.1fs $d1 kept | ${r}x: $tdR%.1fs $dR kept" +
-      f" (ratio ${tdR / td1}%.2fx time, ${dR.toDouble / d1}%.2fx rows)")
+    leg("edit_dedup", "kept")(edRun)
 
     // ---- incremental dedup: FIXED batch, index grown Rx with PRE-BUILT
     // signatures (the persisted-signature operating mode) — the claim
@@ -225,11 +199,7 @@ object ScaleProbe {
         batch, prep._1, "doc_id", "text", indexSignatures = Some(prep._2)).count()
     val prep1 = incPrep(1)
     val prepR = incPrep(r)
-    incRun(prep1)
-    val (i1, ti1) = time(incRun(prep1))
-    val (iR, tiR) = time(incRun(prepR))
-    println(f"incremental_dedup 1x-index: $ti1%.1fs $i1 pairs | ${r}x-index: $tiR%.1fs $iR pairs" +
-      f" (ratio ${tiR / ti1}%.2fx time, ${iR.toDouble / i1}%.2fx pairs)")
+    leg("incremental_dedup(index)", "pairs")(n => incRun(if (n == 1) prep1 else prepR))
 
     // ---- boundary stitch pairs: positional overlapping halves of the
     // edit frame (the char-bijection translate COMMUTES with substring
@@ -252,11 +222,7 @@ object ScaleProbe {
     def stitchRun(reps: Int): Long =
       graft.operators.Dedup.boundaryStitchPairs(
         stitchFrame(reps), "id", "t", boundaryLen = 40).count()
-    time(stitchRun(1))
-    val (b1, tb1) = time(stitchRun(1))
-    val (bR, tbR) = time(stitchRun(r))
-    println(f"boundary_stitch 1x: $tb1%.1fs $b1 pairs | ${r}x: $tbR%.1fs $bR pairs" +
-      f" (ratio ${tbR / tb1}%.2fx time, ${bR.toDouble / b1}%.2fx rows)")
+    leg("boundary_stitch", "pairs")(stitchRun)
 
     // ---- Heaps'-law fit: the hh frame's per-replica token prefixes make
     // the vocabularies ORTHOGONAL across replicas, so total vocabulary
@@ -265,17 +231,15 @@ object ScaleProbe {
     // token-stream count aggregations and two PrefixSum scans; the OLS
     // itself is O(docs). Expected: vocab and n_tokens exactly Rx, time
     // well under Rx.
-    def heapsRun(reps: Int): (Long, Long) = {
+    val heapsTokens = scala.collection.mutable.Map.empty[Int, Long]
+    def heapsRun(reps: Int): Long = {
       val row = graft.operators.Profile
         .heapsFit(hhFrame(reps), "doc_id", "text").head()
-      (row.getAs[Long]("vocab"), row.getAs[Long]("n_tokens"))
+      heapsTokens(reps) = row.getAs[Long]("n_tokens")
+      row.getAs[Long]("vocab")
     }
-    time(heapsRun(1))
-    val ((v1, t1tok), th1b) = time(heapsRun(1))
-    val ((vR, tRtok), thRb) = time(heapsRun(r))
-    println(f"heaps_fit 1x: $th1b%.1fs vocab $v1 | ${r}x: $thRb%.1fs vocab $vR" +
-      f" (ratio ${thRb / th1b}%.2fx time, ${vR.toDouble / v1}%.2fx vocab," +
-      f" ${tRtok.toDouble / t1tok}%.2fx tokens)")
+    leg("heaps_fit", "vocab")(heapsRun)
+    println(f"heaps_fit tokens: ${heapsTokens(r).toDouble / heapsTokens(1)}%.2fx")
 
     // ---- grouped quantiles (keyed PrefixSum): per-replica group-name
     // suffixes make groups disjoint, so output rows are exactly Rx and
@@ -290,11 +254,7 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
     def gqRun(reps: Int): Long = graft.operators.Profile.quantilesByGroup(
       gFrame(reps), "source", "n_chars", Seq(0.5, 0.99)).count()
-    time(gqRun(1))
-    val (gq1, tgq1) = time(gqRun(1))
-    val (gqR, tgqR) = time(gqRun(r))
-    println(f"grouped_quantiles 1x: $tgq1%.1fs $gq1 rows | ${r}x: $tgqR%.1fs $gqR rows" +
-      f" (ratio ${tgqR / tgq1}%.2fx time, ${gqR.toDouble / gq1}%.2fx rows)")
+    leg("grouped_quantiles", "rows")(gqRun)
 
     // ---- grouped KS (keyed PrefixSum + per-group scaled-integer sup):
     // same decorrelation; rows exactly Rx, per-group ks identical.
@@ -305,11 +265,7 @@ object ScaleProbe {
         f.filter(col("lang") =!= "en").select(col("source"), col("n_chars")),
         "source", "n_chars").count()
     }
-    time(ksgRun(1))
-    val (kg1, tkg1) = time(ksgRun(1))
-    val (kgR, tkgR) = time(ksgRun(r))
-    println(f"grouped_ks 1x: $tkg1%.1fs $kg1 rows | ${r}x: $tkgR%.1fs $kgR rows" +
-      f" (ratio ${tkgR / tkg1}%.2fx time, ${kgR.toDouble / kg1}%.2fx rows)")
+    leg("grouped_ks", "rows")(ksgRun)
 
     // ---- GIANT single group (round-12 verdict: the keyed-PrefixSum
     // claims were parity-specced but no leg measured ONE group at Rx —
@@ -329,11 +285,7 @@ object ScaleProbe {
     def ggqRun(reps: Int): Long =
       graft.operators.Profile.quantilesByGroup(
         giantFrame(reps), "g", "v", Seq(0.5, 0.99)).head().getAs[Long]("n")
-    time(ggqRun(1))
-    val (gg1, tgg1) = time(ggqRun(1))
-    val (ggR, tggR) = time(ggqRun(r))
-    println(f"giant_group_quantiles 1x: $tgg1%.1fs n=$gg1 | ${r}x: $tggR%.1fs n=$ggR" +
-      f" (ratio ${tggR / tgg1}%.2fx time, ${ggR.toDouble / gg1}%.2fx n)")
+    leg("giant_group_quantiles", "n")(ggqRun)
 
     // mrrByGroup on the giant group: (score, tie-id) tuples distinct by
     // the id stripe; sparse positives via the id grid
@@ -342,11 +294,7 @@ object ScaleProbe {
         giantFrame(reps).select(col("g"), col("v").cast("double").as("s"),
           (col("id") % 97 === 0).as("l"), col("id")),
         "g", "s", "l", "id").head().getAs[Long]("n")
-    time(ggmRun(1))
-    val (gm1, tgm1) = time(ggmRun(1))
-    val (gmR, tgmR) = time(ggmRun(r))
-    println(f"giant_group_mrr 1x: $tgm1%.1fs n=$gm1 | ${r}x: $tgmR%.1fs n=$gmR" +
-      f" (ratio ${tgmR / tgm1}%.2fx time, ${gmR.toDouble / gm1}%.2fx n)")
+    leg("giant_group_mrr", "n")(ggmRun)
 
     // prioritySample on the giant group (the r13 migration under test):
     // output is exactly k at both scales — the ratio IS the story
@@ -354,12 +302,7 @@ object ScaleProbe {
       graft.operators.Splits.prioritySample(
         giantFrame(reps).withColumn("w", col("v").cast("double") + 1.0),
         "g", "id", "w", k = 1000).count()
-    time(gpsRun(1))
-    val (gp1, tgp1) = time(gpsRun(1))
-    val (gpR, tgpR) = time(gpsRun(r))
-    println(f"giant_group_priority_sample(k=1000) 1x: $tgp1%.1fs $gp1 kept |" +
-      f" ${r}x: $tgpR%.1fs $gpR kept" +
-      f" (ratio ${tgpR / tgp1}%.2fx time, ${gpR.toDouble / gp1}%.2fx rows)")
+    leg("giant_group_priority_sample(k=1000)", "kept")(gpsRun)
 
     // ---- the remaining r13/r14 keyed-PrefixSum migrations on the giant
     // group (r13 verdict #5 + the r14 robustStats/trimmedMean moves):
@@ -368,58 +311,34 @@ object ScaleProbe {
     def gcalRun(reps: Int): Long =
       graft.operators.Profile.calibrateByGroup(
         giantFrame(reps), "g", "v", "id").count()
-    time(gcalRun(1))
-    val (gc1, tgc1) = time(gcalRun(1))
-    val (gcR, tgcR) = time(gcalRun(r))
-    println(f"giant_group_calibrate 1x: $tgc1%.1fs $gc1 rows | ${r}x: $tgcR%.1fs $gcR rows" +
-      f" (ratio ${tgcR / tgc1}%.2fx time, ${gcR.toDouble / gc1}%.2fx rows)")
+    leg("giant_group_calibrate", "rows")(gcalRun)
 
     def gtsRun(reps: Int): Long =
       graft.operators.Splits.temporalSplitByGroup(
         giantFrame(reps), "g", "v", "id").count()
-    time(gtsRun(1))
-    val (gt1, tgt1) = time(gtsRun(1))
-    val (gtR, tgtR) = time(gtsRun(r))
-    println(f"giant_group_temporal_split 1x: $tgt1%.1fs $gt1 rows | ${r}x: $tgtR%.1fs $gtR rows" +
-      f" (ratio ${tgtR / tgt1}%.2fx time, ${gtR.toDouble / gt1}%.2fx rows)")
+    leg("giant_group_temporal_split", "rows")(gtsRun)
 
     def gwqRun(reps: Int): Long =
       graft.operators.Profile.weightedQuantilesByGroup(
         giantFrame(reps).withColumn("w", col("id") % 10 + 1),
         "g", "v", "w", Seq(0.5, 0.9)).head().getAs[Long]("n")
-    time(gwqRun(1))
-    val (gw1, tgw1) = time(gwqRun(1))
-    val (gwR, tgwR) = time(gwqRun(r))
-    println(f"giant_group_weighted_quantiles 1x: $tgw1%.1fs n=$gw1 | ${r}x: $tgwR%.1fs n=$gwR" +
-      f" (ratio ${tgwR / tgw1}%.2fx time, ${gwR.toDouble / gw1}%.2fx n)")
+    leg("giant_group_weighted_quantiles", "n")(gwqRun)
 
     def gabRun(reps: Int): Long =
       graft.operators.Packing.assignBins(
         giantFrame(reps).withColumn("n_tokens", col("v") % 400L + 1L),
         "id", "n_tokens", 512L, groupCol = Some("g")).count()
-    time(gabRun(1))
-    val (ga1, tga1) = time(gabRun(1))
-    val (gaR, tgaR) = time(gabRun(r))
-    println(f"giant_group_assign_bins 1x: $tga1%.1fs $ga1 rows | ${r}x: $tgaR%.1fs $gaR rows" +
-      f" (ratio ${tgaR / tga1}%.2fx time, ${gaR.toDouble / ga1}%.2fx rows)")
+    leg("giant_group_assign_bins", "rows")(gabRun)
 
     def grsRun(reps: Int): Long =
       graft.operators.Profile.robustStats(
         giantFrame(reps), "g", "v").head().getAs[Long]("n")
-    time(grsRun(1))
-    val (gr1, tgr1) = time(grsRun(1))
-    val (grR, tgrR) = time(grsRun(r))
-    println(f"giant_group_robust_stats 1x: $tgr1%.1fs n=$gr1 | ${r}x: $tgrR%.1fs n=$grR" +
-      f" (ratio ${tgrR / tgr1}%.2fx time, ${grR.toDouble / gr1}%.2fx n)")
+    leg("giant_group_robust_stats", "n")(grsRun)
 
     def gtmRun(reps: Int): Long =
       graft.operators.Profile.trimmedMeanByGroup(
         giantFrame(reps), "g", "v", "id", 100000L).head().getAs[Long]("n")
-    time(gtmRun(1))
-    val (gm1b, tgm1b) = time(gtmRun(1))
-    val (gmRb, tgmRb) = time(gtmRun(r))
-    println(f"giant_group_trimmed_mean 1x: $tgm1b%.1fs n=$gm1b | ${r}x: $tgmRb%.1fs n=$gmRb" +
-      f" (ratio ${tgmRb / tgm1b}%.2fx time, ${gmRb.toDouble / gm1b}%.2fx n)")
+    leg("giant_group_trimmed_mean", "n")(gtmRun)
 
     // ---- giant HUB linkPrediction (round-14 verdict #5): wedge fan-out
     // is QUADRATIC in hub degree, and the maxCenterDegree cap is the knob
@@ -443,18 +362,9 @@ object ScaleProbe {
     def hubRun(reps: Int, cap: Option[Long]): Long =
       graft.operators.Graphs.linkPrediction(hubEdges(reps), "a", "b",
         maxCenterDegree = cap).count()
-    time(hubRun(1, Some(64L)))
-    val (hc1, thc1) = time(hubRun(1, Some(64L)))
-    val (hcR, thcR) = time(hubRun(r, Some(64L)))
-    println(f"giant_hub_linkpred_capped(64) 1x: $thc1%.1fs $hc1 pairs |" +
-      f" ${r}x: $thcR%.1fs $hcR pairs" +
-      f" (ratio ${thcR / thc1}%.2fx time, ${hcR.toDouble / hc1}%.2fx rows)")
-    val (hu1, thu1) = time(hubRun(1, None))
-    val (huR, thuR) = time(hubRun(r, None))
-    println(f"giant_hub_linkpred_uncapped 1x: $thu1%.1fs $hu1 pairs |" +
-      f" ${r}x: $thuR%.1fs $huR pairs" +
-      f" (ratio ${thuR / thu1}%.2fx time, ${huR.toDouble / hu1}%.2fx rows — " +
-      "the R^2 wedge blow-up the cap exists to stop)")
+    leg("giant_hub_linkpred_capped(64)", "pairs")(hubRun(_, Some(64L)))
+    leg("giant_hub_linkpred_uncapped", "pairs", warm = false,
+      note = " — the R^2 wedge blow-up the cap exists to stop")(hubRun(_, None))
 
     // ---- embedding uniformity (p238): the pair space is the bucketed
     // self-equi-join, Σ_b size(b)² — the documented posture is
@@ -477,21 +387,14 @@ object ScaleProbe {
       graft.operators.Similarity.embeddingUniformity(
         embFrame(reps, bound), "vec_id", "embedding", nBuckets = buckets)
         .head().getAs[Long]("n_pairs")
-    time(unifRun(1, bk1, Long.MaxValue))
-    val (u1, tu1) = time(unifRun(1, bk1, Long.MaxValue))
-    val (uR, tuR) = time(unifRun(r, bk1 * r, Long.MaxValue))
-    println(f"uniformity_buckets(n/16) 1x: $tu1%.1fs $u1 pairs | ${r}x: $tuR%.1fs $uR pairs" +
-      f" (ratio ${tuR / tu1}%.2fx time, ${uR.toDouble / u1}%.2fx pairs)")
+    leg("uniformity_buckets(n/16)", "pairs")(n => unifRun(n, bk1 * n, Long.MaxValue))
     // the GIANT-bucket hazard: nBuckets FIXED at 1 while n grows Rx —
     // pairs are exactly C(n,2), so rows/time blow up ~R^2 BY CONSTRUCTION
     // (documents why the bucket count must track n); bounded base so the
     // quadratic demonstration stays seconds, the capped-hub convention
     val unifBound = 250L
-    val (g1p, tg1p) = time(unifRun(1, 1, unifBound))
-    val (gRp, tgRp) = time(unifRun(r, 1, unifBound))
-    println(f"uniformity_giant_bucket 1x: $tg1p%.1fs $g1p pairs | ${r}x: $tgRp%.1fs $gRp pairs" +
-      f" (ratio ${tgRp / tg1p}%.2fx time, ${gRp.toDouble / g1p}%.2fx pairs — " +
-      "the C(n,2) blow-up nBuckets ∝ n exists to stop)")
+    leg("uniformity_giant_bucket", "pairs", warm = false,
+      note = " — the C(n,2) blow-up nBuckets ∝ n exists to stop")(unifRun(_, 1, unifBound))
 
     // ---- Fellegi–Sunter linkage (p242): the corpus collapses to <= 2^k
     // pattern counts in ONE aggregation; EM is a driver recipe over that
@@ -512,11 +415,7 @@ object ScaleProbe {
     def linkRun(reps: Int, k: Int): Long =
       graft.operators.Linkage.fellegiSunter(
         linkFrame(reps, k), (0 until k).map(i => s"f$i")).count()
-    time(linkRun(1, 3))
-    val (l1, tl1) = time(linkRun(1, 3))
-    val (lR, tlR) = time(linkRun(r, 3))
-    println(f"linkage_em(k=3) 1x: $tl1%.1fs $l1 rows | ${r}x: $tlR%.1fs $lR rows" +
-      f" (ratio ${tlR / tl1}%.2fx time, ${lR.toDouble / l1}%.2fx rows)")
+    val tl1 = leg("linkage_em(k=3)", "rows")(linkRun(_, 3))
     val (lk1, tlk1) = time(linkRun(1, 12))
     println(f"linkage_em(k=12, 1x): $tlk1%.1fs $lk1 rows" +
       f" (vs k=3 1x: ${tlk1 / tl1}%.2fx time for 512x the pattern table — " +
@@ -541,11 +440,7 @@ object ScaleProbe {
         qs, "id_a", "id_b", e, "vec_id", "embedding",
         nbr("id_a"), nbr("id_b")).count()
     }
-    time(marginRun(1))
-    val (m1, tm1) = time(marginRun(1))
-    val (mR, tmR) = time(marginRun(r))
-    println(f"margin_score 1x: $tm1%.1fs $m1 rows | ${r}x: $tmR%.1fs $mR rows" +
-      f" (ratio ${tmR / tm1}%.2fx time, ${mR.toDouble / m1}%.2fx rows)")
+    leg("margin_score", "rows")(marginRun)
 
     // ---- chat structure audit (p251): a pure per-row HOF projection —
     // the probe checks the zero-shuffle claim's consequence at Rx (time
@@ -559,11 +454,7 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
     def chatRun(reps: Int): Long =
       graft.operators.Chat.chatAudit(chatFrame(reps), "doc_id", "text").count()
-    time(chatRun(1))
-    val (ca1, tca1) = time(chatRun(1))
-    val (caR, tcaR) = time(chatRun(r))
-    println(f"chat_audit 1x: $tca1%.1fs $ca1 rows | ${r}x: $tcaR%.1fs $caR rows" +
-      f" (ratio ${tcaR / tca1}%.2fx time, ${caR.toDouble / ca1}%.2fx rows)")
+    leg("chat_audit", "rows")(chatRun)
 
     // ---- min-k% membership audit (p248): scoring stream + document-
     // keyed window + one final aggregation. The hhFrame's per-replica
@@ -578,11 +469,7 @@ object ScaleProbe {
       graft.operators.LmScore.minKProbAuditSelf(
         hhFrame(reps), "doc_id", "text", kPercent = 20.0,
         vocabSize = Int.MaxValue).count()
-    time(minkRun(1))
-    val (mk1, tmk1) = time(minkRun(1))
-    val (mkR, tmkR) = time(minkRun(r))
-    println(f"min_k_prob 1x: $tmk1%.1fs $mk1 rows | ${r}x: $tmkR%.1fs $mkR rows" +
-      f" (ratio ${tmkR / tmk1}%.2fx time, ${mkR.toDouble / mk1}%.2fx rows)")
+    leg("min_k_prob", "rows")(minkRun)
 
     // ---- preference length-bias roll-up (p256): a per-pair projection
     // into ONE map-side-combinable scalar aggregation — output is always
@@ -599,11 +486,7 @@ object ScaleProbe {
       graft.operators.Chat.preferenceLengthBias(prefFrame(reps),
           "doc_id", "chosen", "rejected")
         .collect()(0).getLong(0) // n_pairs
-    time(prefRun(1))
-    val (pb1, tpb1) = time(prefRun(1))
-    val (pbR, tpbR) = time(prefRun(r))
-    println(f"pref_bias 1x: $tpb1%.1fs $pb1 pairs | ${r}x: $tpbR%.1fs $pbR pairs" +
-      f" (ratio ${tpbR / tpb1}%.2fx time, ${pbR.toDouble / pb1}%.2fx pairs)")
+    leg("pref_bias", "pairs")(prefRun)
     spark.stop()
   }
 }

@@ -17,8 +17,7 @@ object StagerBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.count() // warm the reader
 
@@ -31,30 +30,23 @@ object StagerBench {
 
     val results = modes.map { case (name, stager) =>
       val samples = (1 to reps).map { _ =>
-        // snapshot persistent RDD ids so cleanup can release EXACTLY what
-        // this rep staged — Dataset.unpersist is a no-op for localCheckpoint
-        // blocks (RDD-level persistence, not a CacheManager entry), so the
-        // RDD delta is the only handle that works for every mode; without
-        // it blocks pile up across reps and the later modes are measured
-        // under the earlier modes' memory pressure
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val t0 = System.nanoTime()
-        graft.operators.Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
-            shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8,
-            stager = stager)
-          .orderBy(col("id_a"), col("id_b"))
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // cleanup OUTSIDE the timed region: the per-mode numbers compare
-        // staging cost, not cleanup cost (Parquet's dropStages does real
-        // FS deletes the in-memory modes never pay)
-        spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) => !before.contains(id) }
-          .values.foreach(_.unpersist(blocking = true))
+        // release EXACTLY what this rep staged, outside the timed region:
+        // without it blocks pile up across reps and the later modes are
+        // measured under the earlier modes' memory pressure. Parquet's
+        // dropStages does real FS deletes the in-memory modes never pay,
+        // so it stays off the clock too.
+        val dt = Measure.releasing(spark, blocking = true) {
+          val t0 = System.nanoTime()
+          Measure.noop(graft.operators.Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
+              shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8,
+              stager = stager)
+            .orderBy(col("id_a"), col("id_b")))
+          (System.nanoTime() - t0) / 1e9
+        }
         graph.dropStages()
         dt
       }
-      name -> Bench.median(samples)
+      name -> Measure.median(samples)
     }
     val js = results.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     println(s"""{"metric":"stager_ab_p05","unit":"sec","reps":$reps,"modes":$js,"sf":"$sfDir"}""")

@@ -243,12 +243,15 @@ object Classifier {
     // (round9d IS the engine's round9 — it already replays the weight
     // update on both paths), so the weight table is bit-identical on
     // either path (ClassifierSpec pins local == forced-distributed).
-    // Above the cutoff the distributed rounds run unchanged — the 100 TB
-    // shape is intact. System-property override so the spec can force the
-    // distributed path on a small fixture.
-    val localMaxDocs =
-      sys.props.get("graft.clf.localMaxDocs").map(_.toLong).getOrElse(1L << 16)
-    if (nDocs > 0L && nDocs <= localMaxDocs) {
+    // Above the cutoff (Scale.DriverLocalMaxRows) the distributed rounds
+    // run unchanged — the 100 TB shape is intact. The local dot replays
+    // the DECIMAL(38,8) step rounding that allowPrecisionLoss=true gives
+    // the distributed fold; under false the two paths would diverge
+    // silently, so that conf fails loudly instead.
+    if (nDocs > 0L && nDocs <= Scale.driverLocalMaxRows(spark)) {
+      require(spark.conf.get("spark.sql.decimalOperations.allowPrecisionLoss", "true").toBoolean,
+        "trainLogistic's driver-local rounds replay the distributed decimal fold only " +
+          "under spark.sql.decimalOperations.allowPrecisionLoss=true")
       val rows = docFeat
         .select(col("__y"), col("__n"), col("__bs"), col("__cs")).collect()
       if (stager.eager) rec.release()

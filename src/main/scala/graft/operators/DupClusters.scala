@@ -130,10 +130,7 @@ object DupClusters {
     // UTF8-binary care, and every gate graph is integer-keyed). The edge
     // count is the convergence signature already in hand — the gate is
     // free. Above the cutoff (or for non-integral ids) the star rounds
-    // run unchanged. System property so a spec can force the distributed
-    // path on a small fixture.
-    val ccLocalMax =
-      sys.props.get("graft.cc.localMaxEdges").map(_.toLong).getOrElse(1L << 16)
+    // run unchanged (cutoff: Scale.DriverLocalMaxRows).
     val idType = edges.schema("u").dataType
     val integralId = idType match {
       case org.apache.spark.sql.types.LongType |
@@ -142,7 +139,7 @@ object DupClusters {
            org.apache.spark.sql.types.ByteType => true
       case _ => false
     }
-    if (integralId && sig._1 <= ccLocalMax) {
+    if (integralId && sig._1 <= Scale.driverLocalMaxRows(pairs.sparkSession)) {
       val es = edges.select(col("u").cast("long"), col("v").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       if (stager.eager) prevRec.release()

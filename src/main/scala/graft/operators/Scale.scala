@@ -11,6 +11,15 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
+  /** Session conf key shared by the driver-local forks (connected
+    * components, BPE merge rounds, logistic training): inputs at or below
+    * this many rows run the iterative loop on the driver, larger ones as
+    * distributed rounds. Default 2^16 rows, a few MB of model-sized data. */
+  val DriverLocalMaxRows = "spark.graft.driverLocalMaxRows"
+
+  def driverLocalMaxRows(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.getOption(DriverLocalMaxRows).map(_.toLong).getOrElse(1L << 16)
+
   /** Re-aggregatable aggregate spec: partial(x) then final over partials.
     * sum/count/min/max compose; avg is expressed as sum+count upstream. */
   sealed abstract class ReAgg(val fn: String)

@@ -173,16 +173,6 @@ object Vocab {
       .orderBy(col("__n").desc, col("__term"))
       .limit(maxWords)
 
-  /** Word inventories at or below this row count run the merge loop on
-    * the driver (see [[bpeMergeLoop]]): 2^16 words x ~12 symbol strings
-    * is a few MB — the bounded-driver-data class (model-sized, never a
-    * dataset; the [[Classifier.trainLogistic]] gradient-vector rule).
-    * System-property override exists so VocabSpec can force the
-    * distributed path on a small fixture and assert the two paths emit
-    * identical merge tables. */
-  private def localMergeMaxWords: Long =
-    sys.props.get("graft.bpe.localMaxWords").map(_.toLong).getOrElse(1L << 16)
-
   /** Unsigned-UTF-8-byte string comparison — EXACTLY Spark's UTF8String
     * binary ordering, which the distributed loop's orderBy(l, r) uses for
     * the argmax tie-break. Java String.compareTo differs for
@@ -198,9 +188,10 @@ object Vocab {
     * pair-count aggregation, a 1-row driver argmax, one HOF rewrite —
     * see [[bpeMerges]] for the full 100 TB-shape rationale.
     *
-    * When the staged word inventory holds <= [[LocalMergeMaxWords]] rows
-    * it is collected ONCE and the rounds run on the driver — the merge
-    * frame is already model-sized (capped by maxWords upstream), and at
+    * When the staged word inventory holds <= [[Scale.DriverLocalMaxRows]]
+    * rows it is collected ONCE and the rounds run on the driver — the merge
+    * frame is already model-sized (capped by maxWords upstream; 2^16
+    * words x ~12 symbol strings is a few MB), and at
     * that size every distributed round is pure job overhead (measured
     * r17: 16 rounds = 49 stages whose LARGEST stage was 163 ms, ~3.1 s
     * of scheduling around ~0.5 s of work). The local loop replays the
@@ -216,7 +207,7 @@ object Vocab {
       stager: Stager): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     var words = stager.stage(words0, s"bpe_words_${runId}_init")
-    if (words.count() <= localMergeMaxWords)
+    if (words.count() <= Scale.driverLocalMaxRows(spark))
       return bpeMergeLoopLocal(spark,
         words.collect().map(r =>
           (r.getLong(0), r.getSeq[String](1).toArray)),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Classifier
+import graft.operators.{Classifier, Scale}
 import org.apache.spark.sql.functions._
 
 class ClassifierSpec extends SparkSpecBase {
@@ -127,21 +127,37 @@ class ClassifierSpec extends SparkSpecBase {
         if (i % 2 == 0) s"große qualität ausführlich 文章 gut $i the of"
         else s"spam billig kaufen 垃圾 jetzt $i the of and more words here",
         i % 2)).toDF("doc_id", "text", "label")
-    def weights(): Seq[(Int, Double)] =
-      Classifier.trainLogistic(docs, "doc_id", "text", "label",
+    def weights(d: org.apache.spark.sql.DataFrame): Seq[(Int, Double)] =
+      Classifier.trainLogistic(d, "doc_id", "text", "label",
         nBuckets = 128, iters = 6, lr = 0.7)
         .orderBy("bucket").as[(Int, Double)].collect().toSeq
-    val local = weights() // 40 docs <= default cutoff -> driver rounds
-    val prev = sys.props.put("graft.clf.localMaxDocs", "0")
-    val dist =
-      try weights() // cutoff 0 -> distributed rounds
-      finally prev match {
-        case Some(v) => sys.props.put("graft.clf.localMaxDocs", v)
-        case None => sys.props.remove("graft.clf.localMaxDocs")
-      }
-    assert(local === dist,
+    def distributed(d: org.apache.spark.sql.DataFrame) =
+      withConf(Scale.DriverLocalMaxRows, "0")(weights(d))
+    val local = weights(docs) // 40 docs <= default cutoff -> driver rounds
+    assert(local === distributed(docs),
       "local and distributed gradient rounds must emit bit-identical weights")
     assert(local.exists(_._2 != 0.0), "training must move some weight")
+    // at a lowered cutoff N: N-1 and N docs train on the driver, N+1
+    // distributed; each must match the forced-distributed weights
+    val n = 12
+    for (rows <- Seq(n - 1, n, n + 1)) {
+      val d = docs.filter($"doc_id" < rows)
+      assert(withConf(Scale.DriverLocalMaxRows, n.toString)(weights(d)) === distributed(d),
+        s"$rows docs at cutoff $n")
+    }
+  }
+
+  test("trainLogistic: the driver-local rounds refuse allowPrecisionLoss=false") {
+    // the local dot replays the DECIMAL(38,8) step rounding that only
+    // allowPrecisionLoss=true gives the distributed fold
+    val docs = Seq((1L, "good long words", 1), (2L, "cheap spam now", 0))
+      .toDF("doc_id", "text", "label")
+    val e = intercept[IllegalArgumentException] {
+      withConf("spark.sql.decimalOperations.allowPrecisionLoss", "false") {
+        Classifier.trainLogistic(docs, "doc_id", "text", "label", nBuckets = 8)
+      }
+    }
+    assert(e.getMessage.contains("allowPrecisionLoss"), e.getMessage)
   }
 
   test("trainLogistic: label validation and degenerate inputs") {

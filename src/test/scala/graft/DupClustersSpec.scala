@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, DupClusters}
+import graft.operators.{Dedup, DupClusters, Scale}
 import org.apache.spark.sql.functions._
 
 class DupClustersSpec extends SparkSpecBase {
@@ -33,17 +33,19 @@ class DupClustersSpec extends SparkSpecBase {
     // chain + triangle + stars + singletons, shuffled edge orientations
     val pairs = Seq((5L, 1L), (1L, 9L), (9L, 13L), (2L, 40L), (40L, 2L),
       (100L, 3L), (3L, 7L), (7L, 100L), (50L, 60L), (61L, 60L), (62L, 60L))
-    def run() = cc(pairs)
-    val local = run() // 11 edges <= default cutoff -> driver union-find
-    val prev = sys.props.put("graft.cc.localMaxEdges", "0")
-    val dist =
-      try run() // cutoff 0 -> distributed star rounds
-      finally prev match {
-        case Some(v) => sys.props.put("graft.cc.localMaxEdges", v)
-        case None => sys.props.remove("graft.cc.localMaxEdges")
-      }
-    assert(local === dist,
+    val local = cc(pairs) // 11 edges <= default cutoff -> driver union-find
+    def distributed(ps: Seq[(Long, Long)]) = withConf(Scale.DriverLocalMaxRows, "0")(cc(ps))
+    assert(local === distributed(pairs),
       "local and distributed connected components must assign identically")
+    // at a lowered cutoff N: N-1 and N distinct edges run union-find on the
+    // driver, N+1 the star rounds; each must match the forced-distributed run
+    val distinctEdges = pairs.filterNot(_ == ((40L, 2L)))
+    val n = 6
+    for (edges <- Seq(n - 1, n, n + 1)) {
+      val ps = distinctEdges.take(edges)
+      assert(withConf(Scale.DriverLocalMaxRows, n.toString)(cc(ps)) === distributed(ps),
+        s"$edges edges at cutoff $n")
+    }
   }
 
   test("self-pairs, nulls and duplicate/reversed edges are tolerated") {

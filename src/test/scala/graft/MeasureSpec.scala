@@ -1,0 +1,42 @@
+package graft
+
+class MeasureSpec extends SparkSpecBase {
+
+  test("releasing frees an RDD persisted inside its body and keeps one persisted before it") {
+    val sc = spark.sparkContext
+    val standing = sc.parallelize(1 to 10).persist()
+    standing.count()
+    try {
+      val inner = Measure.releasing(spark) {
+        val r = sc.parallelize(1 to 10).persist()
+        r.count()
+        r
+      }
+      val live = sc.getPersistentRDDs.keySet
+      assert(!live.contains(inner.id), "the RDD persisted inside the body must be released")
+      assert(live.contains(standing.id), "the RDD persisted before the body must stay")
+    } finally standing.unpersist(blocking = true)
+  }
+
+  test("Layers charges each tagged frame's jobs, stages and tasks to its key") {
+    val layers = Measure.listen(spark)
+    try {
+      Measure.tagged(spark, "one")(spark.range(10).collect())
+      spark.range(3).collect() // untagged: charged to no key
+      Measure.tagged(spark, "two") {
+        spark.range(10).collect()
+        spark.range(5).collect()
+      }
+      val costs = layers.drain(spark)
+      assert(costs.keySet === Set("one", "two"))
+      assert(costs("one").jobs === 1)
+      assert(costs("two").jobs === 2)
+      for ((k, c) <- costs) {
+        assert(c.stages.size === c.jobs, k)
+        assert(c.tasks >= c.jobs, k)
+        assert(c.stageMs >= 0L && c.taskMs >= 0L, k)
+      }
+      assert(layers.drain(spark).isEmpty, "a drain forgets what it returned")
+    } finally spark.sparkContext.removeSparkListener(layers)
+  }
+}

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Vocab
+import graft.operators.{Scale, Vocab}
 import org.apache.spark.sql.functions._
 
 class VocabSpec extends SparkSpecBase {
@@ -107,20 +107,29 @@ class VocabSpec extends SparkSpecBase {
       "newest newest 新しい 新しい 新しい", "déjà vu déjà vu",
       "aa ab aa ab ba", "😀x 😀x 😀y")
     val df = texts.zipWithIndex.map(_.swap).toDF("id", "text")
+    def merges(d: org.apache.spark.sql.DataFrame, k: Int) = (
+      Vocab.bpeMerges(d, "text", numMerges = k)
+        .orderBy("rank").as[(Int, String, String, Long)].collect().toSeq,
+      Vocab.bpeMergesBytes(d, "text", numMerges = k)
+        .orderBy("rank").as[(Int, String, String, Long)].collect().toSeq)
+    def distributed(d: org.apache.spark.sql.DataFrame, k: Int) =
+      withConf(Scale.DriverLocalMaxRows, "0")(merges(d, k))
     for (k <- Seq(5, 24)) {
-      val local = Vocab.bpeMerges(df, "text", numMerges = k)
-        .orderBy("rank").as[(Int, String, String, Long)].collect().toSeq
-      val localB = Vocab.bpeMergesBytes(df, "text", numMerges = k)
-        .orderBy("rank").as[(Int, String, String, Long)].collect().toSeq
-      System.setProperty("graft.bpe.localMaxWords", "0")
-      try {
-        val dist = Vocab.bpeMerges(df, "text", numMerges = k)
-          .orderBy("rank").as[(Int, String, String, Long)].collect().toSeq
-        val distB = Vocab.bpeMergesBytes(df, "text", numMerges = k)
-          .orderBy("rank").as[(Int, String, String, Long)].collect().toSeq
-        assert(local === dist, s"char-level, numMerges=$k")
-        assert(localB === distB, s"byte-level, numMerges=$k")
-      } finally System.clearProperty("graft.bpe.localMaxWords")
+      val (local, localB) = merges(df, k)
+      val (dist, distB) = distributed(df, k)
+      assert(local === dist, s"char-level, numMerges=$k")
+      assert(localB === distB, s"byte-level, numMerges=$k")
+    }
+    // at a lowered cutoff N: inventories of N-1 and N distinct words merge
+    // on the driver, N+1 in distributed rounds; each must match the
+    // forced-distributed merge table
+    val words = texts.flatMap(_.split(" ")).distinct
+    val n = 8
+    for (size <- Seq(n - 1, n, n + 1)) {
+      val d = Seq((0, words.take(size).flatMap(w => Seq(w, w)).mkString(" ")))
+        .toDF("id", "text")
+      assert(withConf(Scale.DriverLocalMaxRows, n.toString)(merges(d, 12)) ===
+        distributed(d, 12), s"$size words at cutoff $n")
     }
   }
 
