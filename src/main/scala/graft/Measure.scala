@@ -57,6 +57,7 @@ object Measure {
   /** Local property naming the key that [[Layers]] charges a job to. */
   private val KeyProperty = "graft.measure.key"
   private val FlushProperty = "graft.measure.flush"
+  private val ConstructingProperty = "graft.measure.constructing"
 
   /** Runs `body` with its jobs charged to `key`. Broadcast and subquery
     * jobs inherit the property through Spark's captured thread locals. */
@@ -66,13 +67,26 @@ object Measure {
     try body finally sc.setLocalProperty(KeyProperty, null)
   }
 
-  final case class Stage(id: Int, ms: Long, tasks: Int, name: String)
+  /** Runs `body`, the construction of a frame, with its jobs marked as
+    * construction: the jobs eager stagers run before the frame exists. */
+  def constructing[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(ConstructingProperty, "1")
+    try body finally sc.setLocalProperty(ConstructingProperty, null)
+  }
+
+  /** A completed stage; `name` is its call site, followed by its job's
+    * description when one was set, and `cons` marks a stage of a job
+    * started under [[constructing]]. */
+  final case class Stage(id: Int, ms: Long, tasks: Int, name: String, cons: Boolean)
 
   /** One key's executed work: its job count, every completed stage (wall
     * from submission to completion) and the summed task run time. */
   final case class Cost(jobs: Int, stages: Vector[Stage], taskMs: Long) {
     def tasks: Int = stages.map(_.tasks).sum
     def stageMs: Long = stages.map(_.ms).sum
+    /** Stage wall of the jobs started while the frame was constructed. */
+    def consStageMs: Long = stages.filter(_.cons).map(_.ms).sum
   }
 
   /** Registers a [[Layers]] listener on the session's context. */
@@ -87,6 +101,8 @@ object Measure {
   final class Layers extends SparkListener {
     private val jobs = mutable.Map.empty[String, Int].withDefaultValue(0)
     private val stageKey = mutable.Map.empty[Int, String]
+    /** Per stage: its job's description and whether it ran in construction. */
+    private val stageJob = mutable.Map.empty[Int, (Option[String], Boolean)]
     private val stages = mutable.Map.empty[String, Vector[Stage]]
       .withDefaultValue(Vector.empty)
     private val taskMs = mutable.Map.empty[String, Long].withDefaultValue(0L)
@@ -96,9 +112,11 @@ object Measure {
       val props = Option(e.properties)
       if (props.exists(_.getProperty(FlushProperty) != null)) flushed.countDown()
       else props.flatMap(p => Option(p.getProperty(KeyProperty))).foreach { k =>
+        val job = (props.flatMap(p => Option(p.getProperty(graft.core.Jobs.DescriptionProperty))),
+          props.exists(_.getProperty(ConstructingProperty) != null))
         synchronized {
           jobs(k) += 1
-          e.stageIds.foreach(stageKey(_) = k)
+          e.stageIds.foreach { id => stageKey(id) = k; stageJob(id) = job }
         }
       }
     }
@@ -108,7 +126,10 @@ object Measure {
       stageKey.get(i.stageId).foreach { k =>
         val ms = (for (s <- i.submissionTime; c <- i.completionTime) yield c - s)
           .getOrElse(0L)
-        stages(k) :+= Stage(i.stageId, ms, i.numTasks, i.name.takeWhile(_ != '\n'))
+        val (description, cons) = stageJob.getOrElse(i.stageId, (None, false))
+        val callSite = i.name.takeWhile(_ != '\n')
+        stages(k) :+= Stage(i.stageId, ms, i.numTasks,
+          description.fold(callSite)(d => s"$callSite [$d]"), cons)
       }
     }
 
@@ -132,7 +153,7 @@ object Measure {
       require(latch.await(60, TimeUnit.SECONDS), "listener bus never delivered the flush marker")
       synchronized {
         val out = jobs.keys.map(k => k -> Cost(jobs(k), stages(k), taskMs(k))).toMap
-        jobs.clear(); stageKey.clear(); stages.clear(); taskMs.clear()
+        jobs.clear(); stageKey.clear(); stageJob.clear(); stages.clear(); taskMs.clear()
         out
       }
     }

@@ -142,18 +142,18 @@ class MagicTable(
   def transform(query: String, model: String = "deterministic"): MagicTable = {
     val cacheKey = s"${name}_$query"
     val compiled = NlCompiler.compile(query, df.columns.toSeq)
-    // write the compilation cache only on first sight: the entry's purpose
-    // is skipping a pluggable-LLM recompile (an online LlmClient should
-    // consult it), and re-putting identical entries would checkpoint the
-    // graph to disk on every call
-    if (!graph.transformations.contains(cacheKey))
-      graph.putTransformation(cacheKey, compiled.describe)
     val out = compiled.apply(df)
     val newName = s"${name}_query:${query}_model:$model"
-    val result = new MagicTable(out, newName, sources :+ GenerativeSource(name), graph)
-    graph.addChain(ChainRecord(name, newName, newName, "transform",
-      query, "", Map("describe" -> compiled.describe), graph.clock()))
-    result
+    graph.batch {
+      // write the compilation cache only on first sight: the entry's
+      // purpose is skipping a pluggable-LLM recompile (an online LlmClient
+      // should consult it), and an identical entry changes nothing
+      if (!graph.transformations.contains(cacheKey))
+        graph.putTransformation(cacheKey, compiled.describe)
+      graph.addChain(ChainRecord(name, newName, newName, "transform",
+        query, "", Map("describe" -> compiled.describe), graph.clock()))
+    }
+    new MagicTable(out, newName, sources :+ GenerativeSource(name), graph)
   }
 
   /** NL join (reference intent: notsomagictable.py:15-18 declares
@@ -163,15 +163,16 @@ class MagicTable(
     * on the joined frame. Lineage merges both tables' sources. */
   def joinWithQuery(other: MagicTable, query: String): MagicTable = {
     val compiled = NlCompiler.compileJoin(query, df.columns.toSeq, other.df.columns.toSeq)
-    // first-sight gating, like transform's: re-putting an identical entry
-    // would checkpoint the graph JSON to disk on EVERY call
     val cacheKey = s"${name}_join_${other.name}_$query"
-    if (!graph.transformations.contains(cacheKey))
-      graph.putTransformation(cacheKey, compiled.describe)
     val out = compiled.apply(df, other.df)
     val newName = s"${name}_join_${other.name}"
-    graph.addChain(ChainRecord(name, other.name, newName, "nl_join",
-      query, "", Map("describe" -> compiled.describe), graph.clock()))
+    graph.batch {
+      // first-sight gating, like transform's
+      if (!graph.transformations.contains(cacheKey))
+        graph.putTransformation(cacheKey, compiled.describe)
+      graph.addChain(ChainRecord(name, other.name, newName, "nl_join",
+        query, "", Map("describe" -> compiled.describe), graph.clock()))
+    }
     new MagicTable(out, newName, sources ++ other.sources, graph)
   }
 
@@ -217,10 +218,12 @@ class MagicTable(
     }
     val (out, keyCols, cleanup) =
       Chain.staged(df, urlTemplate, fetcher, sourceKey, targetKey, Some(graph.urlCacheDir))
-    graph.addTable(newName, out, MagicTable.sourceInfo(newSources))
-    cleanup() // result is parquet now; release the persisted response blocks
-    graph.addChain(ChainRecord(name, newName, newName, "api_chain",
-      keyCols.mkString(","), "", Map("api_url_template" -> urlTemplate), graph.clock()))
+    graph.batch {
+      graph.addTable(newName, out, MagicTable.sourceInfo(newSources))
+      cleanup() // result is parquet now; release the persisted response blocks
+      graph.addChain(ChainRecord(name, newName, newName, "api_chain",
+        keyCols.mkString(","), "", Map("api_url_template" -> urlTemplate), graph.clock()))
+    }
     new MagicTable(graph.getTable(df.sparkSession, newName).get, newName, newSources, graph)
   }
 

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One lineage edge (reference: magictables/magictablechain.py:5-23 —
   * 8 fields, JSON round-trip at :35-59). chainType is "api_chain" or
@@ -37,6 +38,11 @@ case class ChainRecord(
   * (tablegraph.py:29,33,120-123) — at 100 TB that design is fatal, so here
   * the graph holds paths + metadata and data is written once at
   * registration.
+  *
+  * `schema` is the written frame's schema made nullable — what
+  * `spark.read.parquet` would infer from the footer — so a read needs no
+  * footer job. It is None only for a node loaded from a checkpoint written
+  * before schemas were recorded.
   */
 case class TableNode(
     name: String,
@@ -44,16 +50,25 @@ case class TableNode(
     createdAt: Instant,
     rowCount: Long,
     sourceInfo: Seq[Map[String, Any]],
-    metadata: Map[String, String])
+    metadata: Map[String, String],
+    schema: Option[StructType]) {
+  /** The recorded schema, or the footer's for a node without one (one
+    * Spark job): the catalog's only schema-inference site. */
+  def schemaIn(spark: SparkSession): StructType =
+    schema.getOrElse(spark.read.parquet(path).schema)
+}
 
 /** Lineage graph + three-level memo cache (reference: tablegraph.py).
   *  1. source cache: key = Source.getId           (magictable.py:58-63)
   *  2. transform-code cache: key = s"${table}_$q" (magictable.py:150-152)
   *  3. chain caches: whole-chain result (1h TTL, tablegraph.py:17,91-97)
   *     and per-URL responses (magictable.py:355-366).
-  * Metadata checkpoints to warehouse/_graph.json on each mutation; payloads
-  * are Parquet under warehouse/<tableName>. The clock is injectable for TTL
-  * tests (C14).
+  * Metadata checkpoints to warehouse/_graph.json once per mutating call:
+  * MagicTable applies each public call's mutations in one [[batch]], so a
+  * call writes the file at most once. Payloads are Parquet under
+  * warehouse/<tableName>; each node records the payload's schema, so every
+  * read ([[getTable]]) is planned without a footer job. The clock is
+  * injectable for TTL tests (C14).
   */
 class TableGraph(
     val warehouseDir: String,
@@ -70,6 +85,26 @@ class TableGraph(
   def putTransformation(key: String, describe: String): Unit = synchronized {
     transformations.put(key, describe)
     checkpoint()
+  }
+
+  /** Nesting depth of open [[batch]]es, and whether one of them mutated. */
+  private var batches = 0
+  private var dirty = false
+  /** `_graph.json` writes so far: each one is a temp create plus an
+    * overwrite-rename, tens of milliseconds on a local disk. */
+  @volatile private var writes = 0L
+  def checkpointWrites: Long = writes
+
+  /** Runs `body` with its mutations checkpointed once, when the outermost
+    * batch ends (also when `body` throws, so the file always matches the
+    * graph in memory). */
+  private[core] def batch[T](body: => T): T = synchronized {
+    batches += 1
+    try body
+    finally {
+      batches -= 1
+      if (batches == 0 && dirty) checkpoint()
+    }
   }
 
   /** All warehouse IO goes through the Hadoop FileSystem API ([[Fs]]) so a
@@ -109,10 +144,15 @@ class TableGraph(
     // parquet just to count() would schedule a second job per registration,
     // a needless driver round-trip when registering many tables
     val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("rows")).write.mode("overwrite").parquet(tmp)
+    Jobs.described(df.sparkSession, s"graft register $name") {
+      df.observe(obs, count(lit(1)).as("rows")).write.mode("overwrite").parquet(tmp)
+    }
     Fs.replace(tmp, path, hconf)
     val cnt = obs.get("rows") match { case l: Long => l; case x => String.valueOf(x).toLong }
-    val node = TableNode(name, path, clock(), cnt, sourceInfo, metadata)
+    // the node and its files are replaced together, so the recorded schema
+    // is always the payload's
+    val schema = org.apache.spark.sql.graft.Schemas.asNullable(df.schema)
+    val node = TableNode(name, path, clock(), cnt, sourceInfo, metadata, Some(schema))
     nodes.put(name, node)
     checkpoint()
     node
@@ -122,8 +162,21 @@ class TableGraph(
 
   def allNodes: Seq[TableNode] = synchronized { nodes.values.toSeq }
 
+  /** Reads a table with its recorded schema: Spark plans the scan without
+    * the footer job that schema inference runs. */
   def getTable(spark: SparkSession, name: String): Option[DataFrame] =
-    getNode(name).map(n => spark.read.parquet(n.path))
+    getNode(name).map(n => spark.read.schema(schemaOf(spark, n)).parquet(n.path))
+
+  /** A node from an old checkpoint infers its schema once and keeps it (in
+    * memory; the next checkpoint persists it). */
+  private def schemaOf(spark: SparkSession, n: TableNode): StructType =
+    n.schema.getOrElse {
+      val s = n.schemaIn(spark)
+      synchronized {
+        if (nodes.get(n.name).exists(_ eq n)) nodes.put(n.name, n.copy(schema = Some(s)))
+      }
+      s
+    }
 
   /** Is the node still inside the cache TTL? (tablegraph.py:91-97) */
   def isFresh(name: String): Boolean = synchronized {
@@ -212,17 +265,24 @@ class TableGraph(
 
   private def checkpointPath = new HPath(warehouseDir, "_graph.json").toString
 
-  private def checkpoint(): Unit = {
-    val payload = Map(
-      "nodes" -> nodes.values.toSeq.map(n => Map(
-        "name" -> n.name, "path" -> n.path,
-        "created_at" -> n.createdAt.toString, "row_count" -> n.rowCount,
-        "source_info" -> n.sourceInfo, "metadata" -> n.metadata)),
-      "chains" -> chains.toSeq.map(_.toJsonValue),
-      "transformations" -> transformations.toMap)
-    // atomic (temp+rename): a crash mid-checkpoint must not leave a torn
-    // _graph.json that loadCheckpoint would discard, losing the catalog
-    Fs.writeStringAtomic(checkpointPath, Jsons.render(payload), hconf)
+  /** Writes `_graph.json`, or inside a [[batch]] only marks it due. */
+  private def checkpoint(): Unit = synchronized {
+    if (batches > 0) dirty = true
+    else {
+      dirty = false
+      val payload = Map(
+        "nodes" -> nodes.values.toSeq.map(n => Map(
+          "name" -> n.name, "path" -> n.path,
+          "created_at" -> n.createdAt.toString, "row_count" -> n.rowCount,
+          "source_info" -> n.sourceInfo, "metadata" -> n.metadata) ++
+          n.schema.map(s => "schema" -> s.json)),
+        "chains" -> chains.toSeq.map(_.toJsonValue),
+        "transformations" -> transformations.toMap)
+      // atomic (temp+rename): a crash mid-checkpoint must not leave a torn
+      // _graph.json that loadCheckpoint would discard, losing the catalog
+      Fs.writeStringAtomic(checkpointPath, Jsons.render(payload), hconf)
+      writes += 1
+    }
   }
 
   private def loadCheckpoint(): Unit = {
@@ -245,7 +305,10 @@ class TableGraph(
                   n.get("metadata").collect {
                     case mm: Map[_, _] =>
                       mm.map { case (k, v) => k.toString -> String.valueOf(v) }
-                  }.getOrElse(Map.empty))
+                  }.getOrElse(Map.empty),
+                  n.get("schema").collect {
+                    case js: String => DataType.fromJson(js).asInstanceOf[StructType]
+                  })
                 nodes.put(node.name, node)
               case _ =>
             }

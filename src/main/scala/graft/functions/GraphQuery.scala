@@ -17,9 +17,9 @@ import graft.core.{TableGraph, TableNode}
   *  3. the query then compiles against that table's schema through the
   *     deterministic [[NlCompiler]] grammar and runs distributed.
   *
-  * Everything is driver-side ONLY over graph METADATA (node list + parquet
-  * footers — bounded by the number of registered tables, never row data);
-  * the returned plan executes on the cluster.
+  * Everything is driver-side ONLY over graph METADATA (the node list and
+  * each node's recorded schema — no Spark job, never row data); the
+  * returned plan executes on the cluster.
   */
 object GraphQuery {
 
@@ -27,7 +27,7 @@ object GraphQuery {
     * Column names contribute their underscore fragments too ("o_totalprice"
     * -> "o", "totalprice") so NL words match TPC-H-style prefixed columns. */
   def profile(spark: SparkSession, node: TableNode): String = {
-    val cols = spark.read.parquet(node.path).schema.fieldNames.toSeq
+    val cols = node.schemaIn(spark).fieldNames.toSeq
     val fragments = cols.flatMap(c => c.split("_").filter(_.nonEmpty))
     val sources = node.sourceInfo.flatMap(m =>
       Seq(m.get("type"), m.get("identifier")).flatten.map(String.valueOf))
@@ -49,8 +49,9 @@ object GraphQuery {
     if (na == 0 || nb == 0) 0.0 else d / math.sqrt(na * nb)
   }
 
-  // profiles depend only on (table, registration time): memoize so a query
-  // against an N-table graph does not pay N parquet-footer reads every call.
+  // profiles depend only on (table, registration time): memoize so a node
+  // from a checkpoint without recorded schemas pays its footer read once,
+  // not on every query.
   // Keyed by PATH, not name: the map is JVM-global, and two graphs holding a
   // same-named table created at the same instant (easy with the injectable
   // fixed clock) must not serve each other's stale profile — the warehouse
@@ -64,10 +65,13 @@ object GraphQuery {
   def rankTables(spark: SparkSession, graph: TableGraph, query: String,
       embedder: Embedder = new FeatureHashEmbedder(64)): Seq[(TableNode, Double)] = {
     val qv = embedder.embed(query)
+    val conf = spark.sparkContext.hadoopConfiguration
     graph.allNodes.flatMap { n =>
-      scala.util.Try(
+      scala.util.Try {
+        // the profile never opens the payload, so check it is still there
+        require(graft.core.Fs.exists(n.path, conf), s"${n.path} does not exist")
         profileCache.computeIfAbsent((n.path, n.createdAt), _ => profile(spark, n))
-      ) match {
+      } match {
         case scala.util.Success(p) => Some(n -> cosine(qv, embedder.embed(p)))
         case scala.util.Failure(e) =>
           System.err.println(s"[graph-query] skipping unreadable table ${n.name}: ${e.getMessage}")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.core.Jsons
+import graft.core.{Jobs, Jsons}
 import graft.sources.Fetcher
 
 /** The reference's signature operator: per-row parameterized API fan-out
@@ -123,64 +123,68 @@ object Chain {
       maxSleepMs: Long = 30000L,
       maxBroadcastBytes: Long = 64L << 20): (DataFrame, Seq[String], () => Unit) = {
     val spark = df.sparkSession
-    import spark.implicits._
+    // the jobs below (response schema inference, the broadcast size scan)
+    // are labelled with the chain they serve
+    Jobs.described(spark, s"graft chain $template") {
+      import spark.implicits._
 
-    require(!df.columns.contains("__url"),
-      "__url is a reserved helper name in chain (rename the input column)")
-    val mapping = KeyResolver.resolve(template, df.columns.toSeq, sourceKey, targetKey)
-    val withUrl = df.withColumn("__url", urlExpression(template, mapping))
+      require(!df.columns.contains("__url"),
+        "__url is a reserved helper name in chain (rename the input column)")
+      val mapping = KeyResolver.resolve(template, df.columns.toSeq, sourceKey, targetKey)
+      val withUrl = df.withColumn("__url", urlExpression(template, mapping))
 
-    // rows whose key columns are null produce a null __url: keep the ROW
-    // (all-null api_* after the left join) but never fetch a null URL
-    val distinctUrls = withUrl.select($"__url")
-      .filter($"__url".isNotNull).distinct().as[String]
-    // read.json(Dataset[String]) scans its input TWICE (schema inference +
-    // execution) — persist the fetched lines or every URL is fetched twice.
-    val respLines = fetchResponses(distinctUrls, fetcher, urlCacheDir, maxSleepMs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val respDf = spark.read.json(respLines)
+      // rows whose key columns are null produce a null __url: keep the ROW
+      // (all-null api_* after the left join) but never fetch a null URL
+      val distinctUrls = withUrl.select($"__url")
+        .filter($"__url".isNotNull).distinct().as[String]
+      // read.json(Dataset[String]) scans its input TWICE (schema inference +
+      // execution) — persist the fetched lines or every URL is fetched twice.
+      val respLines = fetchResponses(distinctUrls, fetcher, urlCacheDir, maxSleepMs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val respDf = spark.read.json(respLines)
 
-    val result =
-      if (!respDf.columns.contains("resp")) {
-        // every fetch failed/empty: keep rows, no api_* columns to add
-        withUrl.drop("__url")
-      } else {
-        // left join preserves source rows; element rows fan out per URL.
-        // Broadcast the response side only while it is actually small —
-        // with per-row-unique keys it scales with the input, and a forced
-        // broadcast hint would bypass Spark's size checks and OOM. Decide
-        // by BYTES, not row count: a handful of rows with megabyte JSON
-        // payloads must not be driver-collected. octet_length counts UTF-8
-        // bytes (length counts chars — up to 4x off on multibyte text). What
-        // actually broadcasts is the PARSED-STRUCT respDf, whose in-memory
-        // rows can be several x larger than their JSON text (per-field
-        // object headers, UTF8String copies, null bitmaps) — so the text
-        // bytes are compared against the budget with a 4x expansion
-        // headroom: 64 MB budget admits <=16 MB of response text. The size
-        // scan is cheap — respLines is already persisted.
-        val respBytes = respLines.toDF("value")
-          .agg(coalesce(sum(octet_length($"value")), lit(0L)).cast("long")).as[Long].head()
-        val structExpansionHeadroom = 4L
-        val respSide =
-          if (respBytes * structExpansionHeadroom <= maxBroadcastBytes) broadcast(respDf)
-          else respDf
-        val joined = withUrl.join(respSide, Seq("__url"), "left")
-        val respFields = respDf.schema("resp").dataType match {
-          case st: org.apache.spark.sql.types.StructType => st.fields.toSeq
-          case _ => Seq.empty
+      val result =
+        if (!respDf.columns.contains("resp")) {
+          // every fetch failed/empty: keep rows, no api_* columns to add
+          withUrl.drop("__url")
+        } else {
+          // left join preserves source rows; element rows fan out per URL.
+          // Broadcast the response side only while it is actually small —
+          // with per-row-unique keys it scales with the input, and a forced
+          // broadcast hint would bypass Spark's size checks and OOM. Decide
+          // by BYTES, not row count: a handful of rows with megabyte JSON
+          // payloads must not be driver-collected. octet_length counts UTF-8
+          // bytes (length counts chars — up to 4x off on multibyte text). What
+          // actually broadcasts is the PARSED-STRUCT respDf, whose in-memory
+          // rows can be several x larger than their JSON text (per-field
+          // object headers, UTF8String copies, null bitmaps) — so the text
+          // bytes are compared against the budget with a 4x expansion
+          // headroom: 64 MB budget admits <=16 MB of response text. The size
+          // scan is cheap — respLines is already persisted.
+          val respBytes = respLines.toDF("value")
+            .agg(coalesce(sum(octet_length($"value")), lit(0L)).cast("long")).as[Long].head()
+          val structExpansionHeadroom = 4L
+          val respSide =
+            if (respBytes * structExpansionHeadroom <= maxBroadcastBytes) broadcast(respDf)
+            else respDf
+          val joined = withUrl.join(respSide, Seq("__url"), "left")
+          val respFields = respDf.schema("resp").dataType match {
+            case st: org.apache.spark.sql.types.StructType => st.fields.toSeq
+            case _ => Seq.empty
+          }
+          val baseCols = df.columns.toSeq.map(c => col(s"`$c`"))
+          val apiCols =
+            if (respFields.nonEmpty)
+              respFields.map(f => col("resp").getField(f.name).as(s"api_${f.name}"))
+            else Seq(col("resp").as("api_resp"))
+          val apiNames =
+            if (respFields.nonEmpty) respFields.map(f => s"api_${f.name}") else Seq("api_resp")
+          require(apiNames.forall(!df.columns.contains(_)),
+            s"response columns ${apiNames.filter(df.columns.contains).mkString(", ")} " +
+              "collide with input columns (a previous chain output? rename before re-chaining)")
+          joined.select(baseCols ++ apiCols: _*)
         }
-        val baseCols = df.columns.toSeq.map(c => col(s"`$c`"))
-        val apiCols =
-          if (respFields.nonEmpty)
-            respFields.map(f => col("resp").getField(f.name).as(s"api_${f.name}"))
-          else Seq(col("resp").as("api_resp"))
-        val apiNames =
-          if (respFields.nonEmpty) respFields.map(f => s"api_${f.name}") else Seq("api_resp")
-        require(apiNames.forall(!df.columns.contains(_)),
-          s"response columns ${apiNames.filter(df.columns.contains).mkString(", ")} " +
-            "collide with input columns (a previous chain output? rename before re-chaining)")
-        joined.select(baseCols ++ apiCols: _*)
-      }
-    (result, mapping.values.toSeq, () => { respLines.unpersist(blocking = false); () })
+      (result, mapping.values.toSeq, () => { respLines.unpersist(blocking = false); () })
+    }
   }
 }

@@ -129,4 +129,18 @@ class ChainSpec extends SparkSpecBase {
     now = now.plusSeconds(3601) // past the 1 h TTL (tablegraph.py:17)
     assert(!graph.isFresh(c1.name))
   }
+
+  test("Chain.staged labels its jobs with the chain's template") {
+    val fetcher = new MapFetcher(Map("http://api/1" -> """{"v":1}""",
+      "http://api/2" -> """{"v":2}""", "http://api/3" -> """{"v":3}"""))
+    val ((out, _, cleanup), cost) =
+      withJobs(Chain.staged(base, "http://api/{id}", fetcher, maxSleepMs = 0))
+    try {
+      assert(cost.jobs > 0)
+      assert(cost.stages.forall(_.name.endsWith("[graft chain http://api/{id}]")),
+        cost.stages.map(_.name).mkString("; "))
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") === null)
+      assert(out.count() === 3)
+    } finally cleanup()
+  }
 }

@@ -98,4 +98,12 @@ class GraphQuerySpec extends SparkSpecBase {
       GraphQuery.cosine(Array(1f), Array(1f, 2f))
     }
   }
+
+  test("rankTables routes on the recorded schemas without a Spark job") {
+    val g = seeded
+    val (ranked, cost) = withJobs(GraphQuery.rankTables(spark, g, "top 2 orders by total price"))
+    assert(cost.jobs === 0)
+    assert(ranked.map(_._1.name).toSet === Set("orders", "customers", "events"))
+    assert(ranked.head._1.name === "orders")
+  }
 }

@@ -142,4 +142,60 @@ class MagicTableSpec extends SparkSpecBase {
     graft.core.NotSoMagicTable.clearAllData(g)
     assert(g.getNode("t").isEmpty && g.allChains.isEmpty)
   }
+
+  /** The native flow's fixtures: two API sources and a per-row chain. */
+  private val flowFetcher = new graft.sources.MapFetcher(Map(
+    "http://api/items" -> """[{"id":1,"grp":"g1","score":5},{"id":2,"grp":"g2","score":7}]""",
+    "http://api/regions" -> """[{"grp":"g1","region":"emea"},{"grp":"g2","region":"amer"}]""",
+    "http://api/groups/g1" -> """{"owner":"ann"}""",
+    "http://api/groups/g2" -> """{"owner":"bob"}"""))
+
+  test("warm fromSource and chain hits schedule no Spark job before an action") {
+    val g = graph
+    val src = graft.sources.ApiSource("http://api/items")
+    val cold = MagicTable.fromSource(spark, src, flowFetcher, g)
+    val chained = cold.chain("http://api/groups/{grp}", flowFetcher)
+    val (warm, sourceJobs) = withJobs(MagicTable.fromSource(spark, src, flowFetcher, g))
+    assert(sourceJobs.jobs === 0)
+    val (hit, chainJobs) = withJobs(warm.chain("http://api/groups/{grp}", flowFetcher))
+    assert(chainJobs.jobs === 0)
+    assert(hit.name === chained.name)
+    assert(hit.df.schema === chained.df.schema)
+    assert(hit.df.collect().toSet === chained.df.collect().toSet)
+    assert(hit.df.select("api_owner").as[String].collect().toSet === Set("ann", "bob"))
+  }
+
+  test("each public call writes the catalog checkpoint at most once, keeping its contents") {
+    val g = graph
+    // a reload sees exactly the live graph: no mutation waits on a later write
+    def sameOnDisk(): Unit = {
+      val r = new TableGraph(g.warehouseDir)
+      assert(r.allNodes.map(n => (n.name, n.path, n.rowCount, n.schema)) ===
+        g.allNodes.map(n => (n.name, n.path, n.rowCount, n.schema)))
+      assert(r.allChains === g.allChains)
+      assert(r.transformations === g.transformations)
+    }
+    def writes[T](call: => T): (T, Long) = {
+      val before = g.checkpointWrites
+      val out = call
+      sameOnDisk()
+      (out, g.checkpointWrites - before)
+    }
+    def flow(): Seq[Long] = {
+      val (items, w1) = writes(MagicTable.fromSource(spark,
+        graft.sources.ApiSource("http://api/items"), flowFetcher, g))
+      val (regions, w2) = writes(MagicTable.fromSource(spark,
+        graft.sources.ApiSource("http://api/regions"), flowFetcher, g))
+      val (picked, w3) = writes(items.transform("where score >= 5 showing id, grp and score"))
+      val (chained, w4) = writes(picked.chain("http://api/groups/{grp}", flowFetcher))
+      val (joined, w5) = writes(chained.joinWithQuery(regions, "left join on grp"))
+      val (_, w6) = writes(joined.register())
+      Seq(w1, w2, w3, w4, w5, w6)
+    }
+    // cold: two source misses, a transform, a chain miss, a join, a register
+    assert(flow() === Seq(1L, 1L, 1L, 1L, 1L, 1L))
+    // warm: source and chain hits write nothing; transform and join record
+    // their lineage edge; register rewrites its table
+    assert(flow() === Seq(0L, 0L, 1L, 0L, 1L, 1L))
+  }
 }

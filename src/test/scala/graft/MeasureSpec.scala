@@ -39,4 +39,22 @@ class MeasureSpec extends SparkSpecBase {
       assert(layers.drain(spark).isEmpty, "a drain forgets what it returned")
     } finally spark.sparkContext.removeSparkListener(layers)
   }
+
+  test("Layers separates the stages of jobs a frame's construction starts") {
+    val layers = Measure.listen(spark)
+    try {
+      Measure.tagged(spark, "q") {
+        // an eager stager: localCheckpoint runs its job while the frame is built
+        val df = Measure.constructing(spark)(spark.range(100).selectExpr("id % 7 as k")
+          .localCheckpoint())
+        Measure.noop(df)
+      }
+      val c = layers.drain(spark)("q")
+      assert(c.jobs === 2)
+      val (cons, sink) = c.stages.partition(_.cons)
+      assert(cons.size === 1 && sink.size === 1, c.stages.mkString("; "))
+      assert(c.consStageMs === cons.head.ms)
+      assert(c.consStageMs <= c.stageMs)
+    } finally spark.sparkContext.removeSparkListener(layers)
+  }
 }

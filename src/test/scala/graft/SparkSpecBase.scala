@@ -20,6 +20,18 @@ trait SparkSpecBase extends AnyFunSuite {
       case None => spark.conf.unset(key)
     }
   }
+
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * [[Measure.Layers]] listener (flushed by its marker job). */
+  def withJobs[T](body: => T): (T, Measure.Cost) = {
+    val layers = Measure.listen(spark)
+    try {
+      val out = Measure.tagged(spark, "body")(body)
+      (out, layers.drain(spark).getOrElse("body", Measure.Cost(0, Vector.empty, 0L)))
+    } finally spark.sparkContext.removeSparkListener(layers)
+  }
+
+  def jobsOf[T](body: => T): Int = withJobs(body)._2.jobs
 }
 
 object SparkSpecBase {

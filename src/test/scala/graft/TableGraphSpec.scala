@@ -1,7 +1,9 @@
 package graft
 
 import graft.core.{ChainRecord, TableGraph}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.MetadataBuilder
 import java.time.Instant
 
 /** Catalog + lineage + caches (reference tablegraph.py; TTL C14 with the
@@ -136,5 +138,100 @@ class TableGraphSpec extends SparkSpecBase {
     graft.sources.UrlDiskCache.put(dir, "http://x/1", """{"a":1}""", conf)
     graft.sources.UrlDiskCache.put(dir, "http://x/1", """{"a":2}""", conf)
     assert(graft.sources.UrlDiskCache.get(dir, "http://x/1", conf) === Some("""{"a":1}"""))
+  }
+
+  test("getTable plans a registered table's read without a Spark job") {
+    val g = new TableGraph(freshDir)
+    g.addTable("t", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    // inferring the schema from the parquet footer would be one job
+    val (df, cost) = withJobs(g.getTable(spark, "t").get)
+    assert(cost.jobs === 0)
+    assert(jobsOf(g.queryOrFetch(spark, "t", Map("v" -> "a")).get) === 0)
+    assert(df.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b")))
+  }
+
+  test("a schema zoo reads back with the footer's schema and the same rows") {
+    val g = new TableGraph(freshDir)
+    val json = spark.read.json(Seq(
+      """{"i":1,"n":{"a":1,"b":{"c":"x","d":[1,2]}}}""",
+      """{"i":2,"n":null}""").toDS())
+    val zoo = json.selectExpr(
+      "i",
+      "n", // nested struct inferred by read.json
+      "array(named_struct('k', i, 'v', 'a'), named_struct('k', 2, 'v', cast(null as string))) as arr",
+      "map('a', i, 'b', cast(null as bigint)) as m",
+      "cast('123456789012345678901234567890.12345678' as decimal(38,8)) as dec",
+      "timestamp'2026-01-02 03:04:05.123456' as ts",
+      "timestamp_ntz'2026-01-02 03:04:05.123456' as ts_ntz",
+      "date'2026-01-02' as d",
+      "cast(concat('bin', i) as binary) as bin",
+      "42L as not_null")
+      .withColumn("meta", col("i").as("meta",
+        new MetadataBuilder().putString("comment", "carried").build()))
+    assert(!zoo.schema("not_null").nullable)
+    g.addTable("zoo", zoo)
+    val read = g.getTable(spark, "zoo").get
+    val footer = spark.read.parquet(g.tablePath("zoo"))
+    assert(read.schema === footer.schema)
+    assert(read.schema("meta").metadata.getString("comment") === "carried")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.getLong(0))
+    assert(rows(read) === rows(footer))
+    assert(rows(read).size === 2)
+  }
+
+  test("a checkpoint reload keeps each node's schema") {
+    val dir = freshDir
+    val g = new TableGraph(dir)
+    g.addTable("t", Seq((1, "a", 2.5)).toDF("id", "v", "x"))
+    val reloaded = new TableGraph(dir)
+    assert(reloaded.getNode("t").flatMap(_.schema) === g.getNode("t").flatMap(_.schema))
+    assert(reloaded.getNode("t").flatMap(_.schema).isDefined)
+    val (df, cost) = withJobs(reloaded.getTable(spark, "t").get)
+    assert(cost.jobs === 0)
+    assert(df.as[(Int, String, Double)].collect().toSeq === Seq((1, "a", 2.5)))
+  }
+
+  test("a checkpoint written before schemas were recorded still reads, inferring once") {
+    val dir = freshDir
+    val path = new org.apache.hadoop.fs.Path(dir, "t").toString
+    Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(path)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_graph.json"),
+      s"""{"nodes":[{"name":"t","path":"$path","created_at":"2026-01-01T00:00:00Z",""" +
+        """"row_count":2,"source_info":[],"metadata":{}}],"chains":[],"transformations":{}}""")
+    val g = new TableGraph(dir)
+    assert(g.getNode("t").map(_.rowCount) === Some(2L))
+    assert(g.getNode("t").flatMap(_.schema).isEmpty)
+    val (first, inferJobs) = withJobs(g.getTable(spark, "t").get)
+    assert(inferJobs.jobs === 1, "the footer is read once")
+    assert(first.schema === spark.read.parquet(path).schema)
+    assert(g.getNode("t").flatMap(_.schema) === Some(first.schema))
+    val (again, cost) = withJobs(g.getTable(spark, "t").get)
+    assert(cost.jobs === 0, "the inferred schema is kept")
+    assert(again.as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b")))
+  }
+
+  test("re-registering a name with a new schema reads the new schema") {
+    val dir = freshDir
+    val g = new TableGraph(dir)
+    g.addTable("t", Seq((1, "a")).toDF("id", "v"))
+    g.addTable("t", Seq(("x", 2.0, true)).toDF("k", "score", "ok"))
+    val df = g.getTable(spark, "t").get
+    assert(df.schema.fieldNames.toSeq === Seq("k", "score", "ok"))
+    assert(df.schema === spark.read.parquet(g.tablePath("t")).schema)
+    assert(df.as[(String, Double, Boolean)].collect().toSeq === Seq(("x", 2.0, true)))
+    assert(new TableGraph(dir).getTable(spark, "t").get.schema === df.schema)
+  }
+
+  test("the register write job carries a graft job description; the caller's is restored") {
+    val g = new TableGraph(freshDir)
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, cost) = withJobs(g.addTable("labelled", Seq((1, "a")).toDF("id", "v")))
+      assert(cost.jobs === 1)
+      assert(cost.stages.map(_.name).exists(_.endsWith("[graft register labelled]")),
+        cost.stages.map(_.name).mkString("; "))
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+    } finally sc.setJobDescription(null)
   }
 }
