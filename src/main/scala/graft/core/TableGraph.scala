@@ -200,10 +200,15 @@ class TableGraph(
   /** Two edges per chain in the reference (tablegraph.py:35-56); one record
     * here carries the same information (the reconstruction at
     * tablegraph.py:58-89 pairs the two edges back into one record anyway).
+    * A record equal to a present one in every field but `createdAt` is
+    * dropped: a repeated call adds no parallel edge and writes nothing
+    * (the reference's MultiDiGraph.add_edge would add one).
     */
   def addChain(c: ChainRecord): Unit = synchronized {
-    chains += c
-    checkpoint()
+    if (!chains.exists(_.copy(createdAt = c.createdAt) == c)) {
+      chains += c
+      checkpoint()
+    }
   }
 
   def getChains(table: String): Seq[ChainRecord] = synchronized {

@@ -60,13 +60,16 @@ object GraphQuery {
     new java.util.concurrent.ConcurrentHashMap[(String, java.time.Instant), String]()
 
   /** Rank every table in the graph by embedding similarity to the query.
-    * A node whose parquet payload has gone missing is skipped (with a
-    * stderr note) rather than failing queries about healthy tables. */
+    * Staging intermediates (metadata role=stage, written by
+    * [[graft.operators.Stager.Parquet]]) are an operator's internal frames,
+    * not tables a query is about, and are never ranked. A node whose
+    * parquet payload has gone missing is skipped (with a stderr note)
+    * rather than failing queries about healthy tables. */
   def rankTables(spark: SparkSession, graph: TableGraph, query: String,
       embedder: Embedder = new FeatureHashEmbedder(64)): Seq[(TableNode, Double)] = {
     val qv = embedder.embed(query)
     val conf = spark.sparkContext.hadoopConfiguration
-    graph.allNodes.flatMap { n =>
+    graph.allNodes.filterNot(_.metadata.get("role").contains("stage")).flatMap { n =>
       scala.util.Try {
         // the profile never opens the payload, so check it is still there
         require(graft.core.Fs.exists(n.path, conf), s"${n.path} does not exist")

@@ -30,6 +30,14 @@ class GraphQuerySpec extends SparkSpecBase {
     assert(top("count events per event type") === "events")
   }
 
+  test("rankTables never routes to a staging table") {
+    val g = seeded
+    graft.operators.Stager.Parquet(g).stage(
+      Seq((100, 10.0)).toDF("order_id", "total_price"), "orders_total_price")
+    val ranked = GraphQuery.rankTables(spark, g, "top 2 orders by total price").map(_._1.name)
+    assert(ranked.toSet === Set("orders", "customers", "events"))
+  }
+
   test("queryNl routes + compiles + executes in one call") {
     val out = GraphQuery.queryNl(spark, seeded,
       "top 2 by total_price desc showing order_id and total_price")

@@ -51,6 +51,22 @@ class TableGraphSpec extends SparkSpecBase {
     assert(reloaded.transformations.get("t_q") === Some("limit=5"))
   }
 
+  test("a chain record equal but for createdAt is kept once and writes nothing") {
+    var now = Instant.parse("2026-01-01T00:00:00Z")
+    val g = new TableGraph(freshDir, clock = () => now)
+    val edge = ChainRecord("t", "t2", "t2", "transform", "q", "", Map("describe" -> "limit=5"), g.clock())
+    g.addChain(edge)
+    val writes = g.checkpointWrites
+    now = now.plusSeconds(60)
+    g.addChain(edge.copy(createdAt = g.clock()))
+    assert(g.allChains === Seq(edge))
+    assert(g.checkpointWrites === writes)
+    // any other field differing is a distinct edge
+    g.addChain(edge.copy(sourceKey = "q2"))
+    assert(g.allChains.size === 2)
+    assert(g.checkpointWrites === writes + 1)
+  }
+
   test("per-URL response cache stores and serves bodies") {
     val g = new TableGraph(freshDir)
     assert(g.getCachedUrl("http://u/1").isEmpty)

@@ -14,7 +14,10 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${2:-/tmp/verify_gate}"
 
 echo "== gate 1/3: sbt test =="
-sbt -batch test
+# the same offline resolution settings as the tier-1 command in ROADMAP.md
+export COURSIER_MODE=offline
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+sbt --batch -Dsbt.log.noformat=true test
 
 echo "== gate 2/3: Verify @ $SF_DIR =="
 rm -rf "$OUT_DIR"
