@@ -12,7 +12,7 @@ object Bench {
 
   /** One timed rep's floor decomposition: wall and construction seconds
     * plus the executed cost charged to the query. Construction includes
-    * the stages of the jobs it starts (eager stagers), also counted in the
+    * the stages of the jobs it starts (stagers), also counted in the
     * stage wall: `consStageSec` is that shared part, so construction minus
     * it is analysis. The driver gap is wall minus summed stage wall:
     * planning, job submission and AQE re-plans that run in no stage, plus

@@ -68,7 +68,7 @@ object Measure {
   }
 
   /** Runs `body`, the construction of a frame, with its jobs marked as
-    * construction: the jobs eager stagers run before the frame exists. */
+    * construction: the jobs stagers run before the frame exists. */
   def constructing[T](spark: SparkSession)(body: => T): T = {
     val sc = spark.sparkContext
     sc.setLocalProperty(ConstructingProperty, "1")

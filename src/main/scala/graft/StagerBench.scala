@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions.col
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.StagerBench"
   *
-  * Prints median-of-N wall seconds per mode so the "LocalCheckpoint is
-  * fastest locally" claim in Stager's scaladoc stays measured, not
-  * remembered, as the code evolves. Parquet mode stages through a temp
-  * TableGraph warehouse (the durable cluster mode) and drops its stage
-  * tables between reps.
+  * Prints median-of-N wall seconds per mode, so the cost of the durable
+  * mode stays measured as the code evolves. Parquet mode stages through a
+  * temp TableGraph warehouse (the durable cluster mode) and drops its
+  * stage tables between reps.
   */
 object StagerBench {
   def main(args: Array[String]): Unit = {
@@ -25,7 +24,6 @@ object StagerBench {
       java.nio.file.Files.createTempDirectory("graft_stager_ab").toString)
     val modes: Seq[(String, graft.operators.Stager)] = Seq(
       "LocalCheckpoint" -> graft.operators.Stager.LocalCheckpoint,
-      "Persist" -> graft.operators.Stager.Persist,
       "Parquet" -> graft.operators.Stager.Parquet(graph))
 
     val results = modes.map { case (name, stager) =>

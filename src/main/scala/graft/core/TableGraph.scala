@@ -243,7 +243,7 @@ class TableGraph(
   }
 
   /** Drop ONE staging table by name — the precise-release path
-    * ([[graft.operators.Stager.Recording]]): callers that know exactly what
+    * ([[graft.operators.Stager.Parquet]]'s `release`): callers that know exactly what
     * they staged must not reclaim other callers' stages the way the blanket
     * [[dropStages]] does. No-op for unknown names and for nodes that are
     * not role=stage (never deletes a real table). */

@@ -200,7 +200,6 @@ object Classifier {
     // per-doc compacted features: one row per doc, sorted parallel
     // bucket/count arrays (y is constant per id — the idCol-unique
     // precondition shared with hashClassifierScore)
-    val rec = new Stager.Recording(stager)
     // The staged frame is read `iters` times by the round jobs, whose
     // per-row work (interpreted decimal HOF dot) is compute-dense per
     // byte — exactly the case where AQE's byte-based partition coalescing
@@ -210,7 +209,8 @@ object Classifier {
     // defaultParallelism: scale-adaptive, and the one extra exchange of
     // the compacted model-input frame is paid once, not per round.
     val par = spark.sparkContext.defaultParallelism
-    val docFeat = rec.stage(
+    val featName = s"clf_train_feat_$runId"
+    val docFeat = stager.stage(
       occ.groupBy(id, col("__b"))
         .agg(first(col("__y")).as("__y"), count(lit(1)).as("__c"))
         .groupBy(id)
@@ -220,7 +220,7 @@ object Classifier {
           transform(col("__bc"), x => x.getField("__b")).as("__bs"),
           transform(col("__bc"), x => x.getField("__c")).as("__cs"))
         .repartition(par),
-      s"clf_train_feat_$runId")
+      featName)
     val nDocs = docFeat.count()
     // driver-side round9 replaying the engine's double->DECIMAL(25,12)
     // cast (shortest-string, HALF_UP) + ROUND(..., 9) + cast back
@@ -254,7 +254,7 @@ object Classifier {
           "under spark.sql.decimalOperations.allowPrecisionLoss=true")
       val rows = docFeat
         .select(col("__y"), col("__n"), col("__bs"), col("__cs")).collect()
-      if (stager.eager) rec.release()
+      stager.release(docFeat, featName)
       val wl = trainLogisticLocal(rows, nBuckets, iters, lr, nDocs, round9d)
       return weightsToDf(spark, wl)
     }
@@ -296,7 +296,7 @@ object Classifier {
       }
       it += 1
     }
-    if (stager.eager) rec.release()
+    stager.release(docFeat, featName)
     weightsToDf(spark, w)
   }
 

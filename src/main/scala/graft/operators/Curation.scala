@@ -115,14 +115,7 @@ object Curation {
     * staged — every stage goes through a per-call [[Stager.Recording]]
     * wrapper, so concurrent work persisting blocks in the same session (or
     * other callers' Parquet stage tables) is never touched. Invoke AFTER
-    * materializing the result.
-    *
-    * Residual caveats of the Recording wrapper's RDD-id-delta fallback
-    * (LocalCheckpoint / unknown stagers only — Persist and Parquet use
-    * exact handles): a thread persisting CONCURRENTLY with one eager stage
-    * call can have its RDD captured and freed at cleanup, and a LAZY
-    * unknown stager registers nothing during the call, so cleanup frees
-    * nothing (the wrapper logs a warning). */
+    * materializing the result. */
   def curateStaged(df: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): (DataFrame, () => Unit) = {
     val recording = new Stager.Recording(cfg.stager)
@@ -169,10 +162,8 @@ object Curation {
     // scale, and every downstream consumer (the minhash re-shingle most of
     // all) inherits that width for its per-row work — spread it once here
     // (metadata-only guard; no-op when the checkpoint is already wide)
-    val canonStaged = cfg.stager.stage(
-      df.join(canonIds, Seq(idCol), "left_semi"), s"curation_canon_$runId")
-    val canonDocs =
-      if (cfg.stager.eager) Dedup.spreadStaged(canonStaged) else canonStaged
+    val canonDocs = Dedup.spreadStaged(cfg.stager.stage(
+      df.join(canonIds, Seq(idCol), "left_semi"), s"curation_canon_$runId"))
     // stage 3: minhash near-dup drop (higher id of each verified pair)
     val drop = Dedup.nearDupPairsMinhash(canonDocs, idCol, textCol,
         cfg.shingleN, cfg.numHashes, cfg.rowsPerBand, cfg.jaccardThreshold,

@@ -370,14 +370,11 @@ object Dedup {
     // beat one corpus-sized set shuffle. The small candidate-pair frame
     // feeds three consumers (id extraction + both verify joins), so THAT —
     // not a corpus-sized intermediate — is what the pluggable Stager
-    // materializes. Default stays LocalCheckpoint: an sf0.1 A/B showed
-    // lazy Persist doubles the curation-funnel time (9.4s vs 4.1s — its
-    // InMemoryRelation keeps the full upstream lineage in-plan); cluster
-    // jobs that must survive executor loss pass Stager.Persist or
-    // Stager.Parquet(graph) explicitly (trade-offs in Stager's scaladoc).
-    // On STANDALONE p05 the staged frames are small enough that Parquet
-    // staging is competitive (graft.StagerBench, numbers in FIXTURES.md) —
-    // the durable mode costs nothing extra here.
+    // materializes. Default stays LocalCheckpoint; cluster jobs that must
+    // survive executor loss pass Stager.Parquet(graph) (trade-offs in
+    // Stager's scaladoc). On STANDALONE p05 the staged frames are small
+    // enough that Parquet staging is competitive (graft.StagerBench,
+    // numbers in FIXTURES.md) — the durable mode costs nothing extra here.
     // signatures are a few longs per doc — staging them is cheap, and the
     // banded self-join downstream references its input from several plan
     // branches (occupancy window + both join sides), which would otherwise
@@ -416,9 +413,8 @@ object Dedup {
     val sb = candSets.select(col(idCol).as("id_b"), col("__shingles").as("__sb"))
     // spread the verify probe: the staged cands frame often holds fewer
     // partitions than cores (byte-coalesced), and the per-pair
-    // array_intersect otherwise runs single-task (see spreadStaged; eager
-    // stages only)
-    (if (stager.eager) spreadStaged(cands) else cands)
+    // array_intersect otherwise runs single-task (see spreadStaged)
+    spreadStaged(cands)
       .join(sa, "id_a").join(sb, "id_b")
       .withColumn("jaccard_sim", jaccard(col("__sa"), col("__sb")))
       .filter(col("jaccard_sim") >= threshold)
@@ -433,9 +429,9 @@ object Dedup {
     * (the finding-7 byte-vs-compute mismatch, here on the staged-read
     * path). getNumPartitions on a materialized frame is metadata — no
     * job — so the guard is free, and at scale a checkpoint already holds
-    * >= parallelism partitions and this is a no-op. Only for frames from
-    * an eager [[Stager]]: on a lazy (Persist) frame the partition count
-    * runs the upstream pipeline's jobs. */
+    * >= parallelism partitions and this is a no-op. Only for frames a
+    * [[Stager]] returned: on an unstaged frame the partition count can
+    * run the upstream pipeline's jobs. */
   def spreadStaged(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
@@ -518,8 +514,8 @@ object Dedup {
         .groupBy(col(idCol)).agg(collect_set(col("shingle")).as(out))
         .withColumnRenamed(idCol, side)
     // spread the verify probe off the byte-coalesced staged cands frame
-    // (see spreadStaged; eager stages only)
-    (if (stager.eager) spreadStaged(cands) else cands)
+    // (see spreadStaged)
+    spreadStaged(cands)
       .join(candSets(newDf, "new_id", "__sa"), "new_id")
       .join(candSets(indexDf, "index_id", "__sb"), "index_id")
       .withColumn("jaccard_sim", jaccard(col("__sa"), col("__sb")))

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * O(|pairs|) per round keyed by node id. Each round is staged through the
   * pluggable [[Stager]] so the iterative loop's lineage cannot stack
   * (localCheckpoint default; clusters needing fault tolerance pass
-  * Persist/Parquet — trade-offs in [[Stager]]'s scaladoc).
+  * Parquet — trade-offs in [[Stager]]'s scaladoc).
   */
 object DupClusters {
 
@@ -60,58 +60,48 @@ object DupClusters {
     }
 
     // Stage a round's edges AND collect the signature from the SAME pass:
-    // an Observation rides the staging action (CollectMetrics), so an
-    // eager stager (LocalCheckpoint) pays no second scan of the edge set —
-    // at cluster scale that second scan is a full distributed pass per
-    // round. A LAZY stager runs no action inside stage(); its metrics
-    // arrive only when something executes, so after a short wait we fall
-    // back to the explicit aggregate (whose own action then materializes
-    // the stage — current behavior, nothing lost).
-    def stageWithSig(e: DataFrame, name: String)
-        : (DataFrame, (Long, Long), Stager.Recording) = {
+    // an Observation rides the staging action (CollectMetrics), so the
+    // stage pays no second scan of the edge set — at cluster scale that
+    // second scan is a full distributed pass per round. Each round goes
+    // through `rounds`, which releases round k-1 once round k is staged,
+    // so at most TWO round snapshots are ever live (at 100 TB an
+    // unreleased loop keeps O(rounds) copies of the edge frontier).
+    val rounds = new Stager.Rounds(stager)
+    def stageWithSig(e: DataFrame, name: String): (DataFrame, (Long, Long)) = {
       val obs = org.apache.spark.sql.Observation(name + "_sig")
-      // per-round Recording wrapper: the handle that lets the loop release
-      // round k-1's storage once round k is materialized, so at most TWO
-      // round snapshots are ever live (at 100 TB an unreleased loop keeps
-      // O(rounds) copies of the edge frontier). Only meaningful for eager
-      // stagers — see the release site below.
-      val rec = new Stager.Recording(stager)
-      val staged = rec.stage(
+      val staged = rounds.next(
         e.observe(obs,
           count(lit(1)).as("n"),
           coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L)).as("h")),
         name)
-      // derive the wait from the stager's eagerness: a LAZY stager ran no
-      // action, so the observation CANNOT have fired — skip the wait
-      // entirely; an EAGER stage already ran the action, so the metrics
-      // are usually delivered within 1-8 ms. The wait must stay SHORT:
-      // delivery rides the listener bus, and when that bus is saturated
-      // (measured in round 9: a full bench pass queues enough events that
-      // delivery lags multiple seconds — a 5 s await here tripled
-      // p20_dup_clusters, 4.1s -> 14.0s, while the same loop in isolation
-      // delivered every round in ms) the fallback aggregate is the cheaper
-      // path by far: it re-reads the already-materialized STAGE (checkpoint
-      // blocks, not the upstream plan), so it costs one scan of the edge
-      // set, not seconds of driver stall per round. Fallback is logged — a
+      // the stage already ran the action, so the metrics are usually
+      // delivered within 1-8 ms. The wait must stay SHORT: delivery rides
+      // the listener bus, and when that bus is saturated (measured in
+      // round 9: a full bench pass queues enough events that delivery
+      // lags multiple seconds — a 5 s await here tripled p20_dup_clusters,
+      // 4.1s -> 14.0s, while the same loop in isolation delivered every
+      // round in ms) the fallback aggregate is the cheaper path by far: it
+      // re-reads the already-materialized STAGE (checkpoint blocks, not
+      // the upstream plan), so it costs one scan of the edge set, not
+      // seconds of driver stall per round. Fallback is logged — a
       // degradation the operator can see, never silent.
-      if (!stager.eager) (staged, signature(staged), rec)
-      else try {
+      try {
         val row = scala.concurrent.Await.result(obs.future,
           scala.concurrent.duration.Duration(300, "ms"))
-        (staged, (row.getAs[Long]("n"), row.getAs[Long]("h")), rec)
+        (staged, (row.getAs[Long]("n"), row.getAs[Long]("h")))
       } catch {
         case _: java.util.concurrent.TimeoutException =>
           org.slf4j.LoggerFactory.getLogger(DupClusters.getClass).warn(
             s"observation '$name' not delivered within 300ms; recomputing " +
               "the convergence signature with one aggregate over the " +
               "materialized stage (listener bus likely saturated)")
-          (staged, signature(staged), rec)
+          (staged, signature(staged))
       }
     }
 
     // canonical directed edge u -> v with u > v (v is the smaller
     // neighbor); drop nulls and self-loops
-    var (edges, sig, prevRec) = stageWithSig(
+    var (edges, sig) = stageWithSig(
       pairs
         .filter(a.isNotNull && b.isNotNull && a =!= b)
         .select(greatest(a, b).as("u"), least(a, b).as("v"))
@@ -142,7 +132,7 @@ object DupClusters {
     if (integralId && sig._1 <= Scale.driverLocalMaxRows(pairs.sparkSession)) {
       val es = edges.select(col("u").cast("long"), col("v").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (stager.eager) prevRec.release()
+      rounds.release()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -196,16 +186,8 @@ object DupClusters {
         .select(col("n").as("u"), col("m").as("v"))
         .distinct()
 
-      val (staged, next, rec) = stageWithSig(small, s"cc_edges_${runId}_${it + 1}")
+      val (staged, next) = stageWithSig(small, s"cc_edges_${runId}_${it + 1}")
       edges = staged
-      // round k is materialized (eager stagers ran the action inside
-      // stage()), so round k-1's snapshot is dead — release it and keep
-      // the live-stage count at two regardless of round count. A LAZY
-      // stager retains lineage IN the new frame's plan, so releasing its
-      // predecessor would force an O(rounds²) recompute cascade at the
-      // terminal action — leave lazy stages to the caller, as before.
-      if (stager.eager) prevRec.release()
-      prevRec = rec
       converged = next == sig
       sig = next
       it += 1

@@ -136,12 +136,9 @@ object Graphs {
     val jump = 1.0 - damping
 
     var pr = nodes.withColumn("pr", lit(1.0 / n))
-    // per-iteration release: once iteration i's rank frame is materialized
-    // (eager stagers run the action inside stage()), iteration i-1's
-    // snapshot is dead — keep at most two live rank stages instead of
-    // O(iters) copies of the vertex frame. Lazy stagers retain lineage in
-    // the new frame's plan, so their stages are left for the caller.
-    var prevRec: Stager.Recording = null
+    // at most two live rank stages instead of O(iters) copies of the
+    // vertex frame (Stager.Rounds)
+    val rounds = new Stager.Rounds(stager)
     for (i <- 1 to iters) {
       val inflow = e
         .join(pr.select(col("id").as("u"), col("pr")), "u")
@@ -153,8 +150,7 @@ object Graphs {
       val dangling = pr.join(outdeg.select(col("u").as("id")), Seq("id"), "left_anti")
         .agg(coalesce(sum(col("pr").cast(DecimalType(38, 18))),
           lit(0).cast(DecimalType(38, 18))).cast("double").as("__dang"))
-      val rec = new Stager.Recording(stager)
-      pr = rec.stage(
+      pr = rounds.next(
         nodes.join(inflow, Seq("id"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("id"),
@@ -162,8 +158,6 @@ object Graphs {
               (coalesce(col("__in"), lit(0.0)) + col("__dang") / lit(n)))
               .cast(DecimalType(25, 12)).cast("double").as("pr")),
         s"pagerank_iter_${runId}_$i")
-      if (stager.eager && prevRec != null) prevRec.release()
-      prevRec = rec
     }
     pr
   }
@@ -267,7 +261,7 @@ object Graphs {
     val nodes = stager.stage(
       sym.select(col("u").as("id")).distinct(), s"lpa_nodes_$runId")
     var lab = nodes.withColumn("label", col("id"))
-    var prevRec: Stager.Recording = null
+    val rounds = new Stager.Rounds(stager)
     for (i <- 1 to iters) {
       val counts = sym
         .join(lab.select(col("id").as("v"), col("label")), "v")
@@ -275,14 +269,11 @@ object Graphs {
         .agg(count(lit(1)).as("__c"))
       val w = Window.partitionBy(col("u"))
         .orderBy(col("__c").desc, col("label"))
-      val rec = new Stager.Recording(stager)
-      lab = rec.stage(
+      lab = rounds.next(
         counts.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
           .select(col("u").as("id"), col("label")),
         s"lpa_iter_${runId}_$i")
-      if (stager.eager && prevRec != null) prevRec.release()
-      prevRec = rec
     }
     lab
   }
@@ -317,19 +308,16 @@ object Graphs {
       .select(col(s"`$aCol`").as("u"), col(s"`$bCol`").as("v"))
     val sym = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v"))).distinct()
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    var e = stager.stage(sym, s"kcore_${runId}_0")
-    var prevRec: Stager.Recording = null
+    val peels = new Stager.Rounds(stager)
+    var e = peels.next(sym, s"kcore_${runId}_0")
     for (i <- 1 to rounds) {
       val keep = e.groupBy(col("u")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k.toLong).select(col("u"))
-      val rec = new Stager.Recording(stager)
-      e = rec.stage(
+      e = peels.next(
         e.join(keep, Seq("u"), "left_semi")
           .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
           .select(col("u"), col("v")),
         s"kcore_${runId}_$i")
-      if (stager.eager && prevRec != null) prevRec.release()
-      prevRec = rec
     }
     e.groupBy(col("u").as("id")).agg(count(lit(1)).as("degree"))
   }

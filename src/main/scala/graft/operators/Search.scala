@@ -28,9 +28,9 @@ import org.apache.spark.sql.types.DecimalType
   * Stage lifecycle: both operators stage per-call intermediates through
   * the pluggable [[Stager]] (default LocalCheckpoint). As with
   * [[Dedup.nearDupPairsMinhash]], a long-lived session issuing many
-  * calls should pass a [[Stager.Recording]] wrapper (or Parquet) and
-  * release after materializing — the [[Curation.curateStaged]] pattern —
-  * or the checkpoint blocks outlive the call.
+  * calls should pass a [[Stager.Recording]] wrapper and release it after
+  * materializing — the [[Curation.curateStaged]] pattern — or the staged
+  * storage outlives the call.
   *
   * Determinism for the oracle gate: per-term contributions are doubles
   * built only from IEEE correctly-rounded ops (+ - * /), EXCEPT the idf's

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import graft.core.TableGraph
 
 /** Strategy for materializing a multiply-consumed intermediate EXACTLY once.
@@ -11,47 +12,46 @@ import graft.core.TableGraph
   * materialization the whole upstream recomputes per consumer. HOW to
   * materialize is a deployment decision, so it is pluggable:
   *
-  *  - [[Stager.LocalCheckpoint]] (default): eager in-memory/disk
-  *    checkpoint. Fast (the eager cut keeps the downstream plans small —
-  *    measured 2x faster than lazy Persist on the curation funnel at
-  *    sf0.1), but it TRUNCATES LINEAGE: on a real cluster a lost executor
-  *    cannot recompute its blocks and the job dies. Right where re-running
-  *    the job is an acceptable recovery.
-  *  - [[Stager.Persist]]: MEMORY_AND_DISK persist, lineage retained —
-  *    executor loss recomputes. Blocks are still cluster-local (no
-  *    durability across driver restart).
+  *  - [[Stager.LocalCheckpoint]] (default): in-memory/disk checkpoint.
+  *    Fast (the cut keeps the downstream plans small), but it TRUNCATES
+  *    LINEAGE: on a real cluster a lost executor cannot recompute its
+  *    blocks and the job dies. Right where re-running the job is an
+  *    acceptable recovery.
   *  - [[Stager.Parquet]]: stage through the [[TableGraph]] warehouse
   *    (durable storage — HDFS/S3 on a cluster). The cluster-safe mode:
   *    lineage restarts from the staged files, any executor can re-read
   *    them, and the staged table participates in graph lineage/TTL.
+  *
+  * Contract: [[stage]] MATERIALIZES before it returns (DupClusters'
+  * convergence Observation rides that action; [[Rounds]] frees round k-1
+  * once round k is staged; [[Dedup.spreadStaged]] reads the staged
+  * partition count as metadata), and [[release]] frees the storage of one
+  * frame [[stage]] returned, and nothing else in the session.
   */
 trait Stager {
-  /** Return a DataFrame equivalent to `df` that consumers can scan
-    * repeatedly without recomputing `df`'s plan. */
+  /** Materialize `df` and return an equivalent DataFrame that consumers
+    * can scan repeatedly without recomputing `df`'s plan. */
   def stage(df: DataFrame, name: String): DataFrame
 
-  /** Whether [[stage]] RUNS an action before returning (localCheckpoint,
-    * parquet write) or merely marks storage (persist). Callers that
-    * piggyback on a stage's action — e.g. DupClusters' Observation-based
-    * convergence signature — use this to decide whether metrics can
-    * possibly be in flight (eager) or cannot have been produced at all
-    * (lazy, skip the wait). */
-  def eager: Boolean
+  /** Free the storage of `staged`, a frame this stager's [[stage]]
+    * returned under `name`. */
+  def release(staged: DataFrame, name: String): Unit
 }
 
 object Stager {
 
-  /** Eager local checkpoint (lineage-truncating — local mode / tests). */
+  /** Local checkpoint (lineage-truncating — local mode / tests). */
   object LocalCheckpoint extends Stager {
     override def stage(df: DataFrame, name: String): DataFrame = df.localCheckpoint()
-    override def eager: Boolean = true
-  }
 
-  /** MEMORY_AND_DISK persist; lineage retained, not durable. */
-  object Persist extends Stager {
-    override def stage(df: DataFrame, name: String): DataFrame =
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    override def eager: Boolean = false
+    /** Unpersists the checkpointed RDD at the root of the staged plan
+      * (`Dataset.unpersist` is a no-op for checkpoint blocks). */
+    override def release(staged: DataFrame, name: String): Unit =
+      staged.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case other => throw new IllegalArgumentException(
+          s"release: '$name' is not a local checkpoint (plan root ${other.nodeName})")
+      }
   }
 
   /** Durable parquet staging through the TableGraph warehouse. */
@@ -61,65 +61,51 @@ object Stager {
       graph.getTable(df.sparkSession, name)
         .getOrElse(sys.error(s"stage $name vanished from the graph"))
     }
-    override def eager: Boolean = true
+    override def release(staged: DataFrame, name: String): Unit = graph.dropStage(name)
   }
 
-  /** Delegating wrapper that remembers a release handle for EVERY stage it
-    * creates, so a caller (Curation.curateStaged) frees exactly its own
-    * stages — never blocks persisted by concurrent work in the same session
-    * or other callers' Parquet stage tables.
-    *
-    * Per-mode handle:
-    *  - Persist: the staged Dataset itself — `unpersist` works there.
-    *  - Parquet: the stage NAME — dropped via [[TableGraph.dropStage]].
-    *  - LocalCheckpoint (and unknown stagers): `Dataset.unpersist` is a
-    *    NO-OP for localCheckpoint blocks and the checkpointed RDD is not
-    *    reachable through public API, so the handle is the persistent-RDD-id
-    *    delta captured around the single EAGER stage call — a window of one
-    *    blocking checkpoint, not the whole funnel + consumer lifetime the
-    *    old global-delta cleanup raced over. Released ids are re-checked
-    *    against the live registry so an id freed elsewhere is skipped.
-    */
+  /** Delegating wrapper that records every `(staged, name)` it creates, so
+    * a caller (Curation.curateStaged) frees exactly its own stages with one
+    * [[release]]() — never storage of concurrent work in the same session
+    * or other callers' Parquet stage tables. */
   final class Recording(underlying: Stager) extends Stager {
-    private val handles = scala.collection.mutable.ListBuffer[() => Unit]()
-    private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[Recording])
-    override def eager: Boolean = underlying.eager
+    private val staged = scala.collection.mutable.ListBuffer[(DataFrame, String)]()
 
     override def stage(df: DataFrame, name: String): DataFrame = synchronized {
-      underlying match {
-        case Persist =>
-          val out = underlying.stage(df, name)
-          handles += (() => out.unpersist(blocking = false))
-          out
-        case Parquet(graph) =>
-          val out = underlying.stage(df, name)
-          handles += (() => graph.dropStage(name))
-          out
-        case _ =>
-          // RDD-id-delta fallback. Residual caveats (also noted on
-          // Curation.curateStaged): a concurrent thread persisting during
-          // this one eager stage call gets its RDD captured in `mine` and
-          // freed at release; a LAZY unknown stager persists nothing during
-          // the call, so the delta is empty and release frees nothing —
-          // warn so the leak is visible instead of silent.
-          val sc = df.sparkSession.sparkContext
-          val before = sc.getPersistentRDDs.keySet.toSet
-          val out = underlying.stage(df, name)
-          val mine = sc.getPersistentRDDs.keySet.toSet -- before
-          if (mine.isEmpty)
-            log.warn(s"Recording stager: stage '$name' through $underlying registered no " +
-              "persistent RDDs (lazy stager?) — release() will not free its storage")
-          handles += (() => sc.getPersistentRDDs
-            .filter { case (rddId, _) => mine.contains(rddId) }
-            .values.foreach(_.unpersist(blocking = false)))
-          out
-      }
+      val out = underlying.stage(df, name)
+      staged += ((out, name))
+      out
+    }
+
+    override def release(df: DataFrame, name: String): Unit = synchronized {
+      staged.filterInPlace { case (s, n) => !(s.eq(df) && n == name) }
+      underlying.release(df, name)
     }
 
     /** Release everything staged through this wrapper (idempotent). */
     def release(): Unit = synchronized {
-      handles.foreach(_.apply())
-      handles.clear()
+      staged.foreach { case (s, n) => underlying.release(s, n) }
+      staged.clear()
+    }
+  }
+
+  /** The rounds of an iterative loop: [[next]] stages round k, then
+    * releases round k-1 — [[stage]] has materialized round k, so nothing
+    * reads round k-1 again and at most two rounds are live, whatever the
+    * round count. [[release]] frees the last round. */
+  final class Rounds(stager: Stager) {
+    private var last: Option[(DataFrame, String)] = None
+
+    def next(df: DataFrame, name: String): DataFrame = {
+      val out = stager.stage(df, name)
+      release()
+      last = Some((out, name))
+      out
+    }
+
+    def release(): Unit = {
+      last.foreach { case (s, n) => stager.release(s, n) }
+      last = None
     }
   }
 }

@@ -206,13 +206,13 @@ object Vocab {
       words0: DataFrame, numMerges: Int, minPairCount: Long,
       stager: Stager): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    var words = stager.stage(words0, s"bpe_words_${runId}_init")
-    if (words.count() <= Scale.driverLocalMaxRows(spark))
-      return bpeMergeLoopLocal(spark,
-        words.collect().map(r =>
-          (r.getLong(0), r.getSeq[String](1).toArray)),
-        numMerges, minPairCount)
-    var prevRec: Stager.Recording = null
+    val rounds = new Stager.Rounds(stager)
+    var words = rounds.next(words0, s"bpe_words_${runId}_init")
+    if (words.count() <= Scale.driverLocalMaxRows(spark)) {
+      val rows = words.collect().map(r => (r.getLong(0), r.getSeq[String](1).toArray))
+      rounds.release()
+      return bpeMergeLoopLocal(spark, rows, numMerges, minPairCount)
+    }
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var rank = 0
     var exhausted = false
@@ -252,17 +252,15 @@ object Vocab {
           val fin = (st: Column) =>
             when(st.getField("pend").isNull, st.getField("acc"))
               .otherwise(concat(st.getField("acc"), array(st.getField("pend"))))
-          val rec = new Stager.Recording(stager)
-          words = rec.stage(
+          words = rounds.next(
             words.select(col("__n"),
               aggregate(col("__syms"), zero, step, fin).as("__syms")),
             s"bpe_words_${runId}_$rank")
-          if (stager.eager && prevRec != null) prevRec.release()
-          prevRec = rec
           rank += 1
         case _ => exhausted = true
       }
     }
+    rounds.release()
     mergesToDf(spark, merges.toSeq)
   }
 

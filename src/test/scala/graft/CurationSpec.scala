@@ -27,15 +27,15 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("staging mode is pluggable; curateStaged releases what it staged") {
-    val sc = spark.sparkContext
-    val baseline = sc.getPersistentRDDs.keySet
+    val graph = new graft.core.TableGraph(
+      java.nio.file.Files.createTempDirectory("curation_pluggable").toString)
+    def stages = graph.allNodes.filter(_.metadata.get("role").contains("stage"))
     val (out, cleanup) = Curation.curateStaged(docs, "doc_id", "text",
-      Curation.Config(stager = Stager.Persist))
+      Curation.Config(stager = Stager.Parquet(graph)))
     assert(out.select("doc_id").as[Long].collect().toSet === Set(1L, 4L))
-    assert(sc.getPersistentRDDs.keySet.size > baseline.size) // something staged
+    assert(stages.nonEmpty) // something staged
     cleanup()
-    assert(sc.getPersistentRDDs.keySet.subsetOf(baseline),
-      "cleanup must release every block this call staged")
+    assert(stages.isEmpty, "cleanup must release every table this call staged")
   }
 
   test("cleanup releases ONLY this call's stages — bystander blocks survive") {

@@ -517,56 +517,6 @@ class DedupSpec extends SparkSpecBase {
     assert(fast === brute, s"short-path differential: fast $fast vs brute $brute")
   }
 
-  /** Runs `body` and counts the Spark jobs it started. The listener bus
-    * is asynchronous, so a marker job in its own job group runs after
-    * `body`: once the marker's start event arrives, every earlier event
-    * has been delivered. */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"jobs-marker-${java.util.UUID.randomUUID()}"
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          flushed.countDown()
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobGroup(marker, "listener-bus flush")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
-      (out, started.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  test("lazy Persist staging builds the near-dup frames without a job; rows match LocalCheckpoint") {
-    import graft.operators.Stager
-    val docs = testdata("sf0.001", "documents")
-    val newDf = docs.filter($"doc_id" % 5 === 0)
-    val idxDf = docs.filter($"doc_id" % 5 =!= 0)
-    def selfPairs(st: Stager) = Dedup.nearDupPairsMinhash(docs, "doc_id", "text", stager = st)
-    def crossPairs(st: Stager) =
-      Dedup.nearDupPairsAgainstIndex(newDf, idxDf, "doc_id", "text", stager = st)
-    val persist = new Stager.Recording(Stager.Persist)
-    try {
-      val (self, selfJobs) = jobsStartedBy(selfPairs(persist))
-      assert(selfJobs === 0, "nearDupPairsMinhash ran jobs while building the frame")
-      val (cross, crossJobs) = jobsStartedBy(crossPairs(persist))
-      assert(crossJobs === 0, "nearDupPairsAgainstIndex ran jobs while building the frame")
-      val selfRows = self.as[(Long, Long, Double)].collect().toSet
-      assert(selfRows.nonEmpty, "fixture should contain planted near-dups")
-      assert(selfRows ===
-        selfPairs(Stager.LocalCheckpoint).as[(Long, Long, Double)].collect().toSet)
-      val crossRows = cross.as[(Long, Long, Double)].collect().toSet
-      assert(crossRows.nonEmpty, "fixture should contain cross-split near-dups")
-      assert(crossRows ===
-        crossPairs(Stager.LocalCheckpoint).as[(Long, Long, Double)].collect().toSet)
-    } finally persist.release()
-  }
-
   test("incremental index dedup equals the self-join restricted to cross pairs") {
     val docs = testdata("sf0.001", "documents")
     val newDf = docs.filter($"doc_id" % 5 === 0)

@@ -59,16 +59,6 @@ class DupClustersSpec extends SparkSpecBase {
     assert(got === Set((2L, 2L), (3L, 2L)))
   }
 
-  test("a LAZY stager (Persist) takes the explicit-signature fallback and agrees") {
-    // Persist runs no action inside stage() (eager=false), so the wait is
-    // skipped outright and the fallback aggregate must drive convergence
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val viaPersist = DupClusters.connectedComponents(pairs, "id_a", "id_b",
-        stager = graft.operators.Stager.Persist)
-      .as[(Long, Long)].collect().toSet
-    assert(viaPersist === Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
-  }
-
   test("empty pair list yields an empty assignment") {
     assert(cc(Seq.empty) === Set.empty)
   }

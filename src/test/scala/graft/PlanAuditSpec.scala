@@ -24,6 +24,13 @@ class PlanAuditSpec extends SparkSpecBase {
     all(plan).collect { case s: FileSourceScanExec => s }
   }
 
+  /** Stages nothing, so an audit sees an operator's full lineage in one
+    * plan (a test-only stager: it breaks the materialize-on-stage rule). */
+  private object Inline extends graft.operators.Stager {
+    override def stage(df: org.apache.spark.sql.DataFrame, name: String) = df
+    override def release(staged: org.apache.spark.sql.DataFrame, name: String): Unit = ()
+  }
+
   test("q02: filter is pushed to the scan and the schema is pruned") {
     val df = SparkEntry.queries("q02_filter_project")(spark, dir)
     val scan = scans(df.queryExecution.executedPlan)
@@ -373,10 +380,9 @@ class PlanAuditSpec extends SparkSpecBase {
   test("p102: keySkew's corpus pays one count shuffle; histogram/top-k read the staged counts") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val events = graft.Tables.events(spark, dir)
-    // stage lazily (Persist) so the audit sees the FULL lineage: the
-    // corpus-sized count aggregation must appear exactly once
-    val out = graft.operators.Profile.keySkew(events, "user_id",
-      stager = graft.operators.Stager.Persist)
+    // stage inline so the audit sees the FULL lineage: the corpus-sized
+    // count aggregation must appear
+    val out = graft.operators.Profile.keySkew(events, "user_id", stager = Inline)
     val plan = out.queryExecution.executedPlan.toString
     // one scan + one hash-count exchange for the corpus; everything else
     // (histogram, quantile scalars, top-k) operates on the staged counts
@@ -390,7 +396,7 @@ class PlanAuditSpec extends SparkSpecBase {
   test("p108: rollingDistinct explodes the staged distinct frame — no range join, no cartesian") {
     val events = graft.Tables.events(spark, dir)
     val out = graft.operators.Sessionize.rollingDistinct(events, "ts", "user_id",
-      stager = graft.operators.Stager.Persist)
+      stager = Inline)
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)

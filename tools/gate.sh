@@ -3,7 +3,7 @@
 # Round 2's whole output was voided by a compile error sbt reports in 5s —
 # this script makes that impossible to repeat.
 #
-#   1. sbt test                  (compile + every spec)
+#   1. sbt "testOnly *"          (compile + every spec, tier-1's environment)
 #   2. Verify at sf0.01          (dump every SparkEntry query + oracle_sql.json)
 #   3. tools/oracle_check.py     (local DuckDB stand-in for the driver gate)
 #
@@ -13,11 +13,16 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${2:-/tmp/verify_gate}"
 
-echo "== gate 1/3: sbt test =="
-# the same offline resolution settings as the tier-1 command in ROADMAP.md
+echo "== gate 1/3: sbt testOnly * =="
+# the same settings as the tier-1 command in ROADMAP.md: offline
+# resolution, and a test JVM sized from this box (half of MemTotal,
+# clamped to 2-8g) rather than build.sbt's 10g default heap
 export COURSIER_MODE=offline
 export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
-sbt --batch -Dsbt.log.noformat=true test
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
+SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)" \
+SPARK_LOCAL_DIRS=/tmp/spark-local \
+  sbt --batch -Dsbt.log.noformat=true "testOnly *"
 
 echo "== gate 2/3: Verify @ $SF_DIR =="
 rm -rf "$OUT_DIR"
