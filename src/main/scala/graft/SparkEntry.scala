@@ -8354,7 +8354,7 @@ object SparkEntry {
       // docs themselves leave the training corpus (they are eval data),
       // then any training doc sharing a 5-gram with the bench drops.
       val bench = docs.filter(col("doc_id") % 20 === 0)
-      val decon = Stager.LocalCheckpoint.stage(
+      val decon = Stager.stage(
         Decontaminate.removeContaminated(
           curated.filter(col("doc_id") % 20 =!= 0), "doc_id", "text",
           bench, "text", shingleN = 5),
@@ -9380,7 +9380,7 @@ object SparkEntry {
       // count but double the corpus prep, windows, and stage barriers).
       // marginScore joins each side by its own ids, so per-side values
       // are untouched; re-verified vs the unchanged oracle at both SFs.
-      val nbrAll = graft.operators.Stager.LocalCheckpoint.stage(
+      val nbrAll = graft.operators.Stager.stage(
         Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 200),
           "vec_id", "embedding", 5),
         s"p246_nbr_${java.util.UUID.randomUUID().toString.take(8)}")

@@ -35,10 +35,11 @@ object StagerBench {
         // so it stays off the clock too.
         val dt = Measure.releasing(spark, blocking = true) {
           val t0 = System.nanoTime()
-          Measure.noop(graft.operators.Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
-              shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8,
-              stager = stager)
-            .orderBy(col("id_a"), col("id_b")))
+          Measure.noop(graft.operators.Stager.using(stager) {
+            graft.operators.Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
+                shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8)
+              .orderBy(col("id_a"), col("id_b"))
+          })
           (System.nanoTime() - t0) / 1e9
         }
         graph.dropStages()

@@ -83,28 +83,48 @@ object GraphQuery {
     }.sortBy { case (n, s) => (-s, n.name) }
   }
 
-  /** Query the graph in plain English: route to the best-matching table,
-    * then compile and run the query against it. Refuses to run when NO
-    * clause of the query resolved against the chosen table's schema —
-    * with feature hashing some token almost always collides into a
-    * nonzero score, and silently returning every row of a vaguely-related
-    * table is worse than an error. */
+  /** Query the graph in plain English: route to the highest-ranked table
+    * against which EVERY clause of the query resolves, then compile and
+    * run the query there. 64-dim feature hashing can rank an unrelated
+    * table first, so the rank only orders the candidates and the schema
+    * decides. Refuses when no table qualifies, naming the top-ranked
+    * table's failure — silently returning every row (or a partially
+    * filtered copy) of a vaguely-related table is worse than an error. */
   def queryNl(spark: SparkSession, graph: TableGraph, query: String,
       embedder: Embedder = new FeatureHashEmbedder(64)): DataFrame = {
     val ranked = rankTables(spark, graph, query, embedder)
     require(ranked.nonEmpty, "the graph has no registered (readable) tables to query")
-    val (best, score) = ranked.head
-    require(score > 0.0,
-      s"no table matches '$query' (best candidate ${best.name} scored 0)")
-    val df = graph.getTable(spark, best.name).getOrElse(
-      sys.error(s"table ${best.name} vanished from the graph"))
-    // natural phrasings mention the routed table in prose ("top 2 orders by
-    // total price") and the table word then lands inside a clause capture,
-    // fails to resolve, and strict mode would hard-error. Compile the query
-    // as written first; only if clauses were dropped, retry with the routed
-    // table's name tokens (±plural) stripped and keep the retry when IT
-    // resolves cleanly — queries that never mention the table are untouched.
-    val first = NlCompiler.compile(query, df.columns.toSeq)
+    val candidates = ranked.iterator.map { case (node, _) =>
+      val df = graph.getTable(spark, node.name).getOrElse(
+        sys.error(s"table ${node.name} vanished from the graph"))
+      (node, df, compileOn(query, node, df.columns.toSeq))
+    }.buffered
+    val (best, _, bestCompiled) = candidates.head
+    candidates.find { case (_, _, c) => c.describe.nonEmpty && c.warnings.isEmpty } match {
+      case Some((_, df, compiled)) => compiled.apply(df)
+      case None =>
+        require(bestCompiled.describe.nonEmpty,
+          s"query '$query' resolved on no table; on the top-ranked ${best.name} " +
+            "no clause resolved against its columns — refusing to return the " +
+            "unfiltered table")
+        // strict mode: a PARTIALLY-resolved query (typo'd filter column,
+        // say) would silently widen the result — error instead
+        throw new IllegalArgumentException(
+          s"query '$query' resolved on no table; on the top-ranked ${best.name} " +
+            s"some clauses were dropped: ${bestCompiled.warnings.mkString("; ")}")
+    }
+  }
+
+  /** Compile `query` against one table's `columns`. Natural phrasings
+    * mention the table in prose ("top 2 orders by total price") and the
+    * table word then lands inside a clause capture and fails to resolve.
+    * Compile the query as written first; only if clauses were dropped,
+    * retry with the table's name tokens (±plural) stripped and keep the
+    * retry when IT resolves cleanly — queries that never mention the
+    * table are untouched. */
+  private def compileOn(query: String, node: TableNode,
+      columns: Seq[String]): NlCompiler.Compiled = {
+    val first = NlCompiler.compile(query, columns)
     // a clause is "accounted for" when it either compiled (a describe step)
     // or was explicitly warned about — the count must never DROP across the
     // stripped retry, or stripping could silently delete a clause whose
@@ -112,28 +132,17 @@ object GraphQuery {
     // on table total_sales must keep erroring, not return unsorted rows)
     def clauseCount(c: NlCompiler.Compiled): Int =
       (if (c.describe.isEmpty) 0 else c.describe.split(";").length) + c.warnings.length
-    val compiled =
-      if (first.warnings.isEmpty) first
-      else {
-        val nameToks = best.name.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-          .flatMap(t => Seq(t, t.stripSuffix("s"), t + "s")).toSet
-        val stripped = query.split("\\s+")
-          .filterNot(w => nameToks.contains(w.toLowerCase.replaceAll("[^a-z0-9]", "")))
-          .mkString(" ")
-        val second = NlCompiler.compile(stripped, df.columns.toSeq)
-        if (second.warnings.isEmpty && second.describe.nonEmpty &&
-            clauseCount(second) >= clauseCount(first)) second
-        else first
-      }
-    require(compiled.describe.nonEmpty,
-      s"query '$query' routed to table ${best.name} but no clause resolved " +
-        s"against its columns [${df.columns.mkString(", ")}] — refusing to " +
-        "return the unfiltered table")
-    // strict mode: a PARTIALLY-resolved query (typo'd filter column, say)
-    // would silently widen the result — error instead
-    require(compiled.warnings.isEmpty,
-      s"query '$query' routed to table ${best.name} but some clauses were " +
-        s"dropped: ${compiled.warnings.mkString("; ")}")
-    compiled.apply(df)
+    if (first.warnings.isEmpty) first
+    else {
+      val nameToks = node.name.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
+        .flatMap(t => Seq(t, t.stripSuffix("s"), t + "s")).toSet
+      val stripped = query.split("\\s+")
+        .filterNot(w => nameToks.contains(w.toLowerCase.replaceAll("[^a-z0-9]", "")))
+        .mkString(" ")
+      val second = NlCompiler.compile(stripped, columns)
+      if (second.warnings.isEmpty && second.describe.nonEmpty &&
+          clauseCount(second) >= clauseCount(first)) second
+      else first
+    }
   }
 }

@@ -170,8 +170,7 @@ object Classifier {
     * (bucket, count) pair exactly once per round. */
   def trainLogistic(docs: DataFrame, idCol: String, textCol: String,
       labelCol: String, nBuckets: Int = 4096, seed: String = "clf",
-      useBigrams: Boolean = true, iters: Int = 8, lr: Double = 0.5,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      useBigrams: Boolean = true, iters: Int = 8, lr: Double = 0.5): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
     require(iters >= 1 && iters <= 1000, s"iters must be in [1,1000], got $iters")
     require(lr > 0 && !lr.isNaN && !lr.isInfinity,
@@ -210,7 +209,7 @@ object Classifier {
     // the compacted model-input frame is paid once, not per round.
     val par = spark.sparkContext.defaultParallelism
     val featName = s"clf_train_feat_$runId"
-    val docFeat = stager.stage(
+    val docFeat = Stager.stage(
       occ.groupBy(id, col("__b"))
         .agg(first(col("__y")).as("__y"), count(lit(1)).as("__c"))
         .groupBy(id)
@@ -254,7 +253,7 @@ object Classifier {
           "under spark.sql.decimalOperations.allowPrecisionLoss=true")
       val rows = docFeat
         .select(col("__y"), col("__n"), col("__bs"), col("__cs")).collect()
-      stager.release(docFeat, featName)
+      Stager.release(docFeat, featName)
       val wl = trainLogisticLocal(rows, nBuckets, iters, lr, nDocs, round9d)
       return weightsToDf(spark, wl)
     }
@@ -296,7 +295,7 @@ object Classifier {
       }
       it += 1
     }
-    stager.release(docFeat, featName)
+    Stager.release(docFeat, featName)
     weightsToDf(spark, w)
   }
 

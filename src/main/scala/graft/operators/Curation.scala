@@ -18,9 +18,9 @@ import graft.functions.TextFunctions._
   * inherits the capped banded-LSH pipeline from
   * [[Dedup.nearDupPairsMinhash]]. The survivor
   * frame after exact dedup feeds three consumers (signatures, candidate
-  * shingle sets, final anti-join), so it is materialized through the
-  * pluggable [[Stager]] — on a cluster pass `Stager.Parquet(graph)` for a
-  * durable, lineage-restarting stage point.
+  * shingle sets, final anti-join), so it is staged ([[Stager.stage]]) — on
+  * a cluster run the funnel inside `Stager.using(Stager.Parquet(graph))`
+  * for a durable, lineage-restarting stage point.
   */
 object Curation {
 
@@ -33,8 +33,7 @@ object Curation {
       shingleN: Int = 3,
       numHashes: Int = 8,
       rowsPerBand: Int = 1,
-      jaccardThreshold: Double = 0.8,
-      stager: Stager = Stager.LocalCheckpoint)
+      jaccardThreshold: Double = 0.8)
 
   /** Composite quality score in [0,1] over tokenStats output columns. */
   private def qualityScore(cfg: Config): Column = {
@@ -47,14 +46,6 @@ object Curation {
       (lit(1.0) - least(when(col("__n_char") === 0, lit(0.0))
         .otherwise(col("__n_punct") / col("__n_char")) * lit(5.0), lit(1.0))) * lit(0.1)
   }
-
-  /** Run the funnel; returns the SURVIVING rows of `df` (all columns).
-    * Stages intermediates through cfg.stager without a release handle —
-    * long-lived sessions calling this repeatedly should use
-    * [[curateStaged]] and invoke the cleanup after materializing. */
-  def curate(df: DataFrame, idCol: String, textCol: String,
-      cfg: Config = Config()): DataFrame =
-    curateImpl(df, idCol, textCol, cfg)
 
   /** Keep rows whose score sits inside the [loQ, hiQ] band of their
     * GROUP's score distribution, with the band edges read from the
@@ -70,15 +61,15 @@ object Curation {
     * sketch pass and the filter pass read it, and when scoring is itself
     * expensive (the bigram LM in [[perplexityPrune]]: measured 2x the
     * whole gate when unstaged) recomputing it per consumer doubles the
-    * job. Pass scores that are cheap projections with Stager-of-choice if
-    * the narrow (id, group, score) frame is too big to stage. */
+    * job. Pass scores that are cheap projections under a
+    * [[Stager.using]] of choice if the narrow (id, group, score) frame is
+    * too big to stage in memory. */
   def keepScoreBand(scored: DataFrame, idCol: String, groupCol: String,
       scoreCol: String, loQ: Double = 0.25, hiQ: Double = 0.75,
-      k: Int = 256, salt: String = "pb",
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      k: Int = 256, salt: String = "pb"): DataFrame = {
     require(loQ > 0.0 && hiQ <= 1.0 && loQ <= hiQ,
       s"need 0 < loQ <= hiQ <= 1, got [$loQ, $hiQ]")
-    val staged = stager.stage(scored,
+    val staged = Stager.stage(scored,
       s"band_scored_${java.util.UUID.randomUUID().toString.take(8)}")
     val bounds = Sketch.quantileEstimate(
         Sketch.quantileSketch(staged, scoreCol, groupCol, idCol, k, salt),
@@ -102,29 +93,28 @@ object Curation {
     * loQ trims the noisy tail and hiQ the boilerplate tail. */
   def perplexityPrune(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, loQ: Double = 0.25, hiQ: Double = 0.75,
-      vocabSize: Int = 200, k: Int = 256,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      vocabSize: Int = 200, k: Int = 256): DataFrame = {
     val scored = LmScore.scoreBigramSelf(docs, idCol, textCol, vocabSize,
-      logRoundDp = 9, stager = stager)
+      logRoundDp = 9)
     val withGroup = docs.select(col(s"`$idCol`"), col(s"`$groupCol`"))
       .join(scored, Seq(idCol))
     keepScoreBand(withGroup, idCol, groupCol, "avg_logp", loQ, hiQ, k)
   }
 
   /** [[curate]] plus a cleanup thunk that releases EXACTLY what this call
-    * staged — every stage goes through a per-call [[Stager.Recording]]
-    * wrapper, so concurrent work persisting blocks in the same session (or
-    * other callers' Parquet stage tables) is never touched. Invoke AFTER
-    * materializing the result. */
+    * staged ([[Stager.recording]]), so concurrent work persisting blocks in
+    * the same session (or other callers' Parquet stage tables) is never
+    * touched. Invoke AFTER materializing the result. */
   def curateStaged(df: DataFrame, idCol: String, textCol: String,
-      cfg: Config = Config()): (DataFrame, () => Unit) = {
-    val recording = new Stager.Recording(cfg.stager)
-    val out = curateImpl(df, idCol, textCol, cfg.copy(stager = recording))
-    (out, () => recording.release())
-  }
+      cfg: Config = Config()): (DataFrame, () => Unit) =
+    Stager.recording(curate(df, idCol, textCol, cfg))
 
-  private def curateImpl(df: DataFrame, idCol: String, textCol: String,
-      cfg: Config): DataFrame = {
+  /** Run the funnel; returns the SURVIVING rows of `df` (all columns).
+    * Stages intermediates without a release handle — long-lived sessions
+    * calling this repeatedly should use [[curateStaged]] and invoke the
+    * cleanup after materializing. */
+  def curate(df: DataFrame, idCol: String, textCol: String,
+      cfg: Config = Config()): DataFrame = {
     require(!df.columns.exists(Set("__n_char", "__n_alpha", "__n_punct", "__fp").contains),
       "__n_char/__n_alpha/__n_punct/__fp are reserved helper names in curate")
     val id = col(idCol)
@@ -162,12 +152,11 @@ object Curation {
     // scale, and every downstream consumer (the minhash re-shingle most of
     // all) inherits that width for its per-row work — spread it once here
     // (metadata-only guard; no-op when the checkpoint is already wide)
-    val canonDocs = Dedup.spreadStaged(cfg.stager.stage(
+    val canonDocs = Dedup.spreadStaged(Stager.stage(
       df.join(canonIds, Seq(idCol), "left_semi"), s"curation_canon_$runId"))
     // stage 3: minhash near-dup drop (higher id of each verified pair)
     val drop = Dedup.nearDupPairsMinhash(canonDocs, idCol, textCol,
-        cfg.shingleN, cfg.numHashes, cfg.rowsPerBand, cfg.jaccardThreshold,
-        stager = cfg.stager)
+        cfg.shingleN, cfg.numHashes, cfg.rowsPerBand, cfg.jaccardThreshold)
       .select(col("id_b").as(idCol))
     canonDocs.join(drop, Seq(idCol), "left_anti")
   }

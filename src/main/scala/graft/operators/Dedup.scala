@@ -61,7 +61,7 @@ object Dedup {
     * broadcast for the bin split, and the cumulative pass runs over
     * ≤ nBins rows. */
   def dedupYieldCurve(df: DataFrame, idCol: String, textCol: String,
-      nBins: Int = 10, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      nBins: Int = 10): DataFrame = {
     require(nBins >= 1, s"dedupYieldCurve: nBins must be >= 1, got $nBins")
     val id = col(s"`$idCol`")
     val fps = df.filter(id.isNotNull)
@@ -72,7 +72,7 @@ object Dedup {
       .withColumn("__one", lit(1L))
       .withColumn("__d", when(col("__dup"), 1L).otherwise(0L))
     val ranked = PrefixSum.withRunningSums(flagged, "__id",
-      Seq("__one", "__d"), stager)
+      Seq("__one", "__d"))
     // total off the STAGED scan (max rank) — aggregating `flagged` again
     // would re-run the corpus-sized fingerprint join
     val tot = ranked.agg(coalesce(max(col("cum___one")), lit(0L)).as("__n"))
@@ -360,8 +360,7 @@ object Dedup {
     * (id_a, id_b, jaccard_sim). */
   def nearDupPairsMinhash(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 1,
-      threshold: Double = 0.8,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     // Shuffle economics at 100 TB: the signature aggregation's shuffle is
     // O(docs x seeds) longs (minima combine map-side), but shingle SETS
     // are corpus-sized — so sets are built ONLY for documents that appear
@@ -369,10 +368,10 @@ object Dedup {
     // shingle stream semi-joined to candidate ids. Two scans of the input
     // beat one corpus-sized set shuffle. The small candidate-pair frame
     // feeds three consumers (id extraction + both verify joins), so THAT —
-    // not a corpus-sized intermediate — is what the pluggable Stager
+    // not a corpus-sized intermediate — is what Stager.stage
     // materializes. Default stays LocalCheckpoint; cluster jobs that must
-    // survive executor loss pass Stager.Parquet(graph) (trade-offs in
-    // Stager's scaladoc). On STANDALONE p05 the staged frames are small
+    // survive executor loss run inside Stager.using(Stager.Parquet(graph))
+    // (trade-offs in Stager's scaladoc). On STANDALONE p05 the staged frames are small
     // enough that Parquet staging is competitive (graft.StagerBench,
     // numbers in FIXTURES.md) — the durable mode costs nothing extra here.
     // signatures are a few longs per doc — staging them is cheap, and the
@@ -380,10 +379,10 @@ object Dedup {
     // branches (occupancy window + both join sides), which would otherwise
     // recompute the whole shingle pipeline per branch
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val sig = stager.stage(
+    val sig = Stager.stage(
       minhashSignature(df, idCol, textCol, shingleN, numHashes),
       s"minhash_sig_$runId")
-    val cands = stager.stage(
+    val cands = Stager.stage(
       lshCandidates(sig, idCol, numHashes, rowsPerBand),
       s"minhash_cands_$runId")
     val candIds = cands
@@ -402,7 +401,7 @@ object Dedup {
     // frame (the curation funnel's canonical-survivor checkpoint) the
     // whole re-shingle otherwise lands on its 1-2 partitions — measured
     // 11 s single-task checkpoint inside p11 without the spread.
-    val candSets = stager.stage(
+    val candSets = Stager.stage(
       shingleRows(
           df.join(candIds, Seq(idCol), "left_semi")
             .repartition(df.sparkSession.sparkContext.defaultParallelism),
@@ -479,14 +478,13 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 1,
       threshold: Double = 0.8,
       indexSignatures: Option[DataFrame] = None,
-      maxBucket: Int = DefaultMaxBucket,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(numHashes % rowsPerBand == 0, "numHashes must divide into bands")
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val sigNew = stager.stage(
+    val sigNew = Stager.stage(
       minhashSignature(newDf, idCol, textCol, shingleN, numHashes),
       s"inc_sig_new_$runId")
-    val sigIdx = stager.stage(
+    val sigIdx = Stager.stage(
       indexSignatures.getOrElse(
         minhashSignature(indexDf, idCol, textCol, shingleN, numHashes)),
       s"inc_sig_idx_$runId")
@@ -503,7 +501,7 @@ object Dedup {
         Window.partitionBy(col("__band"), col("__bucket")).orderBy(col("index_id"))))
       .filter(col("__rn") <= maxBucket)
       .drop("__rn")
-    val cands = stager.stage(
+    val cands = Stager.stage(
       buckets(sigNew, "new_id").join(idxB, Seq("__band", "__bucket"))
         .select(col("new_id"), col("index_id")).distinct(),
       s"inc_cands_$runId")
@@ -525,13 +523,12 @@ object Dedup {
 
   def nearDupPairsMinhashEst(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 1,
-      threshold: Double = 0.75,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      threshold: Double = 0.75): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     // staged for the same reason as the verified variant: the banded
     // self-join references the signatures from several plan branches, and
     // both sides of the estimate join read them again
-    val sig = stager.stage(
+    val sig = Stager.stage(
       minhashSignature(df, idCol, textCol, shingleN, numHashes),
       s"minhash_est_sig_$runId")
     val cands = lshCandidates(sig, idCol, numHashes, rowsPerBand)
@@ -596,7 +593,6 @@ object Dedup {
     * silently break exactness, which is this operator's contract. */
   def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.8,
-      stager: Stager = Stager.LocalCheckpoint,
       preSets: Option[DataFrame] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold (prefix length diverges at 0)")
@@ -606,10 +602,10 @@ object Dedup {
     // output keeps the verify stage deterministic for the oracle.
     // preSets: a caller-staged [[prefixShingleSets]] frame shared across
     // similarity passes — skips this pass's own corpus-sized build+stage
-    // (shingleN and stager are then unused; it must have been built with
+    // (shingleN is then unused; it must have been built with
     // the SAME shingleN — requirePreSetsShape rejects the wrong shape).
     preSets.foreach(requirePreSetsShape(_, idCol, "jaccardPairsPrefix"))
-    val sets = preSets.getOrElse(stager.stage(
+    val sets = preSets.getOrElse(Stager.stage(
       prefixShingleSets(df, idCol, textCol, shingleN),
       s"prefix_sets_$runId"))
     val tok = sets.select(col(idCol), col("__sz"), explode(col("__shingles")).as("__g"))
@@ -678,7 +674,6 @@ object Dedup {
   def containmentPairsPrefix(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.8,
       maxDf: Option[Long] = None,
-      stager: Stager = Stager.LocalCheckpoint,
       preSets: Option[DataFrame] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
@@ -686,7 +681,7 @@ object Dedup {
     val tMicro = math.round(threshold * 1e6)
     val runId = java.util.UUID.randomUUID().toString.take(8)
     preSets.foreach(requirePreSetsShape(_, idCol, "containmentPairsPrefix"))
-    val sets0 = preSets.getOrElse(stager.stage(
+    val sets0 = preSets.getOrElse(Stager.stage(
       prefixShingleSets(df, idCol, textCol, shingleN),
       s"containment_sets_$runId"))
     val tok0 = sets0.select(col(idCol), col("__sz"), explode(col("__shingles")).as("__g"))
@@ -697,7 +692,7 @@ object Dedup {
         // drop df-hot shingles from every set and recompute sizes; all
         // downstream arithmetic (prefix bound, length filter, verify)
         // then runs in the filtered space
-        val sets2 = stager.stage(
+        val sets2 = Stager.stage(
           tok0.join(dfreq.filter(col("__dfc") <= cut).select(col("__g")), Seq("__g"))
             .groupBy(col(idCol))
             .agg(sort_array(collect_list(col("__g"))).as("__shingles"))
@@ -777,15 +772,14 @@ object Dedup {
     * path ([[nearDupPairsMinhash]]) — capping HERE would silently break
     * exactness, which is this operator's contract. */
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-      maxDist: Int = 2,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxDist: Int = 2): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist (0 is exact dedup)")
     val d = maxDist
     val p = d + 1
     val runId = java.util.UUID.randomUUID().toString.take(8)
     // staged: read by the segment index, the probe stream, the short block
     // and both verify sides
-    val keys = stager.stage(
+    val keys = Stager.stage(
       df.select(col(idCol), col(strCol).cast("string").as("__s"))
         .filter(col("__s").isNotNull)
         .withColumn("__len", length(col("__s")).cast("long")),
@@ -888,13 +882,12 @@ object Dedup {
     * more than maxBucket members degrade to star pairs
     * ([[cappedBucketPairs]]). */
   def nearDupPairsSimhash(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = DefaultMaxBucket,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxHamming: Int = 3, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // the banded pair join references its input from three plan branches
     // (occupancy window + both sides); without materialization the whole
     // explode + 64-vote aggregation runs three times (verified: 3 FileScans
     // / 6 HashAggregates / 0 ReusedExchange in the unstaged plan)
-    val sig = stager.stage(simhash64(df, idCol, textCol),
+    val sig = Stager.stage(simhash64(df, idCol, textCol),
       "simhash_sig_" + java.util.UUID.randomUUID().toString.take(8))
     val segs = sig.select(col(idCol), col("simhash"),
         explode(array((0 until 4).map(s =>
@@ -919,8 +912,7 @@ object Dedup {
     * ([[cappedBucketPairs]]). */
   def nearDupPairsEmbeddingLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nBits: Int = 8,
-      maxBucket: Int = DefaultMaxBucket,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // empty corpus -> typed empty pair frame (a pruned-to-nothing input is
     // a normal pipeline event, not an error)
     val dim = Similarity.dimOpt(df, vecCol)
@@ -939,7 +931,7 @@ object Dedup {
     // expensive part and the pair join's three plan branches would rerun
     // them; the explode itself is cheap string work, and staging pre-explode
     // keeps the materialized footprint at one row per vector, not nBits+1
-    val sig = stager.stage(
+    val sig = Stager.stage(
       df.select(col(idCol), col(vecCol).as("__v"))
         .withColumn("__n", sqrt(Similarity.normSq(col("__v"))))
         .withColumn("__sig", Similarity.signSignature(col("__v"), planes)),
@@ -1054,8 +1046,7 @@ object Dedup {
 
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
       eps: Double, nClusters: Int = 16, refineIters: Int = 0,
-      maxCluster: Int = DefaultMaxBucket,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxCluster: Int = DefaultMaxBucket): DataFrame = {
     require(!eps.isNaN, "eps must not be NaN")
     import graft.functions.FloatArrayDot
     val assignment = clusterAssignment(df, idCol, vecCol, nClusters, refineIters)
@@ -1075,7 +1066,7 @@ object Dedup {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     // three consumers (both pair-join sides + the final kept join) would
     // each rerun the nClusters-wide scored argmax — stage the assignment
-    val assigned = stager.stage(assignment.get, s"semdedup_assign_$runId")
+    val assigned = Stager.stage(assignment.get, s"semdedup_assign_$runId")
     // nClusters join keys bound the pair join's parallelism; spread the
     // per-cluster pair space over enough id-blocks to occupy the cores
     // (scale-adaptive: production nClusters >= parallelism -> spread 1,
@@ -1148,8 +1139,7 @@ object Dedup {
     * `textCol` rewritten (whitespace-normalized) + n_tokens_kept /
     * n_tokens_removed. */
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      spanN: Int, minDocs: Int = 2,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      spanN: Int, minDocs: Int = 2): DataFrame = {
     require(spanN >= 2, s"spanN must be >= 2, got $spanN")
     require(minDocs >= 2, s"minDocs must be >= 2 (1 would strike every span), got $minDocs")
     (Seq("n_tokens_kept", "n_tokens_removed") intersect df.columns).foreach(c =>
@@ -1178,7 +1168,7 @@ object Dedup {
     // feeds BOTH the duplicated-hash count and the semi-join below;
     // unstaged each consumer would re-tokenize and re-window the corpus
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val gramStarts = stager.stage(ixed
+    val gramStarts = Stager.stage(ixed
       .filter(col(s"__t${spanN - 1}").isNotNull)
       .select(id, col("__sp_ix"),
         graft.functions.TextFunctions.md5Hash60(concat_ws(" ",
@@ -1247,7 +1237,7 @@ object Dedup {
     * doc-partitioned aggregation. Every shuffle carries hashes and
     * integers, never text. */
   def duplicatedRunExtents(df: DataFrame, idCol: String, textCol: String,
-      runN: Int, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      runN: Int): DataFrame = {
     require(runN >= 2, s"runN must be >= 2, got $runN")
     (Seq("__dr_pos", "__dr_tok", "__dr_ix", "__dr_gh", "__dr_isl",
         "start_tok", "end_tok", "n_tokens") intersect df.columns).foreach(c =>
@@ -1265,7 +1255,7 @@ object Dedup {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     // staged: feeds BOTH the duplicated-hash aggregation and the
     // semi-join; unstaged each consumer would re-tokenize the corpus
-    val grams = stager.stage(ixed
+    val grams = Stager.stage(ixed
       .filter(col(s"__t${runN - 1}").isNotNull)
       .select(id, col("__dr_ix"),
         graft.functions.TextFunctions.md5Hash60(concat_ws(" ",
@@ -1322,8 +1312,7 @@ object Dedup {
     * corpus-wide shuffle carries hashes and integers; text bodies move
     * only in the final doc-partitioned rebuild. */
   def removeDuplicatedRuns(df: DataFrame, idCol: String, textCol: String,
-      runN: Int, policy: String = "keep_one",
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      runN: Int, policy: String = "keep_one"): DataFrame = {
     require(runN >= 2, s"runN must be >= 2, got $runN")
     require(policy == "keep_one" || policy == "drop_all",
       s"policy must be 'keep_one' or 'drop_all', got '$policy'")
@@ -1348,7 +1337,7 @@ object Dedup {
       (row_number().over(w) - 1).cast("long").as("__rr_ix") +: leads: _*)
     val runId = java.util.UUID.randomUUID().toString.take(8)
     // staged: feeds BOTH the min/max-doc aggregation and the cut join
-    val grams = stager.stage(ixed
+    val grams = Stager.stage(ixed
       .filter(col(s"__t${runN - 1}").isNotNull)
       .select(id, col("__rr_ix"),
         graft.functions.TextFunctions.md5Hash60(concat_ws(" ",
@@ -1491,7 +1480,7 @@ object Dedup {
     * on an empty set. */
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, textCol: String,
       windowSize: Int = 5, shingleN: Int = 3, threshold: Double = 0.5,
-      keyLen: Int = 12, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      keyLen: Int = 12): DataFrame = {
     require(windowSize >= 2, s"windowSize must be >= 2, got $windowSize")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
@@ -1509,7 +1498,7 @@ object Dedup {
     // the offsets MUST be computed over the exact partitioning the row
     // numbers saw — re-evaluating the range exchange per consumer would
     // let a non-deterministic re-split desynchronize the two branches.
-    val ranked0 = stager.stage(
+    val ranked0 = Stager.stage(
       parted.withColumn("__rn", row_number().over(wp)), "snm_ranked")
     val offsets = ranked0.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
       .withColumn("__off", coalesce(sum(col("__n")).over(
@@ -1593,12 +1582,11 @@ object Dedup {
     * sides. */
   def sharedChunkPairs(df: DataFrame, idCol: String, textCol: String,
       window: Int = 8, divisor: Int = 64, minShared: Int = 2,
-      maxDocsPerChunk: Option[Int] = Some(64),
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxDocsPerChunk: Option[Int] = Some(64)): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     maxDocsPerChunk.foreach(c => require(c >= 2,
       s"maxDocsPerChunk must be >= 2, got $c"))
-    val hashes = stager.stage(
+    val hashes = Stager.stage(
       Packing.cdcChunks(df, idCol, textCol, window, divisor)
         .select(col(s"`$idCol`"), col("chunk_hash")).distinct(),
       s"shared_chunks_${java.util.UUID.randomUUID().toString.take(8)}")

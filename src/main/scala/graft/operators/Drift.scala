@@ -55,15 +55,14 @@ object Drift {
     * combinable), one full-outer merge on the value key, then a
     * values-cardinality aggregate — nothing row-sized ever shuffles
     * twice. Categorical contract: value cardinality ≪ row count. */
-  def psi(a: DataFrame, b: DataFrame, keyCol: String, eps: Double = 1e-6,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def psi(a: DataFrame, b: DataFrame, keyCol: String, eps: Double = 1e-6): DataFrame = {
     require(eps > 0.0 && eps < 1.0, s"eps must be in (0,1), got $eps")
     val k = col(s"`$keyCol`")
     def counts(df: DataFrame, out: String) = df.filter(k.isNotNull)
       .groupBy(k.as("__v")).agg(count(lit(1)).as(out))
     // staged: the merged count frame feeds the totals AND the term sum —
     // unstaged, both corpus-sized count shuffles re-run per consumer
-    val merged = stager.stage(
+    val merged = Stager.stage(
       counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
         .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
           coalesce(col("__nb"), lit(0L)).as("__nb")),
@@ -112,13 +111,12 @@ object Drift {
     * combinable); everything after runs on the cell grid, bounded by
     * value-cardinality product, never rows. Categorical contract:
     * n_a·n_b ≪ row count. */
-  def chiSquare(df: DataFrame, aCol: String, bCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def chiSquare(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val a = col(s"`$aCol`")
     val b = col(s"`$bCol`")
     // staged: the cell frame feeds row totals, col totals, and the grid
     // join — unstaged, the corpus-sized cell shuffle re-runs per consumer
-    val cells = stager.stage(
+    val cells = Stager.stage(
       df.filter(a.isNotNull && b.isNotNull)
         .groupBy(a.as("__a"), b.as("__b")).agg(count(lit(1)).as("__o")),
       s"chi2_cells_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -169,14 +167,13 @@ object Drift {
     * 100 TB shape: one hash shuffle to (a,b) cell counts (map-side
     * combinable); marginals and entropies run on the cell grid,
     * bounded by value-cardinality product. */
-  def theilsU(df: DataFrame, aCol: String, bCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def theilsU(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val a = col(s"`$aCol`")
     val b = col(s"`$bCol`")
     def clnc(c: Column): Column =
       (c.cast("double") * ln9(c.cast("double"))).cast(dec25_9)
     // staged: the cell frame feeds both marginals and the joint term
-    val cells = stager.stage(
+    val cells = Stager.stage(
       df.filter(a.isNotNull && b.isNotNull)
         .groupBy(a.as("__a"), b.as("__b")).agg(count(lit(1)).as("__o")),
       s"theil_cells_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -226,8 +223,7 @@ object Drift {
     * one distributed prefix scan, then a probabilities-sized
     * aggregate — the [[Profile.ksStatistic]] posture. */
   def quantileShift(a: DataFrame, b: DataFrame, valueCol: String,
-      qMicros: Seq[Long] = Seq(100000L, 250000L, 500000L, 750000L, 900000L),
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      qMicros: Seq[Long] = Seq(100000L, 250000L, 500000L, 750000L, 900000L)): DataFrame = {
     require(qMicros.nonEmpty && qMicros.forall(q => q > 0L && q <= 1000000L),
       s"qMicros must be in (0, 1e6], got $qMicros")
     require(qMicros.distinct.size == qMicros.size,
@@ -239,7 +235,7 @@ object Drift {
       counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
         .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
           coalesce(col("__nb"), lit(0L)).as("__nb")),
-      "__v", Seq("__na", "__nb"), stager)
+      "__v", Seq("__na", "__nb"))
     val totals = cum.agg(sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"))
     val aggs = qMicros.flatMap { q =>
       Seq(
@@ -282,8 +278,7 @@ object Drift {
     * scan over the DISTINCT-value frame — range-partitioned with
     * broadcast offsets, never a single-reducer window (the
     * [[Profile.ksStatistic]] posture). */
-  def mannWhitneyU(a: DataFrame, b: DataFrame, valueCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def mannWhitneyU(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val v = col(s"`$valueCol`")
     def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
       .groupBy(v.as("__v")).agg(count(lit(1)).as(out))
@@ -293,7 +288,7 @@ object Drift {
       .withColumn("__t", col("__na") + col("__nb"))
     // the scan's staged range-partitioned frame serves the one
     // aggregation pass — the corpus-sized count shuffles run once
-    val ranked = PrefixSum.withRunningSums(merged, "__v", Seq("__t"), stager)
+    val ranked = PrefixSum.withRunningSums(merged, "__v", Seq("__t"))
       .withColumn("__cb", col("cum___t") - col("__t"))
       .withColumn("__drd", lit(2L) * col("__cb") + col("__t") + 1L)
     val agg = ranked.agg(
@@ -341,8 +336,7 @@ object Drift {
     * is a rank EQUI-join (rank i ⋈ rank i+1 — the scan already emitted
     * exact ranks as cum-ones), which shuffles by rank instead of
     * windowing. The only BNLJs are the two 1-row totals scalars. */
-  def wasserstein1(a: DataFrame, b: DataFrame, valueCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def wasserstein1(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val v = col(s"`$valueCol`")
     def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
       .groupBy(v.cast("long").as("__v")).agg(count(lit(1)).as(out))
@@ -351,7 +345,7 @@ object Drift {
         coalesce(col("__nb"), lit(0L)).as("__nb"))
       .withColumn("__one", lit(1L))
     val ranked = PrefixSum.withRunningSums(merged, "__v",
-        Seq("__one", "__na", "__nb"), stager)
+        Seq("__one", "__na", "__nb"))
       .select(col("__v"), col("cum___one").as("__rk"),
         col("cum___na").as("__ca"), col("cum___nb").as("__cb"))
     val nxt = ranked.select((col("__rk") - 1L).as("__rk"), col("__v").as("__vn"))
@@ -388,12 +382,11 @@ object Drift {
     * (smallest a-cum ≥ target) over the two DISTINCT-value frames —
     * the categorical/integral contract: distinct-value cardinality ≪
     * row count (bin continuous signals first). */
-  def quantileNormalize(a: DataFrame, b: DataFrame, valueCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def quantileNormalize(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val v = col(s"`$valueCol`")
     def cum(df: DataFrame, cname: String) = PrefixSum.withRunningSums(
       df.filter(v.isNotNull).groupBy(v.as("__v")).agg(count(lit(1)).as("__c")),
-      "__v", Seq("__c"), stager)
+      "__v", Seq("__c"))
       .select(col("__v"), col("__c"), col("cum___c").as(cname))
     val ac = cum(a, "__cuma").select(col("__v").as("__av"), col("__cuma"))
     val bc = cum(b, "__cumb")
@@ -500,8 +493,7 @@ object Drift {
     * 100 TB shape: [[Profile.ksStatistic]]'s exact posture — per-side
     * distinct-value counts, one full-outer merge, one [[PrefixSum]]
     * scan, a 1-row totals broadcast, one final aggregation. */
-  def cramerVonMises(a: DataFrame, b: DataFrame, valueCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def cramerVonMises(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val dec12 = DecimalType(25, 12)
     val v = col(s"`$valueCol`")
     def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
@@ -510,7 +502,7 @@ object Drift {
       counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
         .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
           coalesce(col("__nb"), lit(0L)).as("__nb")),
-      "__v", Seq("__na", "__nb"), stager)
+      "__v", Seq("__na", "__nb"))
     val totals = cum.agg(sum(col("__na")).as("__ta"),
       sum(col("__nb")).as("__tb"))
     val terms = cum.crossJoin(broadcast(totals))
@@ -547,7 +539,7 @@ object Drift {
     * |groups|-row totals broadcast, and two grid-sized aggregations
     * (max, argmax join). */
   def ksByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      valueCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      valueCol: String): DataFrame = {
     val dec38 = DecimalType(38, 0)
     val g = col(s"`$groupCol`")
     val v = col(s"`$valueCol`")
@@ -560,7 +552,7 @@ object Drift {
         coalesce(col("__na"), lit(0L)).as("__na"),
         coalesce(col("__nb"), lit(0L)).as("__nb"))
     val cum = PrefixSum.withKeyedRunningSums(
-      merged, Seq("__g"), Seq("__v"), Seq("__na", "__nb"), stager)
+      merged, Seq("__g"), Seq("__v"), Seq("__na", "__nb"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___na")).as("__ta"), max(col("cum___nb")).as("__tb"))
     val scaled = cum.join(broadcast(totals), Seq("__g"))
@@ -593,7 +585,7 @@ object Drift {
     * merge, one [[PrefixSum.withKeyedRunningSums]] scan, one grouped
     * aggregation — no per-group window, no per-group job. */
   def mannWhitneyByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      valueCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      valueCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val v = col(s"`$valueCol`")
     def counts(df: DataFrame, out: String) = df
@@ -606,7 +598,7 @@ object Drift {
         coalesce(col("__nb"), lit(0L)).as("__nb"))
       .withColumn("__t", col("__na") + col("__nb"))
     val ranked = PrefixSum.withKeyedRunningSums(
-        merged, Seq("__g"), Seq("__v"), Seq("__t"), stager)
+        merged, Seq("__g"), Seq("__v"), Seq("__t"))
       .withColumn("__cb", col("cum___t") - col("__t"))
       .withColumn("__drd", lit(2L) * col("__cb") + col("__t") + 1L)
     val agg = ranked.groupBy(col("__g")).agg(
@@ -643,7 +635,7 @@ object Drift {
     * scan with itself shifted by one — never a window — and a
     * |groups|-row totals broadcast. */
   def wasserstein1ByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      valueCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      valueCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val v = col(s"`$valueCol`")
     def counts(df: DataFrame, out: String) = df
@@ -656,7 +648,7 @@ object Drift {
         coalesce(col("__nb"), lit(0L)).as("__nb"))
       .withColumn("__one", lit(1L))
     val ranked = PrefixSum.withKeyedRunningSums(merged, Seq("__g"),
-        Seq("__v"), Seq("__one", "__na", "__nb"), stager)
+        Seq("__v"), Seq("__one", "__na", "__nb"))
       .select(col("__g"), col("__v"), col("cum___one").as("__rk"),
         col("cum___na").as("__ca"), col("cum___nb").as("__cb"))
     val nxt = ranked.select(col("__g"), (col("__rk") - 1L).as("__rk"),
@@ -687,15 +679,14 @@ object Drift {
     * a |groups|-row totals broadcast, one grouped aggregation —
     * cell-cardinality frames only. */
   def psiByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      keyCol: String, eps: Double = 1e-6,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      keyCol: String, eps: Double = 1e-6): DataFrame = {
     require(eps > 0.0 && eps < 1.0, s"eps must be in (0,1), got $eps")
     val g = col(s"`$groupCol`")
     val k = col(s"`$keyCol`")
     def counts(df: DataFrame, out: String) = df
       .filter(g.isNotNull && k.isNotNull)
       .groupBy(g.as("__g"), k.as("__v")).agg(count(lit(1)).as(out))
-    val merged = stager.stage(
+    val merged = Stager.stage(
       counts(a, "__na").join(counts(b, "__nb"), Seq("__g", "__v"), "full_outer")
         .select(col("__g"), col("__v"),
           coalesce(col("__na"), lit(0L)).as("__na"),
@@ -767,11 +758,11 @@ object Drift {
     * cell-cardinality frames joined BY GROUP KEY (the grid fan-out is
     * |a|·|b| per group — the categorical contract). */
   def chiSquareByGroup(df: DataFrame, groupCol: String, aCol: String,
-      bCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      bCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val a = col(s"`$aCol`")
     val b = col(s"`$bCol`")
-    val cells = stager.stage(
+    val cells = Stager.stage(
       df.filter(g.isNotNull && a.isNotNull && b.isNotNull)
         .groupBy(g.as("__g"), a.as("__a"), b.as("__b"))
         .agg(count(lit(1)).as("__o")),
@@ -879,14 +870,14 @@ object Drift {
     * moments aggregate weighted by the counts), then one merge join of
     * two group-cardinality moment frames. */
   def brownForsytheByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      valueCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      valueCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val v = col(s"`$valueCol`")
     def sideMoments(df: DataFrame, suffix: String): DataFrame = {
       val counts = df.filter(g.isNotNull && v.isNotNull)
         .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as("__c"))
       val cum = PrefixSum.withKeyedRunningSums(
-        counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+        counts, Seq("__g"), Seq("__v"), Seq("__c"))
       val totals = cum.groupBy(col("__g")).agg(max(col("cum___c")).as("__n"))
       val med = cum.join(broadcast(totals), Seq("__g"))
         .filter(col("cum___c") >= expr("(__n * 500000L + 999999L) div 1000000L") &&
@@ -941,13 +932,13 @@ object Drift {
     * map-side-combinable (group, value) counts, one full-outer merge,
     * a |groups|-row totals broadcast, one group aggregation. */
   def jsDivergenceByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      keyCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      keyCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val k = col(s"`$keyCol`")
     def counts(df: DataFrame, out: String) = df
       .filter(g.isNotNull && k.isNotNull)
       .groupBy(g.as("__g"), k.as("__v")).agg(count(lit(1)).as(out))
-    val merged = stager.stage(
+    val merged = Stager.stage(
       counts(a, "__na").join(counts(b, "__nb"), Seq("__g", "__v"), "full_outer")
         .select(col("__g"), col("__v"),
           coalesce(col("__na"), lit(0L)).as("__na"),
@@ -1055,8 +1046,7 @@ object Drift {
     * totals row, and a TakeOrderedAndProject k-cut — the final
     * row_number window orders k rows, never the vocabulary. */
   def fightinWords(a: DataFrame, b: DataFrame, textCol: String,
-      alpha0: Double = 10.0, k: Int = 50,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      alpha0: Double = 10.0, k: Int = 50): DataFrame = {
     require(alpha0 > 0.0, s"alpha0 must be positive, got $alpha0")
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
@@ -1065,7 +1055,7 @@ object Drift {
         "\\s+")).as("__t"))
       .filter(col("__t") =!= "")
       .groupBy(col("__t")).agg(count(lit(1)).as(out))
-    val merged = stager.stage(
+    val merged = Stager.stage(
       counts(a, "__ca").join(counts(b, "__cb"), Seq("__t"), "full_outer")
         .select(col("__t"),
           coalesce(col("__ca"), lit(0L)).as("__ca"),
@@ -1244,7 +1234,7 @@ object Drift {
     * quantizes to 9 dp before the order-free decimal sum.
     *
     * 100 TB shape: ONE token-count aggregation (map-side) — the
-    * group×term count frame is STAGED through `stager` before the five
+    * group×term count frame is STAGED ([[Stager.stage]]) before the five
     * consumers fan out (topN, per-group totals, the grid join), because
     * without staging Catalyst re-executes the corpus-sized termStream
     * scan once per consumer (the embeddingCovariance staging rationale).
@@ -1252,10 +1242,10 @@ object Drift {
     * |G|²·topN pair frame — bounded by group cardinality and the word
     * budget, never corpus-sized. */
   def burrowsDelta(docs: DataFrame, groupCol: String, textCol: String,
-      topN: Int = 50, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      topN: Int = 50): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
     val g = col(s"`$groupCol`")
-    val counts = stager.stage(
+    val counts = Stager.stage(
       graft.functions.TextFunctions
         .termStream(docs.filter(g.isNotNull), Seq(g), textCol)
         .groupBy(g.as("__g"), col("__term"))

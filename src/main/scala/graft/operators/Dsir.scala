@@ -72,14 +72,13 @@ object Dsir {
     * signal and are absent. */
   def importanceWeights(docs: DataFrame, idCol: String, textCol: String,
       target: DataFrame, targetIdCol: String, targetTextCol: String,
-      nBuckets: Int = 4096, salt: String = "dsir", logRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      nBuckets: Int = 4096, salt: String = "dsir", logRoundDp: Int = 9): DataFrame = {
     require(logRoundDp >= 1 && logRoundDp <= 12,
       s"logRoundDp must be in [1,12], got $logRoundDp")
     val runId = java.util.UUID.randomUUID().toString.take(8)
     // the raw stream feeds both the raw model and the per-doc counts; one
     // (id, bucket) count frame serves both, so the corpus tokenizes once
-    val docCounts = stager.stage(
+    val docCounts = Stager.stage(
       featureStream(docs, idCol, textCol, nBuckets, salt)
         .groupBy(col(s"`$idCol`"), col("bucket")).agg(count(lit(1)).as("__c")),
       s"dsir_doccounts_$runId")
@@ -87,7 +86,7 @@ object Dsir {
     // staged: the bounded (<= nBuckets rows) target model feeds BOTH the
     // llr join and the feature-total scalar — unstaged, Catalyst clones
     // the subplan and the target corpus tokenizes twice
-    val tgtCounts = stager.stage(
+    val tgtCounts = Stager.stage(
       featureStream(target, targetIdCol, targetTextCol, nBuckets, salt)
         .groupBy(col("bucket")).agg(count(lit(1)).as("__ct")),
       s"dsir_tgtcounts_$runId")
@@ -116,11 +115,10 @@ object Dsir {
   def resampleTopK(docs: DataFrame, idCol: String, textCol: String,
       target: DataFrame, targetIdCol: String, targetTextCol: String,
       k: Int, nBuckets: Int = 4096, salt: String = "dsir",
-      logRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      logRoundDp: Int = 9): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val weights = importanceWeights(docs, idCol, textCol,
-      target, targetIdCol, targetTextCol, nBuckets, salt, logRoundDp, stager)
+      target, targetIdCol, targetTextCol, nBuckets, salt, logRoundDp)
     // u in (0,1) from the 60-bit hash; g = -ln(-ln(u)). Each ln rounds
     // through DECIMAL so the hash-noise is engine-portable; the final
     // add is ONE IEEE operation on two identical doubles. The inner

@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   * O(log² n) rounds — in practice 2–4 for dedup graphs, whose components
   * are near-cliques of bounded size. That is the 100 TB shape: no driver
   * iteration over vertices, no transitive-closure blow-up, shuffle volume
-  * O(|pairs|) per round keyed by node id. Each round is staged through the
-  * pluggable [[Stager]] so the iterative loop's lineage cannot stack
-  * (localCheckpoint default; clusters needing fault tolerance pass
-  * Parquet — trade-offs in [[Stager]]'s scaladoc).
+  * O(|pairs|) per round keyed by node id. Each round is staged
+  * ([[Stager.Rounds]]) so the iterative loop's lineage cannot stack
+  * (localCheckpoint default; clusters needing fault tolerance run it
+  * inside `Stager.using(Stager.Parquet(graph))` — trade-offs in
+  * [[Stager]]'s scaladoc).
   */
 object DupClusters {
 
@@ -42,8 +43,7 @@ object DupClusters {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIters: Int = 20,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxIters: Int = 20): DataFrame = {
     require(maxIters > 0, s"maxIters must be positive, got $maxIters")
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val a = col(s"`$aCol`")
@@ -66,7 +66,7 @@ object DupClusters {
     // through `rounds`, which releases round k-1 once round k is staged,
     // so at most TWO round snapshots are ever live (at 100 TB an
     // unreleased loop keeps O(rounds) copies of the edge frontier).
-    val rounds = new Stager.Rounds(stager)
+    val rounds = new Stager.Rounds
     def stageWithSig(e: DataFrame, name: String): (DataFrame, (Long, Long)) = {
       val obs = org.apache.spark.sql.Observation(name + "_sig")
       val staged = rounds.next(
@@ -214,9 +214,8 @@ object DupClusters {
       idCol: String,
       pairs: DataFrame,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
-    val dupes = connectedComponents(pairs, aCol, bCol, stager = stager)
+      bCol: String = "id_b"): DataFrame = {
+    val dupes = connectedComponents(pairs, aCol, bCol)
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol))
     df.join(dupes, Seq(idCol), "left_anti")
@@ -240,10 +239,9 @@ object DupClusters {
       scoreCol: String,
       pairs: DataFrame,
       aCol: String = "id_a",
-      bCol: String = "id_b",
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      bCol: String = "id_b"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val members = connectedComponents(pairs, aCol, bCol, stager = stager)
+    val members = connectedComponents(pairs, aCol, bCol)
     val scored = members.join(
       df.select(col(s"`$idCol`").as("id"), col(s"`$scoreCol`").as("__score")),
       Seq("id"))

@@ -107,10 +107,9 @@ object Eval {
     * 100 TB shape: one pass for totals, two marginal aggregations over
     * label cardinality, one category-keyed equi-join of the (tiny)
     * marginal frames; the staged base feeds all three. */
-  def cohenKappa(df: DataFrame, aCol: String, bCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val base = stager.stage(
+    val base = Stager.stage(
       df.filter(col(s"`$aCol`").isNotNull && col(s"`$bCol`").isNotNull)
         .select(col(s"`$aCol`").cast("string").as("__a"),
           col(s"`$bCol`").cast("string").as("__b")),
@@ -188,15 +187,14 @@ object Eval {
     * 100 TB shape: one hash shuffle to (item, label) counts (map-side
     * combinable), one item rollup, one label rollup — frames shrink at
     * every step; nothing row-sized shuffles twice. */
-  def krippendorffAlpha(df: DataFrame, itemCol: String, labelCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def krippendorffAlpha(df: DataFrame, itemCol: String, labelCol: String): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val dec25_9 = org.apache.spark.sql.types.DecimalType(25, 9)
     val item = col(s"`$itemCol`")
     val label = col(s"`$labelCol`")
     // staged: the (item, label) count frame feeds the item terms AND the
     // label marginals — unstaged, the corpus shuffle re-runs per consumer
-    val counts = stager.stage(
+    val counts = Stager.stage(
       df.filter(item.isNotNull && label.isNotNull)
         .groupBy(item.as("__i"), label.cast("string").as("__c"))
         .agg(count(lit(1)).as("__n")),
@@ -258,8 +256,7 @@ object Eval {
     * giant group (one query with a corpus-sized candidate list) never
     * sorts through a single reducer — then one aggregation. */
   def avgPrecisionByGroup(df: DataFrame, groupCol: String, scoreCol: String,
-      labelCol: String, tieCol: String,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+      labelCol: String, tieCol: String): DataFrame = {
     val base = df
       .filter(col(s"`$groupCol`").isNotNull &&
         col(s"`$scoreCol`").isNotNull && col(s"`$labelCol`").isNotNull &&
@@ -271,7 +268,7 @@ object Eval {
         lit(1L).as("__one"))
       .withColumn("__posc", when(col("__l"), 1L).otherwise(0L))
     val ranked = PrefixSum.withKeyedRunningSums(
-        base, Seq("__g"), Seq("__ns", "__tb"), Seq("__one", "__posc"), stager)
+        base, Seq("__g"), Seq("__ns", "__tb"), Seq("__one", "__posc"))
       .withColumn("__prec",
         round((col("cum___posc").cast("double") /
           col("cum___one").cast("double"))
@@ -356,14 +353,13 @@ object Eval {
     * quantileShift posture); the 1-row q̂ then broadcasts into a single
     * test-side aggregation — no sort of raw rows anywhere. */
   def conformalCalibration(cal: DataFrame, test: DataFrame, scoreCol: String,
-      alphaPermille: Long = 100L,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      alphaPermille: Long = 100L): DataFrame = {
     require(alphaPermille > 0L && alphaPermille < 1000L,
       s"alphaPermille must be in (0, 1000), got $alphaPermille")
     val sc = col(s"`$scoreCol`")
     val calV = cal.filter(sc.isNotNull).select(sc.as("__s"))
     val counts = calV.groupBy(col("__s")).agg(count(lit(1)).as("__c"))
-    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c"), stager)
+    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c"))
     val nrow = calV.agg(count(lit(1)).as("n_cal"))
       .withColumn("rank", least(expr(
         s"((n_cal + 1) * ${1000L - alphaPermille} + 999) div 1000"),
@@ -462,8 +458,7 @@ object Eval {
     * the same scan — a giant group never sorts through one reducer —
     * then one aggregation. */
   def ndcgByGroup(df: DataFrame, groupCol: String, scoreCol: String,
-      labelCol: String, tieCol: String, k: Int,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+      labelCol: String, tieCol: String, k: Int): DataFrame = {
     require(k >= 1, s"ndcgByGroup: k must be >= 1, got $k")
     val ln9 = (c: Column) =>
       round(log(c).cast(DecimalType(25, 12)), 9).cast("double")
@@ -478,7 +473,7 @@ object Eval {
         lit(1L).as("__one"))
       .withColumn("__posc", when(col("__l"), 1L).otherwise(0L))
     val ranked0 = PrefixSum.withKeyedRunningSums(
-      base, Seq("__g"), Seq("__ns", "__tb"), Seq("__one", "__posc"), stager)
+      base, Seq("__g"), Seq("__ns", "__tb"), Seq("__one", "__posc"))
     val totals = ranked0.groupBy(col("__g"))
       .agg(max(col("cum___posc")).as("__np"))
     val ranked = ranked0.join(broadcast(totals), Seq("__g"))
@@ -623,8 +618,7 @@ object Eval {
     * tables are |groups|-row broadcasts; the ranked stage is scanned
     * twice (candidates, final flag), never recomputed. */
   def bhFdrSelect(df: DataFrame, groupCol: String, idCol: String,
-      pCol: String, alpha: Double,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+      pCol: String, alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, s"bhFdrSelect: alpha in (0,1), got $alpha")
     val g = col(s"`$groupCol`")
     val id = col(s"`$idCol`")
@@ -634,7 +628,7 @@ object Eval {
         p >= 0.0 && p <= 1.0)
       .select(g.as("__g"), id.as("__id"), p.as("__p"), lit(1L).as("__one"))
     val ranked = PrefixSum.withKeyedRunningSums(
-      base, Seq("__g"), Seq("__p", "__id"), Seq("__one"), stager)
+      base, Seq("__g"), Seq("__p", "__id"), Seq("__one"))
     val totals = ranked.groupBy(col("__g")).agg(max(col("cum___one")).as("m"))
     val joined = ranked.join(broadcast(totals), Seq("__g"))
     val kstar = joined
@@ -665,8 +659,7 @@ object Eval {
     * |groups|-row totals table. No per-group window, no re-sort per
     * threshold. */
   def prCurveByGroup(df: DataFrame, groupCol: String, scoreCol: String,
-      labelCol: String,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+      labelCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val sc = col(s"`$scoreCol`")
     val lb = col(s"`$labelCol`").cast("boolean")
@@ -676,7 +669,7 @@ object Eval {
       .agg(count(lit(1)).as("__c"),
         sum(when(lb, 1L).otherwise(0L)).as("__p"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__s"), Seq("__c", "__p"), stager)
+      counts, Seq("__g"), Seq("__s"), Seq("__c", "__p"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___c")).as("__n"), max(col("cum___p")).as("__np"))
     cum.join(broadcast(totals), Seq("__g"))
@@ -768,15 +761,14 @@ object Eval {
     * (n − cum + c), and everything after runs on the ≤nB-row bucket
     * frame (whose own cumulative window orders nB rows, never data). */
   def gainsTable(df: DataFrame, scoreCol: String, labelCol: String,
-      nBuckets: Int = 10,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+      nBuckets: Int = 10): DataFrame = {
     require(nBuckets >= 2, s"gainsTable: nBuckets must be >= 2, got $nBuckets")
     val sc = col(s"`$scoreCol`")
     val lb = col(s"`$labelCol`").cast("boolean")
     val counts = df.filter(sc.isNotNull && lb.isNotNull)
       .groupBy(sc.as("__s"))
       .agg(count(lit(1)).as("__c"), sum(when(lb, 1L).otherwise(0L)).as("__p"))
-    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c", "__p"), stager)
+    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c", "__p"))
     val totals = cum.agg(max(col("cum___c")).as("__n"), max(col("cum___p")).as("__np"))
     val buckets = cum.crossJoin(broadcast(totals))
       .withColumn("__cumd", col("__n") - col("cum___c") + col("__c"))
@@ -810,14 +802,13 @@ object Eval {
     *
     * 100 TB shape: per-distinct-score counts, ONE [[PrefixSum]]
     * ascending scan read from the top, a 1-row totals broadcast. */
-  def rocCurve(df: DataFrame, scoreCol: String, labelCol: String,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+  def rocCurve(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val sc = col(s"`$scoreCol`")
     val lb = col(s"`$labelCol`").cast("boolean")
     val counts = df.filter(sc.isNotNull && lb.isNotNull)
       .groupBy(sc.as("__s"))
       .agg(count(lit(1)).as("__c"), sum(when(lb, 1L).otherwise(0L)).as("__p"))
-    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c", "__p"), stager)
+    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c", "__p"))
     val totals = cum.agg(max(col("cum___c")).as("__n"),
       max(col("cum___p")).as("__np"))
     cum.crossJoin(broadcast(totals))
@@ -849,8 +840,7 @@ object Eval {
     * groups never serialize into one window reducer (aucByGroup's
     * bounded-query-group caveat removed) — then one grouped min. */
   def mrrByGroup(df: DataFrame, groupCol: String, scoreCol: String,
-      labelCol: String, tieCol: String,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+      labelCol: String, tieCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val sc = col(s"`$scoreCol`")
     val lb = col(s"`$labelCol`").cast("boolean")
@@ -860,7 +850,7 @@ object Eval {
       .select(g.as("__g"), negate(sc.cast("double")).as("__ns"),
         col(s"`$tieCol`").as("__tb"), lb.as("__l"), lit(1L).as("__one"))
     val ranked = PrefixSum.withKeyedRunningSums(
-      base, Seq("__g"), Seq("__ns", "__tb"), Seq("__one"), stager)
+      base, Seq("__g"), Seq("__ns", "__tb"), Seq("__one"))
     ranked.groupBy(col("__g"))
       .agg(count(lit(1)).as("n"),
         min(when(col("__l"), col("cum___one"))).as("first_pos_rank"))
@@ -892,8 +882,7 @@ object Eval {
     * bounded-group caveat removed), a |groups|-row totals broadcast,
     * one moment aggregation. */
   def aucCiByGroup(df: DataFrame, groupCol: String, scoreCol: String,
-      labelCol: String, z: Double = 1.959963985,
-      stager: graft.operators.Stager = graft.operators.Stager.LocalCheckpoint): DataFrame = {
+      labelCol: String, z: Double = 1.959963985): DataFrame = {
     require(z > 0.0, s"aucCiByGroup: z must be > 0, got $z")
     val dec = DecimalType(25, 9)
     val g = col(s"`$groupCol`")
@@ -904,7 +893,7 @@ object Eval {
       .agg(sum(when(lb, 1L).otherwise(0L)).as("__cp"),
         sum(when(!lb, 1L).otherwise(0L)).as("__cn"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__s"), Seq("__cp", "__cn"), stager)
+      counts, Seq("__g"), Seq("__s"), Seq("__cp", "__cn"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___cp")).as("__n1"), max(col("cum___cn")).as("__n0"))
     val n1D = col("__n1").cast("double")
@@ -1107,11 +1096,10 @@ object Eval {
     * category-bounded sort), and |R|²-bounded joins — nothing
     * row-cardinality past the first aggregation. */
   def weightedKappa(df: DataFrame, aCol: String, bCol: String,
-      quadratic: Boolean = true,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      quadratic: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val base = stager.stage(
+    val base = Stager.stage(
       df.filter(col(s"`$aCol`").isNotNull && col(s"`$bCol`").isNotNull)
         .select(col(s"`$aCol`").as("__a"), col(s"`$bCol`").as("__b")),
       s"wkappa_${java.util.UUID.randomUUID().toString.take(8)}")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DecimalType
   * 100 TB shape: the textbook MapReduce formulation — per iteration one
   * join of edges×ranks on the source key, one map-side-combinable inflow
   * aggregation on the destination key, one bounded (1-row) dangling-mass
-  * aggregate, all staged per round through the pluggable [[Stager]] so
+  * aggregate, all staged per round ([[Stager.Rounds]]) so
   * lineage cannot stack across iterations (the [[DupClusters]] rule).
   * Driver sees only two scalars per call (node count, per-round stage
   * actions) — never vertex data.
@@ -63,12 +63,11 @@ object Graphs {
     * full degrees are free (one aggregation, no wedge blow-up) and a
     * lower bound never promotes a pair the exact score wouldn't. */
   def linkPrediction(edges: DataFrame, aCol: String, bCol: String,
-      maxCenterDegree: Option[Long] = None,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxCenterDegree: Option[Long] = None): DataFrame = {
     maxCenterDegree.foreach(m => require(m >= 2L,
       s"maxCenterDegree must be >= 2, got $m"))
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val canon = stager.stage(
+    val canon = Stager.stage(
       edges.select(
           least(col(s"`$aCol`"), col(s"`$bCol`")).as("__a"),
           greatest(col(s"`$aCol`"), col(s"`$bCol`")).as("__b"))
@@ -115,22 +114,21 @@ object Graphs {
       srcCol: String,
       dstCol: String,
       iters: Int = 10,
-      damping: Double = 0.85,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val e = stager.stage(
+    val e = Stager.stage(
       edges.select(col(s"`$srcCol`").as("u"), col(s"`$dstCol`").as("v"))
         .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
         .distinct(),
       s"pagerank_edges_$runId")
-    val nodes = stager.stage(
+    val nodes = Stager.stage(
       e.select(col("u").as("id")).unionAll(e.select(col("v").as("id"))).distinct(),
       s"pagerank_nodes_$runId")
     // one driver scalar — the graph's node count; bounded at any scale
     val n = nodes.count().toDouble
-    val outdeg = stager.stage(
+    val outdeg = Stager.stage(
       e.groupBy(col("u")).agg(count(lit(1)).as("__outdeg")),
       s"pagerank_outdeg_$runId")
     val jump = 1.0 - damping
@@ -138,7 +136,7 @@ object Graphs {
     var pr = nodes.withColumn("pr", lit(1.0 / n))
     // at most two live rank stages instead of O(iters) copies of the
     // vertex frame (Stager.Rounds)
-    val rounds = new Stager.Rounds(stager)
+    val rounds = new Stager.Rounds
     for (i <- 1 to iters) {
       val inflow = e
         .join(pr.select(col("id").as("u"), col("pr")), "u")
@@ -189,12 +187,11 @@ object Graphs {
   def triangleCount(
       edges: DataFrame,
       srcCol: String,
-      dstCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      dstCol: String): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val raw = edges.select(col(s"`$srcCol`").as("a"), col(s"`$dstCol`").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    val canon = stager.stage(
+    val canon = Stager.stage(
       raw
         .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
         .distinct(),
@@ -207,7 +204,7 @@ object Graphs {
     // orient low-rank -> high-rank; carry the DESTINATION's degree so the
     // wedge join can order neighbor pairs by rank without re-joining deg
     val lt = (col("du") < col("dv")) || (col("du") === col("dv") && col("u") < col("v"))
-    val dir = stager.stage(
+    val dir = Stager.stage(
       withDeg.select(
         when(lt, col("u")).otherwise(col("v")).as("s"),
         when(lt, col("v")).otherwise(col("u")).as("d"),
@@ -240,28 +237,27 @@ object Graphs {
     * 100 TB shape: per round ONE edges×labels equi-join on the
     * neighbor key, one map-side-combinable (node, label) count, one
     * per-node argmax window over that count frame — the PageRank
-    * MapReduce shape with labels for ranks; rounds stage through the
-    * pluggable [[Stager]] with the two-live-snapshots release rule.
+    * MapReduce shape with labels for ranks; rounds stage through
+    * [[Stager.Rounds]] with the two-live-snapshots release rule.
     * The symmetrized edge list means every node has >= 1 neighbor, so
     * no dangling branch exists. */
   def labelPropagation(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iters: Int = 2,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      iters: Int = 2): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     import org.apache.spark.sql.expressions.Window
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val raw = edges.select(col(s"`$srcCol`").as("u"), col(s"`$dstCol`").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val sym = stager.stage(
+    val sym = Stager.stage(
       raw.unionAll(raw.select(col("v").as("u"), col("u").as("v"))).distinct(),
       s"lpa_edges_$runId")
-    val nodes = stager.stage(
+    val nodes = Stager.stage(
       sym.select(col("u").as("id")).distinct(), s"lpa_nodes_$runId")
     var lab = nodes.withColumn("label", col("id"))
-    val rounds = new Stager.Rounds(stager)
+    val rounds = new Stager.Rounds
     for (i <- 1 to iters) {
       val counts = sym
         .join(lab.select(col("id").as("v"), col("label")), "v")
@@ -298,7 +294,7 @@ object Graphs {
     * staged edge set is released when round k materializes (the
     * labelPropagation two-snapshot rule). */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-      rounds: Int, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 64,
       s"kCore: rounds must be in [1, 64], got $rounds")
@@ -308,7 +304,7 @@ object Graphs {
       .select(col(s"`$aCol`").as("u"), col(s"`$bCol`").as("v"))
     val sym = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v"))).distinct()
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val peels = new Stager.Rounds(stager)
+    val peels = new Stager.Rounds
     var e = peels.next(sym, s"kcore_${runId}_0")
     for (i <- 1 to rounds) {
       val keep = e.groupBy(col("u")).agg(count(lit(1)).as("__d"))

@@ -87,10 +87,9 @@ object LmScore {
     * reference corpus.) */
   def scoreBigram(docs: DataFrame, idCol: String, textCol: String,
       train: DataFrame, trainTextCol: String,
-      vocabSize: Int = 10000, logRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame =
+      vocabSize: Int = 10000, logRoundDp: Int = 9): DataFrame =
     bigramLogps(docs, idCol, textCol, train, trainTextCol,
-      vocabSize, logRoundDp, stager)
+      vocabSize, logRoundDp)
       .groupBy(col(s"`$idCol`"))
       .agg(count(lit(1)).as("n_bigrams"),
         (sum(col("__logp").cast("decimal(25,9)")).cast("double") /
@@ -101,7 +100,7 @@ object LmScore {
     * bigram carrying its 9-dp-contract add-one log-probability. */
   private def bigramLogps(docs: DataFrame, idCol: String, textCol: String,
       train: DataFrame, trainTextCol: String,
-      vocabSize: Int, logRoundDp: Int, stager: Stager): DataFrame = {
+      vocabSize: Int, logRoundDp: Int): DataFrame = {
     require(logRoundDp >= 1 && logRoundDp <= 12,
       s"logRoundDp must be in [1,12], got $logRoundDp")
     val reserved = Seq("__w1", "__w2", "__c12", "__c1", "__v", "__logp",
@@ -118,11 +117,11 @@ object LmScore {
     // Stager scaladoc's exact scenario. After staging, training costs two
     // corpus scans (vocab count + bigram count) and scoring one.
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val vocab = stager.stage(topVocab(train, trainTextCol, vocabSize), s"lm_vocab_$runId")
+    val vocab = Stager.stage(topVocab(train, trainTextCol, vocabSize), s"lm_vocab_$runId")
     val tb = bigramStream(train.select(
         monotonically_increasing_id().as("__lm_tid"), col(s"`$trainTextCol`")),
       "__lm_tid", trainTextCol, vocab)
-    val big = stager.stage(
+    val big = Stager.stage(
       tb.groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12")),
       s"lm_bigrams_$runId")
     // context counts and the type count derive from the BIGRAM TABLE, not
@@ -179,13 +178,12 @@ object LmScore {
     * map-side-combinable final aggregation. */
   def minKProbAudit(docs: DataFrame, idCol: String, textCol: String,
       train: DataFrame, trainTextCol: String, kPercent: Double = 20.0,
-      vocabSize: Int = 10000, logRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      vocabSize: Int = 10000, logRoundDp: Int = 9): DataFrame = {
     require(kPercent > 0.0 && kPercent <= 100.0,
       s"kPercent must be in (0, 100], got $kPercent")
     val kMicro = math.round(kPercent * 1e4) // percent -> fraction micros
     val lp = bigramLogps(docs, idCol, textCol, train, trainTextCol,
-      vocabSize, logRoundDp, stager)
+      vocabSize, logRoundDp)
     val byDoc = Window.partitionBy(col(s"`$idCol`"))
     lp.withColumn("__rn", row_number().over(byDoc.orderBy(col("__logp"))))
       .withColumn("__nb", count(lit(1)).over(byDoc))
@@ -202,17 +200,15 @@ object LmScore {
     * the "which of my documents does my own LM know suspiciously well"
     * pass (intra-corpus duplication / template detection). */
   def minKProbAuditSelf(docs: DataFrame, idCol: String, textCol: String,
-      kPercent: Double = 20.0, vocabSize: Int = 10000, logRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame =
+      kPercent: Double = 20.0, vocabSize: Int = 10000, logRoundDp: Int = 9): DataFrame =
     minKProbAudit(docs, idCol, textCol, docs, textCol, kPercent,
-      vocabSize, logRoundDp, stager)
+      vocabSize, logRoundDp)
 
   /** Self-scoring convenience: train and score on the same corpus (the
     * common "rank my own corpus by fluency" pass). */
   def scoreBigramSelf(docs: DataFrame, idCol: String, textCol: String,
-      vocabSize: Int = 10000, logRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame =
-    scoreBigram(docs, idCol, textCol, docs, textCol, vocabSize, logRoundDp, stager)
+      vocabSize: Int = 10000, logRoundDp: Int = 9): DataFrame =
+    scoreBigram(docs, idCol, textCol, docs, textCol, vocabSize, logRoundDp)
 
   /** Train on `train` and score `docs` with an INTERPOLATED KNESER–NEY
     * bigram model (Kneser & Ney 1995; the Chen–Goodman 1999 interpolated
@@ -242,20 +238,19 @@ object LmScore {
   def scoreBigramKN(docs: DataFrame, idCol: String, textCol: String,
       train: DataFrame, trainTextCol: String,
       vocabSize: Int = 10000, discount: Double = 0.75, eps: Double = 1e-12,
-      logRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      logRoundDp: Int = 9): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       s"discount must be in (0,1), got $discount")
     require(eps > 0.0 && eps < 1e-3, s"eps must be in (0, 1e-3), got $eps")
     require(logRoundDp >= 1 && logRoundDp <= 12,
       s"logRoundDp must be in [1,12], got $logRoundDp")
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val vocab = stager.stage(topVocab(train, trainTextCol, vocabSize),
+    val vocab = Stager.stage(topVocab(train, trainTextCol, vocabSize),
       s"lmkn_vocab_$runId")
     val tb = bigramStream(train.select(
         monotonically_increasing_id().as("__lm_tid"), col(s"`$trainTextCol`")),
       "__lm_tid", trainTextCol, vocab)
-    val big = stager.stage(
+    val big = Stager.stage(
       tb.groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c12")),
       s"lmkn_bigrams_$runId")
     val ctx = big.groupBy(col("__w1")).agg(sum(col("__c12")).as("__c1"),
@@ -289,10 +284,8 @@ object LmScore {
 
   /** Self-scoring Kneser–Ney convenience (train = score corpus). */
   def scoreBigramKNSelf(docs: DataFrame, idCol: String, textCol: String,
-      vocabSize: Int = 10000,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame =
-    scoreBigramKN(docs, idCol, textCol, docs, textCol, vocabSize,
-      stager = stager)
+      vocabSize: Int = 10000): DataFrame =
+    scoreBigramKN(docs, idCol, textCol, docs, textCol, vocabSize)
 
   /** Simple Good–Turing adjusted-count table (Good 1953, the Katz-backoff
     * ingredient): from the unigram frequency-of-frequencies N_c, the
@@ -315,12 +308,12 @@ object LmScore {
     * totals row, one ≤ kCutoff+1-row report — the [[graft.operators
     * .Profile.keySkew]] histogram shape. */
   def goodTuringCounts(docs: DataFrame, textCol: String,
-      kCutoff: Int = 5, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      kCutoff: Int = 5): DataFrame = {
     require(kCutoff >= 1, s"kCutoff must be >= 1, got $kCutoff")
     // staged: the token-count frame feeds the count-of-counts TWICE
     // (N_c and the shifted N_{c+1}) and the totals row — unstaged the
     // corpus tokenization would run three times
-    val counts = stager.stage(docs
+    val counts = Stager.stage(docs
       .select(explode(split(lower(coalesce(col(s"`$textCol`"), lit(""))),
         "\\s+")).as("__t"))
       .filter(col("__t") =!= "")

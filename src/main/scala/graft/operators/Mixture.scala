@@ -134,8 +134,7 @@ object Mixture {
       keyCol: String,
       targetMicro: Map[String, Long],
       idCol: String,
-      salt: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      salt: String): DataFrame = {
     require(targetMicro.nonEmpty, "matchMixture: empty target recipe")
     require(targetMicro.valuesIterator.forall(_ > 0L),
       s"matchMixture: shares must be positive micro-units, got $targetMicro")
@@ -164,7 +163,7 @@ object Mixture {
       .withColumn("__mid", id.cast("string"))
       .withColumn("__one", lit(1L))
     PrefixSum.withKeyedRunningSums(
-        base, Seq(keyCol), Seq("__mh", "__mid"), Seq("__one"), stager)
+        base, Seq(keyCol), Seq("__mh", "__mid"), Seq("__one"))
       .filter(col("cum___one") <= quotaCol)
       .drop("__mh", "__mid", "__one", "cum___one")
   }

@@ -39,8 +39,7 @@ object Packing {
       budget: Long,
       groupCol: Option[String] = None,
       binCol: String = "bin",
-      allowGlobal: Boolean = false,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      allowGlobal: Boolean = false): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     (Seq(binCol, "oversize", "__pk_t", "cum___pk_t") intersect df.columns)
       .foreach(c => throw new IllegalArgumentException(
@@ -53,14 +52,14 @@ object Packing {
     // re-run the whole chain (PrefixSum.stagedInput rationale)
     val base0 = PrefixSum.stagedInput(
       df.filter(id.isNotNull).withColumn("__pk_t", toks),
-      stage = true, stager)
+      stage = true)
     val cum = groupCol match {
       case Some(g) =>
         PrefixSum.withKeyedRunningSums(
           base0.filter(col(s"`$g`").isNotNull),
-          Seq(g), Seq(idCol), Seq("__pk_t"), stager)
+          Seq(g), Seq(idCol), Seq("__pk_t"))
       case None =>
-        PrefixSum.withRunningSums(base0, Seq(idCol), Seq("__pk_t"), stager)
+        PrefixSum.withRunningSums(base0, Seq(idCol), Seq("__pk_t"))
     }
     cum
       // exact LONG floor-division (SQL `div`), not a double `/` + cast:

@@ -34,9 +34,8 @@ object PrefixSum {
     * [[Dedup.sortedNeighborhoodPairs]] `snm_ranked` rationale);
     * downstream consumers therefore also read the stage, not the
     * original plan. */
-  def withRunningSums(df: DataFrame, orderCol: String, sumCols: Seq[String],
-      stager: Stager = Stager.LocalCheckpoint): DataFrame =
-    withRunningSums(df, Seq(orderCol), sumCols, stager)
+  def withRunningSums(df: DataFrame, orderCol: String, sumCols: Seq[String]): DataFrame =
+    withRunningSums(df, Seq(orderCol), sumCols)
 
   /** Stage `df` before the range exchange when its plan is expensive:
     * RangePartitioning SAMPLES its child to pick bounds, so the child's
@@ -47,9 +46,8 @@ object PrefixSum {
     * Opt-in: for the family's typical input (an already-aggregated
     * per-distinct-value count frame) the extra staging job costs more
     * than the re-sampled aggregate. */
-  private[operators] def stagedInput(df: DataFrame, stage: Boolean,
-      stager: Stager): DataFrame =
-    if (stage) stager.stage(df,
+  private[operators] def stagedInput(df: DataFrame, stage: Boolean): DataFrame =
+    if (stage) Stager.stage(df,
       s"prefix_sum_in_${java.util.UUID.randomUUID().toString.take(8)}")
     else df
 
@@ -58,11 +56,11 @@ object PrefixSum {
     * non-null (e.g. a hash with a unique-id tiebreak, the
     * [[graft.operators.Splits.deterministicShuffle]] caller). */
   def withRunningSums(df: DataFrame, orderCols: Seq[String],
-      sumCols: Seq[String], stager: Stager): DataFrame = {
+      sumCols: Seq[String]): DataFrame = {
     require(orderCols.nonEmpty, "withRunningSums: orderCols must be non-empty")
     require(sumCols.nonEmpty, "withRunningSums: sumCols must be non-empty")
     val ords = orderCols.map(c => col(s"`$c`"))
-    val parted = stager.stage(
+    val parted = Stager.stage(
       df.repartitionByRange(ords: _*).withColumn("__psid", spark_partition_id()),
       s"prefix_sum_${java.util.UUID.randomUUID().toString.take(8)}")
     val wp = Window.partitionBy(col("__psid")).orderBy(ords.map(_.asc): _*)
@@ -114,14 +112,13 @@ object PrefixSum {
     * tiny offsets table — the group-key cardinality never appears in any
     * exchange or window of the data-sized frame. */
   def withKeyedRunningSums(df: DataFrame, keyCols: Seq[String],
-      orderCols: Seq[String], sumCols: Seq[String],
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      orderCols: Seq[String], sumCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "withKeyedRunningSums: keyCols must be non-empty")
     require(orderCols.nonEmpty, "withKeyedRunningSums: orderCols must be non-empty")
     require(sumCols.nonEmpty, "withKeyedRunningSums: sumCols must be non-empty")
     val keys = keyCols.map(c => col(s"`$c`"))
     val ords = orderCols.map(c => col(s"`$c`"))
-    val parted = stager.stage(
+    val parted = Stager.stage(
       df.repartitionByRange((keys ++ ords): _*)
         .withColumn("__psid", spark_partition_id()),
       s"prefix_sum_k_${java.util.UUID.randomUUID().toString.take(8)}")

@@ -92,15 +92,14 @@ object Profile {
     * cappedBucketPairs rationale). */
   def sourceOverlap(docs: DataFrame, groupCol: String, idCol: String,
       textCol: String, shingleN: Int = 5,
-      maxGroupsPerShingle: Option[Int] = None,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxGroupsPerShingle: Option[Int] = None): DataFrame = {
     require(maxGroupsPerShingle.forall(_ >= 2),
       s"maxGroupsPerShingle must be >= 2, got $maxGroupsPerShingle")
     import graft.functions.TextFunctions.md5Hash60
     // staged: the distinct (group, hash) table feeds BOTH self-join sides
     // (and the cap count) — unstaged, each side re-derives the corpus
     // shingle pipeline (2 scans + 2 windows at any scale)
-    val sg = stager.stage(Dedup
+    val sg = Stager.stage(Dedup
       .shingleRows(docs, idCol, textCol, shingleN, carryCols = Seq(groupCol))
       .select(col(s"`$groupCol`"), md5Hash60(col("shingle")).as("__gh"))
       .distinct(),
@@ -340,7 +339,7 @@ object Profile {
     * (rank semantics: (cum − c)/(n − 1)) joins back to rows as one hash
     * join on (group, value). Per-group med/MAD frames broadcast. */
   def calibrateByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      idCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      idCol: String): DataFrame = {
     val reserved = Seq("__g", "__v", "pct_rank", "z_robust")
     (reserved intersect df.columns).foreach(c =>
       throw new IllegalArgumentException(
@@ -350,7 +349,7 @@ object Profile {
     val counts = df.filter(g.isNotNull && v.isNotNull)
       .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c"))
     val totals = cum.groupBy(col("__g")).agg(max(col("cum___c")).as("__n"))
     // nearest-rank pick: the distinct value whose cumulative count spans
     // rank ⌈n/2⌉ (the p70 integer-micros rule) — id-independent
@@ -367,7 +366,7 @@ object Profile {
       .agg(sum(col("__c")).as("__c"))
     val mad = pickMedian(
       PrefixSum.withKeyedRunningSums(
-        dev, Seq("__g"), Seq("__v"), Seq("__c"), stager), "__mad")
+        dev, Seq("__g"), Seq("__v"), Seq("__c")), "__mad")
     // per-distinct-value stats: percent_rank = (rank − 1)/(n − 1) with
     // rank semantics (ties share the min rank = cum − c + 1); n = 1
     // groups get 0.0, Spark's percent_rank convention
@@ -415,8 +414,7 @@ object Profile {
     * cut table back into ONE aggregation over the distinct-value frame —
     * the raw rows are never rejoined. */
   def robustStats(df: DataFrame, groupCol: String, valueCol: String,
-      loPct: Double = 0.05, hiPct: Double = 0.95,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      loPct: Double = 0.05, hiPct: Double = 0.95): DataFrame = {
     require(loPct >= 0.0 && hiPct <= 1.0 && loPct < hiPct,
       s"need 0 <= loPct < hiPct <= 1, got ($loPct, $hiPct)")
     val dec = org.apache.spark.sql.types.DecimalType(25, 6)
@@ -427,7 +425,7 @@ object Profile {
     val counts = df.filter(g.isNotNull && v.isNotNull)
       .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c"))
     // inclusive cum at the group's max value IS n (the quantilesByGroup
     // totals contract); the rank table is |groups| rows — broadcastable
     val totals = cum.groupBy(col("__g"))
@@ -484,8 +482,7 @@ object Profile {
     * two tiny total rows broadcast into the term computation, one final
     * scalar aggregation. Nothing per-document survives the first
     * aggregation. */
-  def tokenDivergence(a: DataFrame, b: DataFrame, textCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def tokenDivergence(a: DataFrame, b: DataFrame, textCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(25, 15)
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def counts(df: DataFrame, out: String): DataFrame =
@@ -494,7 +491,7 @@ object Profile {
     // staged: the joined count frame feeds BOTH the totals row and the
     // per-token terms — unstaged, the full-outer join and both count
     // aggregations execute twice (only the exchanges get reused)
-    val joined = stager.stage(
+    val joined = Stager.stage(
       counts(a, "__ca").join(counts(b, "__cb"), Seq("__term"), "full_outer")
         .select(coalesce(col("__ca"), lit(0L)).as("__ca"),
           coalesce(col("__cb"), lit(0L)).as("__cb")),
@@ -550,14 +547,13 @@ object Profile {
     *
     * 100 TB shape: one hash shuffle to count keys, then histogram-sized
     * frames only. */
-  def keySkew(df: DataFrame, keyCol: String, topK: Int = 10,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def keySkew(df: DataFrame, keyCol: String, topK: Int = 10): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     import org.apache.spark.sql.expressions.Window
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     // staged: the per-key count frame feeds totals + histogram + top-k —
     // unstaged, the corpus-sized count shuffle executes three times
-    val counts = stager.stage(
+    val counts = Stager.stage(
       df.groupBy(col(s"`$keyCol`").as("__k")).agg(count(lit(1)).as("__n")),
       "keyskew_counts")
     val totals = counts.agg(
@@ -567,7 +563,7 @@ object Profile {
       sum((col("__n") * col("__n")).cast(dec38)).as("__sumsq"))
     val hist = PrefixSum.withRunningSums(
         counts.groupBy(col("__n")).agg(count(lit(1)).as("__f")),
-        "__n", Seq("__f"), stager)
+        "__n", Seq("__f"))
       .withColumn("__cum", col("cum___f"))
     val quants = hist.crossJoin(broadcast(totals.select(col("n_keys").as("__nk"))))
       .agg(
@@ -641,8 +637,7 @@ object Profile {
     * frame — range-partitioned with broadcast offsets, so even a
     * continuous-unique-value corpus never collapses onto one reducer
     * (same posture as [[keySkew]]'s histogram). */
-  def ksStatistic(a: DataFrame, b: DataFrame, valueCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def ksStatistic(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val v = col(s"`$valueCol`")
     def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
@@ -654,7 +649,7 @@ object Profile {
       counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
         .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
           coalesce(col("__nb"), lit(0L)).as("__nb")),
-      "__v", Seq("__na", "__nb"), stager)
+      "__v", Seq("__na", "__nb"))
     val totals = cum.agg(sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"))
     val scaled = cum
       .withColumn("__ca", col("cum___na"))
@@ -787,7 +782,7 @@ object Profile {
     * exact integers); ranks join back to rows as hash equi-joins on
     * (group, value); one moment aggregation. */
   def spearmanByGroup(df: DataFrame, groupCol: String, xCol: String,
-      yCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      yCol: String): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val g = col(s"`$groupCol`")
     val x = col(s"`$xCol`").cast("double")
@@ -798,7 +793,7 @@ object Profile {
       val counts = base.groupBy(col("__g"), col(s"`$valCol`").as("__v"))
         .agg(count(lit(1)).as("__c"))
       PrefixSum.withKeyedRunningSums(
-          counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+          counts, Seq("__g"), Seq("__v"), Seq("__c"))
         .select(col("__g"), col("__v").as(valCol),
           (lit(2L) * col("cum___c") - col("__c") + 1L).as(out))
     }
@@ -949,8 +944,7 @@ object Profile {
     * broadcast the |groups|-row boundary table back into ONE aggregation
     * over the distinct-value frame. */
   def trimmedMeanByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      idCol: String, trimMicro: Long = 50000L,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      idCol: String, trimMicro: Long = 50000L): DataFrame = {
     require(trimMicro >= 0L && trimMicro < 500000L,
       s"trimMicro must be in [0, 500000), got $trimMicro")
     val dec = org.apache.spark.sql.types.DecimalType(25, 9)
@@ -959,7 +953,7 @@ object Profile {
     val counts = df.filter(g.isNotNull && v.isNotNull)
       .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___c")).as("__n"))
       .withColumn("__lo", expr(s"(__n * ${trimMicro}L) div 1000000L"))
@@ -1017,8 +1011,7 @@ object Profile {
     * and per-token first-docs; both scans ride [[PrefixSum]] (range
     * exchange + broadcast offsets — no single-reducer window); the OLS
     * is ONE aggregation over the per-doc frame. */
-  def heapsFit(df: DataFrame, idCol: String, textCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def heapsFit(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val id = col(s"`$idCol`")
     val toks = df
@@ -1034,7 +1027,7 @@ object Profile {
         coalesce(col("__new"), lit(0L)).as("__new"))
       .withColumn("__one", lit(1L))
     val cum = PrefixSum.withRunningSums(base, idCol,
-      Seq("__one", "__nt", "__new"), stager)
+      Seq("__one", "__nt", "__new"))
     val ln9 = (c: org.apache.spark.sql.Column) =>
       round(log(c).cast(DecimalType(25, 12)), 9).cast("double")
     val pointed = cum.select(
@@ -1135,7 +1128,7 @@ object Profile {
     * broadcast of the per-group target table (|groups| rows — must be
     * broadcastable, the [[Sessionize.funnelLatency]] totals contract). */
   def quantilesByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      ps: Seq[Double], stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty, "quantilesByGroup: ps must be non-empty")
     val micros = ps.map { p =>
       val m = math.round(p * 1e6)
@@ -1150,7 +1143,7 @@ object Profile {
     val counts = df.filter(g.isNotNull && v.isNotNull)
       .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c"))
     // inclusive cum at the group's max value IS n — totals read the
     // staged frame, never recompute the count aggregation
     val totals = cum.groupBy(col("__g"))
@@ -1195,8 +1188,7 @@ object Profile {
     * table folded back into one aggregation over the distinct-value
     * frame; never a group window, never a row rejoin. */
   def iqrOutlierStatsByGroup(df: DataFrame, groupCol: String,
-      valueCol: String, k: Double = 1.5,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      valueCol: String, k: Double = 1.5): DataFrame = {
     require(k >= 0.0, s"k must be >= 0, got $k")
     val g = col(s"`$groupCol`")
     val v = col(s"`$valueCol`")
@@ -1204,7 +1196,7 @@ object Profile {
       .groupBy(g.as("__g"), v.cast("double").as("__v"))
       .agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___c")).as("__n"))
       .withColumn("__r25", greatest(lit(1L),
@@ -1259,7 +1251,7 @@ object Profile {
     * (range exchange — never a group window), one |groups|-row
     * broadcast of totals/targets. */
   def lorenzCurveByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      nPoints: Int = 10, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      nPoints: Int = 10): DataFrame = {
     require(nPoints >= 1, s"nPoints must be >= 1, got $nPoints")
     val dec = org.apache.spark.sql.types.DecimalType(25, 6)
     val g = col(s"`$groupCol`")
@@ -1269,7 +1261,7 @@ object Profile {
       .agg(count(lit(1)).as("__c"))
       .withColumn("__sv", col("__v").cast(dec) * col("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c", "__sv"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c", "__sv"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___c")).as("__n"), max(col("cum___sv")).as("__tot"))
     // one scan: explode the point grid per distinct value, keep covers
@@ -1496,8 +1488,7 @@ object Profile {
     * (group, value) equi-join against that table — row-cardinality
     * appears exactly twice: the count scan and the final join. */
   def quantileBinsByGroup(df: DataFrame, groupCol: String,
-      valueCol: String, nBins: Int,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      valueCol: String, nBins: Int): DataFrame = {
     require(nBins >= 2, s"quantileBinsByGroup: nBins must be >= 2, got $nBins")
     val g = col(s"`$groupCol`")
     val v = col(s"`$valueCol`")
@@ -1505,7 +1496,7 @@ object Profile {
     val counts = base.groupBy(g.as("__g"), v.as("__v"))
       .agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c"))
     val totals = cum.groupBy(col("__g")).agg(max(col("cum___c")).as("__n"))
     val bins = cum.join(broadcast(totals), Seq("__g"))
       .select(col("__g"), col("__v"),
@@ -1543,8 +1534,7 @@ object Profile {
     * [[graft.operators.PrefixSum.withKeyedRunningSums]] ascending scan
     * supplies the rank factors (a giant group never sorts through one
     * window reducer), one map-side-combinable group aggregation. */
-  def giniByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def giniByGroup(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
     val g = col(s"`$groupCol`")
@@ -1552,7 +1542,7 @@ object Profile {
     val counts = df.filter(g.isNotNull && v.isNotNull)
       .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__c"))
     cum.groupBy(col("__g"))
       .agg(max(col("cum___c")).as("n"),
         // S = Σ v·c over DISTINCT-value rows — the count factor, not the
@@ -1595,8 +1585,7 @@ object Profile {
     * |groups|-row totals broadcast, one group aggregation — the
     * quantilesByGroup plan with weights riding the same scan. */
   def weightedQuantilesByGroup(df: DataFrame, groupCol: String,
-      valueCol: String, weightCol: String, ps: Seq[Double],
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      valueCol: String, weightCol: String, ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty, "weightedQuantilesByGroup: ps must be non-empty")
     val micros = ps.map { p =>
       val m = math.round(p * 1e6)
@@ -1616,7 +1605,7 @@ object Profile {
       .groupBy(g.as("__g"), v.as("__v"))
       .agg(sum(w.cast(dec)).as("__w"), count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__v"), Seq("__w", "__c"), stager)
+      counts, Seq("__g"), Seq("__v"), Seq("__w", "__c"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___w")).as("__wt"), max(col("cum___c")).as("n"))
     val joined = cum.join(broadcast(totals), Seq("__g"))

@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.DecimalType
   *     per-query top-k window.
   *
   * Stage lifecycle: both operators stage per-call intermediates through
-  * the pluggable [[Stager]] (default LocalCheckpoint). As with
-  * [[Dedup.nearDupPairsMinhash]], a long-lived session issuing many
-  * calls should pass a [[Stager.Recording]] wrapper and release it after
+  * [[Stager.stage]] (the current stager, LocalCheckpoint by default). As
+  * with [[Dedup.nearDupPairsMinhash]], a long-lived session issuing many
+  * calls should make them inside [[Stager.recording]] and release after
   * materializing — the [[Curation.curateStaged]] pattern — or the staged
   * storage outlives the call.
   *
@@ -64,8 +64,7 @@ object Search {
       k: Int,
       k1: Double = 1.2,
       b: Double = 0.75,
-      idfRoundDp: Option[Int] = None,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      idfRoundDp: Option[Int] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(k1 >= 0 && b >= 0 && b <= 1, s"k1 >= 0 and 0 <= b <= 1 required, got k1=$k1 b=$b")
     val id = col(s"`$idCol`")
@@ -80,14 +79,14 @@ object Search {
     // corpus (column pruning specializes the copies past ReuseExchange).
     // The token STREAM itself stays unstaged on purpose: materializing it
     // would write ~10x the corpus; two scans beat that.
-    val dl = stager.stage(
+    val dl = Stager.stage(
       tokStream.groupBy(id).agg(count(lit(1)).as("__dl")), s"bm25_dl_$runId")
     val stats = docs.agg(count(lit(1)).cast("double").as("__n"))
       .crossJoin(dl.agg(sum(col("__dl")).cast("double").as("__sumdl")))
       .withColumn("__avgdl", col("__sumdl") / col("__n"))
 
     // everything below is proportional to MATCHING postings only
-    val tf = stager.stage(
+    val tf = Stager.stage(
       tokStream
         .join(broadcast(qTerms.select(col("__term")).distinct()), "__term")
         .groupBy(id, col("__term"))
@@ -147,14 +146,13 @@ object Search {
       targetIds: DataFrame,
       k: Int,
       idfRoundDp: Option[Int] = None,
-      maxBroadcastTargets: Long = 100000L,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxBroadcastTargets: Long = 100000L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxBroadcastTargets >= 0, s"maxBroadcastTargets must be >= 0, got $maxBroadcastTargets")
     val id = col(s"`$idCol`")
     // staged: idf derives from postings AND joins back onto them — without
     // the stage the corpus-sized tokenize/count pipeline runs twice
-    val postings = stager.stage(
+    val postings = Stager.stage(
       termStream(docs, id, textCol)
         .groupBy(id, col("__term"))
         .agg(count(lit(1)).as("__tf")),
@@ -171,7 +169,7 @@ object Search {
     // weighted postings feed THREE consumers (norms, target extraction,
     // the term self-join) — stage once instead of recomputing the whole
     // tokenize/count/idf pipeline per consumer (the Dedup convention)
-    val weighted = stager.stage(
+    val weighted = Stager.stage(
       postings.join(idf, "__term").withColumn("__w", col("__tf") * col("__idf")),
       s"mlt_weighted_${java.util.UUID.randomUUID().toString.take(8)}")
     // norms: exact decimal sum of squares per doc (order-free, like dsum).
@@ -185,7 +183,7 @@ object Search {
     // staged BEFORE the count: the guard's action and the join below both
     // consume the distinct target ids — without the stage, a targetIds
     // built from an expensive pipeline would execute that pipeline twice
-    val tids = stager.stage(targetIds.select(id).distinct(),
+    val tids = Stager.stage(targetIds.select(id).distinct(),
       s"mlt_tids_${java.util.UUID.randomUUID().toString.take(8)}")
     val smallTargetSet = tids.count() <= maxBroadcastTargets
     def hinted(df: DataFrame): DataFrame = if (smallTargetSet) broadcast(df) else df
@@ -222,15 +220,14 @@ object Search {
       textCol: String,
       k: Int,
       minDf: Long = 1,
-      idfRoundDp: Int = 9,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      idfRoundDp: Int = 9): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
     val id = col(s"`$idCol`")
     // tf feeds BOTH the df count and the scoring join — staged, or each
     // consumer re-tokenizes the whole corpus (the bm25TopK rule; the
     // PlanAuditSpec p59 entry pins corpus scans at one)
-    val tf = stager.stage(
+    val tf = Stager.stage(
       termStream(docs, id, textCol)
         .groupBy(id, col("__term")).agg(count(lit(1)).as("__tf")),
       s"tfidf_tf_${java.util.UUID.randomUUID().toString.take(8)}")

@@ -128,10 +128,10 @@ object Sessionize {
     * that frame, and the matrix is one aggregation over
     * users × active-weeks — nothing event-sized shuffles twice. */
   def retentionCohorts(events: DataFrame, userCol: String,
-      tsCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      tsCol: String): DataFrame = {
     // staged: the distinct (user, week) frame feeds the cohort min AND
     // the final join — unstaged, the event-stream distinct runs twice
-    val weeks = stager.stage(
+    val weeks = Stager.stage(
       events.select(col(s"`$userCol`").as("__u"),
           date_trunc("week", col(s"`$tsCol`")).cast("date").as("__w"))
         .distinct(),
@@ -158,10 +158,9 @@ object Sessionize {
     * one exact count-distinct per cover day. The staged pair frame
     * feeds both the DAU rollup and the explode. */
   def rollingDistinct(events: DataFrame, tsCol: String, actorCol: String,
-      windowDays: Int = 7,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
-    val pairs = stager.stage(
+    val pairs = Stager.stage(
       events
         .filter(col(s"`$tsCol`").isNotNull && col(s"`$actorCol`").isNotNull)
         .select(to_date(col(s"`$tsCol`")).as("__day"),
@@ -414,8 +413,7 @@ object Sessionize {
     * cohort's whole timeline never sorts through one reducer, and the
     * only broadcast is the |groups|-row totals table. */
   def kaplanMeier(subjects: DataFrame, groupCol: String,
-      durationCol: String, eventCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      durationCol: String, eventCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val g = col(s"`$groupCol`")
     val d = col(s"`$durationCol`")
@@ -428,7 +426,7 @@ object Sessionize {
       .agg(sum(when(e.cast("boolean"), 1L).otherwise(0L)).as("__d"),
         count(lit(1)).as("__a"))
     val cum = PrefixSum.withKeyedRunningSums(
-      perT, Seq("__g"), Seq("__t"), Seq("__a"), stager)
+      perT, Seq("__g"), Seq("__t"), Seq("__a"))
     val totals = cum.groupBy(col("__g")).agg(max(col("cum___a")).as("__n"))
     val ev = cum.join(broadcast(totals), Seq("__g"))
       // at risk at t: everyone minus those who left strictly before t
@@ -443,7 +441,7 @@ object Sessionize {
       .select(col("__g"), col("__t"), col("__r"), col("__d"),
         col("__ln"), col("__z"))
     val surv = PrefixSum.withKeyedRunningSums(
-      ev, Seq("__g"), Seq("__t"), Seq("__ln", "__z"), stager)
+      ev, Seq("__g"), Seq("__t"), Seq("__ln", "__z"))
     surv.select(col("__g").as(groupCol), col("__t").as("t"),
       col("__r").as("n_risk"), col("__d").as("n_events"),
       when(col("cum___z") > 0L, lit(0.0))
@@ -526,8 +524,7 @@ object Sessionize {
     * [[PrefixSum.withKeyedRunningSums]] CDF scan, a |types|-row
     * broadcast of (n, S), and a final map-side-combinable max. */
   def gapExponentialFit(events: DataFrame, userCol: String, tsCol: String,
-      orderCol: String, typeCol: String, minGaps: Long = 2L,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      orderCol: String, typeCol: String, minGaps: Long = 2L): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val u = col(s"`$userCol`")
     val ts = col(s"`$tsCol`")
@@ -542,7 +539,7 @@ object Sessionize {
     val counts = gaps.groupBy(col("__ty"), col("__gap"))
       .agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__ty"), Seq("__gap"), Seq("__c"), stager)
+      counts, Seq("__ty"), Seq("__gap"), Seq("__c"))
     val totals = cum.groupBy(col("__ty"))
       .agg(max(col("cum___c")).as("__n"),
         // gap·count through DECIMAL(38,0): micro-gaps × corpus counts

@@ -796,10 +796,9 @@ object Similarity {
     * round is one narrow map over the survivor frame (update the
     * running min-distance against ONE broadcast-literal center — never
     * a k-way cross join) + one distributed TakeOrdered argmax. The
-    * survivor frame stages through the pluggable Stager each round so
+    * survivor frame stages ([[Stager.stage]]) each round so
     * the plan stays O(1) deep. Driver state is k vectors. */
-  def kCenterSelect(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def kCenterSelect(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
@@ -826,7 +825,7 @@ object Similarity {
     var step = 2
     var exhausted = false
     while (step <= k && !exhausted) {
-      val staged = stager.stage(rem, s"kcenter_round_$step")
+      val staged = Stager.stage(rem, s"kcenter_round_$step")
       val far = staged
         .orderBy(nanvl(col("__dmin"), lit(Double.NegativeInfinity)).desc_nulls_last,
           col("__id"))
@@ -862,10 +861,10 @@ object Similarity {
     * [[lshTopK]]/[[ivfTopK]] at corpus scale; the MNN join itself is an
     * equi-join on (query, neighbor) key pairs. */
   def mutualNearestNeighbors(corpus: DataFrame, idCol: String,
-      vecCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      vecCol: String): DataFrame = {
     // staged: the 1-NN frame feeds BOTH sides of the reciprocity join —
     // unstaged, the O(n²) brute-force pass would run twice
-    val nn = stager.stage(
+    val nn = Stager.stage(
       bruteForceTopK(corpus, corpus, idCol, vecCol, k = 1)
         .select(col("query_id").as("__q"), col("neighbor_id").as("__n"),
           col("cosine").as("__c")),
@@ -1005,7 +1004,7 @@ object Similarity {
     * corpus pipeline would execute three times (main + both diag
     * broadcast sides). */
   def embeddingCovariance(df: DataFrame, idCol: String,
-      vecCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      vecCol: String): DataFrame = {
     val q = 1e10
     val sums = df
       .filter(col(s"`$idCol`").isNotNull && col(s"`$vecCol`").isNotNull)
@@ -1016,7 +1015,7 @@ object Similarity {
         col("__c.n_vecs").as("n_vecs"),
         col("__c.sxy").as("__sxy"), col("__c.sx").as("__sx"),
         col("__c.sy").as("__sy"))
-    val cov = stager.stage(
+    val cov = Stager.stage(
       sums.select(col("i"), col("j"), col("n_vecs"),
         round(((col("__sxy").cast("double") / q -
           (col("__sx").cast("double") / q) * (col("__sy").cast("double") / q) /
@@ -1048,8 +1047,8 @@ object Similarity {
     * the whole normalization per branch. Measured: the p238 gate read
     * 14.3 s inlined, ~1 s staged. */
   private def unitVectors(df: DataFrame, idCol: String, vecCol: String,
-      stager: Stager, tag: String): DataFrame = {
-    val withNrm = stager.stage(
+      tag: String): DataFrame = {
+    val withNrm = Stager.stage(
       df.filter(col(s"`$idCol`").isNotNull && col(s"`$vecCol`").isNotNull)
         .select(col(s"`$idCol`").as("__id"), col(s"`$vecCol`").as("__v"))
         .withColumn("__nrm", sqrt(normSq(col("__v"))))
@@ -1141,9 +1140,8 @@ object Similarity {
     * map-side-combinable global aggregation. No pair enumeration here —
     * the caller's pair generator owns that cost. */
   def embeddingAlignment(pairs: DataFrame, idACol: String, idBCol: String,
-      emb: DataFrame, idCol: String, vecCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
-    val e = unitVectors(emb, idCol, vecCol, stager, "align")
+      emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val e = unitVectors(emb, idCol, vecCol, "align")
     val joined = pairs
       .select(col(s"`$idACol`").as("__a"), col(s"`$idBCol`").as("__b"))
       .join(e.select(col("__id").as("__a"), col("__nv").as("__va")), Seq("__a"))
@@ -1181,11 +1179,10 @@ object Similarity {
     * the all-pairs square. One shuffle on the bucket key, one global
     * aggregation. */
   def embeddingUniformity(df: DataFrame, idCol: String, vecCol: String,
-      nBuckets: Int, t: Double = 2.0, salt: String = "unif",
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      nBuckets: Int, t: Double = 2.0, salt: String = "unif"): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     require(t > 0 && !t.isNaN && !t.isInfinity, s"t must be finite and > 0, got $t")
-    val e = unitVectors(df, idCol, vecCol, stager, "unif")
+    val e = unitVectors(df, idCol, vecCol, "unif")
       .withColumn("__bk",
         Splits.hashBucket(col("__id").cast("string"), salt, nBuckets))
     val a = e.select(col("__bk"), col("__id").as("__a"), col("__nv").as("__va"))

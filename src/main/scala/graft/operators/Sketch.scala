@@ -511,7 +511,7 @@ object Sketch {
     * codegen) but holds k counters and does O(1) amortized work per row —
     * each decrement-all cancels k prior increments. */
   def heavyHitters(df: DataFrame, keyCol: String, minFraction: Double,
-      summarySize: Int = 0, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      summarySize: Int = 0): DataFrame = {
     require(minFraction > 0.0 && minFraction <= 1.0,
       s"minFraction must be in (0,1], got $minFraction")
     val fMicro = math.round(minFraction * 1e6)
@@ -530,11 +530,11 @@ object Sketch {
     import spark.implicits._
     val runId = java.util.UUID.randomUUID().toString.take(8)
     // staged: the key stream feeds the summary pass, the total and the recount
-    val keys = stager.stage(
+    val keys = Stager.stage(
       df.select(col(s"`$keyCol`").cast("string").as("__key"))
         .filter(col("__key").isNotNull),
       s"hh_keys_$runId")
-    val candidates = mgCandidates(keys, k, stager, runId)
+    val candidates = mgCandidates(keys, k, runId)
     val total = keys.groupBy().agg(count(lit(1)).as("n_total"))
     // <= k candidate keys: broadcast when that is sanely small, otherwise
     // leave the join strategy to AQE (a 2^20+-key broadcast would strain
@@ -551,8 +551,7 @@ object Sketch {
   /** The candidate half of [[heavyHitters]], separated so specs can audit
     * the <= k bound directly: per-partition Misra–Gries summaries, counter
     * sums per key, minus the (k+1)-th largest sum — at most k rows. */
-  private[graft] def mgCandidates(keys: DataFrame, k: Int, stager: Stager,
-      runId: String): DataFrame = {
+  private[graft] def mgCandidates(keys: DataFrame, k: Int, runId: String): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
     val summaries = keys.as[String].mapPartitions { it =>
@@ -574,7 +573,7 @@ object Sketch {
     }.toDF("__key", "__cnt")
     // staged: the merged estimates feed both the TakeOrdered d and the
     // trim filter — unstaged, the summary pass would run twice
-    val merged = stager.stage(
+    val merged = Stager.stage(
       summaries.groupBy(col("__key")).agg(sum(col("__cnt")).as("__est")),
       s"hh_merged_$runId")
     // d = the (k+1)-th largest merged estimate: distributed TakeOrdered,
@@ -617,8 +616,7 @@ object Sketch {
     * forms. */
   def heavyHittersByGroup(df: DataFrame, groupCol: String, keyCol: String,
       minFraction: Double, summarySize: Int = 0,
-      maxTrackedCounters: Int = 1 << 20,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxTrackedCounters: Int = 1 << 20): DataFrame = {
     require(minFraction > 0.0 && minFraction <= 1.0,
       s"minFraction must be in (0,1], got $minFraction")
     val fMicro = math.round(minFraction * 1e6)
@@ -635,12 +633,12 @@ object Sketch {
     val spark = df.sparkSession
     import spark.implicits._
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val keys = stager.stage(
+    val keys = Stager.stage(
       df.select(col(s"`$groupCol`").cast("string").as("__grp"),
           col(s"`$keyCol`").cast("string").as("__key"))
         .filter(col("__grp").isNotNull && col("__key").isNotNull),
       s"hhg_keys_$runId")
-    val candidates = mgCandidatesByGroup(keys, k, maxTrackedCounters, stager, runId)
+    val candidates = mgCandidatesByGroup(keys, k, maxTrackedCounters, runId)
     val totals = keys.groupBy(col("__grp")).agg(count(lit(1)).as("n_total"))
     keys.join(candidates, Seq("__grp", "__key")) // <= k per group; AQE picks the strategy
       .groupBy(col("__grp"), col("__key"))
@@ -654,7 +652,7 @@ object Sketch {
   /** The candidate half of [[heavyHittersByGroup]], separated so specs
     * can audit the <= k-per-group bound and the eviction path directly. */
   private[graft] def mgCandidatesByGroup(keys: DataFrame, k: Int,
-      maxTrackedCounters: Int, stager: Stager, runId: String): DataFrame = {
+      maxTrackedCounters: Int, runId: String): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
     val summaries = keys.as[(String, String)].mapPartitions { it =>
@@ -719,7 +717,7 @@ object Sketch {
         }
       }
     }.toDF("__grp", "__key", "__cnt")
-    val merged = stager.stage(
+    val merged = Stager.stage(
       summaries.groupBy(col("__grp"), col("__key"))
         .agg(sum(col("__cnt")).as("__est")),
       s"hhg_merged_$runId")

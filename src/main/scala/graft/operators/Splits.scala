@@ -298,8 +298,7 @@ object Splits {
     * of sorting through one window reducer; τ is the rank-(k+1) row,
     * a ≤|groups|-row broadcast joined back onto the k survivors. */
   def prioritySample(df: DataFrame, groupCol: String, idCol: String,
-      weightCol: String, k: Int, salt: String = "",
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      weightCol: String, k: Int, salt: String = ""): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val reserved = Seq("__nq", "__one", "priority", "weight_est")
     (reserved intersect df.columns).foreach(c =>
@@ -320,7 +319,7 @@ object Splits {
     // (−priority, id): distinct non-null tuples (id unique by contract,
     // and ties in priority break by id) — the keyed-PrefixSum contract
     val ranked = PrefixSum.withKeyedRunningSums(
-      base, Seq(groupCol), Seq("__nq", idCol), Seq("__one"), stager)
+      base, Seq(groupCol), Seq("__nq", idCol), Seq("__one"))
     val taus = ranked.filter(col("cum___one") === k + 1)
       .select(g.as("__tg"), col("priority").as("__tau"))
     ranked
@@ -356,8 +355,7 @@ object Splits {
     * VALUE comparison. */
   def temporalSplitByGroup(df: DataFrame, groupCol: String, tsCol: String,
       idCol: String, trainPct: Double = 0.8, valPct: Double = 0.1,
-      splitCol: String = "split",
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      splitCol: String = "split"): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct < 1.0,
       s"need 0 < trainPct, 0 <= valPct, trainPct + valPct < 1; " +
         s"got ($trainPct, $valPct)")
@@ -369,7 +367,7 @@ object Splits {
     val counts = base.groupBy(g.as("__g"), ts.as("__ts"))
       .agg(count(lit(1)).as("__c"))
     val cum = PrefixSum.withKeyedRunningSums(
-      counts, Seq("__g"), Seq("__ts"), Seq("__c"), stager)
+      counts, Seq("__g"), Seq("__ts"), Seq("__c"))
     val totals = cum.groupBy(col("__g")).agg(max(col("cum___c")).as("__n"))
     // the distinct ts whose cumulative count spans rank ⌈n·p⌉
     def cutAt(micro: Long, out: String) =
@@ -599,7 +597,7 @@ object Splits {
     * in that order is the consumer's range-partition-by-position, not a
     * global sort here. */
   def curriculumOrder(df: DataFrame, groupCol: String, idCol: String,
-      scoreCol: String, stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      scoreCol: String): DataFrame = {
     val g = col(s"`$groupCol`")
     val id = col(s"`$idCol`")
     val s = col(s"`$scoreCol`")
@@ -607,7 +605,7 @@ object Splits {
       .select(g.as("__g"), id.as("__id"), s.as("__s"),
         negate(s.cast("double")).as("__ns"), lit(1L).as("__one"))
     val ranked = PrefixSum.withKeyedRunningSums(
-      base, Seq("__g"), Seq("__ns", "__id"), Seq("__one"), stager)
+      base, Seq("__g"), Seq("__ns", "__id"), Seq("__one"))
     // group index + count: a |groups|-row frame; the unpartitioned
     // window orders group NAMES (tiny by contract), never data
     val wAll = org.apache.spark.sql.expressions.Window.orderBy(col("__g"))
@@ -638,13 +636,12 @@ object Splits {
     * table, never `row_number()` over an unpartitioned window (the
     * single-reducer sort a naive shuffle writes). Writing in
     * shuffle_pos order is the consumer's range-partition-by-position. */
-  def deterministicShuffle(df: DataFrame, idCol: String, salt: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def deterministicShuffle(df: DataFrame, idCol: String, salt: String): DataFrame = {
     val id = col(s"`$idCol`")
     val base = df.filter(id.isNotNull)
       .select(id.as("__id"), hashValue60(id, salt).as("__h"),
         lit(1L).as("__one"))
-    PrefixSum.withRunningSums(base, Seq("__h", "__id"), Seq("__one"), stager)
+    PrefixSum.withRunningSums(base, Seq("__h", "__id"), Seq("__one"))
       .select(col("__id").as(idCol), (col("cum___one") - 1L).as("shuffle_pos"))
   }
 
@@ -666,8 +663,7 @@ object Splits {
     * [[PrefixSum]] scan, one max aggregation — the
     * [[graft.operators.Profile.ksStatistic]] posture against an
     * analytic reference instead of a second sample. */
-  def hashUniformityKs(df: DataFrame, keyCol: String, salt: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def hashUniformityKs(df: DataFrame, keyCol: String, salt: String): DataFrame = {
     val k = col(s"`$keyCol`")
     // distinct KEYS first, hash after: deduping on the hash itself would
     // silently collapse 60-bit collisions and under-count F_emp there
@@ -675,7 +671,7 @@ object Splits {
       .select(k.cast("string").as("__k")).distinct()
       .select(hashValue60(col("__k"), salt).as("__h"))
       .groupBy(col("__h")).agg(count(lit(1)).as("__c"))
-    val cum = PrefixSum.withRunningSums(counts, "__h", Seq("__c"), stager)
+    val cum = PrefixSum.withRunningSums(counts, "__h", Seq("__c"))
     val tot = cum.agg(max(col("cum___c")).as("n_keys"))
     cum.crossJoin(broadcast(tot))
       .withColumn("__fref",

@@ -90,7 +90,7 @@ object Vocab {
     * driver collect (the argmax pair — the only driver data, numMerges
     * rows total), and one HOF rewrite of the symbol arrays (a left-to-
     * right non-overlapping fold via `aggregate`, codegen'd — no UDF).
-    * Rounds stage through the pluggable [[Stager]] with round k−1
+    * Rounds stage through [[Stager.Rounds]] with round k−1
     * released when round k materializes (the [[Graphs.pagerank]] rule:
     * two live snapshots, not O(numMerges)).
     *
@@ -105,8 +105,7 @@ object Vocab {
     * aggregation over a BOUNDED frame regardless of corpus size. */
   def bpeMerges(docs: DataFrame, textCol: String, numMerges: Int,
       minPairCount: Long = 2L,
-      maxWords: Int = 1000000,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxWords: Int = 1000000): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
     require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
@@ -120,7 +119,7 @@ object Vocab {
           transform(chars,
             (s, i) => when(i === size(chars) - 1,
               concat(s, lit(EndOfWord))).otherwise(s)).as("__syms")),
-      numMerges, minPairCount, stager)
+      numMerges, minPairCount)
   }
 
   /** BYTE-level BPE merge training (the GPT-2 tokenizer family, Radford
@@ -140,15 +139,14 @@ object Vocab {
     * byte split is `hex()` + fixed-stride substrings, all codegen'd. */
   def bpeMergesBytes(docs: DataFrame, textCol: String, numMerges: Int,
       minPairCount: Long = 2L,
-      maxWords: Int = 1000000,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+      maxWords: Int = 1000000): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
     require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
     bpeMergeLoop(docs.sparkSession,
       cappedWordCounts(docs, textCol, maxWords)
         .select(col("__n"), byteSyms(col("__term")).as("__syms")),
-      numMerges, minPairCount, stager)
+      numMerges, minPairCount)
   }
 
   /** UTF-8 bytes of a string as uppercase 2-hex-digit symbols, EndOfWord
@@ -203,10 +201,9 @@ object Vocab {
     * capped inventory in memory. Above the cutoff the distributed
     * rounds run as before. */
   private def bpeMergeLoop(spark: org.apache.spark.sql.SparkSession,
-      words0: DataFrame, numMerges: Int, minPairCount: Long,
-      stager: Stager): DataFrame = {
+      words0: DataFrame, numMerges: Int, minPairCount: Long): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val rounds = new Stager.Rounds(stager)
+    val rounds = new Stager.Rounds
     var words = rounds.next(words0, s"bpe_words_${runId}_init")
     if (words.count() <= Scale.driverLocalMaxRows(spark)) {
       val rows = words.collect().map(r => (r.getLong(0), r.getSeq[String](1).toArray))
@@ -1052,8 +1049,7 @@ object Vocab {
     * rides [[PrefixSum.withRunningSums]] (range exchange on the
     * distinct (−count, term) key + broadcast offsets — never a
     * single-reducer global window); the totals row broadcasts. */
-  def negativeSamplingTable(docs: DataFrame, textCol: String,
-      stager: Stager = Stager.LocalCheckpoint): DataFrame = {
+  def negativeSamplingTable(docs: DataFrame, textCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val counts = docs
       .select(explode(split(lower(coalesce(col(s"`$textCol`"), lit(""))),
@@ -1066,7 +1062,7 @@ object Vocab {
           .cast(DecimalType(25, 12)), 9).cast(DecimalType(25, 9)))
       .withColumn("__negc", -col("count"))
     val cum = PrefixSum.withRunningSums(
-      w, Seq("__negc", "__t"), Seq("__w"), stager)
+      w, Seq("__negc", "__t"), Seq("__w"))
     val totals = cum.agg(sum(col("__w")).as("__W"))
     // alias both sides: totals derives from cum, and Spark's self-join
     // dedup would otherwise leave `__w` ambiguous in the final select

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.Stager
 
 /** Structured Streaming surface (beyond-parity: the reference has no
   * streaming at all — SURVEY.md §1.1/§2.2. These helpers expose the same
@@ -106,69 +107,6 @@ object Streams {
       .withColumn("fingerprint", graft.functions.TextFunctions.fingerprint(col(textCol)))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(Seq("fingerprint"))
-
-  /** Streaming corpus-mixture sampling — the recipe step at ingest. The
-    * batch operator's keep decision is a PURE function of (salt, rep,
-    * key) with driver-held weights ([[graft.operators.Mixture
-    * .sampleMixture]]'s codegen'd CASE + md5 filter): no state, no
-    * watermark, no shuffle, so the identical operator applies to an
-    * unbounded stream unchanged and a stream's output row set equals the
-    * batch run over the same rows REGARDLESS of micro-batch boundaries
-    * (StreamsSpec pins that identity across a mid-stream split). This
-    * twin exists so callers reach the streaming contract by name;
-    * epoch-repeat weights (> 1) fan out via the same stateless explode.
-    *
-    * 100 TB shape: identical to batch — one narrow codegen'd pass. */
-  def sampleMixtureStream(
-      docs: DataFrame,
-      sourceCol: String,
-      keyCol: String,
-      weights: Map[String, Double],
-      salt: String = "",
-      defaultWeight: Double = 1.0,
-      repCol: String = "mix_rep"): DataFrame =
-    graft.operators.Mixture.sampleMixture(
-      docs, sourceCol, keyCol, weights, salt, defaultWeight, repCol)
-
-  /** Streaming blocklist screen — the badwords/keyword filter at ingest.
-    * [[graft.operators.Scrub.blocklistHits]]'s Aho–Corasick pass is a
-    * pure per-row expression (the automaton rides the serialized
-    * expression; no state, no watermark, no shuffle), so the identical
-    * operator applies to an unbounded stream and a stream's output row
-    * set equals the batch run over the same rows regardless of
-    * micro-batch boundaries (StreamsSpec pins the identity). */
-  def blocklistHitsStream(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      patterns: Seq[String],
-      caseInsensitive: Boolean = true): DataFrame =
-    graft.operators.Scrub.blocklistHits(
-      docs, idCol, textCol, patterns, caseInsensitive)
-
-  /** Streaming chat-structure screen — the SFT-ingest twin of
-    * [[graft.operators.Chat.chatAudit]]. The audit is a pure per-row
-    * projection (higher-order functions over the transcript's own line
-    * array — one transcript is one row, no window, no state), so the
-    * identical operator applies to an unbounded stream and output rows
-    * are independent of micro-batch boundaries (StreamsSpec pins the
-    * stream ≡ batch identity). */
-  def chatAuditStream(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.operators.Chat.chatAudit(docs, idCol, textCol)
-
-  /** Streaming preference-pair screen — the DPO-ingest twin of
-    * [[graft.operators.Chat.preferencePairAudit]]: identical/empty-side
-    * flags and the token length gap per arriving pair. A pure per-row
-    * projection (no window, no state, no shuffle), so the identical
-    * operator applies to an unbounded stream and output rows are
-    * independent of micro-batch boundaries (StreamsSpec pins the
-    * stream ≡ batch identity). The corpus-level roll-up
-    * ([[graft.operators.Chat.preferenceLengthBias]]) is deliberately
-    * NOT wrapped: a global aggregate on a stream needs an output-mode /
-    * state decision the caller must own. */
-  def preferencePairAuditStream(pairs: DataFrame, idCol: String,
-      chosenCol: String, rejectedCol: String): DataFrame =
-    graft.operators.Chat.preferencePairAudit(pairs, idCol, chosenCol, rejectedCol)
 
   // ------------------------------------------------------------ custom state
 
@@ -339,7 +277,7 @@ object Streams {
     * windows, same linear hash family, same band bucketing), so a
     * stream's flags over a batch of rows equal the batch operator's
     * pairs — StreamsSpec asserts exactly that. The index frames are
-    * eagerly staged once (localCheckpoint): each micro-batch joins
+    * eagerly staged once ([[Stager.stage]]): each micro-batch joins
     * against materialized buckets/sets, not a re-derived plan. Docs with
     * fewer than shingleN tokens have no shingles and emit nothing (batch
     * parity: they have no signature row either). */
@@ -350,11 +288,12 @@ object Streams {
       threshold: Double = 0.8): DataFrame = {
     require(numHashes % rowsPerBand == 0, "numHashes must divide into bands")
     import docs.sparkSession.implicits._
-    val idxSets = graft.operators.Dedup
+    val runId = java.util.UUID.randomUUID().toString.take(8)
+    val idxSets = Stager.stage(graft.operators.Dedup
       .shingleRows(indexDf, idCol, textCol, shingleN)
       .groupBy(col(idCol)).agg(collect_set(col("shingle")).as("__sb"))
-      .select(col(idCol).as("index_id"), col("__sb"))
-      .localCheckpoint()
+      .select(col(idCol).as("index_id"), col("__sb")),
+      s"stream_neardup_sets_$runId")
     val idxBuckets = {
       val sig = graft.operators.Dedup
         .minhashSignature(indexDf, idCol, textCol, shingleN, numHashes)
@@ -362,10 +301,11 @@ object Streams {
         val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i"))
         struct(lit(b).as("band"), md5(concat_ws("|", cols: _*)).as("bucket"))
       }
-      sig.select(col(idCol).as("index_id"), explode(array(bands: _*)).as("__b"))
-        .select(col("index_id"), col("__b.band").as("__band"),
-          col("__b.bucket").as("__bucket"))
-        .localCheckpoint()
+      Stager.stage(
+        sig.select(col(idCol).as("index_id"), explode(array(bands: _*)).as("__b"))
+          .select(col("index_id"), col("__b.band").as("__band"),
+            col("__b.bucket").as("__bucket")),
+        s"stream_neardup_buckets_$runId")
     }
     def md5Hex(s: String): String = java.security.MessageDigest
       .getInstance("MD5").digest(s.getBytes("UTF-8"))
@@ -452,12 +392,12 @@ object Streams {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(id).orderBy(col("__p"))
     val leads = (1 until runN).map(i => lead(col("__t0"), i).over(w).as(s"__t$i"))
-    val idxHashes = toks.select(id +: col("__t0") +: leads: _*)
+    val idxHashes = Stager.stage(toks.select(id +: col("__t0") +: leads: _*)
       .filter(col(s"__t${runN - 1}").isNotNull)
       .select(graft.functions.TextFunctions.md5Hash60(concat_ws(" ",
         (0 until runN).map(i => col(s"__t$i")): _*)).as("__gh"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(),
+      s"stream_duprun_hashes_${java.util.UUID.randomUUID().toString.take(8)}")
     val streamGrams = docs.flatMap { case (docId, text) =>
       val ts = Option(text).getOrElse("").split("\\s+").filter(_.nonEmpty)
       if (docId == null || ts.length < runN) Iterator.empty
@@ -696,13 +636,17 @@ object Streams {
       }
   }
 
-  /** Custom keyed state via flatMapGroupsWithState: a running per-key event
-    * counter that emits the updated total on every batch. With
-    * idleTimeoutMs > 0 idle keys expire after that much processing time so
-    * state never grows unboundedly (note: timeout firing makes Spark
-    * schedule timer batches continuously — use only on genuinely unbounded
-    * key spaces). The KeyValueGroupedDataset path the reference never had
-    * an analogue for — pure beyond-parity. */
+  /** `d` rounded HALF_UP to `scale` decimals — the batch operators'
+    * DECIMAL casts, per value. */
+  private def dec(d: Double, scale: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(d).setScale(scale, java.math.RoundingMode.HALF_UP)
+
+  /** ln through the batch drift operators' double→DECIMAL(25,12)→9-dp
+    * contract. StrictMath, not Math: Catalyst's Log expression evaluates
+    * StrictMath.log, and the Math.log intrinsic may differ by 1 ulp. */
+  private def ln9(x: Double): Double =
+    dec(StrictMath.log(x), 12).setScale(9, java.math.RoundingMode.HALF_UP).doubleValue
+
   case class KeyPsi(key: String, n_seen: Long, n_values: Long, psi: Double)
 
   /** Streaming PSI drift monitor: per key (source, shard, pipeline
@@ -727,14 +671,7 @@ object Streams {
       "baseline must be a non-empty positive count mix")
     require(eps > 0.0 && eps < 1.0, s"eps must be in (0,1), got $eps")
     import events.sparkSession.implicits._
-    import java.math.{BigDecimal => JBD, RoundingMode => RM}
     val bTotal = baseline.valuesIterator.sum
-    def dec(d: Double, scale: Int): JBD =
-      JBD.valueOf(d).setScale(scale, RM.HALF_UP)
-    // StrictMath, not Math: Catalyst's Log expression evaluates
-    // StrictMath.log, and the Math.log intrinsic may differ by 1 ulp
-    def ln9(x: Double): Double =
-      dec(StrictMath.log(x), 12).setScale(9, RM.HALF_UP).doubleValue
     events
       .groupByKey(_._1)
       .flatMapGroupsWithState[Map[String, Long], KeyPsi](
@@ -751,7 +688,7 @@ object Streams {
             state.update(counts)
             val n = counts.valuesIterator.sum
             val values = counts.keySet ++ baseline.keySet
-            var sum = JBD.ZERO.setScale(9)
+            var sum = java.math.BigDecimal.ZERO.setScale(9)
             for (v <- values) {
               val p = math.max(counts.getOrElse(v, 0L).toDouble / n, eps)
               val q = math.max(baseline.getOrElse(v, 0L).toDouble / bTotal, eps)
@@ -786,12 +723,7 @@ object Streams {
     require(baseline.nonEmpty && baseline.valuesIterator.forall(_ > 0L),
       "baseline must be a non-empty positive count mix")
     import events.sparkSession.implicits._
-    import java.math.{BigDecimal => JBD, RoundingMode => RM}
     val bTotal = baseline.valuesIterator.sum
-    def dec(d: Double, scale: Int): JBD =
-      JBD.valueOf(d).setScale(scale, RM.HALF_UP)
-    def ln9(x: Double): Double =
-      dec(StrictMath.log(x), 12).setScale(9, RM.HALF_UP).doubleValue
     events
       .groupByKey(_._1)
       .flatMapGroupsWithState[Map[String, Long], KeyJs](
@@ -808,7 +740,7 @@ object Streams {
             state.update(counts)
             val n = counts.valuesIterator.sum
             val values = counts.keySet ++ baseline.keySet
-            var sum = JBD.ZERO.setScale(9)
+            var sum = java.math.BigDecimal.ZERO.setScale(9)
             for (v <- values) {
               val na = counts.getOrElse(v, 0L)
               val nb = baseline.getOrElse(v, 0L)
@@ -941,6 +873,13 @@ object Streams {
       }
   }
 
+  /** Custom keyed state via flatMapGroupsWithState: a running per-key event
+    * counter that emits the updated total on every batch. With
+    * idleTimeoutMs > 0 idle keys expire after that much processing time so
+    * state never grows unboundedly (note: timeout firing makes Spark
+    * schedule timer batches continuously — use only on genuinely unbounded
+    * key spaces). The KeyValueGroupedDataset path the reference never had
+    * an analogue for — pure beyond-parity. */
   def runningCounts(
       events: Dataset[(String, Long)],
       idleTimeoutMs: Long = 0L): Dataset[KeyCount] = {

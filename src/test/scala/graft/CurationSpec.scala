@@ -30,8 +30,9 @@ class CurationSpec extends SparkSpecBase {
     val graph = new graft.core.TableGraph(
       java.nio.file.Files.createTempDirectory("curation_pluggable").toString)
     def stages = graph.allNodes.filter(_.metadata.get("role").contains("stage"))
-    val (out, cleanup) = Curation.curateStaged(docs, "doc_id", "text",
-      Curation.Config(stager = Stager.Parquet(graph)))
+    val (out, cleanup) = Stager.using(Stager.Parquet(graph)) {
+      Curation.curateStaged(docs, "doc_id", "text")
+    }
     assert(out.select("doc_id").as[Long].collect().toSet === Set(1L, 4L))
     assert(stages.nonEmpty) // something staged
     cleanup()
@@ -45,8 +46,9 @@ class CurationSpec extends SparkSpecBase {
     bystander.count()
     val bystanderIds = sc.getPersistentRDDs.keySet
     try {
-      val (out, cleanup) = Curation.curateStaged(docs, "doc_id", "text",
-        Curation.Config(stager = Stager.LocalCheckpoint))
+      val (out, cleanup) = Stager.using(Stager.LocalCheckpoint) {
+        Curation.curateStaged(docs, "doc_id", "text")
+      }
       assert(out.select("doc_id").as[Long].collect().toSet === Set(1L, 4L))
       assert(sc.getPersistentRDDs.keySet.size > bystanderIds.size) // staged something
       cleanup()
@@ -60,8 +62,9 @@ class CurationSpec extends SparkSpecBase {
     val graph = new graft.core.TableGraph(dir)
     // another caller's stage table, registered before the funnel runs
     graph.addTable("other_stage", docs.limit(1), metadata = Map("role" -> "stage"))
-    val (out, cleanup) = Curation.curateStaged(docs, "doc_id", "text",
-      Curation.Config(stager = Stager.Parquet(graph)))
+    val (out, cleanup) = Stager.using(Stager.Parquet(graph)) {
+      Curation.curateStaged(docs, "doc_id", "text")
+    }
     assert(out.select("doc_id").as[Long].collect().toSet === Set(1L, 4L))
     cleanup()
     assert(graph.getTable(spark, "other_stage").isDefined,
@@ -133,7 +136,7 @@ class CurationSpec extends SparkSpecBase {
     assert(curatedIds.subsetOf(allIds) && curatedIds.nonEmpty)
 
     val bench = corpus.filter(col("doc_id") % 20 === 0)
-    val decon = Stager.LocalCheckpoint.stage(
+    val decon = Stager.stage(
       Decontaminate.removeContaminated(
         curated.filter(col("doc_id") % 20 =!= 0), "doc_id", "text",
         bench, "text", shingleN = 5),

@@ -244,11 +244,11 @@ class DedupSpec extends SparkSpecBase {
 
   test("minhash staging is pluggable: Parquet stager matches LocalCheckpoint") {
     val docs = testdata("sf0.001", "documents").limit(200)
-    def pairs(stager: graft.operators.Stager) =
+    def pairs(stager: graft.operators.Stager) = graft.operators.Stager.using(stager) {
       Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
-          shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8,
-          stager = stager)
+          shingleN = 3, numHashes = 8, rowsPerBand = 1, threshold = 0.8)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    }
     val tmp = java.nio.file.Files.createTempDirectory("graft_stage_wh").toString
     val graph = new graft.core.TableGraph(tmp)
     val viaParquet = pairs(graft.operators.Stager.Parquet(graph))

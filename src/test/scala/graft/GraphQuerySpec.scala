@@ -73,6 +73,21 @@ class GraphQuerySpec extends SparkSpecBase {
     }
   }
 
+  test("queryNl routes past a higher-ranked table its clauses do not resolve on") {
+    val g = freshGraph
+    for (dim <- Seq("region", "nation")) g.addTable(dim, testdata("sf0.001", dim))
+    // a registered (not staged) table with the gate warehouse's
+    // shingle_sets columns: feature hashing ranks it above nation for
+    // c20's phrase, but none of the phrase's columns is one of its own
+    g.addTable("shingle_sets", Seq((1L, Seq("a b c"), 1)).toDF("doc_id", "__shingles", "__sz"))
+    val q = "where n_regionkey = 0 by n_name asc showing n_name"
+    val out = GraphQuery.queryNl(spark, g, q)
+    val want = testdata("sf0.001", "nation").filter("n_regionkey = 0")
+      .select("n_name").as[String].collect().sorted.toSeq
+    assert(want.nonEmpty)
+    assert(out.as[String].collect().toSeq === want)
+  }
+
   test("queryNl refuses an empty graph") {
     intercept[IllegalArgumentException] {
       GraphQuery.queryNl(spark, freshGraph, "top 5 anything")

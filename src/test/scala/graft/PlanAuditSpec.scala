@@ -382,7 +382,9 @@ class PlanAuditSpec extends SparkSpecBase {
     val events = graft.Tables.events(spark, dir)
     // stage inline so the audit sees the FULL lineage: the corpus-sized
     // count aggregation must appear
-    val out = graft.operators.Profile.keySkew(events, "user_id", stager = Inline)
+    val out = graft.operators.Stager.using(Inline) {
+      graft.operators.Profile.keySkew(events, "user_id")
+    }
     val plan = out.queryExecution.executedPlan.toString
     // one scan + one hash-count exchange for the corpus; everything else
     // (histogram, quantile scalars, top-k) operates on the staged counts
@@ -395,8 +397,9 @@ class PlanAuditSpec extends SparkSpecBase {
 
   test("p108: rollingDistinct explodes the staged distinct frame — no range join, no cartesian") {
     val events = graft.Tables.events(spark, dir)
-    val out = graft.operators.Sessionize.rollingDistinct(events, "ts", "user_id",
-      stager = Inline)
+    val out = graft.operators.Stager.using(Inline) {
+      graft.operators.Sessionize.rollingDistinct(events, "ts", "user_id")
+    }
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -801,7 +804,7 @@ class PlanAuditSpec extends SparkSpecBase {
       // one transcript = one row: the screens must stay per-row
       // projections (HOFs over the line array), never explode + window
       // + re-aggregate — the difference between zero shuffles and two
-      // corpus shuffles at 100 TB (and what makes chatAuditStream legal)
+      // corpus shuffles at 100 TB (and what makes chatAudit legal on a stream)
       assert(!plan.contains("Exchange"), plan)
       assert(!plan.contains("Window"), plan)
     }

@@ -252,8 +252,7 @@ class SketchSpec extends SparkSpecBase {
     val shuffled = new scala.util.Random(11).shuffle(rows).toDF("key").repartition(64)
     val k = 12
     val keys = shuffled.select(col("key").cast("string").as("__key"))
-    val cands = Sketch.mgCandidates(keys, k,
-      graft.operators.Stager.LocalCheckpoint, "spec")
+    val cands = Sketch.mgCandidates(keys, k, "spec")
     assert(cands.count() <= k, "candidate set must be <= k after the merge trim")
     val n = rows.size.toLong
     val exact = rows.groupBy(identity).view.mapValues(_.size.toLong)
@@ -284,8 +283,7 @@ class SketchSpec extends SparkSpecBase {
     val k = 5
     val keys = df.select(col("g").cast("string").as("__grp"),
       col("key").cast("string").as("__key"))
-    val cands = Sketch.mgCandidatesByGroup(keys, k, maxTrackedCounters = 16,
-      graft.operators.Stager.LocalCheckpoint, "spec")
+    val cands = Sketch.mgCandidatesByGroup(keys, k, maxTrackedCounters = 16, "spec")
     val maxPerGroup = cands.groupBy("__grp").agg(count(lit(1)).as("c"))
       .agg(max(col("c"))).as[Long].head()
     assert(maxPerGroup <= k, s"candidates per group must be <= k, got $maxPerGroup")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Curation, Dedup, DupClusters, Graphs, Stager}
+import graft.operators.{Curation, Dedup, DupClusters, Graphs, Packing, Stager}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
@@ -22,6 +22,36 @@ class StagerSpec extends SparkSpecBase {
       calls += s"release $name"
       underlying.release(staged, name)
     }
+  }
+
+  /** The WARN-or-worse messages `org.apache.spark.rdd` loggers emit
+    * while `body` runs. */
+  private def rddWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("stager-spec-rdd", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration
+    val logger = new LoggerConfig("org.apache.spark.rdd", Level.WARN, false)
+    logger.addAppender(appender, null, null)
+    config.addLogger("org.apache.spark.rdd", logger)
+    ctx.updateLoggers()
+    try body
+    finally {
+      config.removeLogger("org.apache.spark.rdd")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    warns.toArray(Array.empty[String]).toSeq
   }
 
   /** The RDD holding `df`'s cache buffers (built on first use). */
@@ -77,21 +107,67 @@ class StagerSpec extends SparkSpecBase {
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
+  test("a stage and its release log no RDD WARN and leave no persistent RDD") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val warns = rddWarnings {
+      val staged = Stager.stage(spark.range(10).toDF(), "quiet")
+      assert((sc.getPersistentRDDs.keySet -- before).size === 1)
+      Stager.release(staged, "quiet")
+    }
+    assert(warns.isEmpty, warns.mkString("\n"))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("a recording frees assignBins' stages and keeps a caller's cache") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    keepsCallersCache(Seq((1L, 5L), (2L, 7L), (3L, 3L)).toDF("id", "n")) { cached =>
+      val (binned, release) = Stager.recording(Packing.assignBins(cached, "id", "n", budget = 8))
+      assert(binned.select("id", "bin").as[(Long, Long)].collect().toSet ===
+        Set((1L, 0L), (2L, 0L), (3L, 1L)))
+      val cache = cacheBuffersId(cached)
+      assert((sc.getPersistentRDDs.keySet -- before - cache).nonEmpty, "nothing was staged")
+      release()
+      assert(sc.getPersistentRDDs.keySet -- before === Set(cache),
+        "the release must free every stage of the call and nothing else")
+    }
+  }
+
+  test("no public operator method takes a Stager parameter") {
+    val loader = getClass.getClassLoader
+    val dir = new java.io.File(loader.getResource("graft/operators").toURI)
+    // top-level objects only (Dedup$, not Curation$Config$); Stager's own
+    // scoped functions take one by design
+    val objects = dir.listFiles.map(_.getName.stripSuffix(".class"))
+      .filter(n => n.endsWith("$") && !n.init.contains("$") && !n.startsWith("Stager"))
+      .map(n => Class.forName(s"graft.operators.$n", false, loader))
+    assert(objects.length >= 19, objects.map(_.getName).mkString(", "))
+    val withStager = for {
+      c <- objects.toSeq
+      m <- c.getMethods if m.getParameterTypes.contains(classOf[Stager])
+    } yield s"${c.getSimpleName.stripSuffix("$")}.${m.getName}"
+    assert(withStager.isEmpty, withStager.distinct.sorted.mkString(", "))
+  }
+
   test("Recording releases each stage once, including one released singly") {
     val log = new Logged(Stager.LocalCheckpoint)
-    val rec = new Stager.Recording(log)
-    val a = rec.stage(spark.range(3).toDF(), "a")
-    rec.stage(spark.range(4).toDF(), "b")
-    rec.release(a, "a")
-    rec.release()
-    rec.release()
+    val (_, release) = Stager.using(log) {
+      Stager.recording {
+        val a = Stager.stage(spark.range(3).toDF(), "a")
+        Stager.stage(spark.range(4).toDF(), "b")
+        Stager.release(a, "a")
+      }
+    }
+    release()
+    release()
     assert(log.calls === Seq("stage a", "stage b", "release a", "release b"))
   }
 
   test("iterative loops release round k-1 right after staging round k") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("u", "v")
     val log = new Logged(Stager.LocalCheckpoint)
-    val core = Graphs.kCore(edges, "u", "v", k = 2, rounds = 2, stager = log)
+    val core = Stager.using(log)(Graphs.kCore(edges, "u", "v", k = 2, rounds = 2))
     assert(core.select("id").as[Long].collect().toSet === Set(1L, 2L, 3L))
     // the last round is the result's input, so it stays staged
     assert(log.calls.map(_.replaceAll("_[0-9a-f]{8}_", "_")) === Seq(

@@ -220,7 +220,7 @@ class StreamsSpec extends SparkSpecBase {
     val blk = Seq("the", "he", "and", "lorem ipsum")
     val rows = docs.as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)](spark)
-    val out = Streams.blocklistHitsStream(
+    val out = graft.operators.Scrub.blocklistHits(
       input.toDS().toDF("doc_id", "text"), "doc_id", "text", blk)
     val q = out.writeStream.format("memory").queryName("blk_stream")
       .outputMode("append").start()
@@ -253,7 +253,7 @@ class StreamsSpec extends SparkSpecBase {
           .as("text"))
     val rows = docs.as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)](spark)
-    val out = Streams.chatAuditStream(
+    val out = graft.operators.Chat.chatAudit(
       input.toDS().toDF("doc_id", "text"), "doc_id", "text")
     val q = out.writeStream.format("memory").queryName("chat_stream")
       .outputMode("append").start()
@@ -289,7 +289,7 @@ class StreamsSpec extends SparkSpecBase {
           .otherwise(substring($"text", 20, 60)).as("rejected"))
     val rows = docs.as[(Long, String, String)].collect()
     val input = MemoryStream[(Long, String, String)](spark)
-    val out = Streams.preferencePairAuditStream(
+    val out = graft.operators.Chat.preferencePairAudit(
       input.toDS().toDF("doc_id", "chosen", "rejected"),
       "doc_id", "chosen", "rejected")
     val q = out.writeStream.format("memory").queryName("pref_stream")
@@ -322,7 +322,7 @@ class StreamsSpec extends SparkSpecBase {
     val w = Map("view" -> 0.35, "click" -> 1.0, "purchase" -> 2.5)
     val rows = events.as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)](spark)
-    val out = Streams.sampleMixtureStream(
+    val out = graft.operators.Mixture.sampleMixture(
       input.toDS().toDF("event_id", "event_type"),
       "event_type", "event_id", w, salt = "mixtw", defaultWeight = 0.0)
     val q = out.writeStream.format("memory").queryName("mix_stream")
