@@ -310,12 +310,12 @@ object ScaleProbe {
     // exactly Rx) or reports the per-group n (exactly Rx).
     def gcalRun(reps: Int): Long =
       graft.operators.Profile.calibrateByGroup(
-        giantFrame(reps), "g", "v", "id").count()
+        giantFrame(reps), "g", "v").count()
     leg("giant_group_calibrate", "rows")(gcalRun)
 
     def gtsRun(reps: Int): Long =
       graft.operators.Splits.temporalSplitByGroup(
-        giantFrame(reps), "g", "v", "id").count()
+        giantFrame(reps), "g", "v").count()
     leg("giant_group_temporal_split", "rows")(gtsRun)
 
     def gwqRun(reps: Int): Long =
@@ -337,7 +337,7 @@ object ScaleProbe {
 
     def gtmRun(reps: Int): Long =
       graft.operators.Profile.trimmedMeanByGroup(
-        giantFrame(reps), "g", "v", "id", 100000L).head().getAs[Long]("n")
+        giantFrame(reps), "g", "v", 100000L).head().getAs[Long]("n")
     leg("giant_group_trimmed_mean", "n")(gtmRun)
 
     // ---- giant HUB linkPrediction (round-14 verdict #5): wedge fan-out

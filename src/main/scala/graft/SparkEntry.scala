@@ -19,9 +19,9 @@ import org.apache.spark.sql.types._
   *    on their raw values, so output order is not part of the contract;
   *  - NULL ordering is written explicitly (Spark asc = NULLS FIRST,
   *    DuckDB default = NULLS LAST);
-  *  - cumulative scans ride [[graft.operators.PrefixSum.withRunningSums]]
-  *    and PER-GROUP scans [[graft.operators.PrefixSum.withKeyedRunningSums]]
-  *    (never a window partitioned by a low-cardinality key); adjacency is
+  *  - cumulative scans, global and PER-GROUP, ride
+  *    [[graft.operators.PrefixSum.withKeyedRunningSums]] (never a window
+  *    partitioned by a low-cardinality key); adjacency is
   *    a rank equi-join, top-k is orderBy().limit() (TakeOrderedAndProject);
   *  - integer bucketing is FLOOR division — (x − pmod(x, d)) div d —
   *    matching DuckDB's `//` for any sign, never bare `div`;
@@ -3209,7 +3209,7 @@ object SparkEntry {
           t(s, dir, "documents").filter(col("text").isNotNull)
             .select(col("doc_id"), col("source"),
               length(col("text")).cast("long").as("len")),
-          "source", "len", "doc_id")
+          "source", "len")
     }
 
     // --- incremental near-dup against a standing index (nightly-batch
@@ -3918,7 +3918,7 @@ object SparkEntry {
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).cast("string").as("hour"))
         .agg(count(lit(1)).as("n"))
-      graft.operators.Profile.calibrateByGroup(hours, "event_type", "n", "hour")
+      graft.operators.Profile.calibrateByGroup(hours, "event_type", "n")
         .withColumn("is_anomaly", abs(col("z_robust")) > 3.0)
         .select(col("event_type"), col("hour"), col("n"),
           col("z_robust"), col("is_anomaly"))
@@ -4447,8 +4447,7 @@ object SparkEntry {
         |FROM s GROUP BY event_type, split
         |ORDER BY event_type, split""".stripMargin) { (s, dir) =>
       graft.operators.Splits.temporalSplitByGroup(
-          events(s, dir), "event_type", "ts", "event_id",
-          trainPct = 0.8, valPct = 0.1)
+          events(s, dir), "event_type", "ts", trainPct = 0.8, valPct = 0.1)
         .groupBy(col("event_type"), col("split"))
         .agg(count(lit(1)).as("n_rows"))
     }
@@ -4629,7 +4628,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       graft.operators.Drift.psi(
         docs.filter(col("lang") === "en"),
-        docs.filter(col("lang") =!= "en"), "source")
+        docs.filter(col("lang") =!= "en"), "source", groupCol = None)
     }
 
     // --- chi-squared independence test lang × source with Cramér's V:
@@ -4660,7 +4659,8 @@ object SparkEntry {
         |  END AS cramers_v
         |FROM tot CROSS JOIN na CROSS JOIN nb CROSS JOIN term""".stripMargin) {
       (s, dir) =>
-        graft.operators.Drift.chiSquare(t(s, dir, "documents"), "lang", "source")
+        graft.operators.Drift.chiSquare(t(s, dir, "documents"), "lang", "source",
+          groupCol = None)
     }
 
     // --- Mann–Whitney U rank-sum n_chars en vs non-en (the location-
@@ -4687,7 +4687,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       graft.operators.Drift.mannWhitneyU(
         docs.filter(col("lang") === "en"),
-        docs.filter(col("lang") =!= "en"), "n_chars")
+        docs.filter(col("lang") =!= "en"), "n_chars", groupCol = None)
     }
 
     // --- deterministic k-fold assignment (zero-shuffle md5 contract,
@@ -4931,7 +4931,7 @@ object SparkEntry {
         |    AS DOUBLE) / COUNT(*)::DOUBLE AS winsorized_mean
         |FROM b GROUP BY g ORDER BY source""".stripMargin) { (s, dir) =>
       graft.operators.Profile.trimmedMeanByGroup(
-          t(s, dir, "documents"), "source", "n_chars", "doc_id", 100000L)
+          t(s, dir, "documents"), "source", "n_chars", 100000L)
     }
 
     // --- Theil's uncertainty coefficient lang × source (asymmetric
@@ -5375,7 +5375,7 @@ object SparkEntry {
       graft.operators.Drift.wasserstein1(
         docs.filter(col("lang") === "en").select(col("n_chars")),
         docs.filter(col("lang") =!= "en").select(col("n_chars")),
-        "n_chars")
+        "n_chars", groupCol = None)
     }
 
     // --- per-source average precision of the length ranking against
@@ -6560,9 +6560,9 @@ object SparkEntry {
         |FROM h ORDER BY source""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
         .filter(col("n_chars").isNotNull && col("source").isNotNull)
-      graft.operators.Drift.mannWhitneyByGroup(
+      graft.operators.Drift.mannWhitneyU(
           docs.filter(col("lang") === "en"),
-          docs.filter(col("lang") =!= "en"), "source", "n_chars")
+          docs.filter(col("lang") =!= "en"), "n_chars", groupCol = Some("source"))
     }
 
     // --- per-source Wasserstein-1 (en vs rest): grouped transport cost,
@@ -6592,10 +6592,10 @@ object SparkEntry {
         |ORDER BY source""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
         .filter(col("n_chars").isNotNull && col("source").isNotNull)
-      graft.operators.Drift.wasserstein1ByGroup(
+      graft.operators.Drift.wasserstein1(
           docs.filter(col("lang") === "en").select(col("source"), col("n_chars")),
           docs.filter(col("lang") =!= "en").select(col("source"), col("n_chars")),
-          "source", "n_chars")
+          "n_chars", groupCol = Some("source"))
     }
 
     // --- per-source PSI between the even/odd doc-id halves over the
@@ -6623,9 +6623,9 @@ object SparkEntry {
         // exactly there (seen once with salt 'js': 1e-9 on src1).
         .withColumn("__half",
           graft.operators.Splits.hashValue60(col("doc_id"), "psi") % 2)
-      graft.operators.Drift.psiByGroup(
+      graft.operators.Drift.psi(
           docs.filter(col("__half") === 0),
-          docs.filter(col("__half") === 1), "source", "lang")
+          docs.filter(col("__half") === 1), "lang", groupCol = Some("source"))
     }
 
     // --- exact join-key overlap report (orders.o_custkey vs
@@ -6944,13 +6944,13 @@ object SparkEntry {
         |  END AS cramers_v
         |FROM tot LEFT JOIN term ON tot.g = term.g
         |ORDER BY source""".stripMargin) { (s, dir) =>
-      graft.operators.Drift.chiSquareByGroup(
+      graft.operators.Drift.chiSquare(
           t(s, dir, "documents")
             .filter(col("doc_id").isNotNull)
             .withColumn("half",
               (graft.operators.Splits.hashValue60(col("doc_id"), "js") % 2)
                 .cast("string")),
-          "source", "lang", "half")
+          "lang", "half", groupCol = Some("source"))
     }
 
     // --- value-atomic equal-frequency quartile bins of n_chars per

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{ApiSource, Fetcher, FileFetcher, GenerativeSource, Source}
 import graft.functions.NlCompiler
-import graft.operators.Chain
+import graft.operators.{Chain, Stager}
 
 /** The user-facing table (reference: class MagicTable(pl.DataFrame),
   * magictable.py:39-42). Scala can't usefully subclass Dataset, so this is
@@ -216,11 +216,11 @@ class MagicTable(
         case None =>
       }
     }
-    val (out, keyCols, cleanup) =
-      Chain.staged(df, urlTemplate, fetcher, sourceKey, targetKey, Some(graph.urlCacheDir))
+    val ((out, keyCols), release) = Stager.recording(
+      Chain(df, urlTemplate, fetcher, sourceKey, targetKey, Some(graph.urlCacheDir)))
     graph.batch {
       graph.addTable(newName, out, MagicTable.sourceInfo(newSources))
-      cleanup() // result is parquet now; release the persisted response blocks
+      release() // result is parquet now; free the staged responses
       graph.addChain(ChainRecord(name, newName, newName, "api_chain",
         keyCols.mkString(","), "", Map("api_url_template" -> urlTemplate), graph.clock()))
     }

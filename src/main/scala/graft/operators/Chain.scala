@@ -93,10 +93,10 @@ object Chain {
     }
   }
 
-  /** Full chain. Returns (result, resolvedKeyColumns). The fetched-response
-    * dataset stays persisted (the result plan reads it lazily) — a caller
-    * that MATERIALIZES the result should use [[staged]] and invoke the
-    * cleanup afterwards so the block-manager entry is released. */
+  /** Full chain. Returns (result, resolvedKeyColumns). The fetched
+    * responses are staged through the calling thread's [[Stager]] (the
+    * result plan reads the stage lazily), so a caller that MATERIALIZES
+    * the result frees them with [[Stager.recording]]'s release. */
   def apply(
       df: DataFrame,
       template: String,
@@ -106,25 +106,9 @@ object Chain {
       urlCacheDir: Option[String] = None,
       maxSleepMs: Long = 30000L,
       maxBroadcastBytes: Long = 64L << 20): (DataFrame, Seq[String]) = {
-    val (result, keys, _) = staged(df, template, fetcher, sourceKey, targetKey,
-      urlCacheDir, maxSleepMs, maxBroadcastBytes)
-    (result, keys)
-  }
-
-  /** [[apply]] plus a cleanup thunk that unpersists the fetched-response
-    * dataset — call it AFTER materializing the result. */
-  def staged(
-      df: DataFrame,
-      template: String,
-      fetcher: Fetcher,
-      sourceKey: Option[String] = None,
-      targetKey: Option[String] = None,
-      urlCacheDir: Option[String] = None,
-      maxSleepMs: Long = 30000L,
-      maxBroadcastBytes: Long = 64L << 20): (DataFrame, Seq[String], () => Unit) = {
     val spark = df.sparkSession
-    // the jobs below (response schema inference, the broadcast size scan)
-    // are labelled with the chain they serve
+    // the jobs below (the response stage, schema inference, the broadcast
+    // size scan) are labelled with the chain they serve
     Jobs.described(spark, s"graft chain $template") {
       import spark.implicits._
 
@@ -138,10 +122,11 @@ object Chain {
       val distinctUrls = withUrl.select($"__url")
         .filter($"__url".isNotNull).distinct().as[String]
       // read.json(Dataset[String]) scans its input TWICE (schema inference +
-      // execution) — persist the fetched lines or every URL is fetched twice.
-      val respLines = fetchResponses(distinctUrls, fetcher, urlCacheDir, maxSleepMs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val respDf = spark.read.json(respLines)
+      // execution) — stage the fetched lines or every URL is fetched twice.
+      val respLines = Stager.stage(
+        fetchResponses(distinctUrls, fetcher, urlCacheDir, maxSleepMs).toDF("value"),
+        s"chain_resp_${java.util.UUID.randomUUID().toString.take(8)}")
+      val respDf = spark.read.json(respLines.as[String])
 
       val result =
         if (!respDf.columns.contains("resp")) {
@@ -160,8 +145,8 @@ object Chain {
           // object headers, UTF8String copies, null bitmaps) — so the text
           // bytes are compared against the budget with a 4x expansion
           // headroom: 64 MB budget admits <=16 MB of response text. The size
-          // scan is cheap — respLines is already persisted.
-          val respBytes = respLines.toDF("value")
+          // scan is cheap — respLines is already staged.
+          val respBytes = respLines
             .agg(coalesce(sum(octet_length($"value")), lit(0L)).cast("long")).as[Long].head()
           val structExpansionHeadroom = 4L
           val respSide =
@@ -184,7 +169,7 @@ object Chain {
               "collide with input columns (a previous chain output? rename before re-chaining)")
           joined.select(baseCols ++ apiCols: _*)
         }
-      (result, mapping.values.toSeq, () => { respLines.unpersist(blocking = false); () })
+      (result, mapping.values.toSeq)
     }
   }
 }

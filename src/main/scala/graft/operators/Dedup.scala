@@ -71,7 +71,7 @@ object Dedup {
       .select(col("__id"), (col("__id") > col("__first")).as("__dup"))
       .withColumn("__one", lit(1L))
       .withColumn("__d", when(col("__dup"), 1L).otherwise(0L))
-    val ranked = PrefixSum.withRunningSums(flagged, "__id",
+    val ranked = PrefixSum.withKeyedRunningSums(flagged, Nil, Seq("__id"),
       Seq("__one", "__d"))
     // total off the STAGED scan (max rank) — aggregating `flagged` again
     // would re-run the corpus-sized fingerprint join

@@ -13,6 +13,14 @@ import org.apache.spark.sql.types.DecimalType
   * [[Profile.ksStatistic]], sensitive to location where KS is sensitive
   * to shape).
   *
+  * [[psi]], [[chiSquare]], [[mannWhitneyU]] and [[wasserstein1]] each
+  * take `groupCol: Option[String]`: `None` reports over the whole frames,
+  * `Some(g)` reports every group in one job. One body serves both — the
+  * global form is the grouped form over no keys. KS keeps two bodies
+  * ([[Profile.ksStatistic]], [[ksByGroup]]): the grouped body ends in an
+  * aggregate by group, which over no keys reports one all-NULL row on
+  * empty input, where the global body (an argmax join) reports none.
+  *
   * The reference (magictables) delegates all statistics to Polars
   * expressions behind its blanket wrapper
   * (/root/reference/magictables/magictable.py:28-36); these are the
@@ -30,15 +38,55 @@ object Drift {
   private def ln9(c: Column): Column =
     round(log(c).cast(DecimalType(25, 12)), 9).cast("double")
 
+  /** The internal group key of a report over `groupCol`: `__g`, or no
+    * key at all for the global form. */
+  private def groupKey(groupCol: Option[String]): Seq[String] =
+    groupCol.map(_ => "__g").toSeq
+
+  /** Both sides' row counts per (group, value), one row per pair present
+    * on either side: `__g` (when `groupCol` is set), `__v`, `__na`,
+    * `__nb` (0 where a side lacks the pair). Rows with a NULL group or
+    * value drop; `asKey` maps the value to the key it is counted under.
+    * The shared first step of every two-sample drift statistic:
+    * map-side-combinable counts, one full-outer merge. */
+  private[operators] def pairCounts(a: DataFrame, b: DataFrame, groupCol: Option[String],
+      v: Column, asKey: Column => Column = c => c): DataFrame = {
+    val g = groupCol.map(c => col(s"`$c`")).toSeq
+    def counts(df: DataFrame, out: String) = df
+      .filter((g :+ v).map(_.isNotNull).reduce(_ && _))
+      .groupBy(g.map(_.as("__g")) :+ asKey(v).as("__v"): _*)
+      .agg(count(lit(1)).as(out))
+    val keys = groupKey(groupCol)
+    counts(a, "__na").join(counts(b, "__nb"), keys :+ "__v", "full_outer")
+      .select(keys.map(col) ++ Seq(col("__v"),
+        coalesce(col("__na"), lit(0L)).as("__na"),
+        coalesce(col("__nb"), lit(0L)).as("__nb")): _*)
+  }
+
+  /** The group key column of a report, under the caller's name — none
+    * over no keys. */
+  private def groupOut(groupCol: Option[String]): Seq[Column] =
+    groupCol.map(g => col("__g").as(g)).toSeq
+
+  /** A count column of a report. Over no keys the aggregate still emits
+    * its one row when no value survives, and the count there is 0, not
+    * NULL. */
+  private def countOut(groupCol: Option[String], c: String): Column =
+    if (groupCol.isEmpty) coalesce(col(c), lit(0L)).as(c) else col(c)
+
   /** Population Stability Index between the `keyCol` value mixes of
     * frames `a` and `b` — PSI = Σ_v (p_v − q_v)·ln(p_v/q_v) over the
     * union of observed values, the standard drift score for categorical
-    * mixes (language mix, source mix, top-level-domain mix). One row:
-    * (n_a, n_b, n_values longs — totals and distinct union values,
-    * n_only_a, n_only_b longs — values seen on one side only, psi
-    * double). Conventional reading: < 0.1 stable, 0.1–0.25 drifting,
-    * > 0.25 shifted. NULL keys drop (count the NULL mix upstream if it
-    * matters); an empty side yields psi NULL.
+    * mixes (language mix, source mix, top-level-domain mix) — over the
+    * whole frames (`groupCol` None: one row) or for every group in one
+    * job (`Some(g)`: one row per group present on either side, e.g.
+    * "which sources' language mixes moved between snapshots"). Output:
+    * (groupCol when grouped, n_a, n_b, n_values longs — totals and
+    * distinct union values, n_only_a, n_only_b longs — values seen on
+    * one side only, psi double). Conventional reading: < 0.1 stable,
+    * 0.1–0.25 drifting, > 0.25 shifted. NULL groups and keys drop (count
+    * the NULL mix upstream if it matters); an empty side yields psi
+    * NULL, and an empty global input n_a = n_b = n_values = 0.
     *
     * Zero cells: a value unseen on one side has share 0 and an infinite
     * log ratio — both shares clamp to `eps` (share = max(n/N, eps),
@@ -51,55 +99,58 @@ object Drift {
     * quantize to DECIMAL(25,9) and sum order-independently; only the
     * reported psi casts back to double.
     *
-    * 100 TB shape: each side collapses to per-value counts (map-side
-    * combinable), one full-outer merge on the value key, then a
-    * values-cardinality aggregate — nothing row-sized ever shuffles
-    * twice. Categorical contract: value cardinality ≪ row count. */
-  def psi(a: DataFrame, b: DataFrame, keyCol: String, eps: Double = 1e-6): DataFrame = {
+    * 100 TB shape: each side collapses to per-(group, value) counts
+    * (map-side combinable), one full-outer merge, a |groups|-row totals
+    * broadcast, then one grouped aggregate over the value-cardinality
+    * frame — nothing row-sized ever shuffles twice. Categorical
+    * contract: value cardinality ≪ row count. */
+  def psi(a: DataFrame, b: DataFrame, keyCol: String, groupCol: Option[String],
+      eps: Double = 1e-6): DataFrame = {
     require(eps > 0.0 && eps < 1.0, s"eps must be in (0,1), got $eps")
+    val by = groupKey(groupCol)
+    val keys = by.map(col)
     val k = col(s"`$keyCol`")
-    def counts(df: DataFrame, out: String) = df.filter(k.isNotNull)
-      .groupBy(k.as("__v")).agg(count(lit(1)).as(out))
     // staged: the merged count frame feeds the totals AND the term sum —
     // unstaged, both corpus-sized count shuffles re-run per consumer
     val merged = Stager.stage(
-      counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
-        .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
-          coalesce(col("__nb"), lit(0L)).as("__nb")),
+      pairCounts(a, b, groupCol, k),
       s"psi_counts_${java.util.UUID.randomUUID().toString.take(8)}")
-    val totals = merged.agg(
+    val totals = merged.groupBy(keys: _*).agg(
       sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"))
-    val shares = merged.crossJoin(broadcast(totals))
+    val shares = merged.join(broadcast(totals), by)
       .withColumn("__p", greatest(
         col("__na").cast("double") / col("__ta").cast("double"), lit(eps)))
       .withColumn("__q", greatest(
         col("__nb").cast("double") / col("__tb").cast("double"), lit(eps)))
-    shares.agg(
-        coalesce(max(col("__ta")), lit(0L)).as("n_a"),
-        coalesce(max(col("__tb")), lit(0L)).as("n_b"),
+    shares.groupBy(keys: _*).agg(
+        max(col("__ta")).as("n_a"), max(col("__tb")).as("n_b"),
         count(lit(1)).as("n_values"),
         sum(when(col("__nb") === 0L, 1L).otherwise(0L)).as("n_only_a"),
         sum(when(col("__na") === 0L, 1L).otherwise(0L)).as("n_only_b"),
         sum(((col("__p") - col("__q")) * ln9(col("__p") / col("__q")))
           .cast(dec25_9)).as("__psi"))
-      .select(col("n_a"), col("n_b"), col("n_values"),
-        col("n_only_a"), col("n_only_b"),
+      .select(groupOut(groupCol) ++ Seq(countOut(groupCol, "n_a"),
+        countOut(groupCol, "n_b"), col("n_values"), col("n_only_a"),
+        col("n_only_b"),
         when(col("n_a") > 0L && col("n_b") > 0L,
-          col("__psi").cast("double")).as("psi"))
+          col("__psi").cast("double")).as("psi")): _*)
   }
 
   /** Pearson chi-squared test of independence between two categorical
     * columns, with Cramér's V effect size — the "is language associated
     * with source?" audit that catches a crawler whose language mix is
-    * collapsing onto a few domains. One row: (n long — rows with both
-    * values present, n_a, n_b longs — distinct values per column, dof
-    * long — (n_a−1)(n_b−1), chi2 double, cramers_v double — √(χ²/(n·
-    * min(n_a−1, n_b−1))), NULL when dof = 0 or n = 0).
+    * collapsing onto a few domains — over the whole frame (`groupCol`
+    * None: one row) or per group in one job (`Some(g)`: "is language
+    * associated with snapshot half, per source"). Output: (groupCol when
+    * grouped, n long — rows with both values present, n_a, n_b longs —
+    * distinct values per column, dof long — (n_a−1)(n_b−1), chi2 double,
+    * cramers_v double — √(χ²/(n·min(n_a−1, n_b−1))), NULL when dof = 0
+    * or n = 0). An empty global input reports n = n_a = n_b = 0.
     *
-    * The full n_a × n_b grid is materialized (row-marginal × col-
-    * marginal cross join) so ZERO-observed cells still contribute their
-    * expected-count term — dropping them understates χ², the classic
-    * implementation bug.
+    * The full n_a × n_b grid of each group is materialized (row-marginal
+    * × col-marginal join on the group key) so ZERO-observed cells still
+    * contribute their expected-count term — dropping them understates
+    * χ², the classic implementation bug.
     *
     * Exactness: observed counts and marginals are exact integers; each
     * cell term (o·n − r·c)²/(r·c·n) is a fixed IEEE tree over
@@ -107,44 +158,48 @@ object Drift {
     * both engines; terms quantize to DECIMAL(25,9) and sum order-
     * independently; √ is IEEE-correctly-rounded on both engines.
     *
-    * 100 TB shape: one hash shuffle to (a,b) cell counts (map-side
-    * combinable); everything after runs on the cell grid, bounded by
-    * value-cardinality product, never rows. Categorical contract:
-    * n_a·n_b ≪ row count. */
-  def chiSquare(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+    * 100 TB shape: one hash shuffle to (group, a, b) cell counts
+    * (map-side combinable); everything after runs on the cell grid,
+    * bounded by the value-cardinality product per group, never rows.
+    * Categorical contract: n_a·n_b ≪ row count. */
+  def chiSquare(df: DataFrame, aCol: String, bCol: String,
+      groupCol: Option[String]): DataFrame = {
+    val by = groupKey(groupCol)
+    val keys = by.map(col)
+    val g = groupCol.toSeq.map(c => col(s"`$c`"))
     val a = col(s"`$aCol`")
     val b = col(s"`$bCol`")
     // staged: the cell frame feeds row totals, col totals, and the grid
     // join — unstaged, the corpus-sized cell shuffle re-runs per consumer
     val cells = Stager.stage(
-      df.filter(a.isNotNull && b.isNotNull)
-        .groupBy(a.as("__a"), b.as("__b")).agg(count(lit(1)).as("__o")),
+      df.filter((g ++ Seq(a, b)).map(_.isNotNull).reduce(_ && _))
+        .groupBy(g.map(_.as("__g")) ++ Seq(a.as("__a"), b.as("__b")): _*)
+        .agg(count(lit(1)).as("__o")),
       s"chi2_cells_${java.util.UUID.randomUUID().toString.take(8)}")
-    val rowT = cells.groupBy(col("__a")).agg(sum(col("__o")).as("__r"))
-    val colT = cells.groupBy(col("__b")).agg(sum(col("__o")).as("__c"))
-    val grid = rowT.crossJoin(colT)
-      .join(cells, Seq("__a", "__b"), "left")
+    val rowT = cells.groupBy(keys :+ col("__a"): _*).agg(sum(col("__o")).as("__r"))
+    val colT = cells.groupBy(keys :+ col("__b"): _*).agg(sum(col("__o")).as("__c"))
+    val totN = cells.groupBy(keys: _*).agg(sum(col("__o")).as("n"),
+      countDistinct(col("__a")).as("n_a"), countDistinct(col("__b")).as("n_b"))
+    val grid = rowT.join(colT, by)
+      .join(cells, by ++ Seq("__a", "__b"), "left")
       .withColumn("__o", coalesce(col("__o"), lit(0L)))
+      .join(broadcast(totN), by)
     val on = col("__o").cast("double") * col("n").cast("double")
     val rc = col("__r").cast("double") * col("__c").cast("double")
     val d = on - rc
-    val totN = cells.agg(coalesce(sum(col("__o")), lit(0L)).as("n"))
-    // global aggregates keep the one-row contract even on empty input
-    val chi = grid.crossJoin(broadcast(totN))
+    val chi = grid.groupBy(keys: _*)
       .agg(sum((d * d / (rc * col("n").cast("double"))).cast(dec25_9))
         .as("__chi2"))
-    totN
-      .crossJoin(rowT.agg(count(lit(1)).as("n_a")))
-      .crossJoin(colT.agg(count(lit(1)).as("n_b")))
-      .crossJoin(chi)
-      .select(col("n"), col("n_a"), col("n_b"),
+    totN.join(chi, by, "left")
+      .select(groupOut(groupCol) ++ Seq(countOut(groupCol, "n"),
+        col("n_a"), col("n_b"),
         ((col("n_a") - 1L) * (col("n_b") - 1L)).as("dof"),
         when(col("n") > 0L && col("n_a") > 1L && col("n_b") > 1L,
           col("__chi2").cast("double")).as("chi2"),
         when(col("n") > 0L && col("n_a") > 1L && col("n_b") > 1L,
           sqrt(col("__chi2").cast("double") / (col("n").cast("double") *
             least(col("n_a") - 1L, col("n_b") - 1L).cast("double"))))
-          .as("cramers_v"))
+          .as("cramers_v")): _*)
   }
 
   /** Theil's uncertainty coefficient between two categorical columns —
@@ -228,14 +283,9 @@ object Drift {
       s"qMicros must be in (0, 1e6], got $qMicros")
     require(qMicros.distinct.size == qMicros.size,
       s"duplicate qMicros: $qMicros")
-    val v = col(s"`$valueCol`").cast("double")
-    def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
-      .groupBy(v.as("__v")).agg(count(lit(1)).as(out))
-    val cum = PrefixSum.withRunningSums(
-      counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
-        .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
-          coalesce(col("__nb"), lit(0L)).as("__nb")),
-      "__v", Seq("__na", "__nb"))
+    val cum = PrefixSum.withKeyedRunningSums(
+      pairCounts(a, b, None, col(s"`$valueCol`").cast("double")),
+      Nil, Seq("__v"), Seq("__na", "__nb"))
     val totals = cum.agg(sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"))
     val aggs = qMicros.flatMap { q =>
       Seq(
@@ -259,13 +309,17 @@ object Drift {
   /** Two-sample Mann–Whitney U rank-sum test between the `valueCol`
     * distributions of frames `a` and `b` — the non-parametric "did the
     * median shift?" location test (Mann & Whitney 1947), with the
-    * normal approximation z under the tie-corrected variance. One row:
-    * (n_a, n_b longs, u_a, u_b doubles — U statistics, exact
+    * normal approximation z under the tie-corrected variance — over the
+    * whole frames (`groupCol` None: one row) or for every group in one
+    * job (`Some(g)`: one row per group present on either side; the 100 TB
+    * question is "which sources shifted", and per-source jobs would
+    * rescan the corpus |sources| times). Output: (groupCol when grouped,
+    * n_a, n_b longs, u_a, u_b doubles — U statistics, exact
     * half-integers, u_a + u_b = n_a·n_b, z double — (u_a − n_a·n_b/2)/σ
     * with σ² = (n_a·n_b/12)·(n+1 − Σ(t³−t)/(n(n−1))), NULL when either
     * side is empty or all values tie, rank_biserial double —
-    * u_a/(n_a·n_b)·2 − 1, the common-language effect size). NULL values
-    * drop.
+    * u_a/(n_a·n_b)·2 − 1, the common-language effect size). NULL groups
+    * and values drop; an empty global input reports every column NULL.
     *
     * Exactness: ranks ride DOUBLED (2·cum_before + t + 1 — midranks as
     * exact integers); ΣU numerators and the tie sum Σ(t³−t) accumulate
@@ -273,25 +327,23 @@ object Drift {
     * fixed IEEE tree over exact integer casts with one
     * correctly-rounded √ — no libm anywhere.
     *
-    * 100 TB shape: each side collapses to per-distinct-value counts,
-    * one full-outer merge, then a [[PrefixSum]] distributed cumulative
-    * scan over the DISTINCT-value frame — range-partitioned with
-    * broadcast offsets, never a single-reducer window (the
-    * [[Profile.ksStatistic]] posture). */
-  def mannWhitneyU(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
-    val v = col(s"`$valueCol`")
-    def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
-      .groupBy(v.as("__v")).agg(count(lit(1)).as(out))
-    val merged = counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
-      .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
-        coalesce(col("__nb"), lit(0L)).as("__nb"))
+    * 100 TB shape: each side collapses to per-(group, value) counts, one
+    * full-outer merge, then one [[PrefixSum.withKeyedRunningSums]] scan
+    * over the DISTINCT-value frame — range-partitioned with broadcast
+    * offsets, never a single-reducer or per-group window — and one
+    * grouped aggregation. */
+  def mannWhitneyU(a: DataFrame, b: DataFrame, valueCol: String,
+      groupCol: Option[String]): DataFrame = {
+    val by = groupKey(groupCol)
+    val keys = by.map(col)
+    val merged = pairCounts(a, b, groupCol, col(s"`$valueCol`"))
       .withColumn("__t", col("__na") + col("__nb"))
     // the scan's staged range-partitioned frame serves the one
     // aggregation pass — the corpus-sized count shuffles run once
-    val ranked = PrefixSum.withRunningSums(merged, "__v", Seq("__t"))
+    val ranked = PrefixSum.withKeyedRunningSums(merged, by, Seq("__v"), Seq("__t"))
       .withColumn("__cb", col("cum___t") - col("__t"))
       .withColumn("__drd", lit(2L) * col("__cb") + col("__t") + 1L)
-    val agg = ranked.agg(
+    val agg = ranked.groupBy(keys: _*).agg(
       sum(col("__na")).as("n_a"), sum(col("__nb")).as("n_b"),
       sum((col("__na").cast(dec38) * col("__drd"))).as("__r1d"),
       sum((col("__t").cast(dec38) * col("__t") * col("__t") -
@@ -303,23 +355,27 @@ object Drift {
       .cast("double") / lit(2.0)
     val varU = (n1 * n2 / lit(12.0)) * ((n + lit(1.0)) -
       col("__ties").cast("double") / (n * (n - lit(1.0))))
-    agg.select(col("n_a"), col("n_b"),
-        when(col("n_a") > 0L && col("n_b") > 0L, ua).as("u_a"),
-        when(col("n_a") > 0L && col("n_b") > 0L, n1 * n2 - ua).as("u_b"),
-        when(col("n_a") > 0L && col("n_b") > 0L && varU > lit(0.0),
-          (ua - n1 * n2 / lit(2.0)) / sqrt(varU)).as("z"),
-        when(col("n_a") > 0L && col("n_b") > 0L && n1 * n2 > lit(0.0),
-          ua / (n1 * n2) * lit(2.0) - lit(1.0)).as("rank_biserial"))
+    agg.select(groupOut(groupCol) ++ Seq(col("n_a"), col("n_b"),
+      when(col("n_a") > 0L && col("n_b") > 0L, ua).as("u_a"),
+      when(col("n_a") > 0L && col("n_b") > 0L, n1 * n2 - ua).as("u_b"),
+      when(col("n_a") > 0L && col("n_b") > 0L && varU > lit(0.0),
+        (ua - n1 * n2 / lit(2.0)) / sqrt(varU)).as("z"),
+      when(col("n_a") > 0L && col("n_b") > 0L && n1 * n2 > lit(0.0),
+        ua / (n1 * n2) * lit(2.0) - lit(1.0)).as("rank_biserial")): _*)
   }
 
   /** 1-D Wasserstein-1 (earth-mover) distance between the INTEGRAL
     * `valueCol` distributions of frames `a` and `b` — W₁ = ∫|F_a − F_b| dx,
-    * the area between the two empirical CDFs. The drift score that weighs
-    * HOW FAR mass moved: KS ([[Profile.ksStatistic]]) reports only the
-    * single worst CDF gap and [[mannWhitneyU]] only the direction of the
-    * shift; W₁ is the expected transport cost in the value's own units
-    * (chars, tokens, ms). One row: (n_a, n_b, n_values longs, w1 double —
-    * NULL when either side is empty). NULL values drop.
+    * the area between the two empirical CDFs — over the whole frames
+    * (`groupCol` None: one row) or for every group in one job (`Some(g)`:
+    * one row per group present on either side). The drift score that
+    * weighs HOW FAR mass moved: KS ([[Profile.ksStatistic]]) reports only
+    * the single worst CDF gap and [[mannWhitneyU]] only the direction of
+    * the shift; W₁ is the expected transport cost in the value's own
+    * units (chars, tokens, ms). Output: (groupCol when grouped, n_a, n_b,
+    * n_values longs, w1 double — NULL when either side is empty). NULL
+    * groups and values drop; an empty global input reports n_values 0
+    * and every other column NULL.
     *
     * Exactness: `valueCol` must be integral (cast upstream — a double
     * grid would put engine-dependent FP subtraction in the segment
@@ -327,42 +383,44 @@ object Drift {
     * values x_i < x_{i+1}, so
     * W₁ = Σ_i |cumA_i·n_b − cumB_i·n_a| · (x_{i+1} − x_i) / (n_a·n_b):
     * every summand is a product of exact integers accumulating in
-    * DECIMAL(38,0), and w1 is ONE final IEEE division.
+    * DECIMAL(38,0), and w1 is ONE final IEEE division per group.
     *
-    * 100 TB shape: each side collapses to per-distinct-value counts
-    * (map-side combinable), one full-outer merge, one [[PrefixSum]]
-    * distributed cumulative scan (range exchange + broadcast offsets,
-    * never a single-reducer window), and the consecutive-value adjacency
-    * is a rank EQUI-join (rank i ⋈ rank i+1 — the scan already emitted
-    * exact ranks as cum-ones), which shuffles by rank instead of
-    * windowing. The only BNLJs are the two 1-row totals scalars. */
-  def wasserstein1(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
-    val v = col(s"`$valueCol`")
-    def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
-      .groupBy(v.cast("long").as("__v")).agg(count(lit(1)).as(out))
-    val merged = counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
-      .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
-        coalesce(col("__nb"), lit(0L)).as("__nb"))
+    * 100 TB shape: each side collapses to per-(group, value) counts
+    * (map-side combinable), one full-outer merge, one
+    * [[PrefixSum.withKeyedRunningSums]] scan (range exchange + broadcast
+    * offsets, never a window) emitting exact ranks as cum-ones, and the
+    * consecutive-value adjacency is a (group, rank) EQUI-join (rank i ⋈
+    * rank i+1), which shuffles by rank instead of windowing. The totals
+    * broadcast is |groups| rows. */
+  def wasserstein1(a: DataFrame, b: DataFrame, valueCol: String,
+      groupCol: Option[String]): DataFrame = {
+    val by = groupKey(groupCol)
+    val keys = by.map(col)
+    val merged = pairCounts(a, b, groupCol,
+        col(s"`$valueCol`"), _.cast("long"))
       .withColumn("__one", lit(1L))
-    val ranked = PrefixSum.withRunningSums(merged, "__v",
-        Seq("__one", "__na", "__nb"))
-      .select(col("__v"), col("cum___one").as("__rk"),
-        col("cum___na").as("__ca"), col("cum___nb").as("__cb"))
-    val nxt = ranked.select((col("__rk") - 1L).as("__rk"), col("__v").as("__vn"))
-    val segs = ranked.join(nxt, Seq("__rk"))
+    val ranked = PrefixSum.withKeyedRunningSums(merged, by,
+        Seq("__v"), Seq("__one", "__na", "__nb"))
+      .select(keys ++ Seq(col("__v"), col("cum___one").as("__rk"),
+        col("cum___na").as("__ca"), col("cum___nb").as("__cb")): _*)
+    val nxt = ranked.select(keys ++ Seq((col("__rk") - 1L).as("__rk"),
+      col("__v").as("__vn")): _*)
+    val segs = ranked.join(nxt, by :+ "__rk")
     // totals come off the STAGED scan (last cumulative value = total) —
     // aggregating `merged` again would re-run both corpus-sized counts
-    val tot = ranked.agg(max(col("__ca")).as("n_a"), max(col("__cb")).as("n_b"),
-      coalesce(max(col("__rk")), lit(0L)).as("n_values"))
-    val num = segs.crossJoin(broadcast(tot))
+    val tot = ranked.groupBy(keys: _*).agg(max(col("__ca")).as("n_a"),
+      max(col("__cb")).as("n_b"), max(col("__rk")).as("n_values"))
+    val num = segs.join(broadcast(tot), by)
+      .groupBy(keys: _*)
       .agg(sum(abs(col("__ca").cast(dec38) * col("n_b") -
           col("__cb").cast(dec38) * col("n_a")) *
         (col("__vn") - col("__v")).cast(dec38)).as("__num"))
-    tot.crossJoin(broadcast(num)).select(
-      col("n_a"), col("n_b"), col("n_values"),
-      when(col("n_a") > 0L && col("n_b") > 0L,
-        coalesce(col("__num"), lit(0L).cast(dec38)).cast("double") /
-          (col("n_a").cast("double") * col("n_b").cast("double"))).as("w1"))
+    tot.join(num, by, "left")
+      .select(groupOut(groupCol) ++ Seq(col("n_a"), col("n_b"),
+        countOut(groupCol, "n_values"),
+        when(col("n_a") > 0L && col("n_b") > 0L,
+          coalesce(col("__num"), lit(0L).cast(dec38)).cast("double") /
+            (col("n_a").cast("double") * col("n_b").cast("double"))).as("w1")): _*)
   }
 
   /** Quantile normalization: map every distinct value of frame `b` onto
@@ -384,9 +442,9 @@ object Drift {
     * row count (bin continuous signals first). */
   def quantileNormalize(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val v = col(s"`$valueCol`")
-    def cum(df: DataFrame, cname: String) = PrefixSum.withRunningSums(
+    def cum(df: DataFrame, cname: String) = PrefixSum.withKeyedRunningSums(
       df.filter(v.isNotNull).groupBy(v.as("__v")).agg(count(lit(1)).as("__c")),
-      "__v", Seq("__c"))
+      Nil, Seq("__v"), Seq("__c"))
       .select(col("__v"), col("__c"), col("cum___c").as(cname))
     val ac = cum(a, "__cuma").select(col("__v").as("__av"), col("__cuma"))
     val bc = cum(b, "__cumb")
@@ -495,14 +553,9 @@ object Drift {
     * scan, a 1-row totals broadcast, one final aggregation. */
   def cramerVonMises(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val dec12 = DecimalType(25, 12)
-    val v = col(s"`$valueCol`")
-    def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
-      .groupBy(v.as("__v")).agg(count(lit(1)).as(out))
-    val cum = PrefixSum.withRunningSums(
-      counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
-        .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
-          coalesce(col("__nb"), lit(0L)).as("__nb")),
-      "__v", Seq("__na", "__nb"))
+    val cum = PrefixSum.withKeyedRunningSums(
+      pairCounts(a, b, None, col(s"`$valueCol`")),
+      Nil, Seq("__v"), Seq("__na", "__nb"))
     val totals = cum.agg(sum(col("__na")).as("__ta"),
       sum(col("__nb")).as("__tb"))
     val terms = cum.crossJoin(broadcast(totals))
@@ -540,19 +593,9 @@ object Drift {
     * (max, argmax join). */
   def ksByGroup(a: DataFrame, b: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val dec38 = DecimalType(38, 0)
-    val g = col(s"`$groupCol`")
-    val v = col(s"`$valueCol`")
-    def counts(df: DataFrame, out: String) = df
-      .filter(g.isNotNull && v.isNotNull)
-      .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as(out))
-    val merged = counts(a, "__na")
-      .join(counts(b, "__nb"), Seq("__g", "__v"), "full_outer")
-      .select(col("__g"), col("__v"),
-        coalesce(col("__na"), lit(0L)).as("__na"),
-        coalesce(col("__nb"), lit(0L)).as("__nb"))
     val cum = PrefixSum.withKeyedRunningSums(
-      merged, Seq("__g"), Seq("__v"), Seq("__na", "__nb"))
+      pairCounts(a, b, Some(groupCol), col(s"`$valueCol`")),
+      Seq("__g"), Seq("__v"), Seq("__na", "__nb"))
     val totals = cum.groupBy(col("__g"))
       .agg(max(col("cum___na")).as("__ta"), max(col("cum___nb")).as("__tb"))
     val scaled = cum.join(broadcast(totals), Seq("__g"))
@@ -569,147 +612,6 @@ object Drift {
           col("__m").cast("double") /
             (col("n_a").cast("double") * col("n_b").cast("double"))).as("ks"),
         col("ks_at"))
-  }
-
-  /** PER-GROUP Mann–Whitney U — [[mannWhitneyU]]'s location test for
-    * every source in ONE job (the [[ksByGroup]] rationale: the 100 TB
-    * question is "which sources shifted", and per-source jobs rescan
-    * the corpus |sources| times). Identical exactness: doubled midranks
-    * (2·cum_before + t + 1) as exact integers, DECIMAL(38,0) rank/tie
-    * sums, one halving, a fixed IEEE z tree. Output per group:
-    * (groupCol, n_a, n_b longs, u_a, u_b, z, rank_biserial doubles —
-    * NULL where a side is empty / variance is 0). NULL groups/values
-    * drop.
-    *
-    * 100 TB shape: per-side (group, value) counts, one full-outer
-    * merge, one [[PrefixSum.withKeyedRunningSums]] scan, one grouped
-    * aggregation — no per-group window, no per-group job. */
-  def mannWhitneyByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      valueCol: String): DataFrame = {
-    val g = col(s"`$groupCol`")
-    val v = col(s"`$valueCol`")
-    def counts(df: DataFrame, out: String) = df
-      .filter(g.isNotNull && v.isNotNull)
-      .groupBy(g.as("__g"), v.as("__v")).agg(count(lit(1)).as(out))
-    val merged = counts(a, "__na")
-      .join(counts(b, "__nb"), Seq("__g", "__v"), "full_outer")
-      .select(col("__g"), col("__v"),
-        coalesce(col("__na"), lit(0L)).as("__na"),
-        coalesce(col("__nb"), lit(0L)).as("__nb"))
-      .withColumn("__t", col("__na") + col("__nb"))
-    val ranked = PrefixSum.withKeyedRunningSums(
-        merged, Seq("__g"), Seq("__v"), Seq("__t"))
-      .withColumn("__cb", col("cum___t") - col("__t"))
-      .withColumn("__drd", lit(2L) * col("__cb") + col("__t") + 1L)
-    val agg = ranked.groupBy(col("__g")).agg(
-      sum(col("__na")).as("n_a"), sum(col("__nb")).as("n_b"),
-      sum((col("__na").cast(dec38) * col("__drd"))).as("__r1d"),
-      sum((col("__t").cast(dec38) * col("__t") * col("__t") -
-        col("__t"))).as("__ties"))
-    val n1 = col("n_a").cast("double")
-    val n2 = col("n_b").cast("double")
-    val n = (col("n_a") + col("n_b")).cast("double")
-    val ua = (col("__r1d") - col("n_a").cast(dec38) * (col("n_a") + 1L))
-      .cast("double") / lit(2.0)
-    val varU = (n1 * n2 / lit(12.0)) * ((n + lit(1.0)) -
-      col("__ties").cast("double") / (n * (n - lit(1.0))))
-    agg.select(col("__g").as(groupCol), col("n_a"), col("n_b"),
-      when(col("n_a") > 0L && col("n_b") > 0L, ua).as("u_a"),
-      when(col("n_a") > 0L && col("n_b") > 0L, n1 * n2 - ua).as("u_b"),
-      when(col("n_a") > 0L && col("n_b") > 0L && varU > lit(0.0),
-        (ua - n1 * n2 / lit(2.0)) / sqrt(varU)).as("z"),
-      when(col("n_a") > 0L && col("n_b") > 0L && n1 * n2 > lit(0.0),
-        ua / (n1 * n2) * lit(2.0) - lit(1.0)).as("rank_biserial"))
-  }
-
-  /** PER-GROUP Wasserstein-1 — [[wasserstein1]]'s transport cost for
-    * every source in one job. Same exactness: integral values, flat-CDF
-    * segments, every summand |cumA·n_b − cumB·n_a|·Δx exact in
-    * DECIMAL(38,0), ONE division per group on report. Output per group:
-    * (groupCol, n_a, n_b, n_values longs, w1 double — NULL where a side
-    * is empty). NULL groups/values drop.
-    *
-    * 100 TB shape: per-side (group, value) counts, one full-outer
-    * merge, one [[PrefixSum.withKeyedRunningSums]] scan emitting
-    * per-group ranks, adjacency as a (group, rank) EQUI-join of the
-    * scan with itself shifted by one — never a window — and a
-    * |groups|-row totals broadcast. */
-  def wasserstein1ByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      valueCol: String): DataFrame = {
-    val g = col(s"`$groupCol`")
-    val v = col(s"`$valueCol`")
-    def counts(df: DataFrame, out: String) = df
-      .filter(g.isNotNull && v.isNotNull)
-      .groupBy(g.as("__g"), v.cast("long").as("__v")).agg(count(lit(1)).as(out))
-    val merged = counts(a, "__na")
-      .join(counts(b, "__nb"), Seq("__g", "__v"), "full_outer")
-      .select(col("__g"), col("__v"),
-        coalesce(col("__na"), lit(0L)).as("__na"),
-        coalesce(col("__nb"), lit(0L)).as("__nb"))
-      .withColumn("__one", lit(1L))
-    val ranked = PrefixSum.withKeyedRunningSums(merged, Seq("__g"),
-        Seq("__v"), Seq("__one", "__na", "__nb"))
-      .select(col("__g"), col("__v"), col("cum___one").as("__rk"),
-        col("cum___na").as("__ca"), col("cum___nb").as("__cb"))
-    val nxt = ranked.select(col("__g"), (col("__rk") - 1L).as("__rk"),
-      col("__v").as("__vn"))
-    val segs = ranked.join(nxt, Seq("__g", "__rk"))
-    val tot = ranked.groupBy(col("__g")).agg(max(col("__ca")).as("n_a"),
-      max(col("__cb")).as("n_b"), max(col("__rk")).as("n_values"))
-    val num = segs.join(broadcast(tot), Seq("__g"))
-      .groupBy(col("__g"))
-      .agg(sum(abs(col("__ca").cast(dec38) * col("n_b") -
-          col("__cb").cast(dec38) * col("n_a")) *
-        (col("__vn") - col("__v")).cast(dec38)).as("__num"))
-    tot.join(num, Seq("__g"), "left")
-      .select(col("__g").as(groupCol), col("n_a"), col("n_b"),
-        col("n_values"),
-        when(col("n_a") > 0L && col("n_b") > 0L,
-          coalesce(col("__num"), lit(0L).cast(dec38)).cast("double") /
-            (col("n_a").cast("double") * col("n_b").cast("double"))).as("w1"))
-  }
-
-  /** PER-GROUP PSI over categorical mixes — [[psi]]'s drift score for
-    * every source in one job (e.g. "which sources' language mixes moved
-    * between snapshots"). Same ln9/DECIMAL(25,9) contract. Output per
-    * group: (groupCol, n_a, n_b, n_values, n_only_a, n_only_b longs,
-    * psi double — NULL where a side is empty). NULL groups/keys drop.
-    *
-    * 100 TB shape: per-side (group, key) counts, one full-outer merge,
-    * a |groups|-row totals broadcast, one grouped aggregation —
-    * cell-cardinality frames only. */
-  def psiByGroup(a: DataFrame, b: DataFrame, groupCol: String,
-      keyCol: String, eps: Double = 1e-6): DataFrame = {
-    require(eps > 0.0 && eps < 1.0, s"eps must be in (0,1), got $eps")
-    val g = col(s"`$groupCol`")
-    val k = col(s"`$keyCol`")
-    def counts(df: DataFrame, out: String) = df
-      .filter(g.isNotNull && k.isNotNull)
-      .groupBy(g.as("__g"), k.as("__v")).agg(count(lit(1)).as(out))
-    val merged = Stager.stage(
-      counts(a, "__na").join(counts(b, "__nb"), Seq("__g", "__v"), "full_outer")
-        .select(col("__g"), col("__v"),
-          coalesce(col("__na"), lit(0L)).as("__na"),
-          coalesce(col("__nb"), lit(0L)).as("__nb")),
-      s"psi_grp_${java.util.UUID.randomUUID().toString.take(8)}")
-    val totals = merged.groupBy(col("__g")).agg(
-      sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"))
-    val shares = merged.join(broadcast(totals), Seq("__g"))
-      .withColumn("__p", greatest(
-        col("__na").cast("double") / col("__ta").cast("double"), lit(eps)))
-      .withColumn("__q", greatest(
-        col("__nb").cast("double") / col("__tb").cast("double"), lit(eps)))
-    shares.groupBy(col("__g")).agg(
-        max(col("__ta")).as("n_a"), max(col("__tb")).as("n_b"),
-        count(lit(1)).as("n_values"),
-        sum(when(col("__nb") === 0L, 1L).otherwise(0L)).as("n_only_a"),
-        sum(when(col("__na") === 0L, 1L).otherwise(0L)).as("n_only_b"),
-        sum(((col("__p") - col("__q")) * ln9(col("__p") / col("__q")))
-          .cast(dec25_9)).as("__psi"))
-      .select(col("__g").as(groupCol), col("n_a"), col("n_b"),
-        col("n_values"), col("n_only_a"), col("n_only_b"),
-        when(col("n_a") > 0L && col("n_b") > 0L,
-          col("__psi").cast("double")).as("psi"))
   }
 
   /** Trailing-window statistics over an integer-gridded series per
@@ -742,60 +644,10 @@ object Drift {
           count(lit(1)).over(w).cast("double"))
   }
 
-  /** PER-GROUP chi-squared independence + Cramér's V — the grouped
-    * completion of the drift battery ([[ksByGroup]], [[mannWhitneyByGroup]],
-    * [[wasserstein1ByGroup]], [[psiByGroup]]): "is language associated
-    * with snapshot half, per source" in one job. The FULL per-group
-    * marginal grid is materialized (zero-observed cells contribute their
-    * expected term — the classic bug the global operator also guards).
-    * Output per group: (groupCol, n, n_a, n_b, dof longs, chi2,
-    * cramers_v doubles — NULL when dof = 0 or the group is empty).
-    *
-    * Exactness: the [[chiSquare]] contract verbatim — exact integer
-    * counts/marginals, each cell term a fixed IEEE tree, DECIMAL(25,9)
-    * term sums, correctly-rounded sqrt. 100 TB shape: one (group, a, b)
-    * cell aggregation; marginals/grid/terms run per group on
-    * cell-cardinality frames joined BY GROUP KEY (the grid fan-out is
-    * |a|·|b| per group — the categorical contract). */
-  def chiSquareByGroup(df: DataFrame, groupCol: String, aCol: String,
-      bCol: String): DataFrame = {
-    val g = col(s"`$groupCol`")
-    val a = col(s"`$aCol`")
-    val b = col(s"`$bCol`")
-    val cells = Stager.stage(
-      df.filter(g.isNotNull && a.isNotNull && b.isNotNull)
-        .groupBy(g.as("__g"), a.as("__a"), b.as("__b"))
-        .agg(count(lit(1)).as("__o")),
-      s"chi2g_cells_${java.util.UUID.randomUUID().toString.take(8)}")
-    val rowT = cells.groupBy(col("__g"), col("__a")).agg(sum(col("__o")).as("__r"))
-    val colT = cells.groupBy(col("__g"), col("__b")).agg(sum(col("__o")).as("__c"))
-    val totN = cells.groupBy(col("__g")).agg(sum(col("__o")).as("n"),
-      countDistinct(col("__a")).as("n_a"), countDistinct(col("__b")).as("n_b"))
-    val grid = rowT.join(colT, Seq("__g"))
-      .join(cells, Seq("__g", "__a", "__b"), "left")
-      .withColumn("__o", coalesce(col("__o"), lit(0L)))
-      .join(broadcast(totN), Seq("__g"))
-    val on = col("__o").cast("double") * col("n").cast("double")
-    val rc = col("__r").cast("double") * col("__c").cast("double")
-    val d = on - rc
-    val chi = grid.groupBy(col("__g"))
-      .agg(sum((d * d / (rc * col("n").cast("double"))).cast(dec25_9))
-        .as("__chi2"))
-    totN.join(chi, Seq("__g"), "left")
-      .select(col("__g").as(groupCol), col("n"), col("n_a"), col("n_b"),
-        ((col("n_a") - 1L) * (col("n_b") - 1L)).as("dof"),
-        when(col("n") > 0L && col("n_a") > 1L && col("n_b") > 1L,
-          col("__chi2").cast("double")).as("chi2"),
-        when(col("n") > 0L && col("n_a") > 1L && col("n_b") > 1L,
-          sqrt(col("__chi2").cast("double") / (col("n").cast("double") *
-            least(col("n_a") - 1L, col("n_b") - 1L).cast("double"))))
-          .as("cramers_v"))
-  }
-
   /** Welch's unequal-variance t statistic + Cohen's d per group
     * (Welch 1947; Cohen 1988): the PARAMETRIC mean-shift test and its
     * effect size, completing the per-group drift battery's location
-    * panel ([[mannWhitneyByGroup]] is the rank twin — Welch answers
+    * panel ([[mannWhitneyU]] grouped is the rank twin — Welch answers
     * "did the MEAN move and by how many pooled SDs", which a product
     * decision usually wants next to the nonparametric p-value).
     * Output per group: (groupCol, n_a, n_b longs, mean_a, mean_b,
@@ -915,7 +767,7 @@ object Drift {
   /** Per-group Jensen–Shannon divergence between the `keyCol` value
     * mixes of frames `a` and `b` (Lin 1991): JS = ½·Σ p·ln(p/m) +
     * ½·Σ q·ln(q/m) with m = (p+q)/2 — the bounded (≤ ln 2), symmetric
-    * complement of [[psiByGroup]]'s unbounded score: zero-probability
+    * complement of grouped [[psi]]'s unbounded score: zero-probability
     * values need NO epsilon (a p = 0 term is exactly 0 by the x·ln x
     * limit convention), so a value seen on one side only contributes
     * its honest ½·ln 2 mass instead of an epsilon artifact. Output per
@@ -928,21 +780,13 @@ object Drift {
     * term is a fixed IEEE tree quantized to DECIMAL(25,9) before the
     * order-independent sum — hash-identical cross-engine.
     *
-    * 100 TB shape: the [[psiByGroup]] plan verbatim — two
+    * 100 TB shape: the grouped [[psi]] plan verbatim — two
     * map-side-combinable (group, value) counts, one full-outer merge,
     * a |groups|-row totals broadcast, one group aggregation. */
   def jsDivergenceByGroup(a: DataFrame, b: DataFrame, groupCol: String,
       keyCol: String): DataFrame = {
-    val g = col(s"`$groupCol`")
-    val k = col(s"`$keyCol`")
-    def counts(df: DataFrame, out: String) = df
-      .filter(g.isNotNull && k.isNotNull)
-      .groupBy(g.as("__g"), k.as("__v")).agg(count(lit(1)).as(out))
     val merged = Stager.stage(
-      counts(a, "__na").join(counts(b, "__nb"), Seq("__g", "__v"), "full_outer")
-        .select(col("__g"), col("__v"),
-          coalesce(col("__na"), lit(0L)).as("__na"),
-          coalesce(col("__nb"), lit(0L)).as("__nb")),
+      pairCounts(a, b, Some(groupCol), col(s"`$keyCol`")),
       s"js_grp_${java.util.UUID.randomUUID().toString.take(8)}")
     val totals = merged.groupBy(col("__g")).agg(
       sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"))

@@ -359,7 +359,7 @@ object Eval {
     val sc = col(s"`$scoreCol`")
     val calV = cal.filter(sc.isNotNull).select(sc.as("__s"))
     val counts = calV.groupBy(col("__s")).agg(count(lit(1)).as("__c"))
-    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c"))
+    val cum = PrefixSum.withKeyedRunningSums(counts, Nil, Seq("__s"), Seq("__c"))
     val nrow = calV.agg(count(lit(1)).as("n_cal"))
       .withColumn("rank", least(expr(
         s"((n_cal + 1) * ${1000L - alphaPermille} + 999) div 1000"),
@@ -768,7 +768,7 @@ object Eval {
     val counts = df.filter(sc.isNotNull && lb.isNotNull)
       .groupBy(sc.as("__s"))
       .agg(count(lit(1)).as("__c"), sum(when(lb, 1L).otherwise(0L)).as("__p"))
-    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c", "__p"))
+    val cum = PrefixSum.withKeyedRunningSums(counts, Nil, Seq("__s"), Seq("__c", "__p"))
     val totals = cum.agg(max(col("cum___c")).as("__n"), max(col("cum___p")).as("__np"))
     val buckets = cum.crossJoin(broadcast(totals))
       .withColumn("__cumd", col("__n") - col("cum___c") + col("__c"))
@@ -808,7 +808,7 @@ object Eval {
     val counts = df.filter(sc.isNotNull && lb.isNotNull)
       .groupBy(sc.as("__s"))
       .agg(count(lit(1)).as("__c"), sum(when(lb, 1L).otherwise(0L)).as("__p"))
-    val cum = PrefixSum.withRunningSums(counts, "__s", Seq("__c", "__p"))
+    val cum = PrefixSum.withKeyedRunningSums(counts, Nil, Seq("__s"), Seq("__c", "__p"))
     val totals = cum.agg(max(col("cum___c")).as("__n"),
       max(col("cum___p")).as("__np"))
     cum.crossJoin(broadcast(totals))

@@ -19,14 +19,11 @@ import org.apache.spark.sql.functions._
   * caller decides whether to truncate or drop; `oversize` marks it).
   *
   * 100 TB shape (the r13 migration off the cumulative-sum windows):
-  * the per-group running token count rides
-  * [[PrefixSum.withKeyedRunningSums]] — a giant group (per-language
-  * packing over a corpus-sized language) never serializes into one
-  * window reducer — and GLOBAL packing (groupCol = None) rides
-  * [[PrefixSum.withRunningSums]]' range exchange, so it distributes
-  * too; `allowGlobal` is retained for API compatibility but no longer
-  * gates anything (the single-reducer hazard it guarded is gone).
-  * `idCol` values must be DISTINCT and non-null (the prefix-sum order
+  * the running token count rides [[PrefixSum.withKeyedRunningSums]]'
+  * range exchange, per group or (groupCol = None) over no keys — a giant
+  * group (per-language packing over a corpus-sized language) never
+  * serializes into one window reducer, and GLOBAL packing distributes
+  * too. `idCol` values must be DISTINCT and non-null (the prefix-sum order
   * contract — already the semantic contract here: ties in the packing
   * order would be nondeterministic); NULL ids and NULL groups drop.
   */
@@ -38,8 +35,7 @@ object Packing {
       tokensCol: String,
       budget: Long,
       groupCol: Option[String] = None,
-      binCol: String = "bin",
-      allowGlobal: Boolean = false): DataFrame = {
+      binCol: String = "bin"): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     (Seq(binCol, "oversize", "__pk_t", "cum___pk_t") intersect df.columns)
       .foreach(c => throw new IllegalArgumentException(
@@ -53,15 +49,9 @@ object Packing {
     val base0 = PrefixSum.stagedInput(
       df.filter(id.isNotNull).withColumn("__pk_t", toks),
       stage = true)
-    val cum = groupCol match {
-      case Some(g) =>
-        PrefixSum.withKeyedRunningSums(
-          base0.filter(col(s"`$g`").isNotNull),
-          Seq(g), Seq(idCol), Seq("__pk_t"))
-      case None =>
-        PrefixSum.withRunningSums(base0, Seq(idCol), Seq("__pk_t"))
-    }
-    cum
+    PrefixSum.withKeyedRunningSums(
+        groupCol.fold(base0)(g => base0.filter(col(s"`$g`").isNotNull)),
+        groupCol.toSeq, Seq(idCol), Seq("__pk_t"))
       // exact LONG floor-division (SQL `div`), not a double `/` + cast:
       // double loses exactness past 2^53 cumulative tokens, and engines
       // disagree on double->int conversion (truncate vs round)

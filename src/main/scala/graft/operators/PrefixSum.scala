@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed running sums over a global ordering — the cumulative scan
-  * behind CDF/rank machinery ([[Profile.ksStatistic]],
+/** Distributed running sums over a global or per-group ordering — the
+  * cumulative scan behind CDF/rank machinery ([[Profile.ksStatistic]],
   * [[Drift.mannWhitneyU]], [[Profile.keySkew]]'s histogram quantiles)
   * WITHOUT `Window.orderBy(...)`'s single-reducer collapse: Spark moves
   * every row of an unpartitioned ordered window to one task, which is
@@ -16,26 +16,8 @@ import org.apache.spark.sql.functions._
   * rank: range-exchange on the order key, per-partition running sums,
   * then add a broadcast per-partition offset table whose own running-sum
   * window orders numPartitions rows — never data.
-  *
-  * Contract: `orderCol` values must be DISTINCT and non-null (every
-  * caller here feeds a per-distinct-value count frame, so this is free).
-  * With ties the per-partition sum at a tied row would depend on the
-  * nondeterministic intra-tie order; with distinct keys the result is
-  * exact and reproducible regardless of where the sampled range
-  * boundaries land.
   */
 object PrefixSum {
-
-  /** Add one INCLUSIVE running-sum column `cum_<c>` (long) per entry of
-    * `sumCols`, over ascending `orderCol`. The range-partitioned input
-    * is staged (the offset table and the per-partition sums MUST see
-    * the same nondeterministic range split — re-evaluating the exchange
-    * per consumer could desynchronize them, the
-    * [[Dedup.sortedNeighborhoodPairs]] `snm_ranked` rationale);
-    * downstream consumers therefore also read the stage, not the
-    * original plan. */
-  def withRunningSums(df: DataFrame, orderCol: String, sumCols: Seq[String]): DataFrame =
-    withRunningSums(df, Seq(orderCol), sumCols)
 
   /** Stage `df` before the range exchange when its plan is expensive:
     * RangePartitioning SAMPLES its child to pick bounds, so the child's
@@ -51,61 +33,33 @@ object PrefixSum {
       s"prefix_sum_in_${java.util.UUID.randomUUID().toString.take(8)}")
     else df
 
-  /** Multi-column-order variant: the global order is the COMPOSITE
-    * lexicographic (orderCols…) — the tuples must be distinct and
-    * non-null (e.g. a hash with a unique-id tiebreak, the
-    * [[graft.operators.Splits.deterministicShuffle]] caller). */
-  def withRunningSums(df: DataFrame, orderCols: Seq[String],
-      sumCols: Seq[String]): DataFrame = {
-    require(orderCols.nonEmpty, "withRunningSums: orderCols must be non-empty")
-    require(sumCols.nonEmpty, "withRunningSums: sumCols must be non-empty")
-    val ords = orderCols.map(c => col(s"`$c`"))
-    val parted = Stager.stage(
-      df.repartitionByRange(ords: _*).withColumn("__psid", spark_partition_id()),
-      s"prefix_sum_${java.util.UUID.randomUUID().toString.take(8)}")
-    val wp = Window.partitionBy(col("__psid")).orderBy(ords.map(_.asc): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = sumCols.foldLeft(parted) { (d, c) =>
-      d.withColumn(s"cum_$c", sum(col(s"`$c`")).over(wp))
-    }
-    val wo = Window.orderBy(col("__psid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sumCols.foldLeft(
-      parted.groupBy(col("__psid"))
-        .agg(sum(col(s"`${sumCols.head}`")).as(s"__t_${sumCols.head}"),
-          sumCols.tail.map(c => sum(col(s"`$c`")).as(s"__t_$c")): _*)) {
-      (d, c) =>
-        d.withColumn(s"__o_$c",
-          coalesce(sum(col(s"__t_$c")).over(wo), lit(0L)))
-    }.select(col("__psid") +: sumCols.map(c => col(s"__o_$c")): _*)
-    sumCols.foldLeft(local.join(broadcast(offsets), Seq("__psid"))) {
-      (d, c) =>
-        d.withColumn(s"cum_$c",
-          col(s"cum_$c") + col(s"__o_$c").cast(local.schema(s"cum_$c").dataType))
-          .drop(s"__o_$c")
-    }.drop("__psid")
-  }
-
-  /** PER-GROUP variant of [[withRunningSums]]: one INCLUSIVE running-sum
-    * column `cum_<c>` per entry of `sumCols`, computed WITHIN each
-    * `keyCols` group over ascending `orderCols` — without ever
-    * partitioning a window by the group key. `Window.partitionBy(group)`
-    * sorts EVERY row of a group through ONE reducer, which is exactly
-    * wrong when the group key has low cardinality and the groups are
-    * corpus-sized (a funnel's |stages|−1 transitions, a per-source
-    * ranking over a giant source). Here the range exchange is on the
-    * COMPOSITE (keyCols ++ orderCols) sort key, so one giant group
-    * spreads over many contiguous partitions; per-partition running sums
-    * run inside each (partition, group) slice; and the stitch adds a
-    * broadcast offset computed per (partition, group) — an offsets frame
-    * of at most numPartitions + |groups| − 1 rows (each group occupies a
-    * contiguous partition range), whose own per-group window orders a
-    * handful of partition ids, never data.
+  /** One INCLUSIVE running-sum column `cum_<c>` per entry of `sumCols`,
+    * over ascending `orderCols` (lexicographic), computed WITHIN each
+    * `keyCols` group — or over the whole frame when `keyCols` is empty —
+    * without ever partitioning a window by the group key.
+    * `Window.partitionBy(group)` sorts EVERY row of a group through ONE
+    * reducer, which is exactly wrong when the group key has low
+    * cardinality and the groups are corpus-sized (a funnel's |stages|−1
+    * transitions, a per-source ranking over a giant source). Here the
+    * range exchange is on the COMPOSITE (keyCols ++ orderCols) sort key,
+    * so one giant group spreads over many contiguous partitions;
+    * per-partition running sums run inside each (partition, group) slice;
+    * and the stitch adds a broadcast offset computed per (partition,
+    * group) — an offsets frame of at most numPartitions + |groups| − 1
+    * rows (each group occupies a contiguous partition range), whose own
+    * per-group window orders a handful of partition ids, never data.
     *
-    * Contract (same as [[withRunningSums]]): the composite
-    * (keyCols ++ orderCols) tuples must be DISTINCT and non-null — with
-    * ties the sum at a tied row would depend on nondeterministic
-    * intra-tie order. Callers feed per-distinct-value count frames or
+    * The range-partitioned input is staged: the offset table and the
+    * per-partition sums MUST see the same nondeterministic range split —
+    * re-evaluating the exchange per consumer could desynchronize them
+    * (the [[Dedup.sortedNeighborhoodPairs]] `snm_ranked` rationale) — so
+    * downstream consumers also read the stage, not the original plan.
+    *
+    * Contract: the composite (keyCols ++ orderCols) tuples must be
+    * DISTINCT and non-null — with ties the sum at a tied row would depend
+    * on nondeterministic intra-tie order; with distinct keys the result
+    * is exact and reproducible wherever the sampled range boundaries
+    * land. Callers feed per-distinct-value count frames or
     * unique-id-tiebroken rows, so this is free.
     *
     * 100 TB shape: one range exchange of the data, one broadcast of the
@@ -113,7 +67,6 @@ object PrefixSum {
     * exchange or window of the data-sized frame. */
   def withKeyedRunningSums(df: DataFrame, keyCols: Seq[String],
       orderCols: Seq[String], sumCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "withKeyedRunningSums: keyCols must be non-empty")
     require(orderCols.nonEmpty, "withKeyedRunningSums: orderCols must be non-empty")
     require(sumCols.nonEmpty, "withKeyedRunningSums: sumCols must be non-empty")
     val keys = keyCols.map(c => col(s"`$c`"))
@@ -121,7 +74,7 @@ object PrefixSum {
     val parted = Stager.stage(
       df.repartitionByRange((keys ++ ords): _*)
         .withColumn("__psid", spark_partition_id()),
-      s"prefix_sum_k_${java.util.UUID.randomUUID().toString.take(8)}")
+      s"prefix_sum_${java.util.UUID.randomUUID().toString.take(8)}")
     val wp = Window.partitionBy(col("__psid") +: keys: _*)
       .orderBy(ords.map(_.asc): _*)
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -326,10 +326,9 @@ object Profile {
     * mean-based z for the whole source.
     *
     * Rows with NULL group or value keep their row but get NULL
-    * pct_rank/z_robust (they carry no rank). `idCol` is retained for
-    * API compatibility; the nearest-rank VALUE at a rank is
-    * tiebreak-independent (ties are the same value), so it no longer
-    * affects the result.
+    * pct_rank/z_robust (they carry no rank). No id tiebreak is needed:
+    * the nearest-rank VALUE at a rank is tiebreak-independent (ties are
+    * the same value).
     *
     * 100 TB shape: rows collapse to per-(group, value) counts, then TWO
     * [[graft.operators.PrefixSum.withKeyedRunningSums]] scans (values,
@@ -338,8 +337,7 @@ object Profile {
     * window reducer (the pre-r13 shape) — and the per-value pct_rank
     * (rank semantics: (cum − c)/(n − 1)) joins back to rows as one hash
     * join on (group, value). Per-group med/MAD frames broadcast. */
-  def calibrateByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      idCol: String): DataFrame = {
+  def calibrateByGroup(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val reserved = Seq("__g", "__v", "pct_rank", "z_robust")
     (reserved intersect df.columns).foreach(c =>
       throw new IllegalArgumentException(
@@ -561,9 +559,9 @@ object Profile {
       count(lit(1)).as("n_keys"),
       max(col("__n")).as("max_n"),
       sum((col("__n") * col("__n")).cast(dec38)).as("__sumsq"))
-    val hist = PrefixSum.withRunningSums(
+    val hist = PrefixSum.withKeyedRunningSums(
         counts.groupBy(col("__n")).agg(count(lit(1)).as("__f")),
-        "__n", Seq("__f"))
+        Nil, Seq("__n"), Seq("__f"))
       .withColumn("__cum", col("cum___f"))
     val quants = hist.crossJoin(broadcast(totals.select(col("n_keys").as("__nk"))))
       .agg(
@@ -636,20 +634,16 @@ object Profile {
     * [[PrefixSum]] distributed cumulative scan over the DISTINCT-value
     * frame — range-partitioned with broadcast offsets, so even a
     * continuous-unique-value corpus never collapses onto one reducer
-    * (same posture as [[keySkew]]'s histogram). */
+    * (same posture as [[keySkew]]'s histogram). [[Drift.ksByGroup]] is
+    * the per-group form. */
   def ksStatistic(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = col(s"`$valueCol`")
-    def counts(df: DataFrame, out: String) = df.filter(v.isNotNull)
-      .groupBy(v.as("__v")).agg(count(lit(1)).as(out))
     // the cumulative scan's staged range-partitioned frame ALSO serves
     // the totals, the max and the argmax — the corpus-sized count
     // shuffles run once
-    val cum = PrefixSum.withRunningSums(
-      counts(a, "__na").join(counts(b, "__nb"), Seq("__v"), "full_outer")
-        .select(col("__v"), coalesce(col("__na"), lit(0L)).as("__na"),
-          coalesce(col("__nb"), lit(0L)).as("__nb")),
-      "__v", Seq("__na", "__nb"))
+    val cum = PrefixSum.withKeyedRunningSums(
+      Drift.pairCounts(a, b, None, col(s"`$valueCol`")),
+      Nil, Seq("__v"), Seq("__na", "__nb"))
     val totals = cum.agg(sum(col("__na")).as("__ta"), sum(col("__nb")).as("__tb"))
     val scaled = cum
       .withColumn("__ca", col("cum___na"))
@@ -914,8 +908,7 @@ object Profile {
   /** Per-group trimmed and winsorized means — the outlier-robust
     * location estimates between the plain mean and [[robustStats]]'
     * median: trim drops the `trimMicro`/1e6 fraction off EACH tail
-    * (by exact rank, ties broken by `idCol` so the cut is
-    * deterministic), winsorize clamps those tails to the surviving
+    * (by exact rank), winsorize clamps those tails to the surviving
     * boundary values instead. The metric-monitoring workhorse for
     * heavy-tailed signals (doc lengths, latencies, token counts) where
     * one crawler burp shouldn't move the dashboard. Output per group:
@@ -931,10 +924,8 @@ object Profile {
     * trim is computed on the DISTINCT-value count frame: rows tied at
     * the cut boundary are interchangeable in every sum (equal values),
     * so the per-value overlap of the rank interval (cum − c, cum] with
-    * the kept range (lo, n − lo] reproduces the id-tiebroken per-row
-    * trim exactly — `idCol` remains in the signature for source
-    * compatibility and documents that the SET of dropped rows (not just
-    * the sums) was deterministic under the old per-row contract.
+    * the kept range (lo, n − lo] reproduces any tiebroken per-row trim
+    * exactly, so no id tiebreak is needed.
     *
     * 100 TB shape: collapse to (group, value) counts (map-side
     * combinable), rank by [[PrefixSum.withKeyedRunningSums]] (range
@@ -944,7 +935,7 @@ object Profile {
     * broadcast the |groups|-row boundary table back into ONE aggregation
     * over the distinct-value frame. */
   def trimmedMeanByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      idCol: String, trimMicro: Long = 50000L): DataFrame = {
+      trimMicro: Long = 50000L): DataFrame = {
     require(trimMicro >= 0L && trimMicro < 500000L,
       s"trimMicro must be in [0, 500000), got $trimMicro")
     val dec = org.apache.spark.sql.types.DecimalType(25, 9)
@@ -1026,7 +1017,7 @@ object Profile {
       .select(id, coalesce(col("__nt"), lit(0L)).as("__nt"),
         coalesce(col("__new"), lit(0L)).as("__new"))
       .withColumn("__one", lit(1L))
-    val cum = PrefixSum.withRunningSums(base, idCol,
+    val cum = PrefixSum.withKeyedRunningSums(base, Nil, Seq(idCol),
       Seq("__one", "__nt", "__new"))
     val ln9 = (c: org.apache.spark.sql.Column) =>
       round(log(c).cast(DecimalType(25, 12)), 9).cast("double")

@@ -543,7 +543,7 @@ object Sessionize {
     val totals = cum.groupBy(col("__ty"))
       .agg(max(col("cum___c")).as("__n"),
         // gap·count through DECIMAL(38,0): micro-gaps × corpus counts
-        // overflow a long product/sum silently (the mannWhitneyByGroup
+        // overflow a long product/sum silently (the mannWhitneyU
         // dec38 convention; the oracle mirrors with ::HUGEINT)
         sum(col("__gap").cast(DecimalType(38, 0)) * col("__c")).as("__s"))
       .filter(col("__n") >= minGaps && col("__s") > 0L)

@@ -341,11 +341,10 @@ object Splits {
     * VALUE-based (ts <= cut), so rows tied with a cut timestamp all land
     * on the earlier side — at-cut ties can make the train fraction
     * exceed ⌈p·n⌉ (the honest behavior: you cannot put half a timestamp
-    * in the future). Rows with NULL ts or NULL group drop. `idCol` is
-    * retained for API compatibility; the nearest-rank VALUE at a rank
-    * is tiebreak-independent (ties are the same timestamp), so it no
-    * longer affects the result. Adds `splitCol` with values
-    * train/val/test.
+    * in the future). Rows with NULL ts or NULL group drop; the
+    * nearest-rank VALUE at a rank is tiebreak-independent (ties are the
+    * same timestamp), so no id tiebreak is needed. Adds `splitCol` with
+    * values train/val/test.
     *
     * 100 TB shape: rows collapse to per-(group, ts) counts, ONE
     * [[PrefixSum.withKeyedRunningSums]] scan picks both cuts as
@@ -354,7 +353,7 @@ object Splits {
     * |groups|-row cut table broadcasts back onto the data for a pure
     * VALUE comparison. */
   def temporalSplitByGroup(df: DataFrame, groupCol: String, tsCol: String,
-      idCol: String, trainPct: Double = 0.8, valPct: Double = 0.1,
+      trainPct: Double = 0.8, valPct: Double = 0.1,
       splitCol: String = "split"): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct < 1.0,
       s"need 0 < trainPct, 0 <= valPct, trainPct + valPct < 1; " +
@@ -631,7 +630,7 @@ object Splits {
     * even across 60-bit hash collisions. Output: (idCol, shuffle_pos
     * long, 0-based, contiguous). NULL ids drop.
     *
-    * 100 TB shape: the rank is [[PrefixSum.withRunningSums]] over the
+    * 100 TB shape: the rank is [[PrefixSum.withKeyedRunningSums]] over the
     * composite (hash, id) — a range exchange plus a broadcast offset
     * table, never `row_number()` over an unpartitioned window (the
     * single-reducer sort a naive shuffle writes). Writing in
@@ -641,7 +640,7 @@ object Splits {
     val base = df.filter(id.isNotNull)
       .select(id.as("__id"), hashValue60(id, salt).as("__h"),
         lit(1L).as("__one"))
-    PrefixSum.withRunningSums(base, Seq("__h", "__id"), Seq("__one"))
+    PrefixSum.withKeyedRunningSums(base, Nil, Seq("__h", "__id"), Seq("__one"))
       .select(col("__id").as(idCol), (col("cum___one") - 1L).as("shuffle_pos"))
   }
 
@@ -671,7 +670,7 @@ object Splits {
       .select(k.cast("string").as("__k")).distinct()
       .select(hashValue60(col("__k"), salt).as("__h"))
       .groupBy(col("__h")).agg(count(lit(1)).as("__c"))
-    val cum = PrefixSum.withRunningSums(counts, "__h", Seq("__c"))
+    val cum = PrefixSum.withKeyedRunningSums(counts, Nil, Seq("__h"), Seq("__c"))
     val tot = cum.agg(max(col("cum___c")).as("n_keys"))
     cum.crossJoin(broadcast(tot))
       .withColumn("__fref",

@@ -1046,7 +1046,7 @@ object Vocab {
     * across engines — the p07 rule).
     *
     * 100 TB shape: ONE map-side-combinable token count, then the CDF
-    * rides [[PrefixSum.withRunningSums]] (range exchange on the
+    * rides [[PrefixSum.withKeyedRunningSums]] (range exchange on the
     * distinct (−count, term) key + broadcast offsets — never a
     * single-reducer global window); the totals row broadcasts. */
   def negativeSamplingTable(docs: DataFrame, textCol: String): DataFrame = {
@@ -1061,8 +1061,8 @@ object Vocab {
         sqrt(col("count").cast("double") * sqrt(col("count").cast("double")))
           .cast(DecimalType(25, 12)), 9).cast(DecimalType(25, 9)))
       .withColumn("__negc", -col("count"))
-    val cum = PrefixSum.withRunningSums(
-      w, Seq("__negc", "__t"), Seq("__w"))
+    val cum = PrefixSum.withKeyedRunningSums(
+      w, Nil, Seq("__negc", "__t"), Seq("__w"))
     val totals = cum.agg(sum(col("__w")).as("__W"))
     // alias both sides: totals derives from cum, and Spark's self-join
     // dedup would otherwise leave `__w` ambiguous in the final select

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Chain, KeyResolver}
+import graft.operators.{Chain, KeyResolver, Stager}
 import graft.sources.MapFetcher
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicInteger
@@ -130,11 +130,11 @@ class ChainSpec extends SparkSpecBase {
     assert(!graph.isFresh(c1.name))
   }
 
-  test("Chain.staged labels its jobs with the chain's template") {
+  test("Chain.apply labels its jobs with the chain's template") {
     val fetcher = new MapFetcher(Map("http://api/1" -> """{"v":1}""",
       "http://api/2" -> """{"v":2}""", "http://api/3" -> """{"v":3}"""))
-    val ((out, _, cleanup), cost) =
-      withJobs(Chain.staged(base, "http://api/{id}", fetcher, maxSleepMs = 0))
+    val (((out, _), cleanup), cost) = withJobs(Stager.recording(
+      Chain(base, "http://api/{id}", fetcher, maxSleepMs = 0)))
     try {
       assert(cost.jobs > 0)
       assert(cost.stages.forall(_.name.endsWith("[graft chain http://api/{id}]")),

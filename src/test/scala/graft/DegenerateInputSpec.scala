@@ -122,7 +122,7 @@ class DegenerateInputSpec extends SparkSpecBase {
       "doc_id", "source", "s").count() === 0)
     assert(graft.operators.Profile.calibrateByGroup(
       emptyDocs.select($"doc_id", $"source", $"n_chars"),
-      "source", "n_chars", "doc_id").count() === 0)
+      "source", "n_chars").count() === 0)
     assert(graft.operators.Profile.zipfFit(emptyDocs, "source", "text").count() === 0)
     assert(graft.operators.Dedup.nearDupPairsAgainstIndex(
       emptyDocs, emptyDocs, "doc_id", "text").count() === 0)
@@ -165,9 +165,9 @@ class DegenerateInputSpec extends SparkSpecBase {
       Seq.empty[(String, Double, Boolean, Long)].toDF("g", "s", "l", "t"),
       "g", "s", "l", "t").count() === 0L)
     assert(graft.operators.Drift.ksByGroup(eGV, eGV, "g", "v").count() === 0L)
-    assert(graft.operators.Drift.chiSquareByGroup(
+    assert(graft.operators.Drift.chiSquare(
       Seq.empty[(String, String, String)].toDF("g", "a", "b"),
-      "g", "a", "b").count() === 0L)
+      "a", "b", Some("g")).count() === 0L)
     assert(graft.operators.Splits.deterministicShuffle(
       Seq.empty[Long].toDF("id"), "id", "s").count() === 0L)
     // 1-row-contract reports stay 1-row with NULL scores on empty input
@@ -184,6 +184,44 @@ class DegenerateInputSpec extends SparkSpecBase {
     }
     assert(conf.isNullAt(conf.fieldIndex("accuracy")))
     assert(conf.isNullAt(conf.fieldIndex("mcc")))
+  }
+
+  test("global two-sample drift statistics on both-sides-empty input") {
+    import spark.implicits._
+    import graft.operators.Drift
+    val eK = Seq.empty[String].toDF("k")
+    val eV = Seq.empty[Long].toDF("v")
+    // exactly `cols`, one row: the `zeros` columns hold that long, every
+    // other column is NULL
+    def oneRow(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
+        zeros: Map[String, Long]): Unit = {
+      assert(df.columns.toSeq === cols)
+      val rows = df.collect()
+      assert(rows.length === 1, cols.mkString(","))
+      val r = rows.head
+      cols.foreach { c =>
+        zeros.get(c) match {
+          case Some(z) =>
+            assert(!r.isNullAt(r.fieldIndex(c)) && r.getLong(r.fieldIndex(c)) === z, c)
+          case None => assert(r.isNullAt(r.fieldIndex(c)), c)
+        }
+      }
+    }
+    oneRow(Drift.psi(eK, eK, "k", None),
+      Seq("n_a", "n_b", "n_values", "n_only_a", "n_only_b", "psi"),
+      Map("n_a" -> 0L, "n_b" -> 0L, "n_values" -> 0L))
+    // dof is (n_a − 1)(n_b − 1) = 1 over zero distinct values
+    oneRow(Drift.chiSquare(Seq.empty[(String, String)].toDF("a", "b"), "a", "b", None),
+      Seq("n", "n_a", "n_b", "dof", "chi2", "cramers_v"),
+      Map("n" -> 0L, "n_a" -> 0L, "n_b" -> 0L, "dof" -> 1L))
+    oneRow(Drift.mannWhitneyU(eV, eV, "v", None),
+      Seq("n_a", "n_b", "u_a", "u_b", "z", "rank_biserial"), Map.empty)
+    oneRow(Drift.wasserstein1(eV, eV, "v", None),
+      Seq("n_a", "n_b", "n_values", "w1"), Map("n_values" -> 0L))
+    // KS reports where the sup is attained; with no value there is no row
+    val ks = graft.operators.Profile.ksStatistic(eV, eV, "v")
+    assert(ks.columns.toSeq === Seq("n_a", "n_b", "ks", "ks_at"))
+    assert(ks.count() === 0L)
   }
 
   test("round-13 operators tolerate empty input (operator-level APIs)") {
@@ -287,7 +325,7 @@ class DegenerateInputSpec extends SparkSpecBase {
       df.filter($"g".isNull), "g", "v").count() === 0L,
       "an all-NULL-group frame yields an empty report")
     // the same contract on the operators that share the keyed machinery
-    assert(graft.operators.Profile.trimmedMeanByGroup(df, "g", "v", "id", 100000L)
+    assert(graft.operators.Profile.trimmedMeanByGroup(df, "g", "v", 100000L)
       .collect().map(_.getString(0)).toSeq === Seq("g"))
     assert(graft.operators.Profile.iqrOutlierStatsByGroup(df, "g", "v")
       .collect().map(_.getString(0)).toSeq === Seq("g"))

@@ -11,7 +11,7 @@ class DriftSpec extends SparkSpecBase {
   test("psi: identical mixes score zero") {
     val a = Seq("x", "x", "y", "z").toDF("k")
     val b = Seq("x", "x", "y", "z").toDF("k")
-    val r = Drift.psi(a, b, "k").head()
+    val r = Drift.psi(a, b, "k", None).head()
     assert(r.getAs[Long]("n_a") === 4L)
     assert(r.getAs[Long]("n_b") === 4L)
     assert(r.getAs[Long]("n_values") === 3L)
@@ -26,7 +26,7 @@ class DriftSpec extends SparkSpecBase {
       .union(Seq.fill(2)("y").map(Tuple1(_)).toDF("k"))
     val b = Seq.fill(5)("x").map(Tuple1(_)).toDF("k")
       .union(Seq.fill(5)("y").map(Tuple1(_)).toDF("k"))
-    val got = Drift.psi(a, b, "k").head().getAs[Double]("psi")
+    val got = Drift.psi(a, b, "k", None).head().getAs[Double]("psi")
     def t9(x: Double) = BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
     def ln9(x: Double) =
       BigDecimal(math.log(x)).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -38,7 +38,7 @@ class DriftSpec extends SparkSpecBase {
   test("psi: one-sided values clamp to eps and stay finite") {
     val a = Seq("x", "x", "x", "w").toDF("k")
     val b = Seq("x", "x", "v", "v").toDF("k")
-    val r = Drift.psi(a, b, "k").head()
+    val r = Drift.psi(a, b, "k", None).head()
     assert(r.getAs[Long]("n_only_a") === 1L) // w
     assert(r.getAs[Long]("n_only_b") === 1L) // v
     val psi = r.getAs[Double]("psi")
@@ -48,7 +48,7 @@ class DriftSpec extends SparkSpecBase {
   test("psi: NULL keys drop; empty side yields NULL psi with zero total") {
     val a = Seq(Some("x"), None, Some("y")).toDF("k")
     val b = Seq(Option.empty[String]).toDF("k")
-    val r = Drift.psi(a, b, "k").head()
+    val r = Drift.psi(a, b, "k", None).head()
     assert(r.getAs[Long]("n_a") === 2L)
     assert(r.getAs[Long]("n_b") === 0L)
     assert(r.isNullAt(r.fieldIndex("psi")))
@@ -60,7 +60,7 @@ class DriftSpec extends SparkSpecBase {
     // 10 rows in each of the 4 cells: expected == observed everywhere
     val rows = for { a <- Seq("p", "q"); b <- Seq("u", "v"); _ <- 1 to 10 }
       yield (a, b)
-    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b").head()
+    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b", None).head()
     assert(r.getAs[Long]("n") === 40L)
     assert(r.getAs[Long]("dof") === 1L)
     assert(r.getAs[Double]("chi2") === 0.0)
@@ -71,7 +71,7 @@ class DriftSpec extends SparkSpecBase {
     // cells: (p,u)=8, (p,v)=2, (q,u)=0 <- zero-observed, (q,v)=6; n=16
     val rows = Seq.fill(8)(("p", "u")) ++ Seq.fill(2)(("p", "v")) ++
       Seq.fill(6)(("q", "v"))
-    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b").head()
+    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b", None).head()
     def term(o: Double, rt: Double, ct: Double, n: Double) = {
       val d = o * n - rt * ct
       BigDecimal(d * d / (rt * ct * n))
@@ -88,7 +88,7 @@ class DriftSpec extends SparkSpecBase {
 
   test("chiSquare: single-valued column yields dof 0 and NULL statistics") {
     val rows = Seq(("p", "u"), ("p", "v"), ("p", "u"))
-    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b").head()
+    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b", None).head()
     assert(r.getAs[Long]("dof") === 0L)
     assert(r.isNullAt(r.fieldIndex("chi2")))
     assert(r.isNullAt(r.fieldIndex("cramers_v")))
@@ -97,7 +97,7 @@ class DriftSpec extends SparkSpecBase {
   test("chiSquare: rows with a NULL on either side drop from n") {
     val rows = Seq((Some("p"), Some("u")), (None, Some("v")),
       (Some("q"), None), (Some("q"), Some("v")))
-    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b").head()
+    val r = Drift.chiSquare(rows.toDF("a", "b"), "a", "b", None).head()
     assert(r.getAs[Long]("n") === 2L)
   }
 
@@ -173,7 +173,7 @@ class DriftSpec extends SparkSpecBase {
     // a = {1,2,3}, b = {4,5,6}: ranks a = 1,2,3 so U_a = 6 - 6 = 0
     val a = Seq(1L, 2L, 3L).toDF("v")
     val b = Seq(4L, 5L, 6L).toDF("v")
-    val r = Drift.mannWhitneyU(a, b, "v").head()
+    val r = Drift.mannWhitneyU(a, b, "v", None).head()
     assert(r.getAs[Double]("u_a") === 0.0)
     assert(r.getAs[Double]("u_b") === 9.0)
     assert(r.getAs[Double]("rank_biserial") === -1.0)
@@ -186,7 +186,7 @@ class DriftSpec extends SparkSpecBase {
     // R_a = 1 + 3 + 3 = 7, U_a = 7 - 6 = 1
     val a = Seq(1L, 2L, 2L).toDF("v")
     val b = Seq(2L, 3L).toDF("v")
-    val r = Drift.mannWhitneyU(a, b, "v").head()
+    val r = Drift.mannWhitneyU(a, b, "v", None).head()
     assert(r.getAs[Double]("u_a") === 1.0)
     assert(r.getAs[Double]("u_b") === 5.0)
     // sigma^2 = (6/12) * (6 - 24/20) = 0.5 * 4.8 = 2.4
@@ -198,7 +198,7 @@ class DriftSpec extends SparkSpecBase {
   test("mannWhitneyU: identical samples give centered U and NULL-safe z") {
     val a = Seq(5L, 5L, 5L).toDF("v")
     val b = Seq(5L, 5L, 5L).toDF("v")
-    val r = Drift.mannWhitneyU(a, b, "v").head()
+    val r = Drift.mannWhitneyU(a, b, "v", None).head()
     assert(r.getAs[Double]("u_a") === 4.5) // n1*n2/2, a half-integer
     // all values tie -> variance 0 -> z undefined
     assert(r.isNullAt(r.fieldIndex("z")))
@@ -207,14 +207,14 @@ class DriftSpec extends SparkSpecBase {
   test("mannWhitneyU: u_a + u_b = n_a * n_b on a mixed fixture") {
     val a = Seq(3L, 1L, 4L, 1L, 5L, 9L, 2L, 6L).toDF("v")
     val b = Seq(2L, 7L, 1L, 8L, 2L, 8L).toDF("v")
-    val r = Drift.mannWhitneyU(a, b, "v").head()
+    val r = Drift.mannWhitneyU(a, b, "v", None).head()
     assert(r.getAs[Double]("u_a") + r.getAs[Double]("u_b") === 48.0)
   }
 
   test("mannWhitneyU: empty side yields NULL statistics") {
     val a = Seq(1L, 2L).toDF("v")
     val b = Seq.empty[Long].toDF("v")
-    val r = Drift.mannWhitneyU(a, b, "v").head()
+    val r = Drift.mannWhitneyU(a, b, "v", None).head()
     assert(r.getAs[Long]("n_b") === 0L)
     assert(r.isNullAt(r.fieldIndex("u_a")))
     assert(r.isNullAt(r.fieldIndex("z")))
@@ -225,7 +225,7 @@ class DriftSpec extends SparkSpecBase {
   test("wasserstein1: pure shift of equal-size samples is the shift") {
     val a = Seq(1L, 2L, 3L).toDF("v")
     val b = Seq(4L, 5L, 6L).toDF("v")
-    val r = Drift.wasserstein1(a, b, "v").head()
+    val r = Drift.wasserstein1(a, b, "v", None).head()
     assert(r.getAs[Long]("n_a") === 3L)
     assert(r.getAs[Long]("n_b") === 3L)
     assert(r.getAs[Long]("n_values") === 6L)
@@ -235,20 +235,20 @@ class DriftSpec extends SparkSpecBase {
   test("wasserstein1: identical distributions score zero") {
     val a = Seq(1L, 5L, 5L, 9L).toDF("v")
     val b = Seq(1L, 5L, 5L, 9L).toDF("v")
-    assert(Drift.wasserstein1(a, b, "v").head().getAs[Double]("w1") === 0.0)
+    assert(Drift.wasserstein1(a, b, "v", None).head().getAs[Double]("w1") === 0.0)
   }
 
   test("wasserstein1: two-point unequal masses, hand-computed") {
     // F_a(0)=3/4, F_b(0)=1/4 over segment [0,10): W1 = (1/2)*10 = 5
     val a = Seq(0L, 0L, 0L, 10L).toDF("v")
     val b = Seq(0L, 10L, 10L, 10L).toDF("v")
-    assert(Drift.wasserstein1(a, b, "v").head().getAs[Double]("w1") === 5.0)
+    assert(Drift.wasserstein1(a, b, "v", None).head().getAs[Double]("w1") === 5.0)
   }
 
   test("wasserstein1: single shared value gives zero (no segments)") {
     val a = Seq(7L, 7L).toDF("v")
     val b = Seq(7L).toDF("v")
-    val r = Drift.wasserstein1(a, b, "v").head()
+    val r = Drift.wasserstein1(a, b, "v", None).head()
     assert(r.getAs[Long]("n_values") === 1L)
     assert(r.getAs[Double]("w1") === 0.0)
   }
@@ -256,7 +256,7 @@ class DriftSpec extends SparkSpecBase {
   test("wasserstein1: empty side yields NULL; NULL values drop") {
     val a = Seq[Option[Long]](Some(1L), None).toDF("v")
     val b = Seq.empty[Long].toDF("v")
-    val r = Drift.wasserstein1(a, b, "v").head()
+    val r = Drift.wasserstein1(a, b, "v", None).head()
     assert(r.getAs[Long]("n_a") === 1L)
     assert(r.getAs[Long]("n_b") === 0L)
     assert(r.isNullAt(r.fieldIndex("w1")))
@@ -381,12 +381,12 @@ class DriftSpec extends SparkSpecBase {
       .map { case (g, v) => (g, v.toLong) }.toDF("g", "v")
     val b = (Seq.fill(20)("g1").zip(6 to 25) ++ Seq.fill(15)("g2").zip(1 to 15))
       .map { case (g, v) => (g, v.toLong) }.toDF("g", "v")
-    val grouped = Drift.mannWhitneyByGroup(a, b, "g", "v").collect()
+    val grouped = Drift.mannWhitneyU(a, b, "v", Some("g")).collect()
       .map(r => r.getAs[String]("g") -> r).toMap
     for (g <- Seq("g1", "g2")) {
       val ref = Drift.mannWhitneyU(
         a.filter(col("g") === g).select("v"),
-        b.filter(col("g") === g).select("v"), "v").head()
+        b.filter(col("g") === g).select("v"), "v", None).head()
       for (c <- Seq("u_a", "u_b", "z", "rank_biserial")) {
         val (x, y) = (grouped(g), ref)
         assert(x.isNullAt(x.fieldIndex(c)) === y.isNullAt(y.fieldIndex(c)), s"$g.$c null")
@@ -402,12 +402,12 @@ class DriftSpec extends SparkSpecBase {
       .map { case (g, v) => (g, v.toLong) }.toDF("g", "v")
     val b = (Seq.fill(10)("g1").zip(4 to 13) ++ Seq.fill(8)("g2").zip(3 to 10))
       .map { case (g, v) => (g, v.toLong) }.toDF("g", "v")
-    val grouped = Drift.wasserstein1ByGroup(a, b, "g", "v").collect()
+    val grouped = Drift.wasserstein1(a, b, "v", Some("g")).collect()
       .map(r => r.getAs[String]("g") -> r.getAs[Double]("w1")).toMap
     for (g <- Seq("g1", "g2")) {
       val ref = Drift.wasserstein1(
         a.filter(col("g") === g).select("v"),
-        b.filter(col("g") === g).select("v"), "v").head().getAs[Double]("w1")
+        b.filter(col("g") === g).select("v"), "v", None).head().getAs[Double]("w1")
       assert(grouped(g) === ref, s"w1 $g")
     }
     assert(grouped("g2") === 0.0)
@@ -419,11 +419,11 @@ class DriftSpec extends SparkSpecBase {
       Seq.fill(5)(("g2", "fr")) ++ Seq(("solo", "en"))).toDF("g", "k")
     val b = (Seq.fill(10)(("g1", "en")) ++ Seq.fill(30)(("g1", "de")) ++
       Seq.fill(5)(("g2", "fr"))).toDF("g", "k")
-    val grouped = Drift.psiByGroup(a, b, "g", "k").collect()
+    val grouped = Drift.psi(a, b, "k", Some("g")).collect()
       .map(r => r.getAs[String]("g") -> r).toMap
     for (g <- Seq("g1", "g2")) {
       val ref = Drift.psi(a.filter(col("g") === g).select("k"),
-        b.filter(col("g") === g).select("k"), "k").head()
+        b.filter(col("g") === g).select("k"), "k", None).head()
       assert(grouped(g).getAs[Double]("psi") === ref.getAs[Double]("psi"), g)
     }
     assert(grouped("solo").isNullAt(grouped("solo").fieldIndex("psi")))
@@ -451,10 +451,10 @@ class DriftSpec extends SparkSpecBase {
       Seq.fill(10)(("g1", "de", "x")) ++ Seq.fill(40)(("g1", "de", "y")) ++
       Seq.fill(20)(("g2", "en", "x")) ++ Seq.fill(20)(("g2", "de", "y"))
       ).toDF("g", "a", "b")
-    val grouped = Drift.chiSquareByGroup(df, "g", "a", "b").collect()
+    val grouped = Drift.chiSquare(df, "a", "b", Some("g")).collect()
       .map(r => r.getAs[String]("g") -> r).toMap
     for (g <- Seq("g1", "g2")) {
-      val ref = Drift.chiSquare(df.filter(col("g") === g), "a", "b").head()
+      val ref = Drift.chiSquare(df.filter(col("g") === g), "a", "b", None).head()
       assert(grouped(g).getAs[Long]("n") === ref.getAs[Long]("n"), g)
       assert(grouped(g).getAs[Double]("chi2") === ref.getAs[Double]("chi2"), g)
       assert(grouped(g).getAs[Double]("cramers_v") ===

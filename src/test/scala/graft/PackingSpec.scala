@@ -51,7 +51,7 @@ class PackingSpec extends SparkSpecBase {
       (5L, 250L),                      // cum-before 170 -> bin 1, oversize
       (6L, 10L)                        // cum-before 420 -> bin 4
     ).toDF("doc_id", "n_tokens")
-    val got = Packing.assignBins(df, "doc_id", "n_tokens", 100L, allowGlobal = true)
+    val got = Packing.assignBins(df, "doc_id", "n_tokens", 100L)
       .orderBy("doc_id").select("doc_id", "bin", "oversize")
       .as[(Long, Long, Boolean)].collect().toSeq
     assert(got === Seq(
@@ -72,15 +72,15 @@ class PackingSpec extends SparkSpecBase {
   test("guard rails: bad budget, colliding output column; global needs no opt-in since r13") {
     val df = Seq((1L, 10L)).toDF("doc_id", "n_tokens")
     intercept[IllegalArgumentException] {
-      Packing.assignBins(df, "doc_id", "n_tokens", 0L, allowGlobal = true)
+      Packing.assignBins(df, "doc_id", "n_tokens", 0L)
     }
     // the r13 distributed global path (range-exchange prefix sum)
-    // removed the single-reducer hazard allowGlobal used to guard
+    // removed the single-reducer hazard a global opt-in used to guard
     assert(Packing.assignBins(df, "doc_id", "n_tokens", 100L)
       .select("bin").as[Long].head() === 0L)
     val clash = df.withColumn("bin", lit(1))
     intercept[IllegalArgumentException] {
-      Packing.assignBins(clash, "doc_id", "n_tokens", 100L, allowGlobal = true)
+      Packing.assignBins(clash, "doc_id", "n_tokens", 100L)
     }
   }
 

@@ -342,7 +342,7 @@ class PlanAuditSpec extends SparkSpecBase {
     val out = graft.operators.Profile.calibrateByGroup(
       docs.select(col("doc_id"), col("source"),
         length(col("text")).cast("long").as("len")),
-      "source", "len", "doc_id")
+      "source", "len")
     val plan = out.queryExecution.executedPlan.toString
     // keyed-PrefixSum shape: data windows partition by (__psid, __g);
     // a `windowspecdefinition(__g#…, __v…)` (or a percent_rank window
@@ -576,7 +576,7 @@ class PlanAuditSpec extends SparkSpecBase {
       .filter(col("n_chars").isNotNull)
     val out = graft.operators.Drift.wasserstein1(
       docs.filter(col("lang") === "en").select(col("n_chars")),
-      docs.filter(col("lang") =!= "en").select(col("n_chars")), "n_chars")
+      docs.filter(col("lang") =!= "en").select(col("n_chars")), "n_chars", None)
     val plan = out.queryExecution.executedPlan.toString
     // consecutive-value segments come from joining rank i with rank i+1 —
     // a key-partitioned shuffle, not a single-reducer lead window
@@ -695,7 +695,7 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(!rs.matches("(?s).*windowspecdefinition\\(source#\\d+.*"), rs)
     assert(rs.contains("cum___c"), rs)
     val tm = graft.operators.Profile.trimmedMeanByGroup(
-        docs, "source", "n_chars", "doc_id", 100000L)
+        docs, "source", "n_chars", 100000L)
       .queryExecution.executedPlan.toString
     assert(!tm.matches("(?s).*windowspecdefinition\\(__g#\\d+, __v.*"), tm)
     assert(!tm.matches("(?s).*windowspecdefinition\\(source#\\d+.*"), tm)

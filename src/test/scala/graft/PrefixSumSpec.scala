@@ -10,7 +10,7 @@ class PrefixSumSpec extends SparkSpecBase {
     val df = (1 to 500).map(i => (i.toLong * 3L, (i % 7).toLong, (i % 11).toLong))
       .toDF("k", "x", "y")
       .repartition(13) // scatter before the range exchange
-    val got = PrefixSum.withRunningSums(df, "k", Seq("x", "y"))
+    val got = PrefixSum.withKeyedRunningSums(df, Nil, Seq("k"), Seq("x", "y"))
       .select("k", "cum_x", "cum_y").as[(Long, Long, Long)].collect()
       .map { case (k, x, y) => k -> ((x, y)) }.toMap
     var (cx, cy) = (0L, 0L)
@@ -32,7 +32,7 @@ class PrefixSumSpec extends SparkSpecBase {
       val df = (1 to 10000).map(i => (i.toLong, 1L)).toDF("k", "x")
       val parts = df.repartitionByRange(col("k")).rdd.getNumPartitions
       assert(parts > 1, "range exchange must fan out with coalescing off")
-      val out = PrefixSum.withRunningSums(df, "k", Seq("x"))
+      val out = PrefixSum.withKeyedRunningSums(df, Nil, Seq("k"), Seq("x"))
       assert(out.filter(col("cum_x") === col("k")).count() === 10000L,
         "cum of all-ones over ascending keys is the rank itself")
     } finally spark.conf.set(key, old)
@@ -40,9 +40,9 @@ class PrefixSumSpec extends SparkSpecBase {
 
   test("withRunningSums handles an empty frame and a single row") {
     val empty = Seq.empty[(Long, Long)].toDF("k", "x")
-    assert(PrefixSum.withRunningSums(empty, "k", Seq("x")).count() === 0L)
+    assert(PrefixSum.withKeyedRunningSums(empty, Nil, Seq("k"), Seq("x")).count() === 0L)
     val one = Seq((5L, 42L)).toDF("k", "x")
-    val r = PrefixSum.withRunningSums(one, "k", Seq("x")).head()
+    val r = PrefixSum.withKeyedRunningSums(one, Nil, Seq("k"), Seq("x")).head()
     assert(r.getAs[Long]("cum_x") === 42L)
   }
 

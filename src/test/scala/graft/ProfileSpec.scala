@@ -164,7 +164,7 @@ class ProfileSpec extends SparkSpecBase {
   test("trimmedMeanByGroup: hand-computed 10% trim with an outlier") {
     val df = ((1 to 9).map(v => ("g", v.toLong, v.toDouble)) :+
       (("g", 10L, 1000.0))).toDF("src", "id", "v")
-    val r = Profile.trimmedMeanByGroup(df, "src", "v", "id", 100000L).head()
+    val r = Profile.trimmedMeanByGroup(df, "src", "v", 100000L).head()
     assert(r.getAs[Long]("n") === 10L)
     assert(r.getAs[Long]("n_tail") === 1L)
     assert(r.getAs[Double]("mean") === 104.5)
@@ -178,7 +178,7 @@ class ProfileSpec extends SparkSpecBase {
       (Some("a"), 1L, Some(10.0)), (Some("a"), 2L, Some(50.0)),
       (Some("a"), 3L, None), (None, 4L, Some(9.0)),
       (Some("b"), 5L, Some(7.0))).toDF("src", "id", "v")
-    val out = Profile.trimmedMeanByGroup(df, "src", "v", "id", 100000L)
+    val out = Profile.trimmedMeanByGroup(df, "src", "v", 100000L)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(out.keySet === Set("a", "b"))
     val a = out("a")
@@ -186,7 +186,7 @@ class ProfileSpec extends SparkSpecBase {
     assert(a.getAs[Double]("trimmed_mean") === 30.0)
     assert(a.getAs[Double]("winsorized_mean") === 30.0)
     intercept[IllegalArgumentException] {
-      Profile.trimmedMeanByGroup(df, "src", "v", "id", 500000L)
+      Profile.trimmedMeanByGroup(df, "src", "v", 500000L)
     }
   }
 
@@ -301,7 +301,7 @@ class ProfileSpec extends SparkSpecBase {
     val df = (Seq((1L, "g", 10L), (2L, "g", 20L), (3L, "g", 30L),
       (4L, "g", 40L), (5L, "g", 100L)) ++
       (1 to 3).map(i => (10L + i, "c", 7L))).toDF("id", "src", "v")
-    val byId = Profile.calibrateByGroup(df, "src", "v", "id")
+    val byId = Profile.calibrateByGroup(df, "src", "v")
       .select("id", "pct_rank", "z_robust").collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
@@ -315,7 +315,7 @@ class ProfileSpec extends SparkSpecBase {
   test("calibrateByGroup: tied values share pct_rank; z is per-GROUP, not global") {
     val df = Seq((1L, "a", 5L), (2L, "a", 5L), (3L, "a", 9L),
       (4L, "b", 1000L), (5L, "b", 2000L), (6L, "b", 3000L)).toDF("id", "src", "v")
-    val byId = Profile.calibrateByGroup(df, "src", "v", "id")
+    val byId = Profile.calibrateByGroup(df, "src", "v")
       .select("id", "pct_rank", "z_robust").collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap

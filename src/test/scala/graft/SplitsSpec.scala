@@ -315,12 +315,12 @@ class SplitsSpec extends SparkSpecBase {
   test("temporalSplitByGroup: past->train, near future->val, far future->test, per group") {
     val df = (1 to 10).map(i => ("g", f"2024-01-${i}%02d 00:00:00", i.toLong))
       .toDF("grp", "ts_s", "id").withColumn("ts", to_timestamp(col("ts_s")))
-    val got = Splits.temporalSplitByGroup(df, "grp", "ts", "id", 0.8, 0.1)
+    val got = Splits.temporalSplitByGroup(df, "grp", "ts", 0.8, 0.1)
       .select("id", "split").as[(Long, String)].collect().toMap
     assert((1L to 8L).forall(got(_) === "train"))
     assert(got(9L) === "val" && got(10L) === "test")
     // every train ts precedes every val ts precedes every test ts — the leak guarantee
-    val byTs = Splits.temporalSplitByGroup(df, "grp", "ts", "id", 0.8, 0.1)
+    val byTs = Splits.temporalSplitByGroup(df, "grp", "ts", 0.8, 0.1)
       .select(col("ts").cast("long"), col("split")).as[(Long, String)].collect()
     val maxTrain = byTs.filter(_._2 == "train").map(_._1).max
     val valTs = byTs.filter(_._2 == "val").map(_._1)
@@ -337,7 +337,7 @@ class SplitsSpec extends SparkSpecBase {
       ("g", None: Option[String], 5L))
       .toDF("grp", "ts_s", "id").withColumn("ts", to_timestamp(col("ts_s")))
     // n=4, train rank ceil(0.5*4)=2 -> cut = 01-02; BOTH tied rows are train
-    val got = Splits.temporalSplitByGroup(df, "grp", "ts", "id", 0.5, 0.25)
+    val got = Splits.temporalSplitByGroup(df, "grp", "ts", 0.5, 0.25)
       .select("id", "split").as[(Long, String)].collect().toMap
     assert(got === Map(1L -> "train", 2L -> "train", 3L -> "train", 4L -> "test"))
   }
@@ -347,12 +347,12 @@ class SplitsSpec extends SparkSpecBase {
       ("a", "2024-01-01 00:00:00", 1L), ("a", "2024-06-01 00:00:00", 2L),
       ("b", "2025-01-01 00:00:00", 3L), ("b", "2025-06-01 00:00:00", 4L))
       .toDF("grp", "ts_s", "id").withColumn("ts", to_timestamp(col("ts_s")))
-    val got = Splits.temporalSplitByGroup(df, "grp", "ts", "id", 0.5, 0.25)
+    val got = Splits.temporalSplitByGroup(df, "grp", "ts", 0.5, 0.25)
       .select("id", "split").as[(Long, String)].collect().toMap
     assert(got(1L) === "train" && got(3L) === "train",
       "each group's own first half is train, regardless of absolute time")
     intercept[IllegalArgumentException] {
-      Splits.temporalSplitByGroup(df, "grp", "ts", "id", 0.9, 0.2)
+      Splits.temporalSplitByGroup(df, "grp", "ts", 0.9, 0.2)
     }
   }
 

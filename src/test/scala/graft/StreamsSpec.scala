@@ -646,7 +646,7 @@ class StreamsSpec extends SparkSpecBase {
         Seq.fill(n.toInt)(v) }.toDF("k")
       for (key <- Seq("s1", "s2")) {
         val slice = rows.filter(_._1 == key).map(_._2).toDF("k")
-        val b = graft.operators.Drift.psi(slice, baseDf, "k").head()
+        val b = graft.operators.Drift.psi(slice, baseDf, "k", None).head()
         val s = streamed(key)
         assert(s.n_seen === b.getAs[Long]("n_a"), s"$key n")
         assert(s.n_values === b.getAs[Long]("n_values"), s"$key values")
@@ -766,7 +766,7 @@ class StreamsSpec extends SparkSpecBase {
         Seq.fill(n.toInt)(v) }.toDF("v")
       for (key <- Seq("k1", "k2")) {
         val slice = rows.filter(_._1 == key).map(_._2.longValue).toDF("v")
-        val b = graft.operators.Drift.wasserstein1(slice, baseDf, "v").head()
+        val b = graft.operators.Drift.wasserstein1(slice, baseDf, "v", None).head()
         val s = streamed(key)
         assert(s.n_seen === b.getAs[Long]("n_a"), s"$key n")
         assert(s.n_values === b.getAs[Long]("n_values"), s"$key values")

@@ -8,6 +8,11 @@
 #   3. tools/oracle_check.py     (local DuckDB stand-in for the driver gate)
 #
 # Exit 0 iff all three pass. Usage: tools/gate.sh [sfDir] [outDir]
+#
+# A change that must move no plan also diffs every gate's physical plan
+# against the parent commit's, run in a second checkout of it:
+#   sbt -batch "runMain graft.Explain $SF_DIR" > plans.txt   # in each checkout
+#   python3 tools/plan_norm.py parent/plans.txt plans.txt    # gates that differ
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
