@@ -41,14 +41,16 @@ object Measure {
     * `Dataset.unpersist` is a no-op for localCheckpoint blocks, so the
     * persistent-RDD delta is the only handle that works for every
     * stager. RDDs persisted before `body` are never touched: a standing
-    * localCheckpoint has no lineage to recompute from. */
+    * localCheckpoint has no lineage to recompute from. Frees through
+    * [[org.apache.spark.sql.graft.Storage.unpersist]], which skips the
+    * "cannot be recomputed" WARN every freed localCheckpoint would log. */
   def releasing[T](spark: SparkSession, blocking: Boolean = false)(body: => T): T = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     try body
     finally sc.getPersistentRDDs
       .filter { case (id, _) => !before.contains(id) }
-      .values.foreach(_.unpersist(blocking))
+      .values.foreach(org.apache.spark.sql.graft.Storage.unpersist(_, blocking))
   }
 
   /** Median as the lower-middle order statistic (odd N: the true middle). */

@@ -17,7 +17,13 @@ import graft.sources.Fetcher
   *   (a) URL build    -> a single concat() Catalyst expression per row
   *   (b) fetch        -> distinct URLs only (mirrors the reference's
   *                       per-URL cache, magictable.py:355-366), fetched in
-  *                       mapPartitions on EXECUTORS via the injected Fetcher
+  *                       mapPartitions on EXECUTORS via the injected Fetcher,
+  *                       up to Fetcher.MaxInFlight URLs of a partition at a
+  *                       time (the reference's asyncio.gather,
+  *                       magictable.py:371-373); each URL's cache read,
+  *                       fetch with its own retry backoff, cache write and
+  *                       flattening run as one unit, and the lines keep
+  *                       URL order
   *   (c) re-join      -> left equi-join on __url (duplicate URLs across rows
   *                       reuse one fetch; empty/failed responses keep the
   *                       row with all-null api_* — magictable.py:340,389)
@@ -53,8 +59,9 @@ object Chain {
     if (parts.isEmpty) lit(template) else concat(parts.toSeq: _*)
   }
 
-  /** Fetch each distinct URL (executor-side), returning one JSON line per
-    * response ELEMENT: {"__url": u, "resp": <element>}. A failed or empty
+  /** Fetch each distinct URL (executor-side, [[Fetcher.concurrently]]),
+    * returning one JSON line per response ELEMENT:
+    * {"__url": u, "resp": <element>}. A failed or empty
     * fetch emits {"__url": u} so the later left join keeps provenance
     * explicit. List responses fan out 1..N; object responses yield 1.
     */
@@ -72,7 +79,7 @@ object Chain {
       urls.sparkSession.sparkContext.hadoopConfiguration)
     urls.mapPartitions { it =>
       val conf = hconf.value
-      it.flatMap { url =>
+      Fetcher.concurrently(it) { url =>
         val cached = urlCacheDir.flatMap(dir => graft.sources.UrlDiskCache.get(dir, url, conf))
         val body = cached.orElse {
           val fetched = fetcher.fetchWithRetry(url, maxSleepMs = maxSleepMs)
@@ -87,9 +94,9 @@ object Chain {
           case Some(v) => graft.core.JsonFlatten.flattenValue(v)
           case None => Seq.empty
         }
-        if (flatRows.isEmpty) Iterator.single(Jsons.render(Map("__url" -> url)))
-        else flatRows.iterator.map(r => Jsons.render(Map("__url" -> url, "resp" -> r)))
-      }
+        if (flatRows.isEmpty) Seq(Jsons.render(Map("__url" -> url)))
+        else flatRows.map(r => Jsons.render(Map("__url" -> url, "resp" -> r)))
+      }.flatten
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType}
 
 /** Distributed running sums over a global or per-group ordering — the
   * cumulative scan behind CDF/rank machinery ([[Profile.ksStatistic]],
@@ -82,18 +83,20 @@ object PrefixSum {
       d.withColumn(s"cum_$c", sum(col(s"`$c`")).over(wp))
     }
     // per-(partition, group) totals: ≤ numPartitions + |groups| − 1 rows
-    // (groups are contiguous under the composite range sort); the window
-    // below partitions by group and orders PARTITION IDS, never data
-    val wo = Window.partitionBy(keys: _*).orderBy(col("__psid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sumCols.foldLeft(
-      parted.groupBy(col("__psid") +: keys: _*)
-        .agg(sum(col(s"`${sumCols.head}`")).as(s"__t_${sumCols.head}"),
-          sumCols.tail.map(c => sum(col(s"`$c`")).as(s"__t_$c")): _*)) {
-      (d, c) =>
-        d.withColumn(s"__o_$c",
-          coalesce(sum(col(s"__t_$c")).over(wo), lit(0L)))
-    }.select((col("__psid") +: keys) ++ sumCols.map(c => col(s"__o_$c")): _*)
+    // (groups are contiguous under the composite range sort)
+    val totals = parted.groupBy(col("__psid") +: keys: _*)
+      .agg(sum(col(s"`${sumCols.head}`")).as(s"__t_${sumCols.head}"),
+        sumCols.tail.map(c => sum(col(s"`$c`")).as(s"__t_$c")): _*)
+    val offsets =
+      if (keyCols.isEmpty) globalOffsets(totals, sumCols.map(c => c -> local.schema(s"cum_$c").dataType))
+      else {
+        // partitions by group and orders PARTITION IDS, never data
+        val wo = Window.partitionBy(keys: _*).orderBy(col("__psid"))
+          .rowsBetween(Window.unboundedPreceding, -1)
+        sumCols.foldLeft(totals) { (d, c) =>
+          d.withColumn(s"__o_$c", coalesce(sum(col(s"__t_$c")).over(wo), lit(0L)))
+        }.select((col("__psid") +: keys) ++ sumCols.map(c => col(s"__o_$c")): _*)
+      }
     sumCols.foldLeft(
       local.join(broadcast(offsets), "__psid" +: keyCols)) { (d, c) =>
         // cast the offset DOWN to the local running-sum type before the
@@ -107,5 +110,32 @@ object PrefixSum {
           col(s"cum_$c") + col(s"__o_$c").cast(local.schema(s"cum_$c").dataType))
           .drop(s"__o_$c")
     }.drop("__psid")
+  }
+
+  /** The offsets of a global scan (no group key): its ≤ numPartitions
+    * partition totals gather into ONE array sorted by partition id, and a
+    * left fold over it appends each partition's exclusive running sum —
+    * the additions a running-sum window over the totals makes, in the same
+    * order, so DOUBLE offsets are bit-identical. A window with no
+    * partition key would do the same work but logs WindowExec's
+    * "No Partition Defined" WARN at every planning of every plan that
+    * holds it, burying the WARN where a window over DATA collapses onto
+    * one reducer. Each offset is kept at its local running sum's type. */
+  private def globalOffsets(totals: DataFrame, sumTypes: Seq[(String, DataType)]): DataFrame = {
+    val rows = col("__rows")
+    val folded = sumTypes.map { case (c, t) =>
+      val zero = lit(0).cast(t)
+      // element i: offset i−1 plus total i−1 (zero for partition 0)
+      aggregate(rows, array().cast(ArrayType(t)), (acc, _) => {
+        val prev = size(acc) - 1
+        array_append(acc, (coalesce(get(acc, prev), zero) +
+          coalesce(get(rows, prev).getField(s"__t_$c"), zero)).cast(t))
+      }).as(s"__o_$c")
+    }
+    totals.agg(sort_array(collect_list(struct(
+        col("__psid") +: sumTypes.map { case (c, _) => col(s"__t_$c") }: _*))).as("__rows"))
+      .select(rows +: folded: _*)
+      .select(inline(transform(rows, (r, i) => struct(r.getField("__psid").as("__psid") +:
+        sumTypes.map { case (c, _) => get(col(s"__o_$c"), i).as(s"__o_$c") }: _*))))
   }
 }

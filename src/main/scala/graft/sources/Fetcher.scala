@@ -1,7 +1,10 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{ExecutionException, Executors, Future, ThreadFactory}
+import scala.collection.mutable
 import scala.util.Random
+import org.apache.spark.TaskContext
 
 /** Transport abstraction for everything the reference fetches over HTTPS
   * (API pages, web pages, PDFs, chain fan-out URLs). The build/test
@@ -39,6 +42,52 @@ trait Fetcher extends Serializable {
       }
     }
     None
+  }
+}
+
+object Fetcher {
+
+  /** Most per-URL units in flight in one task: enough to overlap a
+    * partition's round trips, few enough that a wide partition never opens
+    * thousands of connections — or starts thousands of threads — at once. */
+  val MaxInFlight = 16
+
+  /** THE multi-URL fetch path (the reference's `asyncio.gather`,
+    * magictable.py:371-373): runs `unit` — a URL's fetch and whatever
+    * belongs to it (cache read and write, flattening) — on up to
+    * [[MaxInFlight]] URLs at a time, and yields the results in URL order.
+    * A unit's exception is rethrown when its result is reached, so it
+    * fails the task as a serial loop would. The pool stops when the last
+    * result is taken and, inside a task, when the task completes (success,
+    * failure or kill): a cancelled task interrupts fetches asleep in
+    * backoff rather than leaving them to run out. */
+  def concurrently[T](urls: Iterator[String])(unit: String => T): Iterator[T] = {
+    val pool = Executors.newFixedThreadPool(MaxInFlight, daemonThreads)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => pool.shutdownNow()))
+    val inFlight = mutable.Queue.empty[Future[T]]
+    def fill(): Unit =
+      while (inFlight.size < MaxInFlight && urls.hasNext) {
+        val url = urls.next()
+        inFlight.enqueue(pool.submit(() => unit(url)))
+      }
+    new Iterator[T] {
+      override def hasNext: Boolean = {
+        fill()
+        if (inFlight.isEmpty) pool.shutdown()
+        inFlight.nonEmpty
+      }
+      override def next(): T = {
+        if (!hasNext) throw new NoSuchElementException("no URL left")
+        try inFlight.dequeue().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+    }
+  }
+
+  private val daemonThreads: ThreadFactory = { r =>
+    val t = new Thread(r, "graft-fetch")
+    t.setDaemon(true)
+    t
   }
 }
 

@@ -144,17 +144,18 @@ class ApiReaderFactory(schema: StructType, fixtures: String)
 }
 
 /** Executor-side reader: fetch -> flatten (C2 semantics) -> convert flat
-  * row maps to InternalRow per the (possibly pruned) schema. Failed URLs
+  * row maps to InternalRow per the (possibly pruned) schema, up to
+  * [[Fetcher.MaxInFlight]] URLs of the batch at a time. Failed URLs
   * contribute no rows (the chain operator is the keep-provenance variant).
   */
 class ApiPartitionReader(urls: Seq[String], schema: StructType, fetcher: Fetcher)
     extends PartitionReader[InternalRow] {
 
-  private val rows: Iterator[InternalRow] = urls.iterator.flatMap { u =>
+  private val rows: Iterator[InternalRow] = Fetcher.concurrently(urls.iterator) { u =>
     fetcher.fetchWithRetry(u, maxSleepMs = 0).toSeq.flatMap { body =>
       JsonFlatten.flattenValue(Jsons.parse(body)).map(m => convertRow(m, schema))
     }
-  }
+  }.flatten
   private var current: InternalRow = _
 
   override def next(): Boolean =

@@ -1,8 +1,10 @@
 package graft
 
 import graft.operators.{Chain, KeyResolver, Stager}
-import graft.sources.MapFetcher
+import graft.core.Jsons
+import graft.sources.{Fetcher, MapFetcher}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Chain decomposition (reference C1, magictable.py:202-315): URL build as
@@ -15,6 +17,36 @@ object ChainSpec {
       fetchCount.incrementAndGet()
       super.fetchRaw(url)
     }
+  }
+
+  val inFlight, peakInFlight = new AtomicInteger(0)
+  @volatile var pair = new CountDownLatch(2)
+  /** Holds each fetch until a second one has started (or 5 s pass) and
+    * records the most fetches in flight at once. */
+  class LatchingFetcher extends Fetcher {
+    override def fetchRaw(url: String): Either[Int, String] = {
+      peakInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max(_, _))
+      try {
+        pair.countDown()
+        pair.await(5, TimeUnit.SECONDS)
+        Thread.sleep(1)
+        Right(s"""{"u":"$url"}""")
+      } finally inFlight.decrementAndGet()
+    }
+  }
+
+  /** Answers after 0-3 ms, so concurrent fetches finish out of URL order. */
+  class JitterFetcher(entries: Map[String, String], failing: Set[String])
+      extends MapFetcher(entries, failing) {
+    override def fetchRaw(url: String): Either[Int, String] = {
+      Thread.sleep(math.abs(url.hashCode % 4).toLong)
+      super.fetchRaw(url)
+    }
+  }
+
+  class ThrowingFetcher(bad: String) extends MapFetcher(Map.empty) {
+    override def fetchRaw(url: String): Either[Int, String] =
+      if (url == bad) throw new IllegalStateException(s"boom $url") else Right("{}")
   }
 }
 
@@ -75,6 +107,48 @@ class ChainSpec extends SparkSpecBase {
     val (out, _) = Chain(base, "http://api/{cc}", fetcher, maxSleepMs = 0)
     assert(out.count() === 3) // 3 input rows survive
     assert(ChainSpec.fetchCount.get() === 2) // but only 2 distinct fetches
+  }
+
+  test("a partition's URLs are fetched concurrently, at most Fetcher.MaxInFlight at once") {
+    ChainSpec.inFlight.set(0)
+    ChainSpec.peakInFlight.set(0)
+    ChainSpec.pair = new CountDownLatch(2)
+    val urls = (1 to 64).map(i => s"http://api/$i").toDS().coalesce(1)
+    val lines = Chain.fetchResponses(urls, new ChainSpec.LatchingFetcher, None, maxSleepMs = 0)
+      .collect()
+    assert(lines.length === 64)
+    val peak = ChainSpec.peakInFlight.get
+    assert(peak > 1 && peak <= Fetcher.MaxInFlight, s"peak in flight $peak")
+  }
+
+  test("concurrent fetches give a serial loop's lines: URL order, then response order") {
+    val urls = (0 until 200).map(i => s"http://api/$i")
+    val bodies = urls.zipWithIndex.collect {
+      case (u, i) if i % 3 == 0 => u -> s"""[{"i":$i,"j":0},{"i":$i,"j":1}]"""
+      case (u, i) if i % 3 == 1 => u -> s"""{"i":$i}"""
+    }.toMap
+    val failing = urls.zipWithIndex.collect { case (u, i) if i % 3 == 2 => u }.toSet
+    val fetcher = new ChainSpec.JitterFetcher(bodies, failing)
+    val serial = urls.zipWithIndex.flatMap { case (u, i) =>
+      if (i % 3 == 0) Seq(0L, 1L).map(j => Map("__url" -> u, "resp" -> Map("i" -> i.toLong, "j" -> j)))
+      else if (i % 3 == 1) Seq(Map("__url" -> u, "resp" -> Map("i" -> i.toLong)))
+      else Seq(Map("__url" -> u))
+    }
+    val got = Chain.fetchResponses(urls.toDS().coalesce(1), fetcher, None, maxSleepMs = 0)
+      .collect().toSeq.map(Jsons.parse)
+    assert(got === serial)
+    // the same order straight from the helper, outside a task
+    assert(Fetcher.concurrently(urls.iterator)(fetcher.fetchWithRetry(_, maxSleepMs = 0)).toSeq ===
+      urls.map(u => bodies.get(u)))
+  }
+
+  test("a fetcher that throws still fails the job") {
+    val urls = (1 to 40).map(i => s"http://api/$i").toDS().coalesce(1)
+    val e = intercept[Exception](Chain.fetchResponses(urls,
+      new ChainSpec.ThrowingFetcher("http://api/17"), None, maxSleepMs = 0).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("boom http://api/17")),
+      chain.mkString("\n"))
   }
 
   test("null key values keep their row all-null instead of NPEing (review regression)") {

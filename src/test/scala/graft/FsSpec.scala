@@ -1,15 +1,23 @@
 package graft
 
-import graft.core.Fs
-import org.apache.hadoop.conf.Configuration
+import java.net.URI
+import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
+import graft.core.{Fs, PosixLocalFileSystem, TableGraph}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
 
 /** Crash-safety contract of Fs.replace (core/Fs.scala): the destination
   * payload must survive every failure point — the old delete-then-rename
   * could lose the table's parquet while the checkpointed catalog still
-  * listed it. */
+  * listed it. And the session's `file:` filesystem: fork-free permission
+  * changes that leave the same bits as Hadoop's own. */
 class FsSpec extends SparkSpecBase {
+  import spark.implicits._
 
-  private val conf = new Configuration()
+  // the session's conf, so the `file:` filesystem these specs use (Hadoop
+  // caches the first one a JVM asks for) is the engine's
+  private lazy val conf = spark.sparkContext.hadoopConfiguration
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_fs").toString
@@ -74,5 +82,91 @@ class FsSpec extends SparkSpecBase {
     assert(Fs.readString(s"$dir/dst", conf) === Some("new"))
     assert(!new java.io.File(dir).list().exists(_.startsWith(".dst.old-")),
       "all asides reclaimed after a successful replace")
+  }
+
+  private def octal(digits: String): Int = Integer.parseInt(digits, 8)
+
+  /** Permission bits (octal 7777) of a local file or directory. */
+  private def mode(path: java.nio.file.Path): Int =
+    Files.getAttribute(path, "unix:mode").asInstanceOf[Int] & octal("7777")
+
+  /** Every file and directory under `root` with its bits; random name
+    * parts (UUIDs, temp suffixes, hex ids) masked so two runs line up. */
+  private def modes(root: String): Seq[(String, Int)] = {
+    val r = Paths.get(root)
+    val walk = Files.walk(r)
+    try walk.iterator().asScala.toSeq.map { p =>
+      r.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "U")
+        .replaceAll("-[0-9a-f]{8}\\b", "-H") -> mode(p)
+    }.sortBy(_._1)
+    finally walk.close()
+  }
+
+  /** `body` under session conf `fs.file.impl` = `impl` and Hadoop umask
+    * `umask`, with a fresh filesystem per lookup. */
+  private def underImpl[T](impl: Class[_], umask: String)(body: => T): T = {
+    val keys = Seq("fs.file.impl" -> impl.getName, "fs.file.impl.disable.cache" -> "true",
+      "fs.permissions.umask-mode" -> umask)
+    val prev = keys.map { case (k, _) => k -> Option(conf.get(k)) }
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** The `file:` filesystem Hadoop picks without the session's setting. */
+  private def hadoopDefault: Class[_] =
+    FileSystem.getFileSystemClass("file", new org.apache.hadoop.conf.Configuration())
+
+  test("the session's file: filesystem is PosixLocalFileSystem") {
+    assert(FileSystem.get(new URI("file:///"), conf).getClass === classOf[PosixLocalFileSystem])
+    assert(FileSystem.getLocal(conf).getClass === classOf[PosixLocalFileSystem])
+  }
+
+  test("a rename onto an existing local file fails, as in Hadoop's default file: filesystem") {
+    val dir = tmpDir()
+    for (impl <- Seq(hadoopDefault, classOf[PosixLocalFileSystem])) underImpl(impl, "022") {
+      val fs = FileSystem.getLocal(conf)
+      val (a, b) = (new HPath(s"$dir/${impl.getSimpleName}.a"), new HPath(s"$dir/${impl.getSimpleName}.b"))
+      Fs.writeStringAtomic(a.toString, "a", conf)
+      Fs.writeStringAtomic(b.toString, "b", conf)
+      assert(!fs.rename(a, b), impl.getName)
+      assert(Fs.readString(b.toString, conf) === Some("b"), impl.getName)
+      assert(fs.rename(a, new HPath(s"$dir/${impl.getSimpleName}.c")), impl.getName)
+    }
+  }
+
+  test("local files and directories carry Hadoop's bits under umask 022 and 077") {
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    for (umask <- Seq("022", "077")) {
+      val trees = Seq(hadoopDefault, classOf[PosixLocalFileSystem]).map { impl =>
+        val dir = tmpDir()
+        underImpl(impl, umask) {
+          Fs.writeStringAtomic(s"$dir/cache/a/entry.json", "{}", conf, overwrite = false)
+          Fs.writeStringAtomic(s"$dir/ckpt/state.json", "{}", conf)
+          new TableGraph(s"$dir/wh").addTable("t", rows)
+          rows.write.parquet(s"$dir/pq")
+        }
+        modes(dir).filter(_._1.nonEmpty)
+      }
+      assert(trees(1) === trees(0), s"umask $umask")
+      val expected = (if (umask == "022") Set("644", "755") else Set("600", "700")).map(octal)
+      assert(trees(1).map(_._2).toSet === expected, s"umask $umask: ${trees(1)}")
+    }
+  }
+
+  test("a sticky bit falls back to Hadoop's chmod") {
+    val fs = FileSystem.getLocal(conf)
+    val local = Paths.get(tmpDir(), "shared")
+    val dir = new HPath(local.toUri)
+    fs.mkdirs(dir)
+    fs.setPermission(dir, new FsPermission(octal("1777").toShort))
+    // java.nio cannot set a sticky bit: 1777 shows Hadoop's path ran
+    assert(mode(local) === octal("1777"))
+    // a sticky target falls back too, and the bits come out as chmod's
+    fs.setPermission(dir, new FsPermission(octal("750").toShort))
+    assert(mode(local) === octal("750"))
   }
 }

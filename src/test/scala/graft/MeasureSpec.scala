@@ -18,6 +18,18 @@ class MeasureSpec extends SparkSpecBase {
     } finally standing.unpersist(blocking = true)
   }
 
+  test("releasing frees a localCheckpoint made inside its body and logs no RDD WARN") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val warns = warnings("org.apache.spark.rdd") {
+      Measure.releasing(spark, blocking = true) {
+        spark.range(10).toDF().localCheckpoint().count()
+      }
+    }
+    assert(warns.isEmpty, warns.mkString("\n"))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("Layers charges each tagged frame's jobs, stages and tasks to its key") {
     val layers = Measure.listen(spark)
     try {

@@ -117,4 +117,32 @@ class PrefixSumSpec extends SparkSpecBase {
       assert(scale === 9, s"stitched sum scale must stay 9, got $scale")
     } finally spark.conf.set(key, old)
   }
+
+  test("a global scan plans no unpartitioned window and stitches DOUBLE and DECIMAL offsets") {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val old = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try {
+      // halves and 1e-9 steps: every partial sum is exact, so any lost,
+      // doubled or misplaced partition offset shows as a wrong value
+      val df = (1 to 5000).map(i => (i.toLong, i * 0.5, "0.000000001")).toDF("k", "d", "xs")
+        .withColumn("x", col("xs").cast("decimal(25,9)")).drop("xs")
+      val out = PrefixSum.withKeyedRunningSums(df, Nil, Seq("k"), Seq("d", "x"))
+      // WindowExec warns while the physical plan is made, at the collect
+      val warns = warnings("org.apache.spark.sql.execution.window")(out.collect())
+      assert(warns.isEmpty, warns.mkString("\n"))
+      val plan = out.queryExecution.optimizedPlan
+      val windows = plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
+      assert(windows.nonEmpty, "the per-partition running sums stay windows")
+      assert(windows.forall(_.partitionSpec.nonEmpty), plan.treeString)
+      val got = out.select("k", "cum_d", "cum_x").as[(Long, Double, BigDecimal)].collect()
+      assert(got.length === 5000)
+      got.foreach { case (k, d, x) =>
+        assert(d === k * (k + 1) / 4.0, s"cum_d at $k")
+        assert(x === BigDecimal(k) * BigDecimal("0.000000001"), s"cum_x at $k")
+      }
+      assert(out.schema("cum_x").dataType
+        .asInstanceOf[org.apache.spark.sql.types.DecimalType].scale === 9)
+    } finally spark.conf.set(key, old)
+  }
 }

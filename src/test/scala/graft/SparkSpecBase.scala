@@ -32,6 +32,36 @@ trait SparkSpecBase extends AnyFunSuite {
   }
 
   def jobsOf[T](body: => T): Int = withJobs(body)._2.jobs
+
+  /** The WARN-or-worse messages that loggers under `logger` (a logger
+    * name or package prefix) emit while `body` runs. */
+  def warnings(logger: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(s"spec-warnings-$logger", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val config = ctx.getConfiguration
+    val loggerConfig = new LoggerConfig(logger, Level.WARN, false)
+    loggerConfig.addAppender(appender, null, null)
+    config.addLogger(logger, loggerConfig)
+    ctx.updateLoggers()
+    try body
+    finally {
+      config.removeLogger(logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    warns.toArray(Array.empty[String]).toSeq
+  }
 }
 
 object SparkSpecBase {

@@ -24,36 +24,6 @@ class StagerSpec extends SparkSpecBase {
     }
   }
 
-  /** The WARN-or-worse messages `org.apache.spark.rdd` loggers emit
-    * while `body` runs. */
-  private def rddWarnings(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("stager-spec-rdd", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN))
-          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
-    }
-    appender.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val config = ctx.getConfiguration
-    val logger = new LoggerConfig("org.apache.spark.rdd", Level.WARN, false)
-    logger.addAppender(appender, null, null)
-    config.addLogger("org.apache.spark.rdd", logger)
-    ctx.updateLoggers()
-    try body
-    finally {
-      config.removeLogger("org.apache.spark.rdd")
-      ctx.updateLoggers()
-      appender.stop()
-    }
-    warns.toArray(Array.empty[String]).toSeq
-  }
-
   /** The RDD holding `df`'s cache buffers (built on first use). */
   private def cacheBuffersId(df: DataFrame): Int =
     df.queryExecution.withCachedData
@@ -110,7 +80,7 @@ class StagerSpec extends SparkSpecBase {
   test("a stage and its release log no RDD WARN and leave no persistent RDD") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val warns = rddWarnings {
+    val warns = warnings("org.apache.spark.rdd") {
       val staged = Stager.stage(spark.range(10).toDF(), "quiet")
       assert((sc.getPersistentRDDs.keySet -- before).size === 1)
       Stager.release(staged, "quiet")

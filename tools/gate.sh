@@ -8,6 +8,9 @@
 #   3. tools/oracle_check.py     (local DuckDB stand-in for the driver gate)
 #
 # Exit 0 iff all three pass. Usage: tools/gate.sh [sfDir] [outDir]
+# Once Verify has run, the gate ends (pass or fail) with the WARN count per
+# logger in Verify's log (kept in <outDir>.log), so a WARN flood shows in
+# every gate run; the counts never fail the gate.
 #
 # A change that must move no plan also diffs every gate's physical plan
 # against the parent commit's, run in a second checkout of it:
@@ -31,6 +34,13 @@ SPARK_LOCAL_DIRS=/tmp/spark-local \
 
 echo "== gate 2/3: Verify @ $SF_DIR =="
 rm -rf "$OUT_DIR"
+VERIFY_LOG="$OUT_DIR.log"
+warn_summary() {
+  echo "== Verify WARNs per logger ($VERIFY_LOG) =="
+  awk '$3 == "WARN" { sub(/:$/, "", $4); n[$4]++ } END { for (k in n) print n[k], k }' \
+    "$VERIFY_LOG" | sort -rn
+}
+trap warn_summary EXIT
 CP="target/scala-2.13/classes:$(ls -d /opt/spark/jars/* | tr '\n' ':')"
 java -Xmx8g --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -46,7 +56,7 @@ java -Xmx8g --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -cp "$CP" graft.Verify "$SF_DIR" "$OUT_DIR"
+  -cp "$CP" graft.Verify "$SF_DIR" "$OUT_DIR" 2>&1 | tee "$VERIFY_LOG"
 
 echo "== gate 3/3: oracle check =="
 python3 tools/oracle_check.py "$SF_DIR" "$OUT_DIR"

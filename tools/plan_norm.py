@@ -11,6 +11,10 @@ stays visibly shared:
   expression ids      `__v#1929L`          -> `__v#1L`
   exchange plan ids   `[plan_id=5778]`     -> `[plan_id=1]`
   RDD ids             `MapPartitionsRDD[278]` -> `MapPartitionsRDD[1]`
+  lambda variables    `lambda x_78#3`      -> `lambda x_1#3`
+                      (one counter per JVM: a gate built earlier in the
+                      registry shifts every later gate's names)
+  call-site lines     `at Chain.scala:129` -> `at Chain.scala:N`
   stage-name UUIDs    `psi_counts_1a2b3c4d`   -> `psi_counts_XXXXXXXX`
   temp-dir suffixes   `graft_gate_wh1095622790902392` -> `graft_gate_whN`
   lambda instances    `Vocab$$$Lambda$7305/0x00007fbb91a35388@1659da46`
@@ -35,11 +39,13 @@ IDS = [
     (re.compile(r"#(\d+)"), lambda n: "#%d" % n),
     (re.compile(r"plan_id=(\d+)"), lambda n: "plan_id=%d" % n),
     (re.compile(r"RDD\[(\d+)\]"), lambda n: "RDD[%d]" % n),
+    (re.compile(r"(?<=lambda [a-z])_(\d+)"), lambda n: "_%d" % n),
 ]
 FIXED = [
     (re.compile(r"_[0-9a-f]{8}\b"), "_XXXXXXXX"),
     (re.compile(r"(?<=[A-Za-z_])\d{12,}"), "N"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
+    (re.compile(r"(?<=\.scala):\d+"), ":N"),
 ]
 
 
