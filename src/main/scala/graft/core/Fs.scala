@@ -60,13 +60,16 @@ object Fs {
     * stores the AbstractFileSystem default handles overwrite non-atomically
     * (documented), so a crash can still lose the destination there — which
     * is why checkpoint READERS fall back to the newest surviving temp file
-    * (TableGraph.loadCheckpoint). Failures throw, after temp cleanup.
+    * (TableGraph.loadCheckpoint).
     *
     * overwrite=false (cache entries): if the destination appears
     * concurrently, another writer of the same idempotent key won the race —
     * the temp is discarded, first writer wins. A rename that fails with no
     * winner present throws rather than silently dropping the write; callers
     * for whom the write is best-effort (executor cache maintenance) catch.
+    *
+    * Either way a create, write or rename that throws (an interrupted
+    * cache put of a cancelled fetch, say) deletes the temp first.
     */
   def writeStringAtomic(path: String, body: String, conf: Configuration,
       overwrite: Boolean = true): Unit = {
@@ -75,19 +78,25 @@ object Fs {
     if (parent != null) fs.mkdirs(parent)
     val tmp = new HPath(parent,
       "." + p.getName + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (overwrite) {
-      val fc =
-        if (p.toUri.getScheme == null) org.apache.hadoop.fs.FileContext.getFileContext(conf)
-        else org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      try fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch { case e: Throwable => fs.delete(tmp, false); throw e }
-    } else if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(p))
-        throw new java.io.IOException(s"rename to $path failed with no concurrent winner")
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      if (overwrite) {
+        val fc =
+          if (p.toUri.getScheme == null) org.apache.hadoop.fs.FileContext.getFileContext(conf)
+          else org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
+        fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
+          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      } else if (!fs.rename(tmp, p)) {
+        fs.delete(tmp, false)
+        if (!fs.exists(p))
+          throw new java.io.IOException(s"rename to $path failed with no concurrent winner")
+      }
+    } catch {
+      // an interrupted or failed create, write or rename leaves no temp
+      case e: Throwable =>
+        try fs.delete(tmp, false) catch { case d: Throwable => e.addSuppressed(d) }
+        throw e
     }
     ()
   }

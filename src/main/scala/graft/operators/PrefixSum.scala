@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 /** Distributed running sums over a global or per-group ordering — the
   * cumulative scan behind CDF/rank machinery ([[Profile.ksStatistic]],
@@ -15,8 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   *
   * Same recipe as [[Dedup.sortedNeighborhoodPairs]]'s contiguous global
   * rank: range-exchange on the order key, per-partition running sums,
-  * then add a broadcast per-partition offset table whose own running-sum
-  * window orders numPartitions rows — never data.
+  * then add a broadcast per-partition offset table built from the
+  * numPartitions partition totals — never data.
   */
 object PrefixSum {
 
@@ -65,7 +66,8 @@ object PrefixSum {
     *
     * 100 TB shape: one range exchange of the data, one broadcast of the
     * tiny offsets table — the group-key cardinality never appears in any
-    * exchange or window of the data-sized frame. */
+    * exchange or window of the data-sized frame. A global scan collects
+    * its ≤ numPartitions totals to the driver while the frame is built. */
   def withKeyedRunningSums(df: DataFrame, keyCols: Seq[String],
       orderCols: Seq[String], sumCols: Seq[String]): DataFrame = {
     require(orderCols.nonEmpty, "withKeyedRunningSums: orderCols must be non-empty")
@@ -113,29 +115,35 @@ object PrefixSum {
   }
 
   /** The offsets of a global scan (no group key): its ≤ numPartitions
-    * partition totals gather into ONE array sorted by partition id, and a
-    * left fold over it appends each partition's exclusive running sum —
-    * the additions a running-sum window over the totals makes, in the same
-    * order, so DOUBLE offsets are bit-identical. A window with no
-    * partition key would do the same work but logs WindowExec's
-    * "No Partition Defined" WARN at every planning of every plan that
-    * holds it, burying the WARN where a window over DATA collapses onto
-    * one reducer. Each offset is kept at its local running sum's type. */
-  private def globalOffsets(totals: DataFrame, sumTypes: Seq[(String, DataType)]): DataFrame = {
-    val rows = col("__rows")
-    val folded = sumTypes.map { case (c, t) =>
-      val zero = lit(0).cast(t)
-      // element i: offset i−1 plus total i−1 (zero for partition 0)
-      aggregate(rows, array().cast(ArrayType(t)), (acc, _) => {
-        val prev = size(acc) - 1
-        array_append(acc, (coalesce(get(acc, prev), zero) +
-          coalesce(get(rows, prev).getField(s"__t_$c"), zero)).cast(t))
-      }).as(s"__o_$c")
+    * partition totals are collected in partition-id order and scanned on
+    * the driver, linear in the partition count — the additions a
+    * running-sum window over the totals makes, in the same order, so
+    * DOUBLE offsets are bit-identical (a NULL total adds nothing, as the
+    * window's `sum` skips it). A window with no partition key would do the
+    * same work but logs WindowExec's "No Partition Defined" WARN at every
+    * planning of every plan that holds it, burying the WARN where a window
+    * over DATA collapses onto one reducer. Each offset is kept at its local
+    * running sum's type. */
+  private[graft] def globalOffsets(totals: DataFrame, sumTypes: Seq[(String, DataType)]): DataFrame = {
+    val rows = totals.select(col("__psid") +: sumTypes.map { case (c, _) => col(s"__t_$c") }: _*)
+      .collect().sortBy(_.getInt(0))
+    val offsets = sumTypes.zipWithIndex.map { case ((_, t), i) =>
+      val (zero, plus) = addition(t)
+      rows.map(r => if (r.isNullAt(i + 1)) zero else r.get(i + 1)).scanLeft(zero)(plus)
     }
-    totals.agg(sort_array(collect_list(struct(
-        col("__psid") +: sumTypes.map { case (c, _) => col(s"__t_$c") }: _*))).as("__rows"))
-      .select(rows +: folded: _*)
-      .select(inline(transform(rows, (r, i) => struct(r.getField("__psid").as("__psid") +:
-        sumTypes.map { case (c, _) => get(col(s"__o_$c"), i).as(s"__o_$c") }: _*))))
+    totals.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.indices.map(j => Row.fromSeq(rows(j).get(0) +: offsets.map(_(j)))): _*),
+      StructType(StructField("__psid", IntegerType, nullable = false) +:
+        sumTypes.map { case (c, t) => StructField(s"__o_$c", t) }))
+  }
+
+  /** Zero and `+` of a `sum` result type, as the driver-side scan adds. */
+  private def addition(t: DataType): (Any, (Any, Any) => Any) = t match {
+    case LongType => (0L, (a, b) => a.asInstanceOf[Long] + b.asInstanceOf[Long])
+    case DoubleType => (0.0, (a, b) => a.asInstanceOf[Double] + b.asInstanceOf[Double])
+    case _: DecimalType => (java.math.BigDecimal.ZERO,
+      (a, b) => a.asInstanceOf[java.math.BigDecimal].add(b.asInstanceOf[java.math.BigDecimal]))
+    case other => throw new IllegalArgumentException(
+      s"withKeyedRunningSums: no global offset scan for running sums of type $other")
   }
 }

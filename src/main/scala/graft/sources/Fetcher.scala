@@ -12,7 +12,10 @@ import org.apache.spark.TaskContext
   * file-backed; an HTTP implementation can be plugged in where egress
   * exists. Implementations MUST be Serializable — chain ships the fetcher
   * to executors inside a mapPartitions closure (the reference instead loops
-  * rows on the driver, magictable.py:250-266 — the #1 thing not to copy).
+  * rows on the driver, magictable.py:250-266 — the #1 thing not to copy) —
+  * and thread-safe: [[Fetcher.concurrently]] calls `fetchRaw` and
+  * `fetchWithRetry` of one instance from up to [[Fetcher.MaxInFlight]]
+  * threads at once.
   */
 trait Fetcher extends Serializable {
 

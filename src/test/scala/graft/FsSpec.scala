@@ -157,6 +157,16 @@ class FsSpec extends SparkSpecBase {
     }
   }
 
+  test("a write that throws leaves no temp file behind") {
+    val dir = tmpDir()
+    for (overwrite <- Seq(false, true)) underImpl(classOf[FailingWriteFileSystem], "022") {
+      intercept[java.io.InterruptedIOException] {
+        Fs.writeStringAtomic(s"$dir/cache/entry.json", "{}", conf, overwrite)
+      }
+    }
+    assert(new java.io.File(s"$dir/cache").list().toSeq === Nil)
+  }
+
   test("a sticky bit falls back to Hadoop's chmod") {
     val fs = FileSystem.getLocal(conf)
     val local = Paths.get(tmpDir(), "shared")
@@ -168,5 +178,19 @@ class FsSpec extends SparkSpecBase {
     // a sticky target falls back too, and the bits come out as chmod's
     fs.setPermission(dir, new FsPermission(octal("750").toShort))
     assert(mode(local) === octal("750"))
+  }
+}
+
+/** A `file:` filesystem whose output streams throw on the first write, as
+  * an interrupted write would. */
+class FailingWriteFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def create(f: HPath, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    val out = super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    new org.apache.hadoop.fs.FSDataOutputStream(new java.io.OutputStream {
+      override def write(b: Int): Unit = throw new java.io.InterruptedIOException("write interrupted")
+      override def close(): Unit = out.close()
+    }, null)
   }
 }

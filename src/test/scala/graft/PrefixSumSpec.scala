@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.PrefixSum
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 class PrefixSumSpec extends SparkSpecBase {
   import spark.implicits._
@@ -144,5 +145,28 @@ class PrefixSumSpec extends SparkSpecBase {
       assert(out.schema("cum_x").dataType
         .asInstanceOf[org.apache.spark.sql.types.DecimalType].scale === 9)
     } finally spark.conf.set(key, old)
+  }
+
+  test("a global scan's offsets over 20,000 partition totals are exact and in partition order") {
+    // the totals of a 20k-partition range exchange, shuffled: the offsets
+    // scan must order them by partition id and walk them in linear time
+    // (running the whole operator at 20k partitions costs minutes of
+    // task scheduling, none of it in the offsets)
+    val p = 20000
+    val totals = spark.range(p).select(col("id").cast("int").as("__psid"),
+        lit(2L).as("__t_k"), (col("id") * 0.5).as("__t_d"),
+        when(col("id") % 3 === 0, lit(null)).otherwise(lit(BigDecimal("0.000000001")))
+          .cast("decimal(35,9)").as("__t_x"))
+      .repartition(7)
+    val types = totals.schema.fields.toSeq.tail.map(f => f.name.stripPrefix("__t_") -> f.dataType)
+    val got = PrefixSum.globalOffsets(totals, types)
+      .select("__psid", "__o_k", "__o_d", "__o_x").as[(Int, Long, Double, BigDecimal)].collect()
+    assert(got.map(_._1).sorted.toSeq === (0 until p))
+    got.foreach { case (i, k, d, x) =>
+      assert(k === 2L * i, s"__o_k at $i")
+      assert(d === i.toLong * (i - 1) / 4.0, s"__o_d at $i")
+      assert(x === BigDecimal(i - (i + 2) / 3) * BigDecimal("0.000000001"), s"__o_x at $i")
+    }
+    assert(PrefixSum.globalOffsets(totals, types).schema.map(_.dataType) === IntegerType +: types.map(_._2))
   }
 }
